@@ -134,16 +134,18 @@ object Bench {
     * PRIOR ratio — the same face measured at the unchanged tree, from the
     * committed BENCH_PRIOR.json run of record — already sat at >= 0.8x of
     * this run's ratio is the ambient window, not this round's diff: the
-    * slowness reproduces without the code change. Such a row self-classifies
+    * slowness reproduces without the code change. The prior must itself
+    * trip the `gate` — a prior inside the gate did NOT reproduce the
+    * slowness (ADVICE r19), however close its ratio. Such a row self-classifies
     * `ambient-repro` INSTEAD of `unknown`/`ambient-starvation`/
     * `cpu-amplified` (the three signatures with no counter evidence of new
     * work). Counter-backed mechanisms (spill / recompute / gc-storm) and
     * `failed` are never overridden: a standing pre-existing pathology must
     * keep its name, and an aborted rep is not a timing at all. */
-  private[graft] def adjudicate(mech: String, ratio: Double,
+  private[graft] def adjudicate(mech: String, ratio: Double, gate: Double,
                                 priorRatio: Option[Double]): String =
     if (Set("unknown", "ambient-starvation", "cpu-amplified")(mech) &&
-        priorRatio.exists(_ >= 0.8 * ratio)) "ambient-repro"
+        priorRatio.exists(p => p > gate && p >= 0.8 * ratio)) "ambient-repro"
     else mech
 
   /** Run-of-record class (r17 verdict item 7): the artifact names itself
@@ -409,7 +411,7 @@ object Bench {
           gateMechanism(r.nFailed, r.cpuFrac, refCpu, r.load1,
             r.gcFrac, mech._2, r.tasks, mech._1, r.spillMb, mech._3,
             refScale, ownRef),
-          ratio, priorRatio)
+          ratio, gate, priorRatio)
       def refTasks: Double = mech._1
       // which frozen table this row's ref came from — only interesting on
       // a cross-scale run where gated (own-SF) and excursion (sf0.1) rows

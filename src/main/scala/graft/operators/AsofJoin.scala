@@ -112,29 +112,31 @@ object AsofJoin {
     // (so last() sees them); reversed for forward via descending time order.
     val sideOrder = if (allowEq) col("__side").asc else col("__side").desc
     val tOrd = if (backward) col("__t").asc else col("__t").desc
+    // the carried match column, named as [[unkeyed]] names it
+    val m = if (backward) "__bm" else "__fm"
 
     val matched =
       if (by.nonEmpty) {
         val w = Window.partitionBy(byOut.map(col).toIndexedSeq: _*)
           .orderBy(tOrd, sideOrder)
           .rowsBetween(Window.unboundedPreceding, 0)
-        unioned.withColumn("__match", last(col("__rstruct"), ignoreNulls = true).over(w))
+        unioned.withColumn(m, last(col("__rstruct"), ignoreNulls = true).over(w))
       } else {
-        unkeyedCarry(unioned, tOrd, sideOrder, backward, allowEq)
+        unkeyed(unioned, sideOrder, Seq(backward))
       }
     val onlyLeft = matched.filter(col("__side") === 1)
 
     // tolerance: null the match when |l.t - r.t| > tol
     val withTol = tolUs match {
       case Some(us) =>
-        onlyLeft.withColumn("__match",
-          when(abs(col("__t") - unix_micros(col("__match.__rt").cast("timestamp"))) <= lit(us),
-            col("__match")))
+        onlyLeft.withColumn(m,
+          when(abs(col("__t") - unix_micros(col(s"$m.__rt").cast("timestamp"))) <= lit(us),
+            col(m)))
       case None => onlyLeft
     }
 
     val base = lCols.map(col) ++
-      payloadCols.map(c => col(s"__match.$c").as(outName(c)))
+      payloadCols.map(c => col(s"$m.$c").as(outName(c)))
     withTol.select(base.toIndexedSeq: _*)
   }
 
@@ -180,7 +182,7 @@ object AsofJoin {
           .withColumn("__bm", last(col("__rstruct"), ignoreNulls = true).over(wB))
           .withColumn("__fm", last(col("__rstruct"), ignoreNulls = true).over(wF))
       } else {
-        unkeyedNearest(unioned, sideOrder)
+        unkeyed(unioned, sideOrder, Seq(true, false))
       }
 
     val onlyLeft = matched.filter(col("__side") === 1)
@@ -203,94 +205,45 @@ object AsofJoin {
     withTol.select(out.toIndexedSeq: _*)
   }
 
-  /** Unkeyed nearest scale path: range-BUCKET on __t (ties never split —
-    * RangeId assigns equal values one id, so the in-bucket (time, side)
-    * sort resolves allow_eq exactly like the keyed path), run both running
-    * carries per bucket in parallel, then patch bucket edges with a
-    * broadcast ≤P-row boundary frame carrying each bucket's extreme right
-    * rows in both directions. Mirrors [[unkeyedCarry]], which does the
-    * same for one direction. */
-  private def unkeyedNearest(unioned: DataFrame, sideOrder: Column): DataFrame = {
-    // value-derived bucket ids (r17 sf1-oracle catch, see RangeId): the
-    // data rows and the boundary aggregate must agree on partition ids
-    val nPart = unioned.sparkSession.sessionState.conf.numShufflePartitions
-    val parted = RangeId.withRangeId(unioned, Seq(col("__t")), Seq(true), nPart, "__pid")
-      .repartition(nPart, col("__pid"))
-    val wB = Window.partitionBy("__pid").orderBy(col("__t").asc, sideOrder)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wF = Window.partitionBy("__pid").orderBy(col("__t").desc, sideOrder)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val running = parted
-      .withColumn("__bm", last(col("__rstruct"), ignoreNulls = true).over(wB))
-      .withColumn("__fm", last(col("__rstruct"), ignoreNulls = true).over(wF))
-
-    // per-partition extreme right rows; (t, rstruct) structs compare by time
-    // first, so max/min pick the latest/earliest right row of the partition
-    val pick = when(col("__side") === 0, struct(col("__t"), col("__rstruct")))
-    val wPrev = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    val wNext = Window.orderBy("__pid").rowsBetween(1, Window.unboundedFollowing)
-    val bounds = parted.groupBy("__pid").agg(max(pick).as("__maxr"), min(pick).as("__minr"))
-      .withColumn("__bbnd", last(col("__maxr"), ignoreNulls = true).over(wPrev))
-      .withColumn("__fbnd", first(col("__minr"), ignoreNulls = true).over(wNext))
-      .select(col("__pid"), col("__bbnd"), col("__fbnd"))
-
-    // range partitioning on __t alone ⇒ earlier pids hold strictly smaller
-    // times, so the boundary rows always satisfy the allow_eq edge; no guard
-    // predicate needed (unlike unkeyedCarry, which range-partitions on two
-    // keys and can split an equal-time pair).
-    running.join(broadcast(bounds), Seq("__pid"), "left")
-      .withColumn("__bm", coalesce(col("__bm"), col("__bbnd.__rstruct")))
-      .withColumn("__fm", coalesce(col("__fm"), col("__fbnd.__rstruct")))
-      .drop("__pid", "__bbnd", "__fbnd")
-  }
-
   /** Scale path for as-of WITHOUT `by` keys (legal in the reference,
-    * lazy.rs:501-569). A bare `Window.partitionBy()` would serialize the
-    * whole dataset through one task; instead:
+    * lazy.rs:501-569); a bare `Window.partitionBy()` would serialize the
+    * whole dataset through one task. `backward` lists the carries to run
+    * (true → `__bm`, false → `__fm`; nearest runs both):
     *
-    *   1. range-partition on the order key — every partition computes its
-    *      running carry (`last(__rstruct, ignoreNulls)`) in parallel, keyed
-    *      on `spark_partition_id()`;
-    *   2. a per-partition "final carry" frame (≤ shuffle-partitions rows)
-    *      gets a prefix window — the boundary value each partition inherits
-    *      from all earlier ones — and is broadcast back onto the rows.
+    *   1. range-bucket on `__t` alone ([[RangeId.bucketed]]) — equal times
+    *      always share a bucket, so the in-bucket (time, side) sort resolves
+    *      allowEq exactly like the keyed path, and every bucket runs its
+    *      running carry (`last(__rstruct, ignoreNulls)`) in parallel;
+    *   2. each bucket's extreme right rows (≤P summary rows) get a prefix
+    *      (backward) / suffix (forward) carry over the bucket order and are
+    *      broadcast back to patch rows the bucket itself could not match.
     *
-    * One hash exchange of the data (on the value-derived RangeId bucket)
-    * plus one tiny single-partition window over P rows; every branch
-    * derives the identical bucket id from the row's own keys, so no
-    * exchange-instance agreement is required. The equality guard on the
-    * boundary handles an equal-time row pair straddling a bucket boundary
-    * under allowEq=false.
-    */
-  private def unkeyedCarry(unioned: DataFrame, tOrd: Column, sideOrder: Column,
-                           backward: Boolean, allowEq: Boolean): DataFrame = {
-    // value-derived bucket ids (r17 sf1-oracle catch, see RangeId): the
-    // data rows and the carry aggregate must agree on partition ids; id
-    // order mirrors (tOrd, sideOrder) via the direction flags
-    val nPart = unioned.sparkSession.sessionState.conf.numShufflePartitions
-    val parted = RangeId.withRangeId(unioned, Seq(col("__t"), col("__side")),
-        Seq(backward, allowEq), nPart, "__pid")
-      .repartition(nPart, col("__pid"))
-    val w = Window.partitionBy("__pid").orderBy(tOrd, sideOrder)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val running = parted.withColumn("__match", last(col("__rstruct"), ignoreNulls = true).over(w))
-
-    // per-partition final carry: the extreme-time right row of each pid
-    // (struct compares field-by-field, so (t, rstruct) picks by time first)
+    * Earlier buckets hold strictly smaller times and later ones strictly
+    * larger, so a patched match always satisfies the allowEq edge — no
+    * equality guard on the boundary. */
+  private def unkeyed(unioned: DataFrame, sideOrder: Column,
+                      backward: Seq[Boolean]): DataFrame = {
+    val parted = RangeId.bucketed(unioned, Seq(col("__t")), Seq(true))
+    def name(b: Boolean) = if (b) "__bm" else "__fm"
+    val running = backward.foldLeft(parted) { (acc, b) =>
+      val w = Window.partitionBy("__pid")
+        .orderBy(if (b) col("__t").asc else col("__t").desc, sideOrder)
+        .rowsBetween(Window.unboundedPreceding, 0)
+      acc.withColumn(name(b), last(col("__rstruct"), ignoreNulls = true).over(w))
+    }
+    // per-bucket extreme right rows; (t, rstruct) structs compare by time
+    // first, so max/min pick the latest/earliest right row of the bucket
     val pick = when(col("__side") === 0, struct(col("__t"), col("__rstruct")))
-    val carryAgg = if (backward) max(pick) else min(pick)
-    val prefixW = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    val boundaries = parted.groupBy("__pid").agg(carryAgg.as("__c"))
-      .withColumn("__bnd", last(col("__c"), ignoreNulls = true).over(prefixW))
-      .select(col("__pid"), col("__bnd"))
-
-    val joined = running.join(broadcast(boundaries), Seq("__pid"), "left")
-    val bT = col("__bnd.__t")
-    val bndOk =
-      if (backward) { if (allowEq) bT <= col("__t") else bT < col("__t") }
-      else { if (allowEq) bT >= col("__t") else bT > col("__t") }
-    joined
-      .withColumn("__match", coalesce(col("__match"), when(bndOk, col("__bnd.__rstruct"))))
-      .drop("__pid", "__bnd")
+    val edges = backward.map(b => (if (b) max(pick) else min(pick)).as(name(b) + "_e"))
+    val carried = backward.foldLeft(
+        parted.groupBy("__pid").agg(edges.head, edges.tail: _*)) { (acc, b) =>
+      val e = col(name(b) + "_e")
+      acc.withColumn(name(b) + "_e",
+        if (b) last(e, ignoreNulls = true).over(RangeId.before)
+        else first(e, ignoreNulls = true).over(RangeId.after))
+    }
+    backward.foldLeft(running.join(broadcast(carried), Seq("__pid"), "left")) { (acc, b) =>
+      acc.withColumn(name(b), coalesce(col(name(b)), col(name(b) + "_e.__rstruct")))
+    }.drop("__pid" +: backward.map(name(_) + "_e"): _*)
   }
 }

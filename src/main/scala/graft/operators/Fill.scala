@@ -47,9 +47,9 @@ object Fill {
 
   /** Unkeyed whole-frame fill at scale (expr.rs:1066-1101, no partition case).
     *
-    *   1. range-partition on the fill order — each partition computes its
-    *      local fill (and the global row number via a broadcast prefix-sum of
-    *      per-partition counts) fully in parallel;
+    *   1. range-bucket on the fill order ([[RangeId.bucketed]]) — each
+    *      partition computes its local fill (and the global row number via
+    *      a broadcast prefix-sum of per-partition counts) fully in parallel;
     *   2. each partition's LAST non-null per column (one row per partition,
     *      ≤ shuffle-partitions rows total) gets a prefix carry over partition
     *      id — the value a partition inherits from all earlier ones — and is
@@ -62,13 +62,7 @@ object Fill {
   def fillGlobal(df: DataFrame, cols: Seq[String], order: Seq[Column],
                  forward: Boolean = true, limit: Option[Int] = None): DataFrame = {
     val ordered = (if (forward) order else order.map(_.desc)).toIndexedSeq
-    // value-derived bucket ids (r17 sf1-oracle catch, see RangeId): the
-    // offsets/carry subtree and the data subtree must agree on partition
-    // ids, which spark_partition_id over separately-sampled range-exchange
-    // instances cannot guarantee
-    val nPart = df.sparkSession.sessionState.conf.numShufflePartitions
-    val parted = RangeId.withRangeId(df, order, order.map(_ => forward), nPart, "__pid")
-      .repartition(nPart, col("__pid"))
+    val parted = RangeId.bucketed(df, order, order.map(_ => forward))
     val w0 = Window.partitionBy("__pid").orderBy(ordered: _*)
     val w = w0.rowsBetween(Window.unboundedPreceding, 0)
     val withRn = parted.withColumn("__rn", row_number().over(w0))
@@ -76,14 +70,12 @@ object Fill {
     // per-partition stats: row count + last non-null (value, local position) per column
     val statAggs = count(lit(1)).as("__cnt") +:
       cols.map(cn => max(when(col(cn).isNotNull, struct(col("__rn").as("p"), col(cn).as("v")))).as(s"__last_$cn"))
-    val pw = Window.orderBy("__pid")
-    val prefix = pw.rowsBetween(Window.unboundedPreceding, -1)
     // offsets: rows before this partition; carried: latest earlier non-null globalized
     var stats = withRn.groupBy("__pid").agg(statAggs.head, statAggs.tail.toIndexedSeq: _*)
-      .withColumn("__off", coalesce(sum(col("__cnt")).over(prefix), lit(0L)))
+      .withColumn("__off", RangeId.offset(col("__cnt")))
     for (cn <- cols) stats = stats
       .withColumn(s"__g_$cn", struct((col(s"__last_$cn.p") + col("__off")).as("p"), col(s"__last_$cn.v").as("v")))
-      .withColumn(s"__carry_$cn", last(when(col(s"__last_$cn").isNotNull, col(s"__g_$cn")), ignoreNulls = true).over(prefix))
+      .withColumn(s"__carry_$cn", last(when(col(s"__last_$cn").isNotNull, col(s"__g_$cn")), ignoreNulls = true).over(RangeId.before))
     val bounds = stats.select(col("__pid") +: col("__off") +: cols.map(cn => col(s"__carry_$cn")): _*)
 
     val joined = withRn.join(broadcast(bounds), Seq("__pid"))

@@ -1,11 +1,16 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
-/** Deterministic, VALUE-derived range-bucket ids for the global (unkeyed)
-  * operators (`Rolling.fixedGlobal`/`timeGlobal`, `Fill.fillGlobal`,
-  * `Prep.shuffled`/`packGlobal`, `AsofJoin.unkeyedCarry`/`unkeyedNearest`).
+/** Deterministic, VALUE-derived range-bucket ids and the shared carry plan
+  * of the global (unkeyed) operators (`Rolling.fixedGlobal`/`timeGlobal`,
+  * `Fill.fillGlobal`, `Prep.shuffled`/`packGlobal`, `AsofJoin`'s unkeyed
+  * path). Every one of them runs the same plan, built here:
+  * [[bucketed]] (value-derived bucket id → hash exchange on it) → a
+  * ≤P-row per-bucket summary → a prefix/suffix window over the summary
+  * ([[before]]/[[after]]/[[offset]]) → broadcast join back onto the rows.
   *
   * WHY THIS EXISTS (r17 sf1-oracle catch): those operators used
   * `repartitionByRange` + `spark_partition_id()`, then referenced the
@@ -118,34 +123,9 @@ private[graft] object RangeId {
     * under whatever bound table was picked; a skewed sample only skews
     * bucket SIZES (the object-doc trade). The frame must expose the `keys`
     * columns with the same types. */
-  /** A sampled split-point table, reusable across operator calls (r18
-    * verdict item 3): a pipeline composing several global operators over
-    * the SAME key tuple (shuffle→pack chains) samples ONCE via
-    * [[sampleBoundTable]] and passes the table to each call — one bounded
-    * sampling job per pipeline instead of one per operator. The table
-    * pins the key schema and directions it was sampled under so a
-    * mismatched reuse fails fast instead of mis-bucketing. */
-  final case class BoundTable(keySchema: org.apache.spark.sql.types.StructType,
-                              asc: Seq[Boolean], nPart: Int, rows: Seq[Row])
-
-  /** Run the bounded split-point sampling job once and package the result
-    * for reuse ([[BoundTable]]). Same sampling as [[withRangeId]]'s
-    * internal path — ids computed under a reused table are byte-identical
-    * to computing the table inline (the id is a pure function of the key
-    * values under the bound table). */
-  def sampleBoundTable(df: DataFrame, keys: Seq[Column], asc: Seq[Boolean],
-                       nPart: Int): BoundTable = {
-    require(keys.nonEmpty && keys.length == asc.length,
-      s"RangeId: ${keys.length} keys vs ${asc.length} directions")
-    require(nPart >= 1, s"RangeId: nPart must be positive, got $nPart")
-    BoundTable(df.select(keys: _*).schema, asc, nPart,
-      sampleBounds(df, keys, asc, nPart))
-  }
-
   def withRangeId(df: DataFrame, keys: Seq[Column], asc: Seq[Boolean],
                   nPart: Int, idCol: String,
-                  sampleFrom: Option[DataFrame] = None,
-                  bounds: Option[BoundTable] = None): DataFrame = {
+                  sampleFrom: Option[DataFrame] = None): DataFrame = {
     require(keys.nonEmpty && keys.length == asc.length,
       s"RangeId: ${keys.length} keys vs ${asc.length} directions")
     require(nPart >= 1, s"RangeId: nPart must be positive, got $nPart")
@@ -181,18 +161,7 @@ private[graft] object RangeId {
         s"RangeId: sampleFrom key types ${sfTypes.map(_.simpleString)} != " +
           s"df key types ${dfTypes.map(_.simpleString)}")
     }
-    // a reused bound table must have been sampled under the same key
-    // schema, directions and partition count it is now bucketing for
-    bounds.foreach { bt =>
-      require(bt.keySchema.fields.map(_.dataType).toSeq ==
-          keySchema.fields.map(_.dataType).toSeq &&
-          bt.asc == asc && bt.nPart == nPart,
-        s"RangeId: reused BoundTable (keys ${bt.keySchema.simpleString}, " +
-          s"asc ${bt.asc}, nPart ${bt.nPart}) does not match this call " +
-          s"(keys ${keySchema.simpleString}, asc $asc, nPart $nPart)")
-    }
-    val boundRows = bounds.map(_.rows)
-      .getOrElse(sampleBounds(sampleFrom.getOrElse(df), keys, asc, nPart))
+    val boundRows = sampleBounds(sampleFrom.getOrElse(df), keys, asc, nPart)
     if (boundRows.isEmpty) df.withColumn(idCol, lit(0))
     else {
       // external sample Rows -> catalyst-internal bound rows (UTF8String,
@@ -210,6 +179,32 @@ private[graft] object RangeId {
       df.withColumn(idCol, org.apache.spark.sql.graft.InternalBridge.column(bucket))
     }
   }
+
+  /** `df` bucketed for a boundary-carry plan: a `__pid` range-bucket id
+    * over the session's shuffle-partition count ([[withRangeId]]), then
+    * hash-repartitioned on it so any window over `partitionBy("__pid")`
+    * runs exchange-free. Every plan branch derived from the result —
+    * the data rows, the per-bucket summary — computes the identical id
+    * from the row's own keys, so no exchange-instance agreement is
+    * required (the r17 sf1-oracle catch, see object doc). */
+  def bucketed(df: DataFrame, keys: Seq[Column], asc: Seq[Boolean],
+               sampleFrom: Option[DataFrame] = None): DataFrame = {
+    val nPart = df.sparkSession.sessionState.conf.numShufflePartitions
+    withRangeId(df, keys, asc, nPart, "__pid", sampleFrom)
+      .repartition(nPart, col("__pid"))
+  }
+
+  /** Frames over the ≤P per-bucket summary rows (one row per non-empty
+    * `__pid`, in bucket order): every bucket strictly before / strictly
+    * after the current one. The single-task window runs over the bucket
+    * COUNT, never over the data. */
+  val before: WindowSpec = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+  val after: WindowSpec = Window.orderBy("__pid").rowsBetween(1, Window.unboundedFollowing)
+
+  /** Exclusive per-bucket offset: the total of `x` over all earlier
+    * buckets (0 for the first) — what lifts a bucket-local running total
+    * or row number to its global value. */
+  def offset(x: Column): Column = coalesce(sum(x).over(before), lit(0L))
 
   /** Up to `nPart - 1` strictly-increasing split points from a seeded
     * per-partition reservoir sample of the key columns (bounded collect —

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.{TextFunctions => T}
+import graft.operators.RangeId
 
 /** Training-corpus preparation operators: deterministic splitting/sampling,
   * benchmark decontamination, context-window chunking, and sequence packing.
@@ -213,39 +214,13 @@ object Prep {
     * `writeShards(..., "shuffle_pos")` materializes the shuffled corpus as
     * contiguous shards trainers can stream in order.
     *
-    * Scale shape: one range exchange on the key (sampled boundaries — the
-    * same machinery as a global sort), per-partition ranks in parallel,
-    * then a broadcast ≤P-row count-prefix table lifts local ranks to global
-    * positions. No empty-`partitionBy` window and no driver materialization
-    * — the boundary-carry idiom of [[packGlobal]] with row counts instead
-    * of token sums. */
-  def shuffled(df: DataFrame, idCol: String, salt: Long = 0L,
-               bounds: Option[graft.operators.RangeId.BoundTable] = None): DataFrame = {
-    val keyed = df.withColumn("shuffle_key", shuffleKey(col(idCol), salt).cast("long"))
-    // value-derived bucket ids (r17 sf1-oracle catch, see
-    // operators.RangeId): the offsets subtree and the data subtree must
-    // agree on partition ids, which spark_partition_id over separately-
-    // sampled range-exchange instances cannot guarantee; local ranks come
-    // from a row_number window the hash exchange below already satisfies
-    val nPartS = keyed.sparkSession.sessionState.conf.numShufflePartitions
-    val parted = graft.operators.RangeId.withRangeId(keyed,
-        Seq(col("shuffle_key"), col(idCol)), Seq(true, true), nPartS, "__pid",
-        bounds = bounds)
-      .repartition(nPartS, col("__pid"))
-    // per-partition row counts -> exclusive prefix offsets (≤P rows: the
-    // only single-task window runs over the partition COUNT, not the data)
-    val prefix = Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = parted.groupBy(col("__pid")).agg(count(lit(1)).as("__n"))
-      .withColumn("__off", coalesce(sum(col("__n")).over(prefix), lit(0L)))
-      .select(col("__pid"), col("__off"))
-    parted
-      .withColumn("__lrn",
-        row_number().over(Window.partitionBy("__pid")
-          .orderBy(col("shuffle_key"), col(idCol))).cast("long"))
-      .join(broadcast(offsets), Seq("__pid"))
-      .withColumn("shuffle_pos", col("__lrn") - lit(1L) + col("__off"))
-      .drop("__pid", "__lrn", "__off")
-  }
+    * Scale shape: the rank is [[packGlobal]]'s exclusive running total
+    * with weight 1 ([[runningTotal]]) — no empty-`partitionBy` window and
+    * no driver materialization. */
+  def shuffled(df: DataFrame, idCol: String, salt: Long = 0L): DataFrame =
+    runningTotal(df.withColumn("shuffle_key", shuffleKey(col(idCol), salt).cast("long")),
+        Seq(col("shuffle_key"), col(idCol)), lit(1L))
+      .withColumnRenamed("__prev", "shuffle_pos")
 
   /** Deterministic per-stratum up-sampling (epoch repetition): each row is
     * repeated `factors(stratum)` times (default `defaultFactor`), tagged
@@ -941,44 +916,42 @@ object Prep {
   }
 
   /** Single-stream (ungrouped) packing at scale: the exclusive running
-    * token sum runs range-partitioned on the order key — per-partition
-    * running sums in parallel, then a broadcast ≤P-row offset table (one
-    * prefix total per partition) lifts them to global values. No
-    * empty-`partitionBy` window ever sees the data, so one giant stream
-    * does NOT serialize through a single task (same boundary-carry idiom as
-    * `Rolling.fixedGlobal`/`Fill.fillGlobal`). Identical results to
-    * [[packByTokens]] with a constant group. */
+    * token sum over the whole frame ([[runningTotal]]), so one giant stream
+    * does NOT serialize through a single task. Identical results to
+    * [[packByTokens]] with a constant group.
+    *
+    * `sampleFrom` forwards RangeId's split-point sample source: a packer
+    * sitting atop an expensive pipeline (q53) hands the CHEAP upstream
+    * scan here so the bounded sampling job does not re-run the pipeline
+    * (r17 verdict item 4); results are sample-independent. */
   def packGlobal(df: DataFrame, orderCols: Seq[String], nTokensCol: String,
                  budget: Long,
-                 sampleFrom: Option[DataFrame] = None,
-                 bounds: Option[graft.operators.RangeId.BoundTable] = None): DataFrame = {
+                 sampleFrom: Option[DataFrame] = None): DataFrame = {
     require(budget >= 1, s"budget must be >= 1, got $budget")
-    val ordered = orderCols.map(col)
-    // value-derived bucket ids: same multi-subtree __pid divergence class
-    // as Rolling/Fill (r17 sf1-oracle catch; see operators.RangeId).
-    // `sampleFrom` forwards RangeId's split-point sample source: a packer
-    // sitting atop an expensive pipeline (q53) hands the CHEAP upstream
-    // scan here so the bounded sampling job does not re-run the pipeline
-    // (r17 verdict item 4); results are bound-table-independent.
-    val nPartP = df.sparkSession.sessionState.conf.numShufflePartitions
-    val parted = graft.operators.RangeId.withRangeId(df, ordered,
-        ordered.map(_ => true), nPartP, "__pid", sampleFrom, bounds)
-      .repartition(nPartP, col("__pid"))
-    val wLocal = Window.partitionBy("__pid").orderBy(ordered: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // per-partition totals -> exclusive prefix offsets (<= P rows: the only
-    // single-task window runs over the partition COUNT, not the data)
-    val prefix = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = parted.groupBy("__pid").agg(sum(col(nTokensCol)).as("__tot"))
-      .withColumn("__off", coalesce(sum(col("__tot")).over(prefix), lit(0L)))
-      .select(col("__pid"), col("__off"))
-    parted
-      .withColumn("__lprev", coalesce(sum(col(nTokensCol)).over(wLocal), lit(0L)))
-      .join(broadcast(offsets), Seq("__pid"))
-      .withColumn("__prev", col("__lprev") + col("__off"))
+    runningTotal(df, orderCols.map(col), col(nTokensCol), sampleFrom)
       .withColumn("seq_id", floor(col("__prev") / budget))
       .withColumn("seq_offset", col("__prev") % budget)
-      .drop("__pid", "__lprev", "__off", "__prev")
+      .drop("__prev")
+  }
+
+  /** `df` plus `__prev`, the exclusive running total of `weight` under
+    * `ordered` across the whole frame: range-bucketed on the order
+    * ([[RangeId.bucketed]]), per-bucket running totals in
+    * parallel, then a broadcast ≤P-row offset table (one prefix total per
+    * bucket) lifts them to global values. */
+  private def runningTotal(df: DataFrame, ordered: Seq[Column], weight: Column,
+                           sampleFrom: Option[DataFrame] = None): DataFrame = {
+    val parted = RangeId.bucketed(df, ordered, ordered.map(_ => true), sampleFrom)
+    val wLocal = Window.partitionBy("__pid").orderBy(ordered: _*)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = parted.groupBy("__pid").agg(sum(weight).as("__tot"))
+      .withColumn("__off", RangeId.offset(col("__tot")))
+      .select(col("__pid"), col("__off"))
+    parted
+      .withColumn("__lprev", coalesce(sum(weight).over(wLocal), lit(0L)))
+      .join(broadcast(offsets), Seq("__pid"))
+      .withColumn("__prev", col("__lprev") + col("__off"))
+      .drop("__pid", "__lprev", "__off")
   }
 
   /** Attention-mask spans for packed sequences: one row per (sequence,

@@ -133,18 +133,21 @@ class AsofSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
   }
 
-  test("randomized brute-force equivalence: strategies x allow_eq x tolerance (seeded)") {
-    // seeded generated data with heavy left/right timestamp ties, compared
-    // against an in-memory O(n^2)-style reference — catches semantic drift
-    // the fixed golden scenarios and the (tie-deduped) oracle cannot
+  /** Seeded generated data with heavy left/right timestamp ties, compared
+    * against an in-memory O(n^2)-style reference across strategies ×
+    * allow_eq × tolerance — catches semantic drift the fixed golden
+    * scenarios and the (tie-deduped) oracle cannot. `unkeyed` joins
+    * WITHOUT by-keys (one key in the pool), taking the bucketed carry path. */
+  private def bruteForce(unkeyed: Boolean, label: String): Unit = {
     val rnd = new scala.util.Random(2024)
-    val keyPool = Array("a", "b", "c")
+    val keyPool = if (unkeyed) Array("a") else Array("a", "b", "c")
     def tstamp(sec: Long) = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(sec))
     for (trial <- 1 to 2) {
-      val leftRows = (1 to 40).map(i => (i.toLong, keyPool(rnd.nextInt(3)), 1000L + rnd.nextInt(120)))
+      val leftRows = (1 to 40).map(i =>
+        (i.toLong, keyPool(rnd.nextInt(keyPool.length)), 1000L + rnd.nextInt(120)))
       // right unique per (k, t) so the matched VALUE is unambiguous even
       // where the engine's intra-tie pick is arbitrary
-      val rightRaw = (1 to 60).map(_ => (keyPool(rnd.nextInt(3)), 1000L + rnd.nextInt(120)))
+      val rightRaw = (1 to 60).map(_ => (keyPool(rnd.nextInt(keyPool.length)), 1000L + rnd.nextInt(120)))
         .distinct.map { case (k, t) => (k, t, rnd.nextDouble()) }
       val left = leftRows.map { case (id, k, t) => (id, k, tstamp(t)) }.toDF("id", "k", "t")
       val right = rightRaw.map { case (k, t, v) => (k, tstamp(t), v) }.toDF("k", "t", "rv")
@@ -171,16 +174,37 @@ class AsofSpec extends SparkSpec {
             }
           }
         }
-        val got = AsofJoin.join(left, right, "t", "t", Seq(("k", "k")),
-            strategy = strat, tolerance = tolSec.map(s => s"${s}s"), allowEq = allowEq)
-          .select(col("id"), col("rv")).collect()
+        val tol = tolSec.map(s => s"${s}s")
+        val joined =
+          if (unkeyed) AsofJoin.join(left.drop("k"), right.drop("k"), "t", "t",
+            strategy = strat, tolerance = tol, allowEq = allowEq)
+          else AsofJoin.join(left, right, "t", "t", Seq(("k", "k")),
+            strategy = strat, tolerance = tol, allowEq = allowEq)
+        val got = joined.select(col("id"), col("rv")).collect()
           .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
         leftRows.foreach { case (id, k, t) =>
           assert(got(id) == expected(k, t),
-            s"trial=$trial strat=$strat allowEq=$allowEq tol=$tolSec id=$id k=$k t=$t: " +
+            s"$label trial=$trial strat=$strat allowEq=$allowEq tol=$tolSec id=$id k=$k t=$t: " +
               s"got=${got(id)} want=${expected(k, t)}")
         }
       }
+    }
+  }
+
+  test("randomized brute-force equivalence: strategies x allow_eq x tolerance (seeded)") {
+    bruteForce(unkeyed = false, "keyed")
+  }
+
+  test("randomized brute-force equivalence, unkeyed: bucket edges on tied times (3 and 7 shuffle partitions)") {
+    // right rows are unique per timestamp and left/right times tie heavily,
+    // so RangeId bucket edges land on tied times: the unkeyed carry must
+    // match brute force with no boundary equality guard
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    for (parts <- Seq("3", "7")) {
+      spark.conf.set(key, parts)
+      try bruteForce(unkeyed = true, s"unkeyed partitions=$parts")
+      finally spark.conf.set(key, saved)
     }
   }
 }

@@ -213,20 +213,30 @@ class BenchRefsSpec extends SparkSpec {
   test("repro-prior adjudication (r18 verdict item 7): ambient-repro labeling") {
     // a violation whose unchanged-tree prior ratio >= 0.8x its own ratio
     // self-classifies ambient — the slowness reproduces without the diff
-    assert(Bench.adjudicate("unknown", 2.6, Some(2.3)) == "ambient-repro")
-    assert(Bench.adjudicate("ambient-starvation", 2.6, Some(2.2)) == "ambient-repro")
-    assert(Bench.adjudicate("cpu-amplified", 2.0, Some(1.8)) == "ambient-repro")
+    assert(Bench.adjudicate("unknown", 2.6, 1.5, Some(2.3)) == "ambient-repro")
+    assert(Bench.adjudicate("ambient-starvation", 2.6, 1.5, Some(2.2)) == "ambient-repro")
+    assert(Bench.adjudicate("cpu-amplified", 2.0, 1.5, Some(1.8)) == "ambient-repro")
     // a prior comfortably inside the gate does NOT adjudicate: the slowness
     // is new to this tree
-    assert(Bench.adjudicate("unknown", 2.6, Some(1.3)) == "unknown")
+    assert(Bench.adjudicate("unknown", 2.6, 1.5, Some(1.3)) == "unknown")
     // no prior, no adjudication
-    assert(Bench.adjudicate("unknown", 2.6, None) == "unknown")
+    assert(Bench.adjudicate("unknown", 2.6, 1.5, None) == "unknown")
     // counter-backed mechanisms and failed reps keep their names — a
     // standing spill/recompute pathology is pre-existing, not ambient
-    assert(Bench.adjudicate("spill", 2.6, Some(2.6)) == "spill")
-    assert(Bench.adjudicate("recompute", 2.6, Some(2.6)) == "recompute")
-    assert(Bench.adjudicate("gc-storm", 2.6, Some(2.6)) == "gc-storm")
-    assert(Bench.adjudicate("failed", 2.6, Some(2.6)) == "failed")
+    assert(Bench.adjudicate("spill", 2.6, 1.5, Some(2.6)) == "spill")
+    assert(Bench.adjudicate("recompute", 2.6, 1.5, Some(2.6)) == "recompute")
+    assert(Bench.adjudicate("gc-storm", 2.6, 1.5, Some(2.6)) == "gc-storm")
+    assert(Bench.adjudicate("failed", 2.6, 1.5, Some(2.6)) == "failed")
+  }
+
+  test("repro-prior adjudication (ADVICE r19): a prior just under the gate never relabels") {
+    // prior 1.45x >= 0.8 × 1.8x, but it PASSED the 1.5x gate: the slowness
+    // did not reproduce at the unchanged tree, so the violation keeps its
+    // own mechanism
+    assert(Bench.adjudicate("unknown", 1.8, 1.5, Some(1.45)) == "unknown")
+    assert(Bench.adjudicate("cpu-amplified", 1.8, 1.5, Some(1.5)) == "cpu-amplified")
+    // just over the gate it does reproduce
+    assert(Bench.adjudicate("unknown", 1.8, 1.5, Some(1.51)) == "ambient-repro")
   }
 
   test("parseNumMap: extracts a named flat map, tolerates absent keys") {

@@ -24,7 +24,8 @@ class InterpretedModeSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   /** Expression-heavy faces: native expressions, decimal agg folds, chrono
-    * formatting, ANN kernels, media decode, quality-filter char walks. */
+    * formatting, ANN kernels, media decode, quality-filter char walks,
+    * range-bucket ids. */
   private val Faces = Seq(
     "q01_groupby_agg", "q11_case_cast_math", "q12_str_funcs", "q13_dt_funcs",
     "q19_quantile", "q21_asof_backward", "q24_asof_nearest",
@@ -32,6 +33,9 @@ class InterpretedModeSpec extends SparkSpec {
     "q32_list_ops", "q33_struct_ops", "q36_sample", "q37_quantile_modes",
     "q40_try_cast", "q55_strftime_iso", "q60_series_ops", "q69_list_sort",
     "q80_zorder_curve",
+    // the unkeyed carry faces: RangeBucketExpr doGenCode vs eval
+    "q41_asof_unkeyed", "q42_fill_global", "q45_rolling_global_rows",
+    "q46_rolling_global_time", "qd23_pack_global", "qd24_shuffle",
     "qd03_ngram_jaccard", "qd04_minhash_pairs", "qd05_simhash_pairs",
     "qd06_langid", "qd07_token_stats", "qd08_quality", "qd11_repetition",
     "qd13_pii_redact", "qd25_rarity", "qd30_compress_ratio",
@@ -98,7 +102,7 @@ class InterpretedModeSpec extends SparkSpec {
       }
     }
 
-  test("interpreted evaluation == codegen evaluation on 52 expression-bearing queries") {
+  test("interpreted evaluation == codegen evaluation on 58 expression-bearing queries") {
     val bad = diverged(interpSession(), Faces)
     assert(bad.isEmpty, s"interpreted mode diverged on:\n${bad.mkString("\n")}")
     // the knob never leaked into the shared session

@@ -16,10 +16,12 @@ import org.apache.spark.sql.DataFrame
   * per-doc arithmetic, span/line dedup elections, connected components) are
   * exactly the ones where a partition-boundary bug would hide.
   *
-  * Deliberately excluded: q36_sample / qd24_shuffle-style seeded randomness
-  * is per-partition-seeded BY DESIGN (Spark's Bernoulli sampling), so those
+  * Deliberately excluded: q36_sample-style seeded randomness is
+  * per-partition-seeded BY DESIGN (Spark's Bernoulli sampling), so such
   * queries pin determinism under a FIXED partitioning in their own
-  * contracts, not invariance across partitionings.
+  * contracts, not invariance across partitionings. qd24_shuffle is NOT of
+  * that kind — its order key is a multiplicative hash of the id — so it is
+  * listed.
   */
 class PartitionInvarianceSpec extends SparkSpec {
 
@@ -29,6 +31,7 @@ class PartitionInvarianceSpec extends SparkSpec {
     "q01_groupby_agg",          // map-side combine vs 3 reducers
     "q08_sort_limit",           // global top-k across split counts
     "q21_asof_backward",        // as-of partition boundary handoff
+    "qd24_shuffle",             // running count over the hash-key order
     "q25_group_by_dynamic",     // window grid across splits
     "q26_rolling_rows",         // keyed rolling window
     "q42_fill_global",          // range-partition + broadcast boundary carry
@@ -104,8 +107,8 @@ class PartitionInvarianceSpec extends SparkSpec {
         fail(s"$name differs under repartitioning:\n  adversarial $a\n  default     $b")
     }
 
-  // UNKEYED nearest rides the range-partition + boundary-patch path
-  // (AsofJoin.unkeyedNearest) — no driver query exercises it, so pin its
+  // UNKEYED nearest rides the range-bucket + boundary-patch path
+  // (AsofJoin's unkeyed carry) — no driver query exercises it, so pin its
   // invariance directly: partition edges move with the split/partition
   // config, and a boundary-patch bug would show as edge rows matching the
   // wrong direction

@@ -83,6 +83,44 @@ class PlanSpec extends SparkSpec {
     assert(timePlan.contains("BroadcastHashJoin"), s"expected broadcast equi-join:\n$timePlan")
   }
 
+  test("unkeyed carry operators: hash-exchange and broadcast counts per path (RangeId carry)") {
+    // the seven unkeyed operators share one plan shape — RangeId bucket,
+    // hash exchange on it, a <=P-row summary, broadcast back. These counts
+    // pin that shape: a shared carry operator must meet or beat them
+    val d = "/root/testdata/sf0.001"
+    val ev = SparkEntry.t(spark, d, "events")
+    val orders = SparkEntry.t(spark, d, "orders")
+    val docs = SparkEntry.t(spark, d, "documents")
+    val buys = ev.filter(col("event_type") === "purchase").select(col("event_id"), col("ts"))
+    val clicks = ev.filter(col("event_type") === "click")
+      .groupBy(col("ts")).agg(max(col("value")).as("click_value"))
+    import graft.operators.{AsofJoin, Fill, Rolling}
+    val paths: Seq[(String, DataFrame)] = Seq(
+      "fill" -> Fill.fillGlobal(ev, Seq("value"), Seq(col("ts"), col("event_id"))),
+      "rolling_rows" -> Rolling.fixedGlobal(orders, "25i", Seq(col("o_orderkey")),
+        Seq("roll_sum" -> (w => sum(col("o_totalprice")).over(w)))),
+      "rolling_time" -> Rolling.timeGlobal(ev, "3d", col("ts"),
+        diffSums = Seq("roll_sum" -> col("value").cast("decimal(18,4)"))),
+      "asof_backward" -> AsofJoin.join(buys, clicks, "ts", "ts"),
+      "asof_nearest" -> AsofJoin.join(buys, clicks, "ts", "ts", strategy = AsofJoin.Nearest),
+      "shuffled" -> graft.prep.Prep.shuffled(docs, "doc_id"),
+      "pack_global" -> graft.prep.Prep.packGlobal(
+        docs.withColumn("n_tokens", length(col("text")).cast("long")),
+        Seq("doc_id"), "n_tokens", 512L))
+    val got = paths.map { case (name, df) =>
+      val p = planOf(df)
+      name -> (("Exchange hashpartitioning".r.findAllIn(p).length,
+        "BroadcastExchange".r.findAllIn(p).length))
+    }.toMap
+    // (hash exchanges, broadcast exchanges) in the pre-execution plan, where
+    // every subtree reading the bucketed frame still shows its own exchange
+    val expected = Map(
+      "fill" -> (2, 1), "rolling_rows" -> (9, 5), "rolling_time" -> (9, 5),
+      "asof_backward" -> (4, 1), "asof_nearest" -> (4, 1),
+      "shuffled" -> (2, 1), "pack_global" -> (2, 1))
+    assert(got == expected, s"carry plan shape moved: got $got")
+  }
+
   test("bucketed co-located join: zero exchanges, bucket layout feeds the SMJ (q70 shape)") {
     // the 100 TB fact-fact join story: both sides bucketed+sorted on the
     // join key at layout time (one file per bucket) → the join itself must

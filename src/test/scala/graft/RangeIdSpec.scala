@@ -93,36 +93,6 @@ class RangeIdSpec extends SparkSpec {
     assert(ids.distinct.size > 1, "raw-frame sample should still split the range")
   }
 
-  test("bounds reuse (r18 verdict item 3): one sampled table, byte-identical ids, mismatch fails fast") {
-    import spark.implicits._
-    val df = spark.createDataset((0 until 400).map(i => (i.toLong, s"w$i")))
-      .toDF("k", "s")
-    // sample ONCE, reuse across two operator calls: ids must equal the
-    // inline-sampled path bit-for-bit (same bounded job, same table)
-    val bt = RangeId.sampleBoundTable(df, Seq(col("k")), Seq(true), 6)
-    val inline = RangeId.withRangeId(df, Seq(col("k")), Seq(true), 6, "__rid")
-      .select(col("k"), col("__rid")).collect().map(r => (r.getLong(0), r.getInt(1))).toMap
-    val reused = RangeId.withRangeId(df, Seq(col("k")), Seq(true), 6, "__rid",
-        bounds = Some(bt))
-      .select(col("k"), col("__rid")).collect().map(r => (r.getLong(0), r.getInt(1))).toMap
-    assert(reused == inline, "reused bound table changed bucket ids")
-    // a second consumer over a FILTERED frame (the composed-pipeline shape)
-    val reused2 = RangeId.withRangeId(df.filter(col("k") % 2 === 0),
-        Seq(col("k")), Seq(true), 6, "__rid", bounds = Some(bt))
-      .select(col("k"), col("__rid")).collect().map(r => (r.getLong(0), r.getInt(1)))
-    assert(reused2.forall { case (k, id) => inline(k) == id },
-      "filtered consumer disagrees with the shared bound table")
-    // mismatched reuse fails fast with the mismatch named
-    val eAsc = intercept[IllegalArgumentException](
-      RangeId.withRangeId(df, Seq(col("k")), Seq(false), 6, "__rid",
-        bounds = Some(bt)))
-    assert(eAsc.getMessage.contains("BoundTable"), eAsc.getMessage)
-    val eType = intercept[IllegalArgumentException](
-      RangeId.withRangeId(df, Seq(col("s")), Seq(true), 6, "__rid",
-        bounds = Some(bt)))
-    assert(eType.getMessage.contains("BoundTable"), eType.getMessage)
-  }
-
   test("sampleFrom key-type mismatch fails fast with both types named (ADVICE r18)") {
     import spark.implicits._
     val df = spark.createDataset((0 until 50).map(_.toLong)).toDF("k")
