@@ -185,23 +185,19 @@ object Bench {
     // remaining warm reps — robust to one straggler rep where min() rewards
     // lucky scheduling and mean() is dragged by outliers.
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt)
+    // optional comma-separated name filter for targeted A/B runs and
+    // single-face profiles; the full suite (empty filter) stays the artifact
+    // of record. An unknown name fails the run before the session starts.
+    val only = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "").split(',').map(_.trim).filter(_.nonEmpty).toSet
+    // the bench times OPERATOR faces: benchQueries == queries except where a
+    // correctness face embeds its verification contract (qd04/qd05/qs04) or
+    // a fixture oracle (qd32) — those names map to the raw operator here
+    val selected = SparkEntry.selectFaces(SparkEntry.benchQueries, only)
     val spark = Sessions.local(cpus)
     val sc = spark.sparkContext
     val counters = MetricsProbe.install(sc)
     // one warm-up action so JVM/codegen startup isn't billed to the first query
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    // optional comma-separated name filter for targeted A/B runs; the full
-    // suite (empty filter) stays the artifact of record
-    val only = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "").split(',').map(_.trim).filter(_.nonEmpty).toSet
-    // the bench times OPERATOR faces: benchQueries == queries except where a
-    // correctness face embeds its verification contract (qd04/qd05/qs04) or
-    // a fixture oracle (qd32) — those names map to the raw operator here
-    val suite = SparkEntry.benchQueries
-    val unknown = only.diff(suite.keySet)
-    if (unknown.nonEmpty)
-      System.err.println(s"[bench] WARNING: unknown names in SPARK_GRAFT_BENCH_ONLY " +
-        s"(selected nothing): ${unknown.toSeq.sorted.mkString(", ")}")
-    val selected = if (only.isEmpty) suite else suite.filter(kv => only(kv._1))
     // SPARK_GRAFT_BENCH_NO_CLEAR=1 runs the suite WITHOUT the per-rep
     // clearCache/GC hygiene — the adversarial long-lived-session shape
     // (round 6's driver harness measured qd41 at 135 s under accumulated

@@ -72,8 +72,8 @@ object BenchRefs {
       // first r16 gated run) completed the DRIVE but aborted at the
       // memory-sink oracle's 100k localize guard — the harness's
       // driver-side bound, exceeded by design at 10x output volume. Their
-      // cross-scale story routes through q77/q77s (in-bound), the
-      // ProfileInterval state probes, and — since r17 — q83 below: the
+      // cross-scale story routes through q77/q77s (in-bound), the r16
+      // state probes (BASELINE round-16), and — since r17 — q83 below: the
       // SAME full-outer join through the production file sink, which has
       // no driver bound and so gates at any SF.
       // r17 basis: 3-rep quiet sf1 run, spread 0.045, cpu healthy —

@@ -35,11 +35,6 @@ object MetricsProbe {
     ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(b => math.max(0L, b.getCollectionTime)).sum
 
-  /** Cumulative GC cycle count across all collector beans. */
-  def gcCount(): Long =
-    ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(b => math.max(0L, b.getCollectionCount)).sum
-
   /** Old-generation occupancy in MB (G1 "G1 Old Gen", parallel "PS Old
     * Gen", serial "Tenured Gen" — matched by name); falls back to total
     * heap used when no old-gen pool is identifiable. */

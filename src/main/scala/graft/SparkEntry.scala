@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 import graft.api.frame._
 import graft.api.syntax._
 
@@ -119,6 +120,15 @@ object SparkEntry {
     ("ing", "</w>"), ("a", "n"), ("o", "n"), ("s", "</w>"), ("e", "r"),
     ("o", "r"), ("a", "t"), ("t", "</w>"), ("d", "</w>"), ("an", "d</w>"))
 
+  /** The faces of `all` that a name filter selects: every face for an
+    * empty filter. A name that is no face fails fast with all unknown names
+    * listed — a typo must not yield an empty or partial run. */
+  private[graft] def selectFaces[F](all: Map[String, F], only: Set[String]): Map[String, F] = {
+    val unknown = only.diff(all.keySet)
+    require(unknown.isEmpty, s"unknown face name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    if (only.isEmpty) all else all.filter(kv => only(kv._1))
+  }
+
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q01_groupby_agg")(spark, "/root/testdata/sf0.001")
@@ -137,7 +147,6 @@ object SparkEntry {
 
   private val fixtureCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Build-once-scan-thereafter fixture parquet, keyed by (name, sfDir). */
   /** qd50's query terms — shared by the Spark face and the generated oracle
     * so they cannot drift; 'zebra' never occurs in the corpus (df = 0),
     * exercising the zero-tf / max-idf path. */
@@ -286,70 +295,241 @@ object SparkEntry {
     })
   }
 
-  /** Drive a streaming frame through a memory sink to COMPLETION: drain
-    * everything available, append an EMPTY batch to `flushDir` (the
-    * watermark advanced at the previous batch's end, so this batch fires
-    * the event-time timeouts that flush open state), drain again, and
-    * return the projected result as a driver-local frame (`localize`
-    * guard). The temp view is dropped even when projection fails — a
-    * failed bench rep must not leave catalog residue. The empty flush
-    * files are DELETED after the drive (ADVICE r12): `flushDir` is the
-    * cached per-JVM fixture directory, so leaving them would grow the dir
-    * by one file per rep/invocation, skewing later reps' listing/read cost
-    * and leaking files until the pid sweep. */
+  /** Drive a started stream to COMPLETION: drain everything available,
+    * append an EMPTY batch to `flushDir` (the watermark advanced at the
+    * previous batch's end, so this batch fires the event-time timeouts that
+    * flush open state), drain again. The query stops and its state stores
+    * release even when the drive fails, and the empty flush files are
+    * DELETED (ADVICE r12): `flushDir` is the cached per-JVM fixture
+    * directory, so leaving them would grow the dir by one file per
+    * rep/invocation, skewing later reps' listing/read cost and leaking files
+    * until the pid sweep. Returns the query's recent progress. */
+  private def driveToCompletion(s: SparkSession, flushDir: String,
+                                flushSchema: org.apache.spark.sql.types.StructType)
+                               (start: => StreamingQuery): Array[StreamingQueryProgress] = {
+    val flushPath = java.nio.file.Paths.get(flushDir)
+    def ls: Set[java.nio.file.Path] = listDir(flushPath).toSet
+    val preFlush = ls
+    val q = start
+    try {
+      q.processAllAvailable()
+      s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), flushSchema)
+        .write.mode("append").parquet(flushDir)
+      q.processAllAvailable()
+      q.recentProgress
+    } finally {
+      q.stop()
+      graft.streaming.StreamOps.releaseStateStores()
+      (ls -- preFlush).foreach(p =>
+        try java.nio.file.Files.deleteIfExists(p)
+        catch { case _: java.io.IOException => () })
+    }
+  }
+
+  /** [[driveToCompletion]] through a memory sink, returning the projected
+    * result as a driver-local frame (`localize` guard). The temp view is
+    * dropped even when projection fails — a failed bench rep must not leave
+    * catalog residue. */
   private def drainStream(s: SparkSession, out: DataFrame, qn: String,
                           flushDir: String,
                           flushSchema: org.apache.spark.sql.types.StructType)
                          (project: DataFrame => DataFrame): DataFrame = {
-    val flushPath = java.nio.file.Paths.get(flushDir)
-    def ls: Set[java.nio.file.Path] = listDir(flushPath).toSet
-    val preFlush = ls
-    val q = out.writeStream.outputMode("append").format("memory").queryName(qn).start()
-    try {
-      q.processAllAvailable()
-      s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), flushSchema)
-        .write.mode("append").parquet(flushDir)
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      graft.streaming.StreamOps.releaseStateStores()
-      (ls -- preFlush).foreach(p =>
-        try java.nio.file.Files.deleteIfExists(p)
-        catch { case _: java.io.IOException => () })
-    }
+    driveToCompletion(s, flushDir, flushSchema)(
+      out.writeStream.outputMode("append").format("memory").queryName(qn).start())
     try localize(s, project(s.table(qn)))
     finally s.catalog.dropTempView(qn)
   }
 
-  /** Drive a streaming frame through the PRODUCTION file sink to
-    * completion (q83): same drain + empty-flush-batch choreography as
-    * [[drainStream]], but the output rides the checkpointed parquet sink —
-    * nothing ever materializes on the driver, so the drive is valid at any
-    * SF (the memory-sink harness's 100k `localize` guard does not apply).
-    * The caller reads the sink directory back as a lazy scan. Flush files
-    * appended to `flushDir` are deleted after the drive (ADVICE r12). */
-  private def driveFileSink(s: SparkSession, out: DataFrame, outDir: String,
-                            ckptDir: String, flushDir: String,
-                            flushSchema: org.apache.spark.sql.types.StructType): Unit = {
-    val flushPath = java.nio.file.Paths.get(flushDir)
-    def ls: Set[java.nio.file.Path] = listDir(flushPath).toSet
-    val preFlush = ls
-    val q = graft.streaming.StreamOps.sinkFileStream(out, "parquet", outDir,
-      ckptDir, org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-    try {
-      q.processAllAvailable()
-      s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), flushSchema)
-        .write.mode("append").parquet(flushDir)
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      graft.streaming.StreamOps.releaseStateStores()
-      (ls -- preFlush).foreach(p =>
-        try java.nio.file.Files.deleteIfExists(p)
-        catch { case _: java.io.IOException => () })
+  /** A timestamp literal one year past `df`'s latest `ts` (a 1-row agg):
+    * a stream fixture's sentinel row carries it so the watermark passes
+    * every real window and all open state finalizes. */
+  private def farFuture(df: DataFrame): Column = {
+    val maxTs = df.agg(max(col("ts").cast("timestamp"))).head.getTimestamp(0)
+    lit(new java.sql.Timestamp(maxTs.getTime + 365L * 86400000L)).cast("timestamp")
+  }
+
+  /** Purchases as a stream fixture: (event_id, user_id, ts, value), with
+    * `sentinel` plus one far-future row of user -1. */
+  private def purchasesFixture(s: SparkSession, d: String, sentinel: Boolean): String =
+    streamFixture(s, d, if (sentinel) "q78_left" else "q75_left") {
+      val ev = t(s, d, "events")
+      val rows = ev.filter(col("event_type") === "purchase")
+        .select(col("event_id"), col("user_id"),
+          col("ts").cast("timestamp").as("ts"), col("value"))
+      if (!sentinel) rows
+      else rows.unionByName(s.range(1).select(lit(-1L).as("event_id"),
+        lit(-1L).as("user_id"), farFuture(ev).as("ts"), lit(0.0).as("value")))
+    }
+
+  /** The continuous as-of faces (q75 backward, q76 forward with
+    * tolerance): purchases stream-joined per user to the events of
+    * `rightType`, whose value rides as `<prefix>_value` (with `withTs`, their
+    * time too, as `<prefix>_ts`). A far-future right-side sentinel (user -1)
+    * advances the unioned watermark past every purchase so all matches
+    * finalize; the empty flush batch fires the timeouts that emit them. */
+  private def asofStreamFace(s: SparkSession, d: String, n: String,
+                             rightType: String, prefix: String, withTs: Boolean,
+                             strategy: graft.operators.AsofJoin.Strategy,
+                             tolerance: Option[String]): DataFrame = {
+    val inL = purchasesFixture(s, d, sentinel = false)
+    val inR = streamFixture(s, d, s"q${n}_right") {
+      val ev = t(s, d, "events")
+      val rows = ev.filter(col("event_type") === rightType)
+        .select(col("user_id"), col("ts").cast("timestamp").as("ts"),
+          col("value").as(s"${prefix}_value"))
+      val sentinel = s.range(1).select(lit(-1L).as("user_id"),
+        farFuture(ev).as("ts"), lit(0.0).as(s"${prefix}_value"))
+      if (!withTs) rows.unionByName(sentinel)
+      else rows.withColumn(s"${prefix}_ts", col("ts")).unionByName(
+        sentinel.withColumn(s"${prefix}_ts", lit(null).cast("timestamp")))
+    }
+    // input-sized state partitioning (r18, guide §2) — see intervalJoinFace
+    val nSp = graft.streaming.StreamOps.sizedStatePartitionsForInput(s, Seq(inL, inR))
+    graft.streaming.StreamOps.withStatePartitions(s, nSp) { s2 =>
+      val lSchema = s2.read.parquet(inL).schema
+      val rSchema = s2.read.parquet(inR).schema
+      val out = graft.streaming.AsofStream.asofStream(
+        s2.readStream.schema(lSchema).parquet(inL),
+        s2.readStream.schema(rSchema).parquet(inR),
+        "ts", "ts", by = Seq(("user_id", "user_id")), watermark = "0 seconds",
+        strategy = strategy, tolerance = tolerance)
+      drainStream(s2, out, s"g${n}_stream", inL, lSchema) { t =>
+        t.select(Seq(col("event_id"), col("user_id"),
+          col("ts").cast("timestamp_ntz").as("ts"), col("value"),
+          col(s"${prefix}_value")) ++
+          (if (withTs) Seq(col(s"${prefix}_ts").cast("timestamp_ntz").as(s"${prefix}_ts"))
+           else Nil): _*)
+      }.orderBy(col("event_id"))
     }
   }
 
+  /** Where an interval-join face drives its stream: the memory-sink
+    * harness under a temp view (bounded by `localize`), or the production
+    * file sink (`StreamOps.sinkFileStream`: append mode, checkpointed,
+    * exactly-once) under `dir`, whose output never reaches the driver, so
+    * it drives at any SF. `onProgress` sees the file-sink query's progress. */
+  private[graft] sealed trait IjSink
+  private[graft] final case class MemorySink(view: String) extends IjSink
+  private[graft] final case class FileSink(
+      dir: String, onProgress: Array[StreamingQueryProgress] => Unit = _ => ())
+    extends IjSink
+
+  /** The interval-join faces' purchase and click stream fixtures (left:
+    * event_id, user_id, ts, value; right: click_id, user_id, click_ts,
+    * click_value). With `sentinels`, BOTH streams carry a far-future row of
+    * user -1 — the global watermark is the min across sources, so only a
+    * sentinel on each side advances it past every real window and lets the
+    * outer nulls finalize. */
+  private[graft] def intervalJoinInputs(s: SparkSession, d: String,
+                                        sentinels: Boolean): (String, String) = {
+    val inR = streamFixture(s, d, if (sentinels) "q78_right" else "q77_right") {
+      val ev = t(s, d, "events")
+      val clicks = ev.filter(col("event_type") === "click")
+        .select(col("event_id").as("click_id"), col("user_id"),
+          col("ts").cast("timestamp").as("click_ts"),
+          col("value").as("click_value"))
+      if (!sentinels) clicks
+      else clicks.unionByName(s.range(1).select(lit(-1L).as("click_id"),
+        lit(-1L).as("user_id"), farFuture(ev).as("click_ts"),
+        lit(0.0).as("click_value")))
+    }
+    (purchasesFixture(s, d, sentinels), inR)
+  }
+
+  /** The interval join every face and probe runs: each purchase with the
+    * same user's clicks from the preceding day. */
+  private[graft] def intervalJoinOf(l: DataFrame, r: DataFrame, joinType: String): DataFrame =
+    graft.streaming.StreamOps.intervalJoin(l, r, "ts", "click_ts",
+      by = Seq(("user_id", "user_id")), before = "1d", after = "0s",
+      watermark = "0 seconds", joinType = joinType)
+
+  /** One interval-join face: [[intervalJoinOf]] over the stream fixtures,
+    * driven to completion through `sink`. Outer join types read the
+    * sentinel fixtures and drop the sentinel rows (user -1) from the
+    * output; inner joins need neither.
+    *
+    * State partitioning is sized to the input volume (r18, guide §2):
+    * each state partition pays fixed store-lifecycle work per micro-batch
+    * (4 store commits for a stream-stream join), so the 32-partition
+    * session default billed ~3x the sized drive at sf0.1 while a bigger SF
+    * derives proportionally more partitions. Results are
+    * partition-count-independent (the same oracle hash at any count). */
+  private[graft] def intervalJoinFace(s: SparkSession, d: String,
+                                      joinType: String, sink: IjSink): DataFrame = {
+    val outer = joinType != "inner"
+    val (inL, inR) = intervalJoinInputs(s, d, sentinels = outer)
+    val nSp = graft.streaming.StreamOps.sizedStatePartitionsForInput(s, Seq(inL, inR))
+    graft.streaming.StreamOps.withStatePartitions(s, nSp) { s2 =>
+      val lSchema = s2.read.parquet(inL).schema
+      val rSchema = s2.read.parquet(inR).schema
+      val out = intervalJoinOf(s2.readStream.schema(lSchema).parquet(inL),
+        s2.readStream.schema(rSchema).parquet(inR), joinType)
+      def project(t: DataFrame): DataFrame =
+        (if (outer) t.filter(col("user_id") >= 0L) else t)
+          .select(col("event_id"), col("user_id"),
+            col("ts").cast("timestamp_ntz").as("ts"), col("value"),
+            col("click_id"),
+            col("click_ts").cast("timestamp_ntz").as("click_ts"),
+            col("click_value"))
+      (sink match {
+        case MemorySink(view) => drainStream(s2, out, view, inL, lSchema)(project)
+        case FileSink(dir, onProgress) =>
+          onProgress(driveToCompletion(s2, inL, lSchema)(
+            graft.streaming.StreamOps.sinkFileStream(out, "parquet", s"$dir/out",
+              s"$dir/ckpt", org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))))
+          project(s2.read.parquet(s"$dir/out"))
+      }).orderBy(col("event_id"), col("click_id"))
+    }
+  }
+
+  /** The quality-selection flagship's stage pipeline, shared by exact qd41
+    * and hashed qd41h, parameterised only by its two scoring steps:
+    *
+    *  - tokenize ONCE (r19, guide §1.2/§5) into a token table — before,
+    *    every stage re-ran the whitespace tokenizer over corpus-scale text
+    *    (~3.3 corpus-equivalents of regex splitting + parquet text decode
+    *    per pipeline). Every stage reads pre-split arrays (Prep ops pass
+    *    array<string> text columns through), and survivors carry only
+    *    (doc_id, tk). Tokenization is deterministic, so every downstream
+    *    value is bit-identical;
+    *  - stage 1: `gate` the token table (the perplexity cut);
+    *  - stage 2: drop survivors sharing any 5-shingle with the eval bench
+    *    (Bloom-prefiltered exact decontamination);
+    *  - stage 3: `score` the clean pool (DSIR weights, deterministic top-k).
+    *
+    * Inter-stage checkpoints: each stage's survivors feed MULTIPLE
+    * downstream scans (stage 2 reads s1 twice: prefilter + verify
+    * join-back; stage 3 reads s2 up to four times). Without the persist
+    * every re-read re-runs the whole upstream pipeline — at 100 TB the
+    * survivors-to-disk checkpoint between stages is the standard shape
+    * (SCALE_CONTRACTS.md "flagship cache lifecycle"). DISK_ONLY (r12
+    * directive 1b): under memory pressure MEMORY_AND_DISK evicts and the
+    * downstream re-scans re-run the WHOLE upstream; DISK_ONLY bounds the
+    * worst case at a local disk re-read. The scored result is BOUNDED, so it
+    * localizes eagerly and ALL stage caches release before returning — a
+    * long-lived session chaining flagship runs retains nothing. */
+  private def qualitySelect(s: SparkSession, d: String)
+                           (gate: DataFrame => DataFrame)
+                           (score: DataFrame => DataFrame): DataFrame = {
+    val lvl = org.apache.spark.storage.StorageLevel.DISK_ONLY
+    val toks = t(s, d, "documents").select(col("doc_id"),
+        graft.functions.TextFunctions.tokens(col("text")).as("tk"))
+      .persist(lvl)
+    val s1 = gate(toks).select(col("doc_id"), col("tk")).persist(lvl)
+    val s2 = graft.prep.Prep.contaminationBloom(s1, toks.filter(col("doc_id") % 89 === 0),
+        "doc_id", "tk", shingleK = 5, minShared = 1, fpp = 0.01)
+      .filter(!col("contaminated"))
+      .select(col("doc_id"), col("tk"))
+      .persist(lvl)
+    try localize(s, score(s2))
+    finally {
+      s2.unpersist(blocking = true)
+      s1.unpersist(blocking = true)
+      toks.unpersist(blocking = true)
+    }
+  }
+
+  /** Build-once-scan-thereafter fixture parquet, keyed by (name, sfDir). */
   private def fixtureScan(s: SparkSession, sfDir: String, name: String)
                          (build: => DataFrame): DataFrame = {
     val key = name + ":" + sfDir
@@ -1697,62 +1877,18 @@ object SparkEntry {
     // survivors) where qd34/qd36/qd37/qd39 test the pieces in isolation.
     "qd41_pipeline_quality_select" -> ((s, d) => {
       val P = graft.prep.Prep
-      val docs = t(s, d, "documents")
-      // inter-stage checkpoints: each stage's survivors feed MULTIPLE
-      // downstream scans (stage 2 reads s1 twice: prefilter + verify
-      // join-back; stage 3 reads s2 four times: corpus counts, target
-      // counts, token join, final join-back). Without the persist every
-      // re-read re-runs the whole upstream pipeline — at 100 TB the
-      // survivors-to-disk checkpoint between stages is the standard shape
-      // (SCALE_CONTRACTS.md "flagship cache lifecycle"). The top-50 result
-      // is BOUNDED, so it localizes eagerly and ALL stage caches release
-      // before the lambda returns — a long-lived session chaining flagship
-      // runs retains nothing. DISK_ONLY (r12 directive 1b): under memory
-      // pressure MEMORY_AND_DISK evicts and the 2x/4x downstream re-scans
-      // re-run the WHOLE upstream (the adjudicated 5.7x driver-bench
-      // inflation); DISK_ONLY bounds worst-case degradation at a local disk
-      // re-read — the honest 100x-scale choice, where "memory is available"
-      // is never a given.
-      val lvl = org.apache.spark.storage.StorageLevel.DISK_ONLY
-      // Tokenize ONCE (r19, guide §1.2/§5): before this, every stage re-ran
-      // the whitespace tokenizer over corpus-scale text — stage-1 bigrams
-      // over the full corpus plus 3 LM-sample scans, stage-2 shingle hashes
-      // over s1, stage-3 corpus counts AND the token join over s2 (~3.3
-      // corpus-equivalents of regex splitting + parquet text decode per
-      // pipeline). The token table IS the pipeline's working set: it rides
-      // the same DISK_ONLY checkpoint tier as the stage survivors, every
-      // stage reads pre-split arrays (Prep ops pass array<string> text
-      // columns through), and survivors carry (doc_id, tk) — the only
-      // columns any stage consumes; the declared output (doc_id,
-      // dsir_uweight) never needed the text back. Tokenization is
-      // deterministic, so every downstream value is bit-identical.
-      val toks = docs.select(col("doc_id"),
-          graft.functions.TextFunctions.tokens(col("text")).as("tk"))
-        .persist(lvl)
-      // stage 1: perplexity gate (LM = every 11th doc, keep <= 3.5 nats/bigram)
-      val s1 = P.perplexityBigram(toks, toks.filter(col("doc_id") % 11 === 0),
-          "doc_id", "tk")
-        .filter(col("n_bigrams") > 0 &&
-          col("nll_unats") <= lit(3500000L) * col("n_bigrams"))
-        .select(col("doc_id"), col("tk"))
-        .persist(lvl)
-      // stage 2: drop survivors sharing any 5-shingle with the eval bench
-      val s2 = P.contaminationBloom(s1, toks.filter(col("doc_id") % 89 === 0),
-          "doc_id", "tk", shingleK = 5, minShared = 1, fpp = 0.01)
-        .filter(!col("contaminated"))
-        .select(col("doc_id"), col("tk"))
-        .persist(lvl)
-      try
+      qualitySelect(s, d) { toks =>
+        // stage 1: perplexity gate (LM = every 11th doc, keep <= 3.5 nats/bigram)
+        P.perplexityBigram(toks, toks.filter(col("doc_id") % 11 === 0), "doc_id", "tk")
+          .filter(col("n_bigrams") > 0 &&
+            col("nll_unats") <= lit(3500000L) * col("n_bigrams"))
+      } { s2 =>
         // stage 3: DSIR micro-nat weights on the clean pool, deterministic cut
-        localize(s, P.selectTopK(
+        P.selectTopK(
             P.importanceWeightsMicro(s2, s2.filter(col("doc_id") % 17 === 0),
               "doc_id", "tk"),
             "dsir_uweight", "doc_id", k = 50)
-          .select(col("doc_id"), col("dsir_uweight")))
-      finally {
-        s2.unpersist(blocking = true)
-        s1.unpersist(blocking = true)
-        toks.unpersist(blocking = true)
+          .select(col("doc_id"), col("dsir_uweight"))
       }
     }),
 
@@ -1774,7 +1910,7 @@ object SparkEntry {
     //     when either side selects nothing. The absolute anchor lives in
     //     qd41's own fully-DuckDB-replayed oracle; a collision regression
     //     or pipeline divergence still flips this face red. The raw hashed
-    //     pipeline ([[qd41hHashed]]) stays the BENCH face — the plan a real
+    //     pipeline ([[qd41hRun]]) stays the BENCH face — the plan a real
     //     corpus build runs — and DsirSpec pins the overlap at spec level.
     "qd41h_pipeline_quality_select_hashed" -> ((s, d) => {
       val hashed = qd41hRun(s, d, withPool = true)
@@ -2501,14 +2637,10 @@ object SparkEntry {
         val clicks = t(s, d, "events").filter(col("event_type") === "click")
           .select(col("user_id").as("userId"),
             col("ts").cast("timestamp").as("ts"), col("value"))
-        val maxTs = clicks.agg(max(col("ts"))).head.getTimestamp(0) // 1-row agg
-        val sentinel = s.range(1).select(lit(-1L).as("userId"),
-          lit(new java.sql.Timestamp(maxTs.getTime + 365L * 86400000L))
-            .cast("timestamp").as("ts"),
-          lit(0.0).as("value"))
-        clicks.unionByName(sentinel)
+        clicks.unionByName(s.range(1).select(lit(-1L).as("userId"),
+          farFuture(clicks).as("ts"), lit(0.0).as("value")))
       }
-      // input-sized state partitioning (r18, guide §2) — see q77
+      // input-sized state partitioning (r18, guide §2) — see intervalJoinFace
       val nSp73 = graft.streaming.StreamOps.sizedStatePartitionsForInput(s, Seq(in))
       graft.streaming.StreamOps.withStatePartitions(s, nSp73) { s2 =>
         val schema = s2.read.parquet(in).schema
@@ -2544,7 +2676,7 @@ object SparkEntry {
         clicks.unionByName(clicks.filter(col("event_id") % 3 === 0))
           .unionByName(clicks.filter(col("event_id") % 21 === 0))
       }
-      // input-sized state partitioning (r18, guide §2) — see q77
+      // input-sized state partitioning (r18, guide §2) — see intervalJoinFace
       val nSp74 = graft.streaming.StreamOps.sizedStatePartitionsForInput(s, Seq(in))
       graft.streaming.StreamOps.withStatePartitions(s, nSp74) { s2 =>
         val schema = s2.read.parquet(in).schema
@@ -2574,47 +2706,10 @@ object SparkEntry {
     // flatMapGroupsWithState with a bounded right-frontier state) driven
     // through the real streaming runtime — same shape as the q21 batch
     // as-of, so the SAME DuckDB native-ASOF oracle grades both: purchases
-    // stream-joined to the latest click at-or-before them per user. A
-    // far-future right-side sentinel (user -1) advances the unioned
-    // watermark past every purchase so all matches finalize; the empty
-    // appended batch fires the event-time timeouts that flush them.
-    "q75_asof_stream" -> ((s, d) => {
-      val inL = streamFixture(s, d, "q75_left") {
-        t(s, d, "events").filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp").as("ts"), col("value"))
-      }
-      val inR = streamFixture(s, d, "q75_right") {
-        val ev = t(s, d, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts").cast("timestamp").as("ts"),
-            col("value").as("click_value"))
-          .withColumn("click_ts", col("ts"))
-        val maxTs = ev.agg(max(col("ts").cast("timestamp"))).head.getTimestamp(0)
-        clicks.unionByName(s.range(1).select(lit(-1L).as("user_id"),
-          lit(new java.sql.Timestamp(maxTs.getTime + 365L * 86400000L))
-            .cast("timestamp").as("ts"),
-          lit(0.0).as("click_value"),
-          lit(null).cast("timestamp").as("click_ts")))
-      }
-      // input-sized state partitioning (r18, guide §2) — see q77
-      val nSp75 = graft.streaming.StreamOps.sizedStatePartitionsForInput(
-        s, Seq(inL, inR))
-      graft.streaming.StreamOps.withStatePartitions(s, nSp75) { s2 =>
-        val lSchema = s2.read.parquet(inL).schema
-        val rSchema = s2.read.parquet(inR).schema
-        val out = graft.streaming.AsofStream.asofStream(
-          s2.readStream.schema(lSchema).parquet(inL),
-          s2.readStream.schema(rSchema).parquet(inR),
-          "ts", "ts", by = Seq(("user_id", "user_id")), watermark = "0 seconds")
-        drainStream(s2, out, "g75_stream", inL, lSchema) { t =>
-          t.select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp_ntz").as("ts"), col("value"),
-            col("click_value"),
-            col("click_ts").cast("timestamp_ntz").as("click_ts"))
-        }.orderBy(col("event_id"))
-      }
-    }),
+    // stream-joined to the latest click at-or-before them per user.
+    "q75_asof_stream" -> ((s, d) =>
+      asofStreamFace(s, d, "75", "click", "click", withTs = true,
+        graft.operators.AsofJoin.Backward, tolerance = None)),
 
     // beyond-reference: FORWARD continuous as-of with tolerance — "the
     // next error within 1 day of each purchase". The forward direction is
@@ -2623,379 +2718,62 @@ object SparkEntry {
     // wait never could), and a candidate finalizes early once it sits
     // below the watermark. Same DuckDB rendering as q23 plus q22's
     // tolerance CASE.
-    "q76_asof_stream_fwd" -> ((s, d) => {
-      val inL = streamFixture(s, d, "q75_left") {
-        t(s, d, "events").filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp").as("ts"), col("value"))
-      }
-      val inR = streamFixture(s, d, "q76_right") {
-        val ev = t(s, d, "events")
-        val errors = ev.filter(col("event_type") === "error")
-          .select(col("user_id"), col("ts").cast("timestamp").as("ts"),
-            col("value").as("err_value"))
-        val maxTs = ev.agg(max(col("ts").cast("timestamp"))).head.getTimestamp(0)
-        errors.unionByName(s.range(1).select(lit(-1L).as("user_id"),
-          lit(new java.sql.Timestamp(maxTs.getTime + 365L * 86400000L))
-            .cast("timestamp").as("ts"),
-          lit(0.0).as("err_value")))
-      }
-      // input-sized state partitioning (r18, guide §2) — see q77
-      val nSp76 = graft.streaming.StreamOps.sizedStatePartitionsForInput(
-        s, Seq(inL, inR))
-      graft.streaming.StreamOps.withStatePartitions(s, nSp76) { s2 =>
-        val lSchema = s2.read.parquet(inL).schema
-        val rSchema = s2.read.parquet(inR).schema
-        val out = graft.streaming.AsofStream.asofStream(
-          s2.readStream.schema(lSchema).parquet(inL),
-          s2.readStream.schema(rSchema).parquet(inR),
-          "ts", "ts", by = Seq(("user_id", "user_id")), watermark = "0 seconds",
-          strategy = graft.operators.AsofJoin.Forward, tolerance = Some("1d"))
-        drainStream(s2, out, "g76_stream", inL, lSchema) { t =>
-          t.select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp_ntz").as("ts"), col("value"),
-            col("err_value"))
-        }.orderBy(col("event_id"))
-      }
-    }),
+    "q76_asof_stream_fwd" -> ((s, d) =>
+      asofStreamFace(s, d, "76", "error", "err", withTs = false,
+        graft.operators.AsofJoin.Forward, tolerance = Some("1d"))),
 
-    // beyond-reference: watermarked STREAM-STREAM INTERVAL JOIN (the Flink
+    // beyond-reference: watermarked STREAM-STREAM INTERVAL JOINS (the Flink
     // intervalJoin shape, composed from Spark's native
     // StreamingSymmetricHashJoin — no custom state): every purchase joined
     // to the same user's clicks from the preceding day. Inner matches emit
     // as found; state on both sides is evicted by the derived state
     // watermark, so a 100 TB/day correlation join holds bounded state.
-    "q77_interval_join_stream" -> ((s, d) => {
-      val inL = streamFixture(s, d, "q75_left") {
-        t(s, d, "events").filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp").as("ts"), col("value"))
-      }
-      val inR = streamFixture(s, d, "q77_right") {
-        t(s, d, "events").filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"), col("user_id"),
-            col("ts").cast("timestamp").as("click_ts"),
-            col("value").as("click_value"))
-      }
-      // r18 optimization (guide §2, the q77s lever generalized): size the
-      // state partitioning to the stream's input volume instead of the
-      // session default — each partition pays fixed store-lifecycle work
-      // per micro-batch (4 store commits for a stream-stream join), so the
-      // 32-partition default billed ~3x the sized drive at sf0.1 while a
-      // bigger SF derives proportionally more partitions. Results are
-      // partition-count-independent (same oracle hash; q77s pins the
-      // explicit-sizing twin).
-      val nSp77 = graft.streaming.StreamOps.sizedStatePartitionsForInput(
-        s, Seq(inL, inR))
-      graft.streaming.StreamOps.withStatePartitions(s, nSp77) { s2 =>
-        val lSchema = s2.read.parquet(inL).schema
-        val rSchema = s2.read.parquet(inR).schema
-        val out = graft.streaming.StreamOps.intervalJoin(
-          s2.readStream.schema(lSchema).parquet(inL),
-          s2.readStream.schema(rSchema).parquet(inR),
-          "ts", "click_ts", by = Seq(("user_id", "user_id")),
-          before = "1d", after = "0s", watermark = "0 seconds")
-        drainStream(s2, out, "g77_stream", inL, lSchema) { t =>
-          t.select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp_ntz").as("ts"), col("value"),
-            col("click_id"),
-            col("click_ts").cast("timestamp_ntz").as("click_ts"),
-            col("click_value"))
-        }.orderBy(col("event_id"), col("click_id"))
-      }
-    }),
+    // One function ([[intervalJoinFace]]) serves the whole family.
+    "q77_interval_join_stream" -> ((s, d) =>
+      intervalJoinFace(s, d, "inner", MemorySink("g77_stream"))),
 
     // The state-partition sizing lever, driver-graded: the IDENTICAL inner
-    // interval join as q77 driven at 8 state partitions through
-    // StreamOps.withStatePartitions — the results hash-match the SAME
-    // oracle, and the bench row measures what sizing state partitioning to
-    // the stream's volume saves in per-partition-per-batch store-lifecycle
-    // machinery (the round-13 decomposition: the drive is near-linear in
-    // partition count at constant data; a production-volume stream
-    // amortizes many partitions, a toy one wants few).
-    //
-    // Since r18 the drive rides the PRODUCTION FILE SINK (the q83
-    // choreography), not the memory sink: the memory sink materializes
-    // every joined row on the driver and its 100k localize guard aborted
-    // this face at sf10 (872,700 output rows — the r17 verdict's missing
-    // sf10 coverage). The file sink keeps the output distributed end to
-    // end, so the sized face — the one that IS the scale lever — now
-    // drives and gates at any SF; the read-back is a lazy scan the bench's
-    // noop sink consumes without a driver bound. q77 keeps the memory-sink
-    // harness as the in-bound twin, so both sink paths stay covered.
-    "q77s_interval_join_sized" -> ((s, d) => {
-      val inL = streamFixture(s, d, "q75_left") {
-        t(s, d, "events").filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp").as("ts"), col("value"))
-      }
-      val inR = streamFixture(s, d, "q77_right") {
-        t(s, d, "events").filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"), col("user_id"),
-            col("ts").cast("timestamp").as("click_ts"),
-            col("value").as("click_value"))
-      }
-      // r18: the "sized" face now derives its count from the sizing helper
-      // itself (sizedStatePartitionsForInput — input-volume over the 256 MB
-      // state budget) instead of a hand-pinned 8: 1 partition at sf0.1,
-      // ~13 at sf10 — the same scale-adaptive dial every streaming face
-      // uses now, demonstrated here through the production file sink.
-      val nSp77s = graft.streaming.StreamOps.sizedStatePartitionsForInput(
-        s, Seq(inL, inR))
-      graft.streaming.StreamOps.withStatePartitions(s, nSp77s) { s2 =>
-        val lSchema = s2.read.parquet(inL).schema
-        val rSchema = s2.read.parquet(inR).schema
-        val out = graft.streaming.StreamOps.intervalJoin(
-          s2.readStream.schema(lSchema).parquet(inL),
-          s2.readStream.schema(rSchema).parquet(inR),
-          "ts", "click_ts", by = Seq(("user_id", "user_id")),
-          before = "1d", after = "0s", watermark = "0 seconds")
-        val base = scratchDir("q77s_sink")
-        driveFileSink(s2, out, s"$base/out", s"$base/ckpt", inL, lSchema)
-        s2.read.parquet(s"$base/out")
-          .select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp_ntz").as("ts"), col("value"),
-            col("click_id"),
-            col("click_ts").cast("timestamp_ntz").as("click_ts"),
-            col("click_value"))
-          .orderBy(col("event_id"), col("click_id"))
-      }
-    }),
+    // join driven through the PRODUCTION FILE SINK (since r18). The memory
+    // sink materializes every joined row on the driver and its 100k
+    // localize guard aborted this face at sf10 (872,700 output rows); the
+    // file sink keeps the output distributed end to end, so the sized face
+    // — the one that IS the scale lever — drives and gates at any SF.
+    // q77 keeps the memory-sink harness as the in-bound twin, so both sink
+    // paths stay covered.
+    "q77s_interval_join_sized" -> ((s, d) =>
+      intervalJoinFace(s, d, "inner", FileSink(scratchDir("q77s_sink")))),
 
-    // beyond-reference: the LEFT-OUTER interval join — purchases with NO
-    // click in the preceding day must still emit (null click columns), and
-    // a null can only finalize once the watermark passes the purchase's
-    // whole window (a match can no longer arrive). Far-future sentinels on
-    // BOTH streams (the global watermark is the min across sources) advance
-    // the watermark past every real window; the empty flush batch triggers
-    // the state eviction that emits the outer nulls.
-    "q78_interval_join_outer" -> ((s, d) => {
-      val inL = streamFixture(s, d, "q78_left") {
-        val ev = t(s, d, "events")
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp").as("ts"), col("value"))
-        val maxTs = ev.agg(max(col("ts").cast("timestamp"))).head.getTimestamp(0)
-        purchases.unionByName(s.range(1).select(lit(-1L).as("event_id"),
-          lit(-1L).as("user_id"),
-          lit(new java.sql.Timestamp(maxTs.getTime + 365L * 86400000L))
-            .cast("timestamp").as("ts"),
-          lit(0.0).as("value")))
-      }
-      val inR = streamFixture(s, d, "q78_right") {
-        val ev = t(s, d, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"), col("user_id"),
-            col("ts").cast("timestamp").as("click_ts"),
-            col("value").as("click_value"))
-        val maxTs = ev.agg(max(col("ts").cast("timestamp"))).head.getTimestamp(0)
-        clicks.unionByName(s.range(1).select(lit(-1L).as("click_id"),
-          lit(-1L).as("user_id"),
-          lit(new java.sql.Timestamp(maxTs.getTime + 365L * 86400000L))
-            .cast("timestamp").as("click_ts"),
-          lit(0.0).as("click_value")))
-      }
-      // input-sized state partitioning (r18, guide §2) — see q77
-      val nSp78 = graft.streaming.StreamOps.sizedStatePartitionsForInput(
-        s, Seq(inL, inR))
-      graft.streaming.StreamOps.withStatePartitions(s, nSp78) { s2 =>
-        val lSchema = s2.read.parquet(inL).schema
-        val rSchema = s2.read.parquet(inR).schema
-        val out = graft.streaming.StreamOps.intervalJoin(
-          s2.readStream.schema(lSchema).parquet(inL),
-          s2.readStream.schema(rSchema).parquet(inR),
-          "ts", "click_ts", by = Seq(("user_id", "user_id")),
-          before = "1d", after = "0s", watermark = "0 seconds",
-          joinType = "left_outer")
-        drainStream(s2, out, "g78_stream", inL, lSchema) { t =>
-          t.filter(col("user_id") >= 0L)
-            .select(col("event_id"), col("user_id"),
-              col("ts").cast("timestamp_ntz").as("ts"), col("value"),
-              col("click_id"),
-              col("click_ts").cast("timestamp_ntz").as("click_ts"),
-              col("click_value"))
-        }.orderBy(col("event_id"), col("click_id"))
-      }
-    }),
+    // the LEFT-OUTER interval join — purchases with NO click in the
+    // preceding day still emit (null click columns); a null can only
+    // finalize once the watermark passes the purchase's whole window
+    "q78_interval_join_outer" -> ((s, d) =>
+      intervalJoinFace(s, d, "left_outer", MemorySink("g78_stream"))),
 
-    // beyond-reference: the FULL-OUTER interval join (r12 directive 5 —
-    // completing the family Spark's symmetric hash join natively offers):
-    // purchases with no click in the preceding day emit null click columns
-    // AND clicks with no purchase in the following day emit null purchase
-    // columns; the output key is coalesce(left, right) so unmatched-right
-    // rows keep their user. Each side's nulls finalize once the watermark
-    // passes that side's whole window (left: ts + after; right:
-    // click_ts + before). Same sentinel + empty-flush choreography as q78,
-    // same fixtures (both already carry a far-future sentinel).
-    "q79_interval_join_full" -> ((s, d) => {
-      val inL = streamFixture(s, d, "q78_left") {
-        val ev = t(s, d, "events")
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp").as("ts"), col("value"))
-        val maxTs = ev.agg(max(col("ts").cast("timestamp"))).head.getTimestamp(0)
-        purchases.unionByName(s.range(1).select(lit(-1L).as("event_id"),
-          lit(-1L).as("user_id"),
-          lit(new java.sql.Timestamp(maxTs.getTime + 365L * 86400000L))
-            .cast("timestamp").as("ts"),
-          lit(0.0).as("value")))
-      }
-      val inR = streamFixture(s, d, "q78_right") {
-        val ev = t(s, d, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"), col("user_id"),
-            col("ts").cast("timestamp").as("click_ts"),
-            col("value").as("click_value"))
-        val maxTs = ev.agg(max(col("ts").cast("timestamp"))).head.getTimestamp(0)
-        clicks.unionByName(s.range(1).select(lit(-1L).as("click_id"),
-          lit(-1L).as("user_id"),
-          lit(new java.sql.Timestamp(maxTs.getTime + 365L * 86400000L))
-            .cast("timestamp").as("click_ts"),
-          lit(0.0).as("click_value")))
-      }
-      // input-sized state partitioning (r18, guide §2) — see q77
-      val nSp79 = graft.streaming.StreamOps.sizedStatePartitionsForInput(
-        s, Seq(inL, inR))
-      graft.streaming.StreamOps.withStatePartitions(s, nSp79) { s2 =>
-        val lSchema = s2.read.parquet(inL).schema
-        val rSchema = s2.read.parquet(inR).schema
-        val out = graft.streaming.StreamOps.intervalJoin(
-          s2.readStream.schema(lSchema).parquet(inL),
-          s2.readStream.schema(rSchema).parquet(inR),
-          "ts", "click_ts", by = Seq(("user_id", "user_id")),
-          before = "1d", after = "0s", watermark = "0 seconds",
-          joinType = "full_outer")
-        drainStream(s2, out, "g79_stream", inL, lSchema) { t =>
-          t.filter(col("user_id") >= 0L)
-            .select(col("event_id"), col("user_id"),
-              col("ts").cast("timestamp_ntz").as("ts"), col("value"),
-              col("click_id"),
-              col("click_ts").cast("timestamp_ntz").as("click_ts"),
-              col("click_value"))
-        }.orderBy(col("event_id"), col("click_id"))
-      }
-    }),
+    // the FULL-OUTER interval join (r12 directive 5): unmatched rows on
+    // BOTH sides emit with the other side's columns null; the output key
+    // is coalesce(left, right) so unmatched-right rows keep their user.
+    // Each side's nulls finalize once the watermark passes that side's
+    // whole window (left: ts + after; right: click_ts + before).
+    "q79_interval_join_full" -> ((s, d) =>
+      intervalJoinFace(s, d, "full_outer", MemorySink("g79_stream"))),
 
-    // beyond-reference: the RIGHT-OUTER interval join (r13 directive 3 —
-    // the one family member without its own driver-graded face): clicks
-    // with NO purchase in the following day still emit (null purchase
-    // columns), and an unmatched-RIGHT null can only finalize once the
-    // watermark passes `click_ts + before` (a right row at rt matches
-    // lefts in [rt - after, rt + before] — after that no purchase can
-    // still arrive). Same fixtures + sentinel/empty-flush choreography as
-    // q78/q79; the emitted key coalesces to the right's user_id.
-    "q82_interval_join_right" -> ((s, d) => {
-      val inL = streamFixture(s, d, "q78_left") {
-        val ev = t(s, d, "events")
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp").as("ts"), col("value"))
-        val maxTs = ev.agg(max(col("ts").cast("timestamp"))).head.getTimestamp(0)
-        purchases.unionByName(s.range(1).select(lit(-1L).as("event_id"),
-          lit(-1L).as("user_id"),
-          lit(new java.sql.Timestamp(maxTs.getTime + 365L * 86400000L))
-            .cast("timestamp").as("ts"),
-          lit(0.0).as("value")))
-      }
-      val inR = streamFixture(s, d, "q78_right") {
-        val ev = t(s, d, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"), col("user_id"),
-            col("ts").cast("timestamp").as("click_ts"),
-            col("value").as("click_value"))
-        val maxTs = ev.agg(max(col("ts").cast("timestamp"))).head.getTimestamp(0)
-        clicks.unionByName(s.range(1).select(lit(-1L).as("click_id"),
-          lit(-1L).as("user_id"),
-          lit(new java.sql.Timestamp(maxTs.getTime + 365L * 86400000L))
-            .cast("timestamp").as("click_ts"),
-          lit(0.0).as("click_value")))
-      }
-      // input-sized state partitioning (r18, guide §2) — see q77
-      val nSp82 = graft.streaming.StreamOps.sizedStatePartitionsForInput(
-        s, Seq(inL, inR))
-      graft.streaming.StreamOps.withStatePartitions(s, nSp82) { s2 =>
-        val lSchema = s2.read.parquet(inL).schema
-        val rSchema = s2.read.parquet(inR).schema
-        val out = graft.streaming.StreamOps.intervalJoin(
-          s2.readStream.schema(lSchema).parquet(inL),
-          s2.readStream.schema(rSchema).parquet(inR),
-          "ts", "click_ts", by = Seq(("user_id", "user_id")),
-          before = "1d", after = "0s", watermark = "0 seconds",
-          joinType = "right_outer")
-        drainStream(s2, out, "g82_stream", inL, lSchema) { t =>
-          t.filter(col("user_id") >= 0L)
-            .select(col("event_id"), col("user_id"),
-              col("ts").cast("timestamp_ntz").as("ts"), col("value"),
-              col("click_id"),
-              col("click_ts").cast("timestamp_ntz").as("click_ts"),
-              col("click_value"))
-        }.orderBy(col("event_id"), col("click_id"))
-      }
-    }),
+    // the RIGHT-OUTER interval join (r13 directive 3): clicks with NO
+    // purchase in the following day still emit (null purchase columns),
+    // finalized once the watermark passes `click_ts + before`; the key
+    // coalesces to the right's user_id.
+    "q82_interval_join_right" -> ((s, d) =>
+      intervalJoinFace(s, d, "right_outer", MemorySink("g82_stream"))),
 
     // The PRODUCTION-SINK twin of q79 (r16 verdict item 1): the identical
-    // full-outer interval join driven through StreamOps.sinkFileStream
-    // (append mode, checkpointed, exactly-once via the file-sink commit
-    // log) instead of the memory-sink oracle harness — the path a real
-    // deployment runs, with NO driver-side bound: q78/q79/q82's memory
-    // sinks abort at the 100k localize guard above sf0.1 (a harness bound,
-    // not a face bound), which had left the outer-null finalization
-    // machinery — the most state-intensive streaming path in the repo —
-    // with zero valid cross-scale walls. This face's output rides FILES
-    // end to end (the read-back is a lazy parquet scan of the sink dir),
-    // so it benches and gates at ANY SF; it grades against the same
-    // full-outer range-join SQL as q79 (reference lazy.rs:329-341
-    // never-materialize streaming collect + io.rs:391-479 streaming sink).
-    "q83_interval_join_full_sink" -> ((s, d) => {
-      val inL = streamFixture(s, d, "q78_left") {
-        val ev = t(s, d, "events")
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp").as("ts"), col("value"))
-        val maxTs = ev.agg(max(col("ts").cast("timestamp"))).head.getTimestamp(0)
-        purchases.unionByName(s.range(1).select(lit(-1L).as("event_id"),
-          lit(-1L).as("user_id"),
-          lit(new java.sql.Timestamp(maxTs.getTime + 365L * 86400000L))
-            .cast("timestamp").as("ts"),
-          lit(0.0).as("value")))
-      }
-      val inR = streamFixture(s, d, "q78_right") {
-        val ev = t(s, d, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"), col("user_id"),
-            col("ts").cast("timestamp").as("click_ts"),
-            col("value").as("click_value"))
-        val maxTs = ev.agg(max(col("ts").cast("timestamp"))).head.getTimestamp(0)
-        clicks.unionByName(s.range(1).select(lit(-1L).as("click_id"),
-          lit(-1L).as("user_id"),
-          lit(new java.sql.Timestamp(maxTs.getTime + 365L * 86400000L))
-            .cast("timestamp").as("click_ts"),
-          lit(0.0).as("click_value")))
-      }
-      // input-sized state partitioning (r18, guide §2) — see q77
-      val nSp83 = graft.streaming.StreamOps.sizedStatePartitionsForInput(
-        s, Seq(inL, inR))
-      graft.streaming.StreamOps.withStatePartitions(s, nSp83) { s2 =>
-        val lSchema = s2.read.parquet(inL).schema
-        val rSchema = s2.read.parquet(inR).schema
-        val out = graft.streaming.StreamOps.intervalJoin(
-          s2.readStream.schema(lSchema).parquet(inL),
-          s2.readStream.schema(rSchema).parquet(inR),
-          "ts", "click_ts", by = Seq(("user_id", "user_id")),
-          before = "1d", after = "0s", watermark = "0 seconds",
-          joinType = "full_outer")
-        val base = scratchDir("q83_sink")
-        driveFileSink(s2, out, s"$base/out", s"$base/ckpt", inL, lSchema)
-        s2.read.parquet(s"$base/out")
-          .filter(col("user_id") >= 0L)
-          .select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp_ntz").as("ts"), col("value"),
-            col("click_id"),
-            col("click_ts").cast("timestamp_ntz").as("click_ts"),
-            col("click_value"))
-          .orderBy(col("event_id"), col("click_id"))
-      }
-    }),
+    // full-outer join through the checkpointed file sink, with NO
+    // driver-side bound — q78/q79/q82's memory sinks abort at the 100k
+    // localize guard above sf0.1 (a harness bound, not a face bound), so
+    // this face gives the outer-null finalization machinery — the most
+    // state-intensive streaming path in the repo — valid walls at any SF
+    // (reference lazy.rs:329-341 never-materialize streaming collect +
+    // io.rs:391-479 streaming sink).
+    "q83_interval_join_full_sink" -> ((s, d) =>
+      intervalJoinFace(s, d, "full_outer", FileSink(scratchDir("q83_sink")))),
 
     // Multi-dimensional Z-order (Morton) layout — bucketing's sibling
     // (q70) for the 100 TB table filtered on several columns at once:
@@ -3313,61 +3091,26 @@ object SparkEntry {
     * narrow maps (zero corpus shuffle; the only corpus-wide exchanges left
     * are the bloom-verify join and the top-k). This is the plan a real
     * corpus build runs — the qd41h BENCH face; the qd41h CORRECTNESS face
-    * wraps it in the overlap contract against exact qd41. */
-  private[graft] def qd41hHashed(s: SparkSession, d: String): DataFrame =
-    qd41hRun(s, d, withPool = false)
-
-  /** [[qd41hHashed]] with an optional scored-pool count riding along
-    * (`n_pool` on every selected row, computed inside the same stage-cache
-    * lifecycle) — the SF-portable correctness contract needs min(50, pool)
-    * as its selection-count anchor (r17 verdict: the old `n_selected=50`
-    * oracle constant was sf0.1-scoped and went red at sf1, where the
-    * rotated-text fixture defeats the perplexity gates and the pool drops
-    * to 26). */
-  private[graft] def qd41hRun(s: SparkSession, d: String,
-                              withPool: Boolean): DataFrame = {
+    * wraps it in the overlap contract against exact qd41, with the
+    * scored-pool count riding along (`withPool`: `n_pool` on every selected
+    * row, computed inside the same stage-cache lifecycle) as its SF-portable
+    * selection-count anchor. */
+  private def qd41hRun(s: SparkSession, d: String, withPool: Boolean): DataFrame = {
     val P = graft.prep.Prep
-    val docs = t(s, d, "documents")
-    // DISK_ONLY, same rationale as qd41: eviction-proof inter-stage
-    // checkpoints whose worst case is a disk re-read, not a full recompute
-    val lvl = org.apache.spark.storage.StorageLevel.DISK_ONLY
-    // tokenize ONCE (r19) — same rationale as exact qd41: the hashed face's
-    // stage-1 model build scanned+tokenized the LM sample three times (the
-    // kind-tagged union's three legs) and the corpus once for scoring, then
-    // stage 2/3 re-tokenized the survivors; all of it now reads pre-split
-    // arrays from one DISK_ONLY token table. Bit-identical outputs.
-    val toks = docs.select(col("doc_id"),
-        graft.functions.TextFunctions.tokens(col("text")).as("tk"))
-      .persist(lvl)
-    // stage 1: hashed perplexity gate — the hashed face smooths over its
-    // occupied-bucket support, so its NLL sits on the exact face's scale
-    // and the SAME 3.5 nats/bigram cut applies
-    val s1 = P.perplexityBigramHashed(toks, toks.filter(col("doc_id") % 11 === 0),
-        "tk")
-      .filter(col("n_bigrams") > 0 && col("ppl_nats") <= 3.5)
-      .select(col("doc_id"), col("tk"))
-      .persist(lvl)
-    // stage 2: identical decontamination (already the scale face)
-    val s2 = P.contaminationBloom(s1, toks.filter(col("doc_id") % 89 === 0),
-        "doc_id", "tk", shingleK = 5, minShared = 1, fpp = 0.01)
-      .filter(!col("contaminated"))
-      .select(col("doc_id"), col("tk"))
-      .persist(lvl)
-    try {
-      // stage 3: hashed DSIR — scoring is one narrow expression over s2
+    qualitySelect(s, d) { toks =>
+      // hashed perplexity gate: smoothed over its occupied-bucket support,
+      // so its NLL sits on the exact face's scale and the SAME cut applies
+      P.perplexityBigramHashed(toks, toks.filter(col("doc_id") % 11 === 0), "tk")
+        .filter(col("n_bigrams") > 0 && col("ppl_nats") <= 3.5)
+    } { s2 =>
+      // hashed DSIR — scoring is one narrow expression over s2
       val weights = P.importanceWeightsHashed(s2,
         s2.filter(col("doc_id") % 17 === 0), "tk")
       val top = P.selectTopK(weights, "dsir_weight", "doc_id", k = 50)
         .select(col("doc_id"), col("dsir_weight"))
-      // n_pool re-scans persisted s2 once (a count over the narrow scoring
-      // map) — contract-face-only cost; the bench face never asks for it
-      localize(s,
-        if (!withPool) top
-        else top.crossJoin(weights.agg(count(lit(1)).as("n_pool"))))
-    } finally {
-      s2.unpersist(blocking = true)
-      s1.unpersist(blocking = true)
-      toks.unpersist(blocking = true)
+      // n_pool re-scans persisted s2 once — contract-face-only cost
+      if (!withPool) top
+      else top.crossJoin(weights.agg(count(lit(1)).as("n_pool")))
     }
   }
 
@@ -3465,7 +3208,7 @@ object SparkEntry {
     }),
 
     // the raw hashed flagship (the contract face runs this PLUS exact qd41)
-    "qd41h_pipeline_quality_select_hashed" -> (qd41hHashed(_, _)),
+    "qd41h_pipeline_quality_select_hashed" -> ((s, d) => qd41hRun(s, d, withPool = false)),
 
     // fixture-scan twins (r10 directive 4): the synthesized input columns
     // materialize to a per-SF parquet once per JVM; the bench face times
@@ -3592,8 +3335,6 @@ object SparkEntry {
       |LEFT JOIN a2 ON d.doc_id = a2.doc_id
       |LEFT JOIN a3 ON d.doc_id = a3.doc_id""".stripMargin
 
-  /** Shared DuckDB shingle CTE (5-gram, whitespace tokens) mirroring
-    * TextFunctions.tokens + shingles. */
   /** DSIR weight computation shared by qd36/qd37: Laplace-smoothed unigram
     * models (target = doc_id % 17, source = whole corpus) over the shared
     * vocabulary. Per-word log-ratios are quantized to micro-nats
@@ -3601,11 +3342,22 @@ object SparkEntry {
     * `ln` is the one op the two libms disagree on in the last ulp; the
     * integer sum is then order-independent and bitwise-exact. */
   private val dsirWeightsCte =
-    """WITH ctok AS (
-      |  SELECT doc_id, unnest(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS w
+    s"""WITH ctok AS (
+      |  SELECT doc_id, unnest(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS w
       |  FROM documents
       |),
-      |ttok AS (SELECT w FROM ctok WHERE doc_id % 17 = 0),
+      |$dsirModelCtes,
+      |weights AS (
+      |  SELECT d.doc_id, d.lang, CAST(coalesce(ws.uw, 0) AS BIGINT) AS dsir_uweight
+      |  FROM documents d LEFT JOIN wsum ws ON d.doc_id = ws.doc_id
+      |)""".stripMargin
+
+  /** The DSIR model over a `ctok(doc_id, w)` token CTE defined before it
+    * (target = doc_id % 17 of those tokens): per-word micro-nat log-ratios
+    * `lr(w, ulr)` and their per-doc sums `wsum(doc_id, uw)`. Shared by
+    * [[dsirWeightsCte]] and qd41's oracle. */
+  private lazy val dsirModelCtes =
+    """ttok AS (SELECT w FROM ctok WHERE doc_id % 17 = 0),
       |cs AS (SELECT w, count(*) AS c FROM ctok GROUP BY w),
       |ts AS (SELECT w, count(*) AS c FROM ttok GROUP BY w),
       |vocab AS (SELECT w FROM cs UNION SELECT w FROM ts),
@@ -3624,12 +3376,10 @@ object SparkEntry {
       |  SELECT t.doc_id, sum(lr.ulr) AS uw
       |  FROM ctok t JOIN lr ON t.w = lr.w
       |  GROUP BY t.doc_id
-      |),
-      |weights AS (
-      |  SELECT d.doc_id, d.lang, CAST(coalesce(ws.uw, 0) AS BIGINT) AS dsir_uweight
-      |  FROM documents d LEFT JOIN wsum ws ON d.doc_id = ws.doc_id
       |)""".stripMargin
 
+  /** Shared DuckDB shingle CTE (5-gram, whitespace tokens) mirroring
+    * TextFunctions.tokens + shingles. */
   private val shingleCte =
     """WITH toks AS (
       |  SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
@@ -3645,17 +3395,6 @@ object SparkEntry {
   /** The qd03 exact-Jaccard pair query as a nestable subquery (DuckDB allows
     * CTEs inside FROM subqueries) — reused by the connected-components
     * oracle so the edge list cannot drift from qd03's. */
-  /** Shared by q77 and its 8-state-partition twin q77s: partitioning must
-    * not change a single joined row. */
-  private lazy val intervalJoinInnerSql: String =
-    """SELECT p.event_id, p.user_id, p.ts, p.value,
-      |  c.event_id AS click_id, c.ts AS click_ts, c.value AS click_value
-      |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-      |JOIN (SELECT * FROM events WHERE event_type = 'click') c
-      |  ON p.user_id = c.user_id
-      |  AND c.ts BETWEEN p.ts - INTERVAL 1 DAY AND p.ts
-      |ORDER BY p.event_id, click_id""".stripMargin
-
   private lazy val jaccardPairsSql: String =
     s"""$shingleCte,
        |cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
@@ -3667,6 +3406,107 @@ object SparkEntry {
        |SELECT id_a, id_b
        |FROM p JOIN cnt ca ON id_a = ca.doc_id JOIN cnt cb ON id_b = cb.doc_id
        |WHERE CAST(shared AS DOUBLE) / (ca.n + cb.n - shared) >= 0.5""".stripMargin
+
+  /** Exact 5-shingle Jaccard pairs (>= 0.5) with their similarity: qd03's
+    * oracle, and qd16's verbatim (only its candidate-generation plan
+    * differs on the Spark side). */
+  private lazy val ngramJaccardSql: String =
+    s"""$shingleCte,
+       |cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+       |pairs AS (
+       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
+       |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2
+       |)
+       |SELECT id_a, id_b, CAST(shared AS DOUBLE) / (ca.n + cb.n - shared) AS jaccard
+       |FROM pairs JOIN cnt ca ON id_a = ca.doc_id JOIN cnt cb ON id_b = cb.doc_id
+       |WHERE CAST(shared AS DOUBLE) / (ca.n + cb.n - shared) >= 0.5
+       |ORDER BY id_a, id_b""".stripMargin
+
+  /** qd03's Jaccard pairs closed under recursive reach: opens a
+    * `WITH RECURSIVE` chain ending in `comp(id, component)`, every paired
+    * doc mapped to its cluster's minimum doc_id (unpaired docs absent).
+    * Shared by the qd10, qd53 and q49 oracles. */
+  private lazy val componentsCte: String =
+    s"""WITH RECURSIVE pairs AS (
+       |  SELECT id_a, id_b FROM ($jaccardPairsSql)
+       |),
+       |edges AS (
+       |  SELECT id_a AS src, id_b AS dst FROM pairs
+       |  UNION SELECT id_b, id_a FROM pairs
+       |),
+       |reach(src, dst) AS (
+       |  SELECT src, dst FROM edges
+       |  UNION
+       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+       |),
+       |comp AS (SELECT src AS id, least(src, min(dst)) AS component
+       |         FROM reach GROUP BY src)""".stripMargin
+
+  /** The interval-join faces' oracle, keyed by join kind: the plain batch
+    * range join — every (purchase, click-from-the-preceding-day) pair per
+    * user, plus each outer side's unmatched rows with the other side's
+    * columns null. For right/full joins user_id coalesces to the click's,
+    * so unmatched-right rows keep their user. Sink choice and state
+    * partitioning must not change a single row, so faces that differ only
+    * there (q77/q77s, q79/q83) share one text. */
+  private def intervalJoinSql(joinType: String): String = {
+    val join = Map("inner" -> "JOIN", "left_outer" -> "LEFT JOIN",
+      "right_outer" -> "RIGHT JOIN", "full_outer" -> "FULL JOIN")(joinType)
+    val user =
+      if (joinType == "right_outer" || joinType == "full_outer")
+        "coalesce(p.user_id, c.user_id) AS user_id"
+      else "p.user_id"
+    s"""SELECT p.event_id, $user, p.ts, p.value,
+       |  c.event_id AS click_id, c.ts AS click_ts, c.value AS click_value
+       |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+       |$join (SELECT * FROM events WHERE event_type = 'click') c
+       |  ON p.user_id = c.user_id
+       |  AND c.ts BETWEEN p.ts - INTERVAL 1 DAY AND p.ts
+       |ORDER BY p.event_id, click_id""".stripMargin
+  }
+
+  /** The batch backward as-of (DuckDB's native ASOF): each purchase with
+    * the latest click at-or-before it, per user. Shared by q21 and its
+    * continuous twin q75, which must reproduce it exactly. */
+  private val asofBackwardSql: String =
+    """SELECT p.event_id, p.user_id, p.ts, p.value,
+      |  c.value AS click_value, c.ts AS click_ts
+      |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+      |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+      |  ON p.user_id = c.user_id AND p.ts >= c.ts
+      |ORDER BY p.event_id""".stripMargin
+
+  /** The qd39 perplexity model as CTEs over a `toks(doc_id, tk)` CTE
+    * defined before it: the add-1 bigram LM on every 11th doc, scored per
+    * doc bigram as `scored(doc_id, unll)` (micro-nat quantized). Shared by
+    * the qd39 and qd41 oracles. */
+  private val perplexityCtes: String =
+    """lmtk AS (SELECT tk FROM toks WHERE doc_id % 11 = 0),
+      |vv AS (SELECT count(DISTINCT w) AS v FROM (SELECT unnest(tk) AS w FROM lmtk)),
+      |c1 AS (
+      |  SELECT w1, count(*) AS c1 FROM (
+      |    SELECT unnest(tk[1:len(tk)-1]) AS w1 FROM lmtk WHERE len(tk) >= 2
+      |  ) GROUP BY w1
+      |),
+      |c12 AS (
+      |  SELECT bg, count(*) AS c12 FROM (
+      |    SELECT unnest([tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))]) AS bg
+      |    FROM lmtk WHERE len(tk) >= 2
+      |  ) GROUP BY bg
+      |),
+      |docbg AS (
+      |  SELECT doc_id, unnest([tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))]) AS bg
+      |  FROM toks WHERE len(tk) >= 2
+      |),
+      |scored AS (
+      |  SELECT d.doc_id,
+      |    CAST(floor((ln(coalesce(c1.c1, 0) + 1.0 * vv.v) -
+      |                ln(coalesce(c12.c12, 0) + 1.0)) * 1000000.0 + 0.5) AS BIGINT) AS unll
+      |  FROM docbg d
+      |  LEFT JOIN c12 ON d.bg = c12.bg
+      |  LEFT JOIN c1 ON string_split(d.bg, ' ')[1] = c1.w1, vv
+      |)""".stripMargin
 
   /** qd49 oracle: BPE-encode each word by replaying [[fixedMerges]] as a
     * sequential replace chain over a delimiter-framed symbol string
@@ -3697,6 +3537,70 @@ object SparkEntry {
       |ORDER BY d.doc_id""".stripMargin
   }
 
+  /** DuckDB mirror of TextFunctions.htmlToText over an `html` column: the
+    * SAME RE2-portable regex chain and entity order. Shared by the qd43
+    * and q54 oracles. */
+  private val htmlToTextSql: String =
+    """trim(
+      |  regexp_replace(
+      |    regexp_replace(
+      |      replace(replace(replace(replace(replace(replace(
+      |        regexp_replace(
+      |          regexp_replace(
+      |            regexp_replace(
+      |              regexp_replace(html, '(?is)<(script|style)[^>]*>.*?</(script|style)[ \t\n\r\f]*>', ' ', 'g'),
+      |              '(?s)<!--.*?-->', ' ', 'g'),
+      |            '(?i)</?(br|pre|p|div|h[1-6]|li|tr|table|ul|ol|blockquote|section|article|header|footer)\b[^>]*>', chr(10), 'g'),
+      |          '<[^>]*>', ' ', 'g'),
+      |        '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''), '&amp;', '&'),
+      |      '[ \t\r\f]+', ' ', 'g'),
+      |    ' ?\n[\n ]*', chr(10), 'g'),
+      |  ' ' || chr(10))""".stripMargin
+
+  /** The exact decontamination oracle: docs sharing any 5-gram shingle
+    * with the eval bench (doc_id % `benchMod` = 0). Shared by qd18 and
+    * qd34, whose Bloom prefilter must be invisible in the result. */
+  private def decontaminationSql(benchMod: Int): String =
+    s"""$shingleCte,
+       |bsh AS (SELECT DISTINCT s FROM sh WHERE doc_id % $benchMod = 0),
+       |hits AS (
+       |  SELECT sh.doc_id, count(*) AS n_shared
+       |  FROM sh JOIN bsh ON sh.s = bsh.s
+       |  GROUP BY sh.doc_id
+       |)
+       |SELECT d.doc_id, d.lang,
+       |  CAST(coalesce(h.n_shared, 0) AS BIGINT) AS n_shared,
+       |  coalesce(h.n_shared, 0) >= 1 AS contaminated
+       |FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
+       |ORDER BY d.doc_id""".stripMargin
+
+  /** qd28's span dedup as CTEs: whitespace tokens, 20-word
+    * non-overlapping spans, keep-first by (doc_id, pos), and each doc's
+    * surviving spans re-joined as `k(doc_id, text)`. Shared by the qd28
+    * and q53 oracles. */
+  private val spanDedupCtes: String =
+    """WITH t AS (
+      |  SELECT doc_id, lang,
+      |    list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
+      |  FROM documents
+      |),
+      |c AS (
+      |  SELECT doc_id,
+      |    unnest([list_aggregate(w[i*20+1:i*20+20], 'string_agg', ' ')
+      |            FOR i IN range(CAST(ceil(len(w) / 20.0) AS BIGINT))]) AS span,
+      |    unnest(range(CAST(ceil(len(w) / 20.0) AS BIGINT))) AS pos
+      |  FROM t
+      |),
+      |r AS (
+      |  SELECT doc_id, pos, span,
+      |    row_number() OVER (PARTITION BY span ORDER BY doc_id, pos) AS rn
+      |  FROM c
+      |),
+      |k AS (
+      |  SELECT doc_id, string_agg(span, ' ' ORDER BY pos) AS text
+      |  FROM r WHERE rn = 1 GROUP BY doc_id
+      |)""".stripMargin
+
   val oracleSql: Map[String, String] = Map(
     "qd01_dedup_exact" ->
       """SELECT doc_id, lang, source FROM (
@@ -3711,18 +3615,7 @@ object SparkEntry {
         |  count(*) AS n_docs
         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
 
-    "qd03_ngram_jaccard" ->
-      s"""$shingleCte,
-         |cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |pairs AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-         |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2
-         |)
-         |SELECT id_a, id_b, CAST(shared AS DOUBLE) / (ca.n + cb.n - shared) AS jaccard
-         |FROM pairs JOIN cnt ca ON id_a = ca.doc_id JOIN cnt cb ON id_b = cb.doc_id
-         |WHERE CAST(shared AS DOUBLE) / (ca.n + cb.n - shared) >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin,
+    "qd03_ngram_jaccard" -> ngramJaccardSql,
 
     "qd06_langid" -> langIdOracleSql,
 
@@ -3761,20 +3654,8 @@ object SparkEntry {
         |) WHERE cosine >= 0.35 ORDER BY id_a, id_b""".stripMargin,
 
     "qd10_dedup_components" ->
-      s"""WITH RECURSIVE pairs AS (
-         |  SELECT id_a, id_b FROM ($jaccardPairsSql)
-         |),
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs
-         |),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-         |)
-         |SELECT src AS id, least(src, min(dst)) AS component
-         |FROM reach GROUP BY src ORDER BY id""".stripMargin,
+      s"""$componentsCte
+         |SELECT id, component FROM comp ORDER BY id""".stripMargin,
 
     "qs01_cosine_topk" ->
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -3927,18 +3808,7 @@ object SparkEntry {
     // Prefix-filtered exact Jaccard returns the SAME pairs as the
     // co-occurrence formulation — qd03's oracle verbatim (only the Spark
     // candidate-generation plan differs)
-    "qd16_jaccard_prefix" ->
-      s"""$shingleCte,
-         |cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |pairs AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-         |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2
-         |)
-         |SELECT id_a, id_b, CAST(shared AS DOUBLE) / (ca.n + cb.n - shared) AS jaccard
-         |FROM pairs JOIN cnt ca ON id_a = ca.doc_id JOIN cnt cb ON id_b = cb.doc_id
-         |WHERE CAST(shared AS DOUBLE) / (ca.n + cb.n - shared) >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin,
+    "qd16_jaccard_prefix" -> ngramJaccardSql,
 
     // hash split mirror: identical exact-int64 modular arithmetic
     // (salt 0 for the split bucket, salt 1 for the subsample draw)
@@ -3961,19 +3831,7 @@ object SparkEntry {
     // decontamination mirror: same 5-gram shingle sets (string-valued here,
     // XXH64-hashed in Spark — counts agree absent 64-bit collisions),
     // benchmark = doc_id % 97 == 0
-    "qd18_decontaminate" ->
-      s"""$shingleCte,
-         |bsh AS (SELECT DISTINCT s FROM sh WHERE doc_id % 97 = 0),
-         |hits AS (
-         |  SELECT sh.doc_id, count(*) AS n_shared
-         |  FROM sh JOIN bsh ON sh.s = bsh.s
-         |  GROUP BY sh.doc_id
-         |)
-         |SELECT d.doc_id, d.lang,
-         |  CAST(coalesce(h.n_shared, 0) AS BIGINT) AS n_shared,
-         |  coalesce(h.n_shared, 0) >= 1 AS contaminated
-         |FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
+    "qd18_decontaminate" -> decontaminationSql(benchMod = 97),
 
     // chunking mirror: same start offsets (0, 48, … while < max(n-16, 1)),
     // same clamped 64-token slices; string_agg over an empty slice is NULL
@@ -4046,11 +3904,10 @@ object SparkEntry {
         |WHERE ((doc_id + 1) % 1000000007) * 2654435761 % 1000000007 % 1000 < rate
         |GROUP BY d.lang ORDER BY d.lang""".stripMargin,
 
-    // HTML mirror: the SAME RE2-portable regex chain and entity order as
-    // TextFunctions.htmlToText (chr(10) embeds the comment's newline
-    // without breaking stripMargin)
+    // HTML mirror: the page wrapper around each doc, then htmlToTextSql
+    // (chr(10) embeds the comment's newline without breaking stripMargin)
     "qd43_html_extract" ->
-      """WITH h AS (
+      ("""WITH h AS (
         |  SELECT doc_id,
         |    '<html><head><style>p{color:red}</style><script>var i=0; if (i<1 && true) { i = 2; }</script></head><body><h1>'
         |    || text ||
@@ -4060,25 +3917,11 @@ object SparkEntry {
         |)
         |, x AS (
         |  SELECT doc_id,
-        |    trim(
-        |      regexp_replace(
-        |        regexp_replace(
-        |          replace(replace(replace(replace(replace(replace(
-        |            regexp_replace(
-        |              regexp_replace(
-        |                regexp_replace(
-        |                  regexp_replace(html, '(?is)<(script|style)[^>]*>.*?</(script|style)[ \t\n\r\f]*>', ' ', 'g'),
-        |                  '(?s)<!--.*?-->', ' ', 'g'),
-        |                '(?i)</?(br|pre|p|div|h[1-6]|li|tr|table|ul|ol|blockquote|section|article|header|footer)\b[^>]*>', chr(10), 'g'),
-        |              '<[^>]*>', ' ', 'g'),
-        |            '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''), '&amp;', '&'),
-        |          '[ \t\r\f]+', ' ', 'g'),
-        |        ' ?\n[\n ]*', chr(10), 'g'),
-        |      ' ' || chr(10)) AS extracted
+        |    """ + htmlToTextSql + """ AS extracted
         |  FROM h
         |)
         |SELECT doc_id, extracted, CAST(length(extracted) AS BIGINT) AS n_chars
-        |FROM x ORDER BY doc_id""".stripMargin,
+        |FROM x ORDER BY doc_id""").stripMargin,
 
     // crawl flagship mirror: page synthesis, the qd43 extraction chain, the
     // qd40 C4 rules, the qd44 Gopher statistics (relaxed thresholds, stop
@@ -4086,7 +3929,7 @@ object SparkEntry {
     // normalized 3-token prefix (the string the fingerprint hashes), qd19's
     // chunk-start arithmetic, and the final per-lang rollup
     "q54_pipeline_crawl" ->
-      """WITH toks0 AS (
+      ("""WITH toks0 AS (
         |  SELECT doc_id, lang, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
         |  FROM documents
         |),
@@ -4109,21 +3952,7 @@ object SparkEntry {
         |),
         |ext AS (
         |  SELECT doc_id, lang,
-        |    trim(
-        |      regexp_replace(
-        |        regexp_replace(
-        |          replace(replace(replace(replace(replace(replace(
-        |            regexp_replace(
-        |              regexp_replace(
-        |                regexp_replace(
-        |                  regexp_replace(html, '(?is)<(script|style)[^>]*>.*?</(script|style)[ \t\n\r\f]*>', ' ', 'g'),
-        |                  '(?s)<!--.*?-->', ' ', 'g'),
-        |                '(?i)</?(br|pre|p|div|h[1-6]|li|tr|table|ul|ol|blockquote|section|article|header|footer)\b[^>]*>', chr(10), 'g'),
-        |              '<[^>]*>', ' ', 'g'),
-        |            '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''), '&amp;', '&'),
-        |          '[ \t\r\f]+', ' ', 'g'),
-        |        ' ?\n[\n ]*', chr(10), 'g'),
-        |      ' ' || chr(10)) AS text
+        |    """ + htmlToTextSql + """ AS text
         |  FROM page
         |),
         |c4 AS (
@@ -4191,7 +4020,7 @@ object SparkEntry {
         |)
         |SELECT lang, count(DISTINCT doc_id) AS n_docs, count(*) AS n_chunks,
         |  CAST(sum(n_chunk_tokens) AS BIGINT) AS n_tokens
-        |FROM ch GROUP BY lang ORDER BY lang""".stripMargin,
+        |FROM ch GROUP BY lang ORDER BY lang""").stripMargin,
 
     // round-trip oracles: the SQL is the parquet truth; any write/read
     // fidelity loss (quoting, type mapping, timestamp format) breaks the hash
@@ -4370,30 +4199,10 @@ object SparkEntry {
     // row_number window (the Spark side's groupBy-min is the same winner),
     // documents reassembled with single-space joins
     "qd28_span_dedup" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
-        |  FROM documents
-        |),
-        |c AS (
-        |  SELECT doc_id,
-        |    unnest([list_aggregate(w[i*20+1:i*20+20], 'string_agg', ' ')
-        |            FOR i IN range(CAST(ceil(len(w) / 20.0) AS BIGINT))]) AS span,
-        |    unnest(range(CAST(ceil(len(w) / 20.0) AS BIGINT))) AS pos
-        |  FROM t
-        |),
-        |r AS (
-        |  SELECT doc_id, pos, span,
-        |    row_number() OVER (PARTITION BY span ORDER BY doc_id, pos) AS rn
-        |  FROM c
-        |),
-        |k AS (
-        |  SELECT doc_id, string_agg(span, ' ' ORDER BY pos) AS text
-        |  FROM r WHERE rn = 1 GROUP BY doc_id
-        |)
+      (spanDedupCtes + """
         |SELECT d.doc_id, d.lang, coalesce(k.text, '') AS text
         |FROM documents d LEFT JOIN k USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin),
 
     // line-dedup mirror: same separator split (empties kept), length-gated
     // row_number winner, lines below the floor pass unconditionally,
@@ -4406,19 +4215,7 @@ object SparkEntry {
 
     // bloom decontamination mirror: the EXACT shingle-join SQL (bench =
     // doc_id % 89) — the bloom prefilter must be invisible in the result
-    "qd34_decontaminate_bloom" ->
-      s"""$shingleCte,
-         |bsh AS (SELECT DISTINCT s FROM sh WHERE doc_id % 89 = 0),
-         |hits AS (
-         |  SELECT sh.doc_id, count(*) AS n_shared
-         |  FROM sh JOIN bsh ON sh.s = bsh.s
-         |  GROUP BY sh.doc_id
-         |)
-         |SELECT d.doc_id, d.lang,
-         |  CAST(coalesce(h.n_shared, 0) AS BIGINT) AS n_shared,
-         |  coalesce(h.n_shared, 0) >= 1 AS contaminated
-         |FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
+    "qd34_decontaminate_bloom" -> decontaminationSql(benchMod = 89),
 
     // snapshot-dedup mirror: plain anti-join on the normalized two-token
     // head (string-valued here, XXH64-hashed in Spark — equal absent 64-bit
@@ -4464,35 +4261,11 @@ object SparkEntry {
     // micro-nat quantization per bigram, integer sums and an integer
     // cross-product keep gate
     "qd39_perplexity" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS tk
+      s"""WITH toks AS (
+        |  SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS tk
         |  FROM documents
         |),
-        |lmtk AS (SELECT tk FROM toks WHERE doc_id % 11 = 0),
-        |vv AS (SELECT count(DISTINCT w) AS v FROM (SELECT unnest(tk) AS w FROM lmtk)),
-        |c1 AS (
-        |  SELECT w1, count(*) AS c1 FROM (
-        |    SELECT unnest(tk[1:len(tk)-1]) AS w1 FROM lmtk WHERE len(tk) >= 2
-        |  ) GROUP BY w1
-        |),
-        |c12 AS (
-        |  SELECT bg, count(*) AS c12 FROM (
-        |    SELECT unnest([tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))]) AS bg
-        |    FROM lmtk WHERE len(tk) >= 2
-        |  ) GROUP BY bg
-        |),
-        |docbg AS (
-        |  SELECT doc_id, unnest([tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))]) AS bg
-        |  FROM toks WHERE len(tk) >= 2
-        |),
-        |scored AS (
-        |  SELECT d.doc_id,
-        |    CAST(floor((ln(coalesce(c1.c1, 0) + 1.0 * vv.v) -
-        |                ln(coalesce(c12.c12, 0) + 1.0)) * 1000000.0 + 0.5) AS BIGINT) AS unll
-        |  FROM docbg d
-        |  LEFT JOIN c12 ON d.bg = c12.bg
-        |  LEFT JOIN c1 ON string_split(d.bg, ' ')[1] = c1.w1, vv
-        |),
+        |$perplexityCtes,
         |agg AS (SELECT doc_id, count(*) AS nb, sum(unll) AS nll FROM scored GROUP BY doc_id)
         |SELECT d.doc_id, d.lang,
         |  CAST(coalesce(a.nb, 0) AS BIGINT) AS n_bigrams,
@@ -4542,38 +4315,14 @@ object SparkEntry {
     // join flags s2 (bench drawn from ALL docs, intersected with s1), the
     // qd36 DSIR CTEs retrain on the s2 pool, LIMIT 50 with the id tiebreak
     "qd41_pipeline_quality_select" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS tk
+      s"""WITH toks AS (
+        |  SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS tk
         |  FROM documents
         |),
-        |lmtk AS (SELECT tk FROM toks WHERE doc_id % 11 = 0),
-        |vv AS (SELECT count(DISTINCT w) AS v FROM (SELECT unnest(tk) AS w FROM lmtk)),
-        |c1 AS (
-        |  SELECT w1, count(*) AS c1 FROM (
-        |    SELECT unnest(tk[1:len(tk)-1]) AS w1 FROM lmtk WHERE len(tk) >= 2
-        |  ) GROUP BY w1
-        |),
-        |c12 AS (
-        |  SELECT bg, count(*) AS c12 FROM (
-        |    SELECT unnest([tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))]) AS bg
-        |    FROM lmtk WHERE len(tk) >= 2
-        |  ) GROUP BY bg
-        |),
-        |docbg AS (
-        |  SELECT doc_id, unnest([tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))]) AS bg
-        |  FROM toks WHERE len(tk) >= 2
-        |),
-        |pplscored AS (
-        |  SELECT d.doc_id,
-        |    CAST(floor((ln(coalesce(c1.c1, 0) + 1.0 * vv.v) -
-        |                ln(coalesce(c12.c12, 0) + 1.0)) * 1000000.0 + 0.5) AS BIGINT) AS unll
-        |  FROM docbg d
-        |  LEFT JOIN c12 ON d.bg = c12.bg
-        |  LEFT JOIN c1 ON string_split(d.bg, ' ')[1] = c1.w1, vv
-        |),
+        |$perplexityCtes,
         |s1 AS (
         |  SELECT doc_id FROM (
-        |    SELECT doc_id, count(*) AS nb, sum(unll) AS nll FROM pplscored GROUP BY doc_id
+        |    SELECT doc_id, count(*) AS nb, sum(unll) AS nll FROM scored GROUP BY doc_id
         |  ) WHERE nll <= 3500000 * nb
         |),
         |sh AS (
@@ -4589,26 +4338,7 @@ object SparkEntry {
         |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
         |),
         |ctok AS (SELECT t.doc_id, unnest(t.tk) AS w FROM toks t JOIN s2 ON t.doc_id = s2.doc_id),
-        |ttok AS (SELECT w FROM ctok WHERE doc_id % 17 = 0),
-        |cs AS (SELECT w, count(*) AS c FROM ctok GROUP BY w),
-        |ts AS (SELECT w, count(*) AS c FROM ttok GROUP BY w),
-        |vocab AS (SELECT w FROM cs UNION SELECT w FROM ts),
-        |consts AS (SELECT (SELECT count(*) FROM vocab) AS v,
-        |                  (SELECT count(*) FROM ctok) AS ns,
-        |                  (SELECT count(*) FROM ttok) AS nt),
-        |lr AS (
-        |  SELECT vocab.w,
-        |    CAST(floor((ln((coalesce(ts.c, 0) + 1.0) / (nt + 1.0 * v)) -
-        |                ln((coalesce(cs.c, 0) + 1.0) / (ns + 1.0 * v))) * 1000000.0 + 0.5)
-        |         AS BIGINT) AS ulr
-        |  FROM vocab LEFT JOIN cs ON vocab.w = cs.w
-        |             LEFT JOIN ts ON vocab.w = ts.w, consts
-        |),
-        |wsum AS (
-        |  SELECT t.doc_id, sum(lr.ulr) AS uw
-        |  FROM ctok t JOIN lr ON t.w = lr.w
-        |  GROUP BY t.doc_id
-        |)
+        |$dsirModelCtes
         |SELECT s2.doc_id, CAST(coalesce(ws.uw, 0) AS BIGINT) AS dsir_uweight
         |FROM s2 LEFT JOIN wsum ws ON s2.doc_id = ws.doc_id
         |ORDER BY dsir_uweight DESC, s2.doc_id LIMIT 50""".stripMargin,
@@ -4718,27 +4448,7 @@ object SparkEntry {
     // clean→filter→pack flagship mirror: qd28's span-dedup CTEs feed a
     // token floor and the global-pack exclusive running sum
     "q53_pipeline_clean_pack" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
-        |  FROM documents
-        |),
-        |c AS (
-        |  SELECT doc_id,
-        |    unnest([list_aggregate(w[i*20+1:i*20+20], 'string_agg', ' ')
-        |            FOR i IN range(CAST(ceil(len(w) / 20.0) AS BIGINT))]) AS span,
-        |    unnest(range(CAST(ceil(len(w) / 20.0) AS BIGINT))) AS pos
-        |  FROM t
-        |),
-        |r AS (
-        |  SELECT doc_id, pos, span,
-        |    row_number() OVER (PARTITION BY span ORDER BY doc_id, pos) AS rn
-        |  FROM c
-        |),
-        |k AS (
-        |  SELECT doc_id, string_agg(span, ' ' ORDER BY pos) AS text
-        |  FROM r WHERE rn = 1 GROUP BY doc_id
-        |),
+      (spanDedupCtes + """,
         |f AS (
         |  SELECT d.doc_id, d.lang,
         |    CAST(len(list_filter(string_split_regex(coalesce(k.text, ''), '\s+'),
@@ -4755,7 +4465,7 @@ object SparkEntry {
         |  CAST(floor(prev / 512) AS BIGINT) AS seq_id,
         |  prev % 512 AS seq_offset
         |FROM p
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
     // global-pack mirror: one unpartitioned exclusive running sum — what
     // the Spark side computes distributed via per-partition sums + a
@@ -5081,40 +4791,7 @@ object SparkEntry {
         |FROM aj GROUP BY 1 ORDER BY ts""".stripMargin,
 
     "q49_pipeline_dedup_keeplist" ->
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
-        |  FROM documents
-        |),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, unnest(CASE WHEN len(w) >= 5
-        |    THEN [list_aggregate(w[i:i+4], 'string_agg', ' ') FOR i IN range(1, len(w) - 3)]
-        |    ELSE [list_aggregate(w, 'string_agg', ' ')] END) AS s
-        |  FROM toks
-        |),
-        |cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |p AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |),
-        |pairs AS (
-        |  SELECT id_a, id_b
-        |  FROM p JOIN cnt ca ON id_a = ca.doc_id JOIN cnt cb ON id_b = cb.doc_id
-        |  WHERE CAST(shared AS DOUBLE) / (ca.n + cb.n - shared) >= 0.5
-        |),
-        |edges AS (
-        |  SELECT id_a AS src, id_b AS dst FROM pairs
-        |  UNION SELECT id_b, id_a FROM pairs
-        |),
-        |reach(src, dst) AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-        |),
-        |comp AS (
-        |  SELECT src AS id, least(src, min(dst)) AS component
-        |  FROM reach GROUP BY src
-        |)
+      s"""$componentsCte
         |SELECT doc_id, lang, source FROM documents
         |WHERE doc_id NOT IN (SELECT id FROM comp WHERE id <> component)
         |ORDER BY doc_id""".stripMargin,
@@ -5281,13 +4958,7 @@ object SparkEntry {
         |  FROM events
         |) ORDER BY event_id""".stripMargin,
 
-    "q21_asof_backward" ->
-      """SELECT p.event_id, p.user_id, p.ts, p.value,
-        |  c.value AS click_value, c.ts AS click_ts
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin,
+    "q21_asof_backward" -> asofBackwardSql,
 
     "q22_asof_tolerance" ->
       """SELECT p.event_id, p.user_id, p.ts,
@@ -5514,72 +5185,16 @@ object SparkEntry {
         |  ON p.user_id = c.user_id AND p.ts <= c.ts
         |ORDER BY p.event_id""".stripMargin,
 
-    // q75: identical to q21's oracle — the continuous as-of face must
-    // reproduce the batch backward as-of exactly (DuckDB's native ASOF)
-    "q75_asof_stream" ->
-      """SELECT p.event_id, p.user_id, p.ts, p.value,
-        |  c.value AS click_value, c.ts AS click_ts
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin,
+    "q75_asof_stream" -> asofBackwardSql,
 
-    // q77: the stream-stream interval join must equal the plain batch range
-    // join — every (purchase, click-from-the-preceding-day) pair, per user
-    "q77_interval_join_stream" -> intervalJoinInnerSql,
-
-    // q77s drives the IDENTICAL join at 8 state partitions — partitioning
-    // must not change a single row, so the oracle is the same text
-    "q77s_interval_join_sized" -> intervalJoinInnerSql,
-
-    // q78: the left-outer twin — unmatched purchases emit null click
-    // columns (finalized by watermark passage in the streaming face)
-    "q78_interval_join_outer" ->
-      """SELECT p.event_id, p.user_id, p.ts, p.value,
-        |  c.event_id AS click_id, c.ts AS click_ts, c.value AS click_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id
-        |  AND c.ts BETWEEN p.ts - INTERVAL 1 DAY AND p.ts
-        |ORDER BY p.event_id, click_id""".stripMargin,
-
-    // q82: the right-outer twin — unmatched clicks emit null purchase
-    // columns (finalized when the watermark passes click_ts + before);
-    // user_id coalesces to the click's
-    "q82_interval_join_right" ->
-      """SELECT p.event_id, coalesce(p.user_id, c.user_id) AS user_id,
-        |  p.ts, p.value,
-        |  c.event_id AS click_id, c.ts AS click_ts, c.value AS click_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |RIGHT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id
-        |  AND c.ts BETWEEN p.ts - INTERVAL 1 DAY AND p.ts
-        |ORDER BY p.event_id, click_id""".stripMargin,
-
-    // q79: the full-outer twin — unmatched rows on BOTH sides emit with the
-    // other side's columns null; user_id coalesces across sides
-    "q79_interval_join_full" ->
-      """SELECT p.event_id, coalesce(p.user_id, c.user_id) AS user_id,
-        |  p.ts, p.value,
-        |  c.event_id AS click_id, c.ts AS click_ts, c.value AS click_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |FULL JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id
-        |  AND c.ts BETWEEN p.ts - INTERVAL 1 DAY AND p.ts
-        |ORDER BY p.event_id, click_id""".stripMargin,
-
-    // q83: the production-FILE-SINK drive of the identical full-outer
-    // interval join — sink choice must not change a single row, so the
-    // oracle is q79's text verbatim
-    "q83_interval_join_full_sink" ->
-      """SELECT p.event_id, coalesce(p.user_id, c.user_id) AS user_id,
-        |  p.ts, p.value,
-        |  c.event_id AS click_id, c.ts AS click_ts, c.value AS click_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |FULL JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id
-        |  AND c.ts BETWEEN p.ts - INTERVAL 1 DAY AND p.ts
-        |ORDER BY p.event_id, click_id""".stripMargin,
+    // the stream-stream interval joins must equal the plain batch range
+    // joins of the same kind (see intervalJoinSql)
+    "q77_interval_join_stream" -> intervalJoinSql("inner"),
+    "q77s_interval_join_sized" -> intervalJoinSql("inner"),
+    "q78_interval_join_outer" -> intervalJoinSql("left_outer"),
+    "q82_interval_join_right" -> intervalJoinSql("right_outer"),
+    "q79_interval_join_full" -> intervalJoinSql("full_outer"),
+    "q83_interval_join_full_sink" -> intervalJoinSql("full_outer"),
 
     "qd50_bm25" -> bm25OracleSql(Bm25Terms, k1 = 1.2, b = 0.75),
 
@@ -5613,20 +5228,7 @@ object SparkEntry {
     // singletons keep themselves as representative) feeding qd17's exact
     // int64 modular arithmetic on the representative
     "qd53_leakage_safe_split" ->
-      s"""WITH RECURSIVE pairs AS (
-         |  SELECT id_a, id_b FROM ($jaccardPairsSql)
-         |),
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs
-         |),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-         |),
-         |comp AS (SELECT src AS id, least(src, min(dst)) AS component
-         |         FROM reach GROUP BY src),
+      s"""$componentsCte,
          |rep AS (SELECT d.doc_id, coalesce(c.component, d.doc_id) AS rep
          |        FROM documents d LEFT JOIN comp c ON d.doc_id = c.id),
          |b AS (SELECT doc_id, rep,

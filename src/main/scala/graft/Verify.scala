@@ -6,11 +6,13 @@ import java.nio.file.{Files, Paths}
   *
   * Extra args beyond <sfDir> <outDir> restrict the dump to those query
   * names (dev loop; the stale-output sweep is skipped so a filtered run
-  * never invalidates a previous full dump's siblings). */
+  * never invalidates a previous full dump's siblings). A name that is no
+  * face fails the run before anything is written. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
     val only = args.drop(2).toSet
+    val selected = SparkEntry.selectFaces(SparkEntry.queries, only)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.local(cpus)
     // clear stale outputs: a failed later run must not leave a previous
@@ -24,13 +26,11 @@ object Verify {
       outRoot.listFiles().foreach(rm)
     }
     outRoot.mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (only.isEmpty || only.contains(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    selected.foreach { case (name, fn) =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

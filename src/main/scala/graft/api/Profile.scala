@@ -29,7 +29,7 @@ object Profile {
     * nothing ran yet). */
   def timingsOf(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val nodes = flatten(df.queryExecution.executedPlan)
+    val nodes = planNodes(df.queryExecution.executedPlan)
     val out = nodes.zipWithIndex.map { case (p, i) =>
       val rowsOut = p.metrics.get("numOutputRows").map(_.value)
       val timeMs = p.metrics.collect {
@@ -49,10 +49,11 @@ object Profile {
 
   /** Pre-order walk of the physical plan that follows AQE indirections:
     * AdaptiveSparkPlanExec → its final executed plan, QueryStageExec → the
-    * materialized stage plan. */
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-    case q: QueryStageExec => q +: flatten(q.plan)
-    case other => other +: other.children.flatMap(flatten)
+    * materialized stage plan. A reused exchange is a leaf, so the
+    * exchange it points at is listed once, where it ran. */
+  private[graft] def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => q +: planNodes(q.plan)
+    case other => other +: other.children.flatMap(planNodes)
   }
 }

@@ -15,6 +15,14 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
+  /** The distributed loop ran `maxIter` iterations and labels still
+    * changed: returning them would hand back a partial clustering whose
+    * answer depends on the edge count (the union-find fast path is exact). */
+  final class ComponentsNotConvergedException(val maxIter: Int)
+    extends IllegalStateException(
+      s"connected components did not converge within maxIter = $maxIter " +
+        "iterations; raise maxIter (labels travel one hop per iteration)")
+
   /** pairs: (id_a, id_b) edges. Returns (id, component) with component =
     * min id reachable. Only vertices appearing in pairs are returned.
     *
@@ -30,7 +38,10 @@ object ConnectedComponents {
     * to the session's reliable checkpoint dir when one is set (survives
     * executor loss; the 100 TB setting), else `localCheckpoint` (truncates
     * lineage in local/test runs). The edge list itself is materialized
-    * exactly once up front. */
+    * exactly once up front.
+    *
+    * The distributed loop throws [[ComponentsNotConvergedException]] when
+    * labels still change after `maxIter` iterations. */
   def components(pairs: DataFrame, maxIter: Int = 10, checkpointInterval: Int = 3,
                  smallGraphEdges: Long = 1L << 22): DataFrame = {
     // Persist the edge list ALREADY HASH-PARTITIONED on the per-iteration
@@ -154,8 +165,11 @@ object ConnectedComponents {
       labels = next.select(col("id"), col("component"))
       converged = changed == 0
       iter += 1
-      if (sys.props.contains("graft.cc.verbose"))
-        println(s"[components] iter=$iter changed=$changed")
+    }
+    if (!converged) {
+      edges.unpersist(blocking = true)
+      cached.unpersist()
+      throw new ComponentsNotConvergedException(maxIter)
     }
     // the final labels are fully materialized (the convergence count is a
     // full-table agg), so the edge cache is dead weight from here on —

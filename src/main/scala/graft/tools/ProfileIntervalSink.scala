@@ -1,22 +1,17 @@
 package graft.tools
 
-import graft.Sessions
-import graft.streaming.StreamOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{Sessions, SparkEntry}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Cross-scale evidence for the OUTER interval-join finalization paths
-  * (r16 verdict item 1). q78/q79/q82's sf1 refs were honestly REMOVED in
-  * r16 when the failed-rep ledger exposed their historical "readings" as
-  * drive-then-abort walls at the memory-sink oracle harness's 100k
-  * `localize` guard — a bound of the HARNESS, not of the faces. This tool
-  * drives the identical outer joins through the production sink
-  * (`StreamOps.sinkFileStream`: append mode, checkpointed, exactly-once,
-  * never materializes on the driver — the reference's streaming-sink
-  * contract, io.rs:391-479), so the outer-null finalization machinery —
-  * the most state-intensive streaming path in the repo — gets real
-  * >sf0.1 walls.
+  * (r16 verdict item 1). q78/q79/q82 drive through the memory-sink oracle
+  * harness, whose 100k `localize` guard bounds them above sf0.1 — a bound
+  * of the HARNESS, not of the faces. This tool drives the identical outer
+  * joins through the production file sink, using the faces' own function
+  * ([[SparkEntry.intervalJoinFace]]: same fixtures, same join, same drive),
+  * so the outer-null finalization machinery — the most state-intensive
+  * streaming path in the repo — gets real >sf0.1 walls.
   *
   * Correctness is checked FILE-side, two ways:
   *  - in-tool: row count + an order-independent checksum (sum of xxhash64
@@ -31,7 +26,7 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * Usage: runMain graft.tools.ProfileIntervalSink [sfDir] [reps]
   * Prints one `{"metric":"ij_sink",...}` JSON line per (joinType, rep) and
-  * leaves the LAST rep's fixture + sink dirs printed for the python check.
+  * leaves the fixture + sink dirs printed for the python check.
   */
 object ProfileIntervalSink {
 
@@ -53,93 +48,33 @@ object ProfileIntervalSink {
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.read.parquet(s"$sfDir/lineitem.parquet").count() // warm-up
 
-    // q78-family fixtures: purchases/clicks + a far-future sentinel on BOTH
-    // streams (the global watermark is the min across sources; the sentinel
-    // advances it past every real window so outer nulls can finalize)
-    val ev = graft.SparkEntry.t(spark, sfDir, "events")
-    val maxTs = ev.agg(max(col("ts").cast("timestamp"))).head.getTimestamp(0)
-    val farFuture = new java.sql.Timestamp(maxTs.getTime + 365L * 86400000L)
-    val root = java.nio.file.Files.createTempDirectory("graft_ijsink").toString
-    val dirL = s"$root/left"
-    val dirR = s"$root/right"
-    ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"),
-        col("ts").cast("timestamp").as("ts"), col("value"))
-      .unionByName(spark.range(1).select(lit(-1L).as("event_id"),
-        lit(-1L).as("user_id"), lit(farFuture).cast("timestamp").as("ts"),
-        lit(0.0).as("value")))
-      .write.mode("overwrite").parquet(dirL)
-    ev.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").cast("timestamp").as("click_ts"),
-        col("value").as("click_value"))
-      .unionByName(spark.range(1).select(lit(-1L).as("click_id"),
-        lit(-1L).as("user_id"),
-        lit(farFuture).cast("timestamp").as("click_ts"),
-        lit(0.0).as("click_value")))
-      .write.mode("overwrite").parquet(dirR)
-    val lS = spark.read.parquet(dirL).schema
-    val rS = spark.read.parquet(dirR).schema
+    val (dirL, dirR) = SparkEntry.intervalJoinInputs(spark, sfDir, sentinels = true)
     println(s"[ij-sink] fixtures: left=$dirL right=$dirR " +
       s"purchases=${spark.read.parquet(dirL).count()} clicks=${spark.read.parquet(dirR).count()}")
-
-    def join(l: DataFrame, r: DataFrame, jt: String): DataFrame =
-      StreamOps.intervalJoin(l, r, "ts", "click_ts",
-        by = Seq(("user_id", "user_id")), before = "1d", after = "0s",
-        watermark = "0 seconds", joinType = jt)
+    val root = java.nio.file.Files.createTempDirectory("graft_ijsink").toString
 
     for (jt <- Seq("left_outer", "right_outer", "full_outer")) {
-      // batch truth once per join type (sentinel rows filtered like the
-      // q78/q79/q82 faces: every real key is non-negative)
-      val batch = join(spark.read.parquet(dirL), spark.read.parquet(dirR), jt)
-        .filter(col("user_id") >= 0L)
-      val (bn, bh) = summarize(batch)
+      // batch truth once per join type, sentinel rows filtered like the faces
+      val batch = SparkEntry.intervalJoinOf(spark.read.parquet(dirL),
+        spark.read.parquet(dirR), jt).filter(col("user_id") >= 0L)
       for (rep <- 1 to reps) {
-        val outDir = s"$root/out_${jt}_$rep"
-        val ckpt = s"$root/ckpt_${jt}_$rep"
-        // flush files are deleted after each rep so every rep (and every
-        // join type's batch truth) sees the identical fixture listing
-        def ls: Set[java.nio.file.Path] = {
-          val st = java.nio.file.Files.list(java.nio.file.Paths.get(dirL))
-          try { import scala.jdk.CollectionConverters._; st.iterator().asScala.toSet }
-          finally st.close()
-        }
-        val preFlush = ls
-        val t0 = System.nanoTime()
-        val q = StreamOps.sinkFileStream(
-          join(spark.readStream.schema(lS).parquet(dirL),
-            spark.readStream.schema(rS).parquet(dirR), jt),
-          "parquet", outDir, ckpt, Trigger.ProcessingTime(0L))
+        val dir = s"$root/${jt}_$rep"
         var stateRows = -1L
         var stateMb = 0.0
-        val flushed = try {
-          q.processAllAvailable()
-          // empty flush batch (the drainStream choreography): the watermark
-          // advanced at the previous batch's end; this batch fires the
-          // eviction that emits the outer nulls through the sink
-          spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), lS)
-            .write.mode("append").parquet(dirL)
-          q.processAllAvailable()
-          q.recentProgress.flatMap(_.stateOperators.headOption).foreach { so =>
+        val t0 = System.nanoTime()
+        val sink = SparkEntry.intervalJoinFace(spark, sfDir, jt,
+          SparkEntry.FileSink(dir, _.flatMap(_.stateOperators.headOption).foreach { so =>
             stateRows = math.max(stateRows, so.numRowsTotal)
             stateMb = math.max(stateMb, so.memoryUsedBytes / 1e6)
-          }
-        } finally {
-          q.stop()
-          StreamOps.releaseStateStores()
-          (ls -- preFlush).foreach(p =>
-            try java.nio.file.Files.deleteIfExists(p)
-            catch { case _: java.io.IOException => () })
-        }
+          }))
         val wall = (System.nanoTime() - t0) / 1e9
-        val sink = spark.read.parquet(outDir).filter(col("user_id") >= 0L)
         val (sn, sh) = summarize(sink)
+        val (bn, bh) = summarize(
+          batch.select(sink.schema.map(f => col(f.name).cast(f.dataType)): _*))
         val ok = sn == bn && sh == bh
-        println(f"""{"metric":"ij_sink","sf":"$sfDir","join":"$jt","rep":$rep,"wall_sec":${math.rint(wall * 100) / 100}%s,"rows":$sn,"batch_rows":$bn,"checksum_match":$ok,"state_rows_max":$stateRows,"state_mb_max":${math.rint(stateMb * 10) / 10}%s,"out":"$outDir"}""")
+        println(f"""{"metric":"ij_sink","sf":"$sfDir","join":"$jt","rep":$rep,"wall_sec":${math.rint(wall * 100) / 100}%s,"rows":$sn,"batch_rows":$bn,"checksum_match":$ok,"state_rows_max":$stateRows,"state_mb_max":${math.rint(stateMb * 10) / 10}%s,"out":"$dir/out"}""")
         require(ok, s"ij_sink $jt rep$rep: sink output != batch truth " +
           s"(rows $sn vs $bn, checksum ${sh.take(12)} vs ${bh.take(12)})")
-        val _ = flushed
       }
     }
     spark.stop()

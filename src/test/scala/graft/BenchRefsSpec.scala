@@ -20,6 +20,18 @@ class BenchRefsSpec extends SparkSpec {
         orphaned.toSeq.sorted.mkString(", "))
   }
 
+  test("face filters (Verify args, Bench SPARK_GRAFT_BENCH_ONLY) fail fast on unknown names") {
+    val all = Map("a" -> 1, "b" -> 2)
+    assert(SparkEntry.selectFaces(all, Set.empty) == all)
+    assert(SparkEntry.selectFaces(all, Set("b")) == Map("b" -> 2))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selectFaces(all, Set("b", "zz", "qq")))
+    assert(e.getMessage.contains("unknown face name(s): qq, zz"), e.getMessage)
+    val typo = intercept[IllegalArgumentException](SparkEntry.selectFaces(
+      SparkEntry.benchQueries, Set("q77_interval_join_stream", "q77_interval_join")))
+    assert(typo.getMessage.endsWith(": q77_interval_join"), typo.getMessage)
+  }
+
   test("refs are sane: positive medians, non-negative cpu_frac, streaming faces known") {
     BenchRefs.refs.foreach { case (name, (med, cpu)) =>
       assert(med > 0, s"$name: non-positive frozen median $med")

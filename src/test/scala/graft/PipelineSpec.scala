@@ -244,23 +244,77 @@ class PipelineSpec extends SparkSpec {
     assert(got == Map(1L -> true, 2L -> false))
   }
 
-  test("qd52 matches its DuckDB oracle value-for-value at sf0.001") {
+  /** A result cell in tools/check.py's comparison domain: integers as
+    * Long, floats as Double (compared exactly), decimals without trailing
+    * zeros, timestamps as naive local date-times. */
+  private def cell(v: Any): Any = v match {
+    case null => null
+    case x: java.lang.Integer => x.longValue
+    case x: java.math.BigInteger => x.longValueExact
+    case x: java.lang.Float => x.doubleValue
+    case x: java.math.BigDecimal => x.stripTrailingZeros
+    case x: java.sql.Timestamp => x.toLocalDateTime
+    case x => x
+  }
+
+  /** The rows of a result as check.py compares them: columns sorted by
+    * name, rows sorted by all columns. */
+  private def canonical(rows: Seq[Seq[Any]]): Seq[Seq[Any]] =
+    rows.map(_.map(cell)).sortBy(_.map(c => String.valueOf(c)).mkString("\u0001"))
+
+  /** Runs `names` at sf0.001 and against their DuckDB oracles, and returns
+    * the faces whose results differ under check.py's comparison rule. */
+  private def oracleMismatches(names: Seq[String]): Seq[String] = {
     val sfDir = "/root/testdata/sf0.001"
-    val got = SparkEntry.queries("qd52_dup_ngrams")(spark, sfDir)
-      .collect().map { r =>
-        (r.getLong(0), (1 to 6).map(r.getDouble).toVector, r.getBoolean(7))
-      }.sortBy(_._1)
     val conn = java.sql.DriverManager.getConnection("jdbc:duckdb:")
     try {
       val st = conn.createStatement()
-      st.execute(s"CREATE VIEW documents AS SELECT * FROM '$sfDir/documents.parquet'")
-      val rs = st.executeQuery(SparkEntry.oracleSql("qd52_dup_ngrams"))
-      val want = Iterator.continually(rs).takeWhile(_.next()).map { r =>
-        (r.getLong(1), (2 to 7).map(r.getDouble).toVector, r.getBoolean(8))
-      }.toVector
-      assert(got.length == want.length, s"${got.length} vs ${want.length} rows")
-      got.zip(want).foreach { case (g, w) => assert(g == w, s"mismatch: $g vs $w") }
+      Seq("events", "documents").foreach(t =>
+        st.execute(s"CREATE VIEW $t AS SELECT * FROM '$sfDir/$t.parquet'"))
+      names.filter { name =>
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        val cols = df.columns.toSeq.sorted
+        val got = canonical(df.select(cols.map(col): _*).collect().toSeq
+          .map(r => cols.indices.map(r.get)))
+        val rs = st.executeQuery(SparkEntry.oracleSql(name))
+        val md = rs.getMetaData
+        val wantCols = (1 to md.getColumnCount).map(md.getColumnLabel).sorted
+        val want = canonical(Iterator.continually(rs).takeWhile(_.next())
+          .map(r => wantCols.map(c => r.getObject(c): Any)).toSeq)
+        val ok = cols == wantCols && got == want
+        if (!ok) println(s"[parity] $name: columns $cols vs $wantCols, " +
+          s"${got.length} vs ${want.length} rows, first diff " +
+          got.zip(want).find(p => p._1 != p._2).getOrElse("(row count)"))
+        !ok
+      }
     } finally conn.close()
+  }
+
+  test("qd52 matches its DuckDB oracle value-for-value at sf0.001") {
+    val bad = oracleMismatches(Seq("qd52_dup_ngrams"))
+    assert(bad.isEmpty, s"faces differing from their DuckDB oracle: ${bad.mkString(", ")}")
+  }
+
+  // every face whose run function or oracle SQL text is shared with another
+  // face (interval joins, continuous as-of, the quality-selection pipeline,
+  // and the Jaccard/components/decontamination/span-dedup/HTML/perplexity/
+  // DSIR oracle fragments)
+  private val parityFaces = Seq(
+    "q21_asof_backward", "q49_pipeline_dedup_keeplist",
+    "q53_pipeline_clean_pack", "q54_pipeline_crawl",
+    "q73_sessionize_stream", "q75_asof_stream", "q76_asof_stream_fwd",
+    "q77_interval_join_stream", "q77s_interval_join_sized",
+    "q78_interval_join_outer", "q79_interval_join_full",
+    "q82_interval_join_right", "q83_interval_join_full_sink",
+    "qd03_ngram_jaccard", "qd10_dedup_components", "qd16_jaccard_prefix",
+    "qd18_decontaminate", "qd28_span_dedup", "qd34_decontaminate_bloom",
+    "qd36_dsir_weights", "qd37_dsir_select", "qd39_perplexity",
+    "qd41_pipeline_quality_select", "qd41h_pipeline_quality_select_hashed",
+    "qd43_html_extract", "qd53_leakage_safe_split")
+
+  test("faces sharing a run or oracle fragment match DuckDB exactly at sf0.001") {
+    val bad = oracleMismatches(parityFaces)
+    assert(bad.isEmpty, s"faces differing from their DuckDB oracle: ${bad.mkString(", ")}")
   }
 
   test("URL canonicalization: scheme/host/port/www/tracking/fragment/trailing slash") {

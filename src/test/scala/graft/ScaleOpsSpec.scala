@@ -95,6 +95,15 @@ class ScaleOpsSpec extends SparkSpec {
     assert(leaves.exists(_.contains("LogicalRDD")), leaves.mkString(","))
   }
 
+  test("components distributed loop throws, naming maxIter, when it does not converge") {
+    // an 8-edge chain needs 8 label passes; 3 cannot converge
+    val pairs = (0L until 8L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[graft.dedup.ConnectedComponents.ComponentsNotConvergedException] {
+      graft.dedup.ConnectedComponents.components(pairs, maxIter = 3, smallGraphEdges = 0)
+    }
+    assert(e.maxIter == 3 && e.getMessage.contains("maxIter = 3"), e.getMessage)
+  }
+
   test("IVF index + search: one corpus shuffle, recall comparable to LSH") {
     val e = sf("embeddings")
     val q = e.filter(col("vec_id") < 10)
