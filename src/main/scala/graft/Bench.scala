@@ -265,7 +265,7 @@ object Bench {
         // (count() would let Catalyst prune the projections being measured)
         // A failed rep is RECORDED AS FAILED (r16): its wall is the time to
         // the abort, not the query's cost — before this flag, an sf10
-        // overflow abort sat in BENCH_SF10_r16.json looking like a fast
+        // overflow abort sat in 329567f:BENCH_SF10_r16.json looking like a fast
         // valid reading. Failures surface in the artifact's queries_failed
         // map and override the row's mechanism verdict.
         val ok =
@@ -579,8 +579,7 @@ object Bench {
         // started under visible machine load, is flagged so the gate report
         // separates ambient bursts from real regressions machine-readably
         def loadSuspect(r: R): Boolean =
-          baseCpuFrac.get(r.name).exists(b => b > 0 && r.cpuFrac < 0.6 * b) ||
-            r.load1 > 4.0
+          loadSuspectFor(r.cpuFrac, baseCpuFrac.getOrElse(r.name, 0.0), r.load1)
         val rj = ratios.map { case (r, ratio, _) => "\"" + r.name + "\":" + r4(ratio) }
           .mkString("{", ",", "}")
         val bj = bad.map { case (r, ratio, _) => "\"" + r.name + "\":" + r4(ratio) }

@@ -32,7 +32,7 @@ object BenchRefs {
     * corrected), sf10 (frozen r17).
     *
     * sf1 basis (BASELINE.md round-16 note): the median of the r13–r15
-    * quiet-window readings per face (`BENCH_SF1_r13/r15/r15b/r15c`),
+    * quiet-window readings per face (`329567f:BENCH_SF1_r13/r15/r15b/r15c`),
     * excluding probe-flagged starved rows (q77s r14 cpu 2.17, q78
     * r14/r15 cpu ≤3.05); qd41h is the post-job-fusion r15c datum — the
     * only reading at the current tree. The dedup-family rows (qd03/qd04/
@@ -43,9 +43,9 @@ object BenchRefs {
     *
     * REFROZEN r18 (optimization round, tools/refreeze_refs.py): the rows
     * the round's input-sized state partitioning + parallelism-floor layout
-    * write made faster at scale — sf1 q53/q61 (BENCH_SF1_r18b), sf1
+    * write made faster at scale — sf1 q53/q61 (329567f:BENCH_SF1_r18b), sf1
     * q77/q83 (the post-sqrt-floor re-run), sf10 q81 54.82 s (was 115.45 —
-    * the fixed-4-file sort spill eliminated, BENCH_SF10_r18b). Downward
+    * the fixed-4-file sort spill eliminated, 329567f:BENCH_SF10_r18b). Downward
     * refreezes only; per-row comments keep their original basis notes. */
   val sfRefs: Map[String, Map[String, (Double, Double)]] = Map(
     "sf1" -> Map(
@@ -96,7 +96,7 @@ object BenchRefs {
       "qs04_ann_pq" -> ((2.44, 8.61))),
 
     // sf10 basis (r16 directive "freeze an sf10 table", frozen r17): medians
-    // of the r16 unique-text-fixture readings (`BENCH_SF10_r16{,b,c,d}`;
+    // of the r16 unique-text-fixture readings (`329567f:BENCH_SF10_r16{,b,c,d}`;
     // qd33 excluded — its sf10 output domain leaves int64 by design and the
     // face reads mechanism:"failed"). Loaded-window rows kept only where
     // cpu_frac stayed healthy (no starvation signature).
@@ -109,8 +109,8 @@ object BenchRefs {
     // were pre-ledger drive-then-abort walls). r18 lifted the driver
     // bounds — q77s drives the production file sink, q81's stats stay
     // distributed — and both are DuckDB-hash-exact at sf10
-    // (ORACLE_SF10_r18.txt). Frozen from the first clean gated r18 run
-    // (BENCH_SF10_r18.json: 12/12 faces, zero violations, zero failed
+    // (329567f:ORACLE_SF10_r18.txt). Frozen from the first clean gated r18 run
+    // (329567f:BENCH_SF10_r18.json: 12/12 faces, zero violations, zero failed
     // reps, cpu_collapse 0.0 — the earlier measuring window was
     // IO-starved and read q77s at 39 s): q77s 13.14 s = 2.2x its sf0.1
     // wall at 100x data; q81 115.5 s carrying the documented fixed-4-file
@@ -298,7 +298,7 @@ object BenchRefs {
   /** query -> (frozen warm-median seconds, reference cpu_frac).
     *
     * REFROZEN r18 (optimization round; tools/refreeze_refs.py from
-    * BENCH_LOCAL_r18b.json): the 18 faces the round made faster —
+    * 329567f:BENCH_LOCAL_r18b.json): the 18 faces the round made faster —
     * the streaming family (input-sized state partitions), the RangeId
     * set (O(log P) bucket expression), q53/qd53/q41/q42 (sampling source
     * + broadcast component maps). Only rows whose NEW reading undercut

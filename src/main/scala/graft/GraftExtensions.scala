@@ -15,10 +15,10 @@ import org.apache.spark.sql.types.DataType
   * }}}
   *
   * (or `.withExtensions(new GraftExtensions)`) and every `graft_*` function
-  * is available in SQL and `call_function` from session start — on every
-  * session of the cluster, with no per-session `register()` calls. The
-  * per-object `register` methods remain for ad-hoc/local use; this class is
-  * the deployment path.
+  * is available in SQL text from session start, on every session of the
+  * cluster. This is the only table of `graft_*` names and only SQL uses it:
+  * the library's Column builders construct their expressions directly, so
+  * they work on any session, with or without these extensions.
   *
   * Injected functions:
   *  - `graft_cosine(a, b)`           — codegen cosine similarity
@@ -103,8 +103,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("graft_deflate_ratio", "graft_deflate_ratio(text) - deflate/raw byte-count compression ratio"),
       (exprs: Seq[Expression]) => plans.DeflateRatioExpr(exprs(0))))
 
-    // literal-argument decoding shared with the register() paths —
-    // plans.PqExprs.floats / plans.BpeExprs.mergesOf are the single source
+    // literal-argument decoding: plans.PqExprs.floats /
+    // plans.BpeExprs.mergesOf etc. decode the SQL literals
     def intArg(e: Expression): Int = e.eval().asInstanceOf[Int]
     ext.injectFunction((FunctionIdentifier("graft_pq_encode"),
       info("graft_pq_encode", "graft_pq_encode(vec, codebook, m, ksub) - PQ sub-codes (argmin-L2)"),

@@ -616,7 +616,6 @@ object SparkEntry {
 
   /** qd46's operator stage: native one-pass dup-paragraph kernels. */
   private def qd46Run(s: SparkSession, input: DataFrame): DataFrame = {
-    graft.plans.SketchExprs.register(s)
     val T = graft.functions.TextFunctions
     input.select(col("doc_id"),
         T.dupParagraphFraction(col("text")).as("dup_para_frac"),
@@ -1225,7 +1224,6 @@ object SparkEntry {
     // heuristic language ID (stopword scoring; oracle generated from the
     // same dictionaries — see langIdOracleSql)
     "qd06_langid" -> ((s, d) => {
-      graft.plans.SketchExprs.register(s)
       t(s, d, "documents")
         .select(col("doc_id"), col("lang"),
           graft.functions.TextFunctions.langId(col("text")).as("lang_pred"))
@@ -1275,7 +1273,6 @@ object SparkEntry {
     // count shares, and the combined keep/drop gate
     "qd11_repetition" -> ((s, d) => {
       val T = graft.functions.TextFunctions
-      graft.plans.SketchExprs.register(s)
       t(s, d, "documents")
         .select(col("doc_id"),
           T.dupLineFraction(col("text")).as("dup_line_frac"),
@@ -1409,7 +1406,6 @@ object SparkEntry {
     // (count / integer sum / max) so distributed execution is bit-stable.
     "q51_pipeline_data_prep" -> ((s, d) => {
       val T = graft.functions.TextFunctions
-      graft.plans.SketchExprs.register(s)
       val scored = t(s, d, "documents").select(
         col("doc_id"), col("lang"), col("source"), col("text"),
         T.langId(col("text")).as("lang_pred"),
@@ -1601,7 +1597,6 @@ object SparkEntry {
     // bonus" must count BOTH itself and its suffix "bonus"), hits counted
     // by one Aho-Corasick pass, mirrored by per-phrase contains in SQL
     "qd48_blocklist" -> ((s, d) => {
-      graft.plans.BlocklistHitsExpr.register(s)
       val T = graft.functions.TextFunctions
       val dirty = concat(col("text"),
         when(col("doc_id") % 7 === 0, lit(" Bad Phrase One")).otherwise(lit("")),
@@ -1644,7 +1639,6 @@ object SparkEntry {
       val flags = graft.prep.Prep.contaminationNearDup(docs, bench, "doc_id", "text",
           numHashes = 128, bands = 32, shingleK = 5, threshold = 0.8)
         .select(col("doc_id"), col("contaminated"))
-      graft.plans.SketchExprs.register(s)
       // exact per-doc max jaccard vs bench: bench shingle sets broadcast
       // (the small side by construction), corpus stays narrow until the
       // per-doc max agg
@@ -1760,7 +1754,6 @@ object SparkEntry {
     // only ever CREATE pairs that rank after it (its output symbol did not
     // exist earlier), so ranks fire in table order either way.
     "qd49_bpe_encode_fixed" -> ((s, d) => {
-      graft.plans.BpeExprs.register(s)
       t(s, d, "documents").select(col("doc_id"),
           graft.functions.Bpe.tokenCount(col("text"), fixedMerges).as("n_bpe_tokens"))
         .orderBy(col("doc_id"))
@@ -1839,7 +1832,6 @@ object SparkEntry {
     // gets a deterministic dirty suffix (BEL + decomposed 'café' + US) that
     // the cleanup must compose and strip — mirrored verbatim in the oracle
     "qd38_clean_text" -> ((s, d) => {
-      graft.plans.UnicodeExprs.register(s)
       val tf = graft.functions.TextFunctions
       t(s, d, "documents")
         .select(col("doc_id"),
@@ -1972,7 +1964,6 @@ object SparkEntry {
     // the op removed unique data, the one failure semantic dedup must never
     // have). Cell-blocking recall stays pinned by the SemDeDup witness spec.
     "qd29_semantic_dedup" -> ((s, d) => {
-      graft.plans.CosineSimilarityExpr.register(s)
       val emb = t(s, d, "embeddings")
       val surv = graft.dedup.Dedup.semanticDedup(emb, "vec_id", "embedding",
         nlist = 8, threshold = 0.3, lloydIters = 2)
@@ -1984,7 +1975,7 @@ object SparkEntry {
         .join(broadcast(drops.select(col("vec_id").as("__did"), col("embedding").as("__dv"))),
           col("__oid") =!= col("__did"))
         .select(col("__did"),
-          call_function("graft_cosine", col("__dv"), col("__ov")).as("__cos"))
+          graft.plans.CosineSimilarityExpr.cosine(col("__dv"), col("__ov")).as("__cos"))
         .groupBy(col("__did")).agg(max(col("__cos")).as("__maxcos"))
       drops.agg(count(lit(1)).as("__nd"))
         .crossJoin(justified.agg(
@@ -2004,7 +1995,6 @@ object SparkEntry {
     // red where the previous rows-only check was blind. The raw per-row
     // operator stays the BENCH face.
     "qd30_compress_ratio" -> ((s, d) => {
-      graft.plans.DeflateRatioExpr.register(s)
       val T = graft.functions.TextFunctions
       val refRatio = udf((text: String) => {
         if (text == null || text.isEmpty) null.asInstanceOf[java.lang.Double]
@@ -2938,7 +2928,6 @@ object SparkEntry {
     // inline a non-trivial producer into 12 field uses), so all six
     // fractions plus the gate cost one native pass per row.
     "qd52_dup_ngrams" -> ((s, d) => {
-      graft.plans.SketchExprs.register(s)
       val T = graft.functions.TextFunctions
       val docs = t(s, d, "documents").withColumn("rep_text",
         concat(col("text"), lit(" "),
@@ -2985,7 +2974,6 @@ object SparkEntry {
     // per-stratum window, so a 90%-one-language corpus has no hot-key
     // cliff) plus a broadcast join back for the payload columns.
     "qd54_stratified_sample" -> ((s, d) => {
-      graft.plans.AnnExprs.register(s)
       graft.prep.Prep.stratifiedSampleExact(
           t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars")),
           "doc_id", "lang", k = 25, salt = 7L)
@@ -3002,7 +2990,6 @@ object SparkEntry {
     // through the contract, never enumerated). Sketch state: 64 counters
     // per partition vs the exact path's full-vocabulary shuffle.
     "qd55_heavy_hitters" -> ((s, d) => {
-      graft.plans.FreqExprs.register(s)
       val T = graft.functions.TextFunctions
       val k = 64
       val docs = t(s, d, "documents")
@@ -3036,7 +3023,6 @@ object SparkEntry {
     // per-lang verdicts the MG invariants make provably true (n and the
     // n/(k+1) bound are PER GROUP).
     "qd57_heavy_hitters_by_lang" -> ((s, d) => {
-      graft.plans.FreqExprs.register(s)
       val T = graft.functions.TextFunctions
       val k = 64
       val docs = t(s, d, "documents")
@@ -3074,7 +3060,6 @@ object SparkEntry {
     // broadcast join back; content-keyed u, so any engine reproduces the
     // exact sample (the oracle mirrors the formula verbatim).
     "qd56_weighted_sample" -> ((s, d) => {
-      graft.plans.AnnExprs.register(s)
       val docs = t(s, d, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
       val keys = graft.prep.Prep.weightedSampleKeys(
@@ -3139,7 +3124,6 @@ object SparkEntry {
     // top-k is verification workload — the term that grows with data; the
     // operator a 100 TB user runs is the bounded-counter sketch alone)
     "qd55_heavy_hitters" -> ((s, d) => {
-      graft.plans.FreqExprs.register(s)
       val T = graft.functions.TextFunctions
       t(s, d, "documents")
         .agg(T.heavyHitters(T.tokens(col("text")), 64).as("__sk"))
@@ -3150,7 +3134,6 @@ object SparkEntry {
     // raw GROUPED Misra–Gries sketch (qd57's operator half — one bounded
     // summary per language, k counters per (lang, partition))
     "qd57_heavy_hitters_by_lang" -> ((s, d) => {
-      graft.plans.FreqExprs.register(s)
       val T = graft.functions.TextFunctions
       t(s, d, "documents").groupBy(col("lang"))
         .agg(T.heavyHitters(T.tokens(col("text")), 64).as("__sk"))
@@ -3177,7 +3160,6 @@ object SparkEntry {
     // exact-cosine justification scan over every dropped vector
     // (correctness-only, like qd04's exact-verify half)
     "qd29_semantic_dedup" -> ((s, d) => {
-      graft.plans.CosineSimilarityExpr.register(s)
       graft.dedup.Dedup.semanticDedup(t(s, d, "embeddings"), "vec_id",
         "embedding", nlist = 8, threshold = 0.3, lloydIters = 2)
     }),
@@ -3231,7 +3213,6 @@ object SparkEntry {
     // raw per-row deflate walk + gate — the contract face additionally
     // recomputes every ratio through the independent UDF reference
     "qd30_compress_ratio" -> ((s, d) => {
-      graft.plans.DeflateRatioExpr.register(s)
       val T = graft.functions.TextFunctions
       t(s, d, "documents")
         .select(col("doc_id"),
@@ -3244,7 +3225,6 @@ object SparkEntry {
     // trainable BPE on the REAL corpus (distributed word-frequency table →
     // corpus-exact merges → narrow-map encode) — the original qd32 workload
     "qd32_bpe_tokenize" -> ((s, d) => {
-      graft.plans.BpeExprs.register(s)
       val B = graft.functions.Bpe
       val T = graft.functions.TextFunctions
       val docs = t(s, d, "documents")
@@ -3601,6 +3581,35 @@ object SparkEntry {
       |  FROM r WHERE rn = 1 GROUP BY doc_id
       |)""".stripMargin
 
+  /** qd22/qd42's mixture frame: per-doc token counts `d`, per-language
+    * totals `tot`, then the salted-bucket rollup of the docs kept under a
+    * per-language `r(lang, rate)` that `rateCtes` defines over `tot`. */
+  private def mixtureSql(rateCtes: String): String =
+    s"""WITH d AS (
+       |  SELECT doc_id, lang,
+       |    CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
+       |  FROM documents
+       |),
+       |tot AS (SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS tok FROM d GROUP BY lang),
+       |$rateCtes
+       |SELECT d.lang, count(*) AS n_docs, CAST(sum(d.n_tokens) AS BIGINT) AS n_tokens
+       |FROM d JOIN r ON d.lang = r.lang
+       |WHERE ((doc_id + 1) % 1000000007) * 2654435761 % 1000000007 % 1000 < rate
+       |GROUP BY d.lang ORDER BY d.lang""".stripMargin
+
+  /** The prefix-sum packing shared by the qd23 and qd47 oracles: each
+    * doc's whitespace-token count and the exclusive running total `prev`
+    * in doc_id order. */
+  private val packedSql: String =
+    """  SELECT doc_id, n_tokens,
+      |    CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prev
+      |  FROM (
+      |    SELECT doc_id,
+      |      CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
+      |    FROM documents
+      |  )""".stripMargin
+
   val oracleSql: Map[String, String] = Map(
     "qd01_dedup_exact" ->
       """SELECT doc_id, lang, source FROM (
@@ -3856,14 +3865,8 @@ object SparkEntry {
     // both engines run the identical left-to-right fp ops (DuckDB parses
     // bare decimal literals as DECIMAL, which would round differently),
     // same salt-1 bucket arithmetic as stratifiedKeep
-    "qd22_mixture" ->
-      """WITH d AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
-        |  FROM documents
-        |),
-        |tot AS (SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS tok FROM d GROUP BY lang),
-        |r AS (
+    "qd22_mixture" -> mixtureSql(
+      """r AS (
         |  SELECT lang, least(1000, CAST(floor(
         |    CAST(1000.0 AS DOUBLE) *
         |    (CASE lang WHEN 'en' THEN CAST(0.4 AS DOUBLE)
@@ -3873,23 +3876,13 @@ object SparkEntry {
         |               WHEN 'zh' THEN CAST(0.1 AS DOUBLE)
         |               ELSE CAST(0 AS DOUBLE) END) * 10000 / tok) AS BIGINT)) AS rate
         |  FROM tot
-        |)
-        |SELECT d.lang, count(*) AS n_docs, CAST(sum(d.n_tokens) AS BIGINT) AS n_tokens
-        |FROM d JOIN r ON d.lang = r.lang
-        |WHERE ((doc_id + 1) % 1000000007) * 2654435761 % 1000000007 % 1000 < rate
-        |GROUP BY d.lang ORDER BY d.lang""".stripMargin,
+        |)""".stripMargin),
 
     // temperature-mixture mirror: sqrt is correctly-rounded IEEE (unlike
     // pow), the denominator folds ascending, every other op is the qd22
     // rate/bucket arithmetic
-    "qd42_temperature_mixture" ->
-      """WITH d AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
-        |  FROM documents
-        |),
-        |tot AS (SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS tok FROM d GROUP BY lang),
-        |den AS (
+    "qd42_temperature_mixture" -> mixtureSql(
+      """den AS (
         |  SELECT list_reduce(list_sort(list(sqrt(CAST(tok AS DOUBLE)))), (a, b) -> a + b) AS den
         |  FROM tot
         |),
@@ -3898,11 +3891,7 @@ object SparkEntry {
         |    CAST(1000.0 AS DOUBLE) * (sqrt(CAST(tok AS DOUBLE)) / den) * 10000 / tok
         |  ) AS BIGINT)) AS rate
         |  FROM tot, den
-        |)
-        |SELECT d.lang, count(*) AS n_docs, CAST(sum(d.n_tokens) AS BIGINT) AS n_tokens
-        |FROM d JOIN r ON d.lang = r.lang
-        |WHERE ((doc_id + 1) % 1000000007) * 2654435761 % 1000000007 % 1000 < rate
-        |GROUP BY d.lang ORDER BY d.lang""".stripMargin,
+        |)""".stripMargin),
 
     // HTML mirror: the page wrapper around each doc, then htmlToTextSql
     // (chr(10) embeds the comment's newline without breaking stripMargin)
@@ -4493,15 +4482,8 @@ object SparkEntry {
     // pack-spans mirror: the qd23 prefix-sum packing, then one span per
     // budget-boundary-delimited fragment (integer interval arithmetic)
     "qd47_pack_spans" ->
-      """WITH packed AS (
-        |  SELECT doc_id, n_tokens,
-        |    CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prev
-        |  FROM (
-        |    SELECT doc_id,
-        |      CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
-        |    FROM documents
-        |  )
+      s"""WITH packed AS (
+        |$packedSql
         |),
         |sp AS (
         |  SELECT doc_id, prev, n_tokens,
@@ -4514,16 +4496,9 @@ object SparkEntry {
         |FROM sp ORDER BY doc_id, seq_id""".stripMargin,
 
     "qd23_pack_global" ->
-      """SELECT doc_id, n_tokens, prev // 1024 AS seq_id, prev % 1024 AS seq_offset
+      s"""SELECT doc_id, n_tokens, prev // 1024 AS seq_id, prev % 1024 AS seq_offset
         |FROM (
-        |  SELECT doc_id, n_tokens,
-        |    CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prev
-        |  FROM (
-        |    SELECT doc_id,
-        |      CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
-        |    FROM documents
-        |  )
+        |$packedSql
         |)
         |ORDER BY doc_id""".stripMargin,
 

@@ -1,7 +1,10 @@
 package graft.api
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalBridge.{column, expression}
+import org.apache.spark.sql.types.DataType
 import graft.functions.ChronoFormat
 
 /** Expression-namespace syntax mirroring the reference's `Expr` surface
@@ -37,10 +40,8 @@ object syntax {
     /** strict cast = ANSI (raises on overflow/unparseable, expr.rs:1015-1033),
       * pinned on the Cast node so session `spark.sql.ansi.enabled` can't
       * weaken it; non-strict = try_cast → null. */
-    def castStrict(t: String): Column = {
-      graft.plans.CastExprs.register(org.apache.spark.sql.SparkSession.active)
-      call_function("graft_cast_ansi", c, lit(t))
-    }
+    def castStrict(t: String): Column =
+      column(Cast(expression(c), DataType.fromDDL(t), None, EvalMode.ANSI))
     def castLenient(t: String): Column = c.try_cast(t)
     /** log with arbitrary base (expr.rs:852-863). */
     def logBase(base: Double): Column = log(base, c)
@@ -216,10 +217,8 @@ object syntax {
       * raise|earliest|latest|null, `nonExistent` ∈ raise|null (defaults =
       * raise, matching Polars). */
     def replaceTimeZone(tz: String, ambiguous: String = "raise",
-                        nonExistent: String = "raise"): Column = {
-      graft.plans.TimeZoneExprs.register(org.apache.spark.sql.SparkSession.active)
-      call_function("graft_replace_tz", uc, lit(tz), lit(ambiguous), lit(nonExistent))
-    }
+                        nonExistent: String = "raise"): Column =
+      column(graft.plans.ReplaceTimeZoneExpr(expression(uc), tz, ambiguous, nonExistent))
   }
 
   /** List namespace (reference: expr.rs:266-291, 744-847 `list_*`). */

@@ -3,7 +3,9 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalBridge.{column, expression}
 import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions => V}
+import graft.plans.{CosineSimilarityExpr, SimHash64Expr, SketchExprs, SpanHashPairsExpr}
 
 /** Deduplication operators for training-data pipelines, all shuffle-lean:
   *
@@ -25,10 +27,10 @@ object Dedup {
   /** Distinct word k-shingle XXH64 values ([[graft.plans.ShingleHashesExpr]]):
     * every shuffle keyed on a shingle moves 8 bytes instead of the shingle
     * string, and no shingle string is ever materialized. Same seed as the
-    * minhash-internal shingle hash, so `graft_minhash` over these values
-    * equals `graft_minhash` over the string shingles. */
+    * minhash-internal shingle hash, so a MinHash over these values equals
+    * one over the string shingles. */
   private[graft] def distinctShingleHashes(text: Column, k: Int): Column =
-    call_function("graft_shingle_hashes", T.tokens(text), lit(k))
+    SketchExprs.shingleHashes(T.tokens(text), k)
 
   /** Exact dedup: keep the row with the smallest `orderCol` per duplicate
     * group (deterministic, unlike dropDuplicates). */
@@ -80,7 +82,6 @@ object Dedup {
   def newSinceSnapshot(current: DataFrame, previous: DataFrame,
                        textCol: String, fpp: Double = 0.01,
                        expectedDistinct: Option[Long] = None): DataFrame = {
-    graft.plans.BloomExprs.register(current.sparkSession)
     // the snapshot fingerprint set is read TWICE, not three times: the Bloom
     // build (EAGER) and the lazy rescue anti-join, which recomputes the set
     // once inside the caller's action. At 100 TB that is the honest shape:
@@ -119,7 +120,6 @@ object Dedup {
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    numHashes: Int = 128, bands: Int = 32, shingleK: Int = 5,
                    threshold: Double = 0.8): DataFrame = {
-    graft.plans.SketchExprs.register(df.sparkSession)
     // native sketch expressions (tight loops), no persist: only (id, band,
     // bucket) flows through the self-join shuffle, and signatures re-attach
     // by id for the estimate. The three plan references to `sigs` share one
@@ -127,8 +127,7 @@ object Dedup {
     // computations (the band-bucket exchange feeds both candidate sides; the
     // id exchange feeds both re-attach sides) and the op retains no cache.
     val sigs = df.select(col(idCol).as("id"),
-        call_function("graft_minhash",
-          distinctShingleHashes(col(textCol), shingleK), lit(numHashes))
+        SketchExprs.minhash(distinctShingleHashes(col(textCol), shingleK), numHashes)
           .as("sig"))
     val bandsDf = sigs
       .withColumn("bh", explode(H.bandHashes(col("sig"), numHashes, bands)))
@@ -162,9 +161,8 @@ object Dedup {
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    chunks: Int = 4, maxHamming: Int = 3): DataFrame = {
     require(maxHamming < chunks, "pigeonhole blocking needs maxHamming < chunks")
-    graft.plans.SketchExprs.register(df.sparkSession)
     val sims = df.select(col(idCol).as("id"),
-        call_function("graft_simhash", T.tokens(lower(col(textCol)))).as("sim"))
+        column(SimHash64Expr(expression(T.tokens(lower(col(textCol)))))).as("sim"))
       .withColumn("blk", explode(H.simhashBlocks(col("sim"), chunks)))
       .select(col("id"), col("sim"), col("blk.chunk"), col("blk.key"))
     val a = sims.alias("a"); val b = sims.alias("b")
@@ -180,7 +178,6 @@ object Dedup {
     * on distinct shingles, |A∩B| / (|A|+|B|−|A∩B|) >= threshold. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         shingleK: Int = 5, threshold: Double = 0.5): DataFrame = {
-    graft.plans.SketchExprs.register(df.sparkSession)
     // the exploded shingle set feeds three consumers (both self-join sides
     // and the per-doc counts); the identical subplans dedupe via
     // ReuseExchange instead of a persist, so nothing stays cached after the
@@ -233,7 +230,6 @@ object Dedup {
   def ngramJaccardPairsPrefix(df: DataFrame, idCol: String, textCol: String,
                               shingleK: Int = 5, threshold: Double = 0.5): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold must be in (0,1], got $threshold")
-    graft.plans.SketchExprs.register(df.sparkSession)
     val sh = df.select(col(idCol).as("id"),
       explode(distinctShingleHashes(col(textCol), shingleK)).as("s"))
     // document frequency via map-side-combined groupBy + join-back, NOT a
@@ -286,8 +282,7 @@ object Dedup {
     cand
       .join(sets.select(col("id").as("id_a"), sarr.as("__aa"), col("n").as("n_a")), "id_a")
       .join(sets.select(col("id").as("id_b"), sarr.as("__ab"), col("n").as("n_b")), "id_b")
-      .withColumn("__inter", call_function("graft_sorted_inter_size",
-        col("__aa"), col("__ab"), lit(threshold)))
+      .withColumn("__inter", SketchExprs.sortedInterSize(col("__aa"), col("__ab"), threshold))
       .filter(col("__inter") >= 0)
       .withColumn("jaccard",
         col("__inter").cast("double") / (col("n_a") + col("n_b") - col("__inter")))
@@ -313,7 +308,6 @@ object Dedup {
   def spanDedupGlobal(df: DataFrame, idCol: String, textCol: String,
                       spanWords: Int = 20): DataFrame = {
     require(spanWords > 0, s"spanWords must be positive, got $spanWords")
-    graft.plans.SketchExprs.register(df.sparkSession)
     val toks = T.tokens(col(textCol))
     val nSpans = ceil(size(toks).cast("double") / spanWords).cast("int")
     // span STRINGS are built only where text is needed (reassembly); the
@@ -324,7 +318,7 @@ object Dedup {
         transform(sequence(lit(0), nSpans - lit(1)),
           i => array_join(slice(toks, i * spanWords + lit(1), lit(spanWords)), " ")))
       .otherwise(array().cast("array<string>"))
-    val hashed = call_function("graft_span_hash_pairs", toks, lit(spanWords))
+    val hashed = column(SpanHashPairsExpr(expression(toks), spanWords))
     keepFirstUnits(df, idCol, textCol, spanArr, lit(true), " ", hashed)
   }
 
@@ -478,12 +472,11 @@ object Dedup {
                            blockCol: String, threshold: Double): DataFrame = {
     // native codegen cosine: bit-identical to the HOF fold (PipelineSpec
     // asserts it), ~64x less per-element interpreter overhead
-    graft.plans.CosineSimilarityExpr.register(df.sparkSession)
     val e = df.select(col(idCol).as("id"), col(blockCol).as("blk"), col(vecCol).as("v"))
     e.alias("a")
       .join(e.alias("b"), col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        call_function("graft_cosine", col("a.v"), col("b.v")).as("cosine"))
+        CosineSimilarityExpr.cosine(col("a.v"), col("b.v")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -499,14 +492,13 @@ object Dedup {
   def embeddingLshPairs(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                         threshold: Double, bandBits: Int = 8, bands: Int = 4,
                         seed: Long = 42L): DataFrame = {
-    graft.plans.CosineSimilarityExpr.register(df.sparkSession)
     val e = df.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("blk", explode(
         graft.similarity.Ann.lshBandBuckets(col("v"), dim, bandBits, bands, seed)))
     e.alias("a")
       .join(e.alias("b"), col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        call_function("graft_cosine", col("a.v"), col("b.v")).as("cosine"))
+        CosineSimilarityExpr.cosine(col("a.v"), col("b.v")).as("cosine"))
       .filter(col("cosine") >= threshold)
       .distinct() // a pair can match in several bands
   }

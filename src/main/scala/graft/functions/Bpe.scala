@@ -2,6 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalBridge.{column, expression}
+import graft.plans.BpeEncodeExpr
 
 /** Trainable byte-pair-encoding tokenizer (Sennrich/Haddow/Birch, "Neural
   * Machine Translation of Rare Words with Subword Units", ACL 2016) — the
@@ -224,8 +226,7 @@ object Bpe {
   /** Distributed encode: whitespace-token array column → flat sub-token
     * array ([[graft.plans.BpeEncodeExpr]]; merges travel in the plan). */
   def encodeCol(tokens: Column, merges: Seq[(String, String)]): Column =
-    call_function("graft_bpe_encode", tokens,
-      typedlit(merges.map(p => Seq(p._1, p._2))))
+    column(BpeEncodeExpr(expression(tokens), merges.toVector))
 
   /** Sub-token count per document under a trained merge table. */
   def tokenCount(text: Column, merges: Seq[(String, String)]): Column =

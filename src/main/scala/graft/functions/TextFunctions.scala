@@ -1,7 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalBridge.{column, expression}
+import graft.plans.{BlocklistHitsExpr, DeflateRatioExpr, DupLineStatsExpr, DupNgramProfileExpr,
+  FreqSketchAgg, LangIdExpr, NormalizeUnicodeExpr, TopNgramShareExpr, UnicodeExprs}
 
 /** Text-analysis functions for large-scale training-data pipelines: token
   * counting, language ID, quality scoring, document fingerprinting.
@@ -48,7 +52,7 @@ object TextFunctions {
     * order) whose stopword score is maximal; "und" (undetermined) when all
     * scores are zero. */
   def langId(text: Column): Column =
-    call_function("graft_langid", text) // native one-pass LangIdExpr; callers run SketchExprs.register
+    column(LangIdExpr(expression(text))) // one native pass
 
   /** [[langId]]'s original HOF formulation — kept as the executable spec
     * (PipelineSpec asserts equivalence against the native expression).
@@ -87,18 +91,18 @@ object TextFunctions {
   }
 
   /** Compression-ratio quality signal — deflate(text)/utf8(text) byte
-    * ratio via [[graft.plans.DeflateRatioExpr]] (register it or use
-    * [[graft.GraftExtensions]]). Low = degenerate repetition, ~0.6-0.8 =
-    * prose, >1 = incompressible noise. Null for null/empty text. */
+    * ratio via [[graft.plans.DeflateRatioExpr]]. Low = degenerate
+    * repetition, ~0.6-0.8 = prose, >1 = incompressible noise. Null for
+    * null/empty text. */
   def compressionRatio(text: Column): Column =
-    call_function("graft_deflate_ratio", text)
+    column(DeflateRatioExpr(expression(text)))
 
-  /** Unicode normalization ([[graft.plans.NormalizeUnicodeExpr]] — register
-    * it or use [[graft.GraftExtensions]]). NFC for canonical composition
-    * (oracle-able vs DuckDB's nfc_normalize), NFKC to also fold
-    * compatibility characters (ligatures, full-width forms). */
+  /** Unicode normalization ([[graft.plans.NormalizeUnicodeExpr]]). NFC for
+    * canonical composition (oracle-able vs DuckDB's nfc_normalize), NFKC to
+    * also fold compatibility characters (ligatures, full-width forms). An
+    * unknown `form` throws here, when the column is built. */
   def normalizeUnicode(text: Column, form: String = "NFC"): Column =
-    call_function("graft_normalize_unicode", text, lit(form))
+    column(NormalizeUnicodeExpr(expression(text), UnicodeExprs.form(form)))
 
   /** Control characters that survive no cleanup: C0 except tab/newline/CR,
     * plus DEL. Kept as a plain character class so any engine's regex strips
@@ -145,10 +149,9 @@ object TextFunctions {
   /** Fraction of non-empty lines that are duplicates of an earlier line:
     * (n_lines − n_distinct) / n_lines; 0.0 for line-less documents.
     * Native one-pass [[graft.plans.DupLineStatsExpr]] (lambda-free, so
-    * Catalyst CSE can merge repeated uses); callers must have run
-    * `SketchExprs.register`. */
+    * Catalyst CSE can merge repeated uses). */
   def dupLineFraction(text: Column): Column =
-    call_function("graft_dup_line_stats", text).getField("dup_line_frac")
+    dupLineStats(text).getField("dup_line_frac")
 
   /** Fraction of characters that sit inside duplicated lines (any line
     * occurring more than once contributes ALL its occurrences' characters):
@@ -156,7 +159,10 @@ object TextFunctions {
     * long boilerplate block scores high even when unique short lines
     * dominate the line count. */
   def dupLineCharFraction(text: Column): Column =
-    call_function("graft_dup_line_stats", text).getField("dup_line_char_frac")
+    dupLineStats(text).getField("dup_line_char_frac")
+
+  private def dupLineStats(text: Column): Column =
+    column(DupLineStatsExpr(expression(text)))
 
   /** [[dupLineFraction]]'s HOF formulation — executable spec only. */
   def dupLineFractionHof(text: Column): Column = {
@@ -195,20 +201,18 @@ object TextFunctions {
     dupLineCharFraction(paragraphsAsLines(text))
 
   /** Count share of the most frequent word n-gram (native
-    * [[graft.plans.TopNgramShareExpr]] one-pass loop). Callers must have
-    * run `SketchExprs.register` on the session. */
+    * [[graft.plans.TopNgramShareExpr]] one-pass loop). */
   def topNgramShare(text: Column, n: Int): Column =
-    call_function("graft_top_ngram_share", tokens(text), lit(n))
+    column(TopNgramShareExpr(expression(tokens(text)), n))
 
   /** Duplicate-n-gram character fractions for n in [minN, maxN] as one
     * struct(dup{minN}_frac … dup{maxN}_frac) — the Gopher §A1.2 signals
     * (fraction of characters inside word n-grams occurring more than once,
     * all occurrences counted, no positional overlap accounting; see
     * [[graft.plans.DupNgramProfileExpr]] for the exact contract). One
-    * native pass materializes the token array once for all n. Callers must
-    * have run `SketchExprs.register`. */
+    * native pass materializes the token array once for all n. */
   def dupNgramProfile(text: Column, minN: Int, maxN: Int): Column =
-    call_function("graft_dup_ngram_profile", tokens(text), lit(minN), lit(maxN))
+    column(DupNgramProfileExpr(expression(tokens(text)), minN, maxN))
 
   /** Single-n convenience view of [[dupNgramProfile]]. */
   def dupNgramCharFraction(text: Column, n: Int): Column =
@@ -298,13 +302,11 @@ object TextFunctions {
   /** Number of DISTINCT blocklist phrases present in the document
     * (ASCII-case-insensitive substring containment) — the C4 "bad words"
     * page gate is `blocklistHits(text, list) === 0`. ONE Aho–Corasick pass
-    * regardless of list size ([[graft.plans.BlocklistHitsExpr]]; register
-    * it or use [[graft.GraftExtensions]]) where the declarative
-    * `filter(phrases, p => contains(lower(text), p))` rescans the document
-    * once per phrase. Phrases must be lowercase. */
+    * regardless of list size ([[graft.plans.BlocklistHitsExpr]]) where the
+    * declarative `filter(phrases, p => contains(lower(text), p))` rescans
+    * the document once per phrase. Phrases must be lowercase. */
   def blocklistHits(text: Column, phrases: Seq[String]): Column =
-    call_function("graft_blocklist_hits", text,
-      org.apache.spark.sql.functions.lit(phrases.toArray))
+    column(BlocklistHitsExpr(expression(text), phrases.toArray))
 
   // ---- sentence segmentation ----------------------------------------------
 
@@ -379,7 +381,7 @@ object TextFunctions {
     * boilerplate detection) on a corpus whose vocabulary itself is too
     * large to shuffle comfortably. Aggregate column: use inside `.agg`. */
   def heavyHitters(tokensCol: Column, k: Int): Column =
-    call_function("graft_topfreq", tokensCol, lit(k))
+    column(FreqSketchAgg(expression(tokensCol), Literal(k)).toAggregateExpression())
 
   /** Unigram-rarity document statistics against a `(token, n)` vocabulary
     * (typically [[vocab]] of the same corpus): per document,

@@ -122,7 +122,6 @@ object Layout {
     * value — so range filters translate to rank ranges. */
   def quantizedRank(df: DataFrame, cols: Seq[String], bits: Int,
                     accuracy: Int = 10000): Seq[Column] = {
-    graft.plans.LayoutExprs.register(df.sparkSession)
     val nb = 1 << bits
     val probs = (1 until nb).map(_.toDouble / nb)
     val aggs = cols.map(c =>
@@ -131,7 +130,7 @@ object Layout {
     cols.zipWithIndex.map { case (c, i) =>
       require(!row.isNullAt(i), s"quantizedRank: column $c has no non-null values")
       val bounds = row.getSeq[Double](i)
-      call_function("graft_bucketize", col(c).cast("double"), typedLit(bounds))
+      graft.plans.LayoutExprs.bucketize(col(c).cast("double"), bounds.toArray)
     }
   }
 

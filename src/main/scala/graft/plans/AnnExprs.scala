@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.InternalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -45,7 +46,8 @@ case class NearestCellsExpr(child: Expression, cellIds: Array[Long],
     case other => TypeCheckResult.TypeCheckFailure(s"nearest_cells expects a numeric array, got $other")
   }
 
-  private val elemType: DataType = child.dataType match {
+  // lazy: a Column builder constructs this before its child is resolved
+  private lazy val elemType: DataType = child.dataType match {
     case ArrayType(et, _) => et
     case _ => NullType
   }
@@ -131,7 +133,7 @@ case class NearestCellsExpr(child: Expression, cellIds: Array[Long],
   * (score desc, nulls last, id asc), duplicate ids collapsed keeping the
   * BETTER-ranked (score, id) entry. In the ANN pipelines a duplicate id
   * always carries an identical score (the same scored pair arriving via
-  * another block/probe), but `graft_topk` is registered session-wide and a
+  * another block/probe), but `graft_topk` is callable from SQL and a
   * SQL caller may feed differing scores for one id — keeping the best makes
   * the result independent of partition/merge arrival order, matching the
   * determinism of the window+distinct formulation this replaces. */
@@ -296,7 +298,8 @@ case class VecSumAgg(child: Expression,
     case other => TypeCheckResult.TypeCheckFailure(s"graft_vec_sum expects a numeric array, got $other")
   }
 
-  private val elemType: DataType = child.dataType match {
+  // lazy: a Column builder constructs this before its child is resolved
+  private lazy val elemType: DataType = child.dataType match {
     case ArrayType(et, _) => et
     case _ => NullType
   }
@@ -371,15 +374,8 @@ object AnnExprs {
   private[graft] def doubles(e: Expression): Array[Double] =
     e.eval().asInstanceOf[ArrayData].toDoubleArray()
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nearest_cells", exprs => NearestCellsExpr(exprs(0), longs(exprs(1)),
-        doubles(exprs(2)), exprs(3).eval().asInstanceOf[Int], exprs(4).eval().asInstanceOf[Int]),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk", exprs => BoundedTopKAgg(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vec_sum", exprs => VecSumAgg(exprs(0)), "built-in")
-  }
+  /** Per-group top-`k` `(id, score)` structs, best first ([[BoundedTopKAgg]]);
+    * an aggregate column, for use inside `.agg`. */
+  def topK(score: Column, id: Column, k: Int): Column =
+    column(BoundedTopKAgg(expression(score), expression(id), k).toAggregateExpression())
 }

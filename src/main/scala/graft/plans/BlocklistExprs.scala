@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -173,9 +172,4 @@ object BlocklistHitsExpr {
     case other => throw new IllegalArgumentException(
       s"graft_blocklist_hits: phrases must be a foldable ARRAY<STRING> literal, got $other")
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_blocklist_hits",
-      exprs => BlocklistHitsExpr(exprs(0), strings(exprs(1))), "built-in")
 }

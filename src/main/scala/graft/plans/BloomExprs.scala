@@ -2,11 +2,11 @@ package graft.plans
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graft.InternalBridge.{column, expression}
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -76,17 +76,11 @@ object BloomExprs {
   /** Column-API membership test: `mightContain(keyCol, bytes)` — true if the
     * long key MIGHT be in the set (never false for an inserted key). */
   def mightContain(key: Column, filterBytes: Array[Byte]): Column =
-    call_function("graft_bloom_might_contain", key, lit(filterBytes))
+    column(BloomMightContainExpr(expression(key), filterBytes))
 
   private[graft] def bytes(e: Expression): Array[Byte] = e.eval() match {
     case b: Array[Byte] => b
     case other => throw new IllegalArgumentException(
       s"graft_bloom_might_contain: filter argument must be a foldable BINARY literal, got $other")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_might_contain",
-      exprs => BloomMightContainExpr(exprs(0), bytes(exprs(1))), "built-in")
   }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -37,8 +36,8 @@ case class BpeEncodeExpr(child: Expression, merges: Seq[(String, String)])
     val out = scala.collection.mutable.ArrayBuffer[UTF8String]()
     var t = 0
     while (t < toks.numElements()) {
-      // registered session-wide as graft_bpe_encode and callable from SQL
-      // with arbitrary arrays: skip null elements instead of NPE-ing the task
+      // callable from SQL as graft_bpe_encode with arbitrary arrays: skip
+      // null elements instead of NPE-ing the task
       if (toks.isNullAt(t)) { t += 1 }
       else {
       val word = toks.getUTF8String(t).toString
@@ -78,8 +77,4 @@ object BpeExprs {
       (p.getUTF8String(0).toString, p.getUTF8String(1).toString)
     }
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bpe_encode", exprs => BpeEncodeExpr(exprs(0), mergesOf(exprs(1))), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -120,10 +119,4 @@ object C4Exprs {
     case other => throw new IllegalArgumentException(
       s"$name: expected a foldable INT literal argument, got $other")
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_c4_keep_lines",
-      exprs => C4KeepLinesExpr(exprs(0), intArg(exprs(1), "graft_c4_keep_lines")),
-      "built-in")
 }

@@ -2,7 +2,6 @@ package graft.plans
 
 import java.util.zip.Deflater
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -71,8 +70,4 @@ object DeflateRatioExpr {
     while (!d.finished()) total += d.deflate(sink)
     total
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_deflate_ratio", exprs => DeflateRatioExpr(exprs(0)), "built-in")
 }

@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.InternalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -11,8 +12,8 @@ import org.apache.spark.sql.types._
   * The HOF formulation (`graft.functions.VectorFunctions.cosine`) allocates a
   * lambda frame per element; this expression compiles to a single primitive
   * loop inside whole-stage codegen — the version an ANN scan over 100 TB of
-  * embeddings wants. Registered as SQL function `graft_cosine` by
-  * `CosineSimilarityExpr.register` (used via `call_function`).
+  * embeddings wants. Built as a Column by [[CosineSimilarityExpr.cosine]];
+  * SQL text reaches it as `graft_cosine` through [[graft.GraftExtensions]].
   */
 case class CosineSimilarityExpr(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -90,9 +91,7 @@ case class CosineSimilarityExpr(left: Expression, right: Expression)
 }
 
 object CosineSimilarityExpr {
-  /** Register `graft_cosine(a, b)` in the session's function registry; call
-    * with `org.apache.spark.sql.functions.call_function("graft_cosine", a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSimilarityExpr(exprs(0), exprs(1)), "built-in")
+  /** Cosine similarity of two numeric-array columns; null when either norm is 0. */
+  def cosine(a: Column, b: Column): Column =
+    column(CosineSimilarityExpr(expression(a), expression(b)))
 }

@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.InternalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -49,7 +50,7 @@ case class DsirScoreExpr(child: Expression, table: Array[Double])
     var i = 0
     while (i < n) {
       // null elements contribute nothing: internal callers (Prep.tokens)
-      // never yield them, but a session-registered SQL caller may pass
+      // never yield them, but a SQL caller may pass
       // containsNull arrays and must not kill the task
       if (!toks.isNullAt(i)) {
         val w = toks.getUTF8String(i)
@@ -70,9 +71,7 @@ case class DsirScoreExpr(child: Expression, table: Array[Double])
 
 object DsirExprs {
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dsir_score",
-      exprs => DsirScoreExpr(exprs(0), AnnExprs.doubles(exprs(1))), "built-in")
-  }
+  /** Sum of `table`'s log-ratio weights over `tokens`' hashed buckets ([[DsirScoreExpr]]). */
+  def score(tokens: Column, table: Array[Double]): Column =
+    column(DsirScoreExpr(expression(tokens), table))
 }

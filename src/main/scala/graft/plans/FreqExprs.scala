@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -196,12 +195,5 @@ final class FreqBuffer(val k: Int) {
         if (e.getValue <= sub) ei.remove() else e.setValue(e.getValue - sub)
       }
     }
-  }
-}
-
-object FreqExprs {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topfreq", exprs => FreqSketchAgg(exprs(0), exprs(1)), "built-in")
   }
 }

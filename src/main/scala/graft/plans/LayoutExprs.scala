@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.InternalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -57,9 +58,7 @@ case class BucketizeExpr(child: Expression, boundaries: Array[Double])
 }
 
 object LayoutExprs {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bucketize", exprs => BucketizeExpr(exprs(0), AnnExprs.doubles(exprs(1))),
-      "built-in")
-  }
+  /** Bucket index of `v` under the sorted `boundaries` ([[BucketizeExpr]]). */
+  def bucketize(v: Column, boundaries: Array[Double]): Column =
+    column(BucketizeExpr(expression(v), boundaries))
 }

@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.InternalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -28,7 +29,7 @@ case class PqEncodeExpr(child: Expression, codebook: Array[Float], m: Int, ksub:
     extends UnaryExpression with CodegenFallback {
 
   // validate BEFORE the division: m*ksub == 0 (reachable via the
-  // session-registered SQL functions) must fail with this message, not an
+  // graft_pq_* SQL functions) must fail with this message, not an
   // ArithmeticException from the subDim computation
   require(m > 0 && ksub > 0, s"pq_encode: m and ksub must be positive, got m=$m ksub=$ksub")
   private val subDim = codebook.length / (m * ksub)
@@ -44,7 +45,8 @@ case class PqEncodeExpr(child: Expression, codebook: Array[Float], m: Int, ksub:
     case other => TypeCheckResult.TypeCheckFailure(s"pq_encode expects array<float|double>, got $other")
   }
 
-  private val isDouble = child.dataType match {
+  // lazy: a Column builder constructs this before its child is resolved
+  private lazy val isDouble = child.dataType match {
     case ArrayType(DoubleType, _) => true
     case _ => false
   }
@@ -101,7 +103,8 @@ case class PqLutExpr(child: Expression, codebook: Array[Float], m: Int, ksub: In
     case other => TypeCheckResult.TypeCheckFailure(s"pq_lut expects array<float|double>, got $other")
   }
 
-  private val isDouble = child.dataType match {
+  // lazy: a Column builder constructs this before its child is resolved
+  private lazy val isDouble = child.dataType match {
     case ArrayType(DoubleType, _) => true
     case _ => false
   }
@@ -170,15 +173,11 @@ object PqExprs {
     Array.tabulate(arr.numElements())(arr.getFloat)
   }
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_encode", exprs => PqEncodeExpr(exprs(0), floats(exprs(1)),
-        exprs(2).eval().asInstanceOf[Int], exprs(3).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_lut", exprs => PqLutExpr(exprs(0), floats(exprs(1)),
-        exprs(2).eval().asInstanceOf[Int], exprs(3).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_adc", exprs => PqAdcExpr(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Int]), "built-in")
-  }
+  /** Per-query ADC lookup table of `vec` under `codebook` ([[PqLutExpr]]). */
+  def lut(vec: Column, codebook: Array[Float], m: Int, ksub: Int): Column =
+    column(PqLutExpr(expression(vec), codebook, m, ksub))
+
+  /** Asymmetric-distance score of `codes` against a query's `lut` ([[PqAdcExpr]]). */
+  def adc(codes: Column, lut: Column, ksub: Int): Column =
+    column(PqAdcExpr(expression(codes), expression(lut), ksub))
 }

@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.InternalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -273,7 +274,7 @@ case class SpanHashPairsExpr(child: Expression, k: Int)
       val end = math.min(n, j + k)
       while (j < end) {
         // null elements hash as absent (internal callers never yield them;
-        // a session-registered SQL caller's containsNull array must not NPE)
+        // a SQL caller's containsNull array must not NPE)
         val s = arr.getUTF8String(j)
         if (s != null) {
           h1 = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes(), h1)
@@ -609,37 +610,16 @@ case class SortedLongInterSizeExpr(left: Expression, right: Expression,
 }
 
 object SketchExprs {
-  /** Register SQL-callable forms: graft_minhash(shingles, k),
-    * graft_simhash(tokens), graft_shingles(tokens, k, distinct). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_inter_size", exprs => SortedLongInterSizeExpr(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Double]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_span_hash_pairs", exprs => SpanHashPairsExpr(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", exprs => MinHashSignatureExpr(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHash64Expr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", exprs => ShinglesExpr(exprs(0),
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Boolean]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle_hashes", exprs => ShingleHashesExpr(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_top_ngram_share", exprs => TopNgramShareExpr(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_langid", exprs => LangIdExpr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dup_line_stats", exprs => DupLineStatsExpr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dup_ngram_profile", exprs => DupNgramProfileExpr(exprs(0),
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int]), "built-in")
-  }
+  /** Distinct XXH64 word `k`-shingle hashes of a token array ([[ShingleHashesExpr]]). */
+  def shingleHashes(tokens: Column, k: Int): Column =
+    column(ShingleHashesExpr(expression(tokens), k))
+
+  /** `numHashes`-permutation MinHash signature of a shingle array ([[MinHashSignatureExpr]]). */
+  def minhash(shingles: Column, numHashes: Int): Column =
+    column(MinHashSignatureExpr(expression(shingles), numHashes))
+
+  /** |a ∩ b| of two ascending long arrays, or -1 once the pair provably
+    * misses Jaccard `threshold` ([[SortedLongInterSizeExpr]]). */
+  def sortedInterSize(a: Column, b: Column, threshold: Double): Column =
+    column(SortedLongInterSizeExpr(expression(a), expression(b), threshold))
 }

@@ -2,7 +2,6 @@ package graft.plans
 
 import java.time.{LocalDateTime, ZoneId, ZoneOffset}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, TimestampNTZType, TimestampType}
@@ -73,14 +72,4 @@ case class ReplaceTimeZoneExpr(child: Expression, tz: String,
 
   override protected def withNewChildInternal(newChild: Expression): ReplaceTimeZoneExpr =
     copy(child = newChild)
-}
-
-object TimeZoneExprs {
-  /** SQL-callable form: graft_replace_tz(ts, 'zone', 'ambiguous', 'non_existent'). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_replace_tz", exprs => ReplaceTimeZoneExpr(exprs(0),
-        exprs(1).eval().toString, exprs(2).eval().toString, exprs(3).eval().toString),
-      "built-in")
-  }
 }

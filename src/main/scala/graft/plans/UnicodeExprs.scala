@@ -2,7 +2,6 @@ package graft.plans
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -49,18 +48,13 @@ case class NormalizeUnicodeExpr(child: Expression, form: Normalizer.Form)
 
 object UnicodeExprs {
 
-  private[graft] def formOf(e: Expression): Normalizer.Form = {
-    val name = String.valueOf(e.eval())
+  private[graft] def formOf(e: Expression): Normalizer.Form = form(String.valueOf(e.eval()))
+
+  /** The normalization form named `name` (case-insensitive). */
+  private[graft] def form(name: String): Normalizer.Form =
     try Normalizer.Form.valueOf(name.toUpperCase(java.util.Locale.ROOT))
     catch {
       case _: IllegalArgumentException => throw new IllegalArgumentException(
         s"graft_normalize_unicode: form must be one of NFC/NFD/NFKC/NFKD, got '$name'")
     }
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_normalize_unicode",
-      exprs => NormalizeUnicodeExpr(exprs(0), formOf(exprs(1))), "built-in")
-  }
 }

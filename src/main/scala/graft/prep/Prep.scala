@@ -3,8 +3,10 @@ package graft.prep
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.InternalBridge.{column, expression}
 import graft.functions.{TextFunctions => T}
 import graft.operators.RangeId
+import graft.plans.{AnnExprs, C4KeepLinesExpr, DsirExprs, GopherStatsExpr, SketchExprs}
 
 /** Training-corpus preparation operators: deterministic splitting/sampling,
   * benchmark decontamination, context-window chunking, and sequence packing.
@@ -138,7 +140,7 @@ object Prep {
     // smallest. Keys lie in [0, P) so the double cast is exact (P < 2^53).
     val score = -shuffleKey(col(idCol), salt).cast("double")
     df.groupBy(col(stratumCol))
-      .agg(call_function("graft_topk", score, col(idCol), lit(k)).as("__tk"))
+      .agg(AnnExprs.topK(score, col(idCol), k).as("__tk"))
       .select(col(stratumCol), posexplode(col("__tk")))
       .select(col(stratumCol), (col("pos") + 1).cast("long").as("rk"),
         col("col.id").as(idCol))
@@ -169,7 +171,7 @@ object Prep {
     // keeps the highest scores, which is exactly the A-Res reservoir
     val score = when(w > 0.0, log(u) / w)
     df.groupBy()
-      .agg(call_function("graft_topk", score, col(idCol), lit(k)).as("__tk"))
+      .agg(AnnExprs.topK(score, col(idCol), k).as("__tk"))
       .select(posexplode(col("__tk")))
       .filter(col("col.score").isNotNull) // null-weight rows never sampled
       .select((col("pos") + 1).cast("long").as("rk"), col("col.id").as(idCol))
@@ -187,7 +189,7 @@ object Prep {
     val w = col(weightCol).cast("double")
     val score = when(w > 0.0, log(u) / w)
     df.groupBy(col(stratumCol))
-      .agg(call_function("graft_topk", score, col(idCol), lit(k)).as("__tk"))
+      .agg(AnnExprs.topK(score, col(idCol), k).as("__tk"))
       .select(col(stratumCol), posexplode(col("__tk")))
       .filter(col("col.score").isNotNull)
       .select(col(stratumCol), (col("pos") + 1).cast("long").as("rk"),
@@ -310,13 +312,12 @@ object Prep {
     * a verdict.
     *
     * Returns the corpus frame + `n_shared` (distinct shared shingles) +
-    * `contaminated`. Registers the needed session functions itself.
+    * `contaminated`.
     */
   def contamination(corpus: DataFrame, bench: DataFrame, idCol: String,
                     textCol: String, shingleK: Int = 5,
                     minShared: Int = 1): DataFrame = {
-    graft.plans.SketchExprs.register(corpus.sparkSession)
-    def hashes(c: Column) = call_function("graft_shingle_hashes", T.tokens(c), lit(shingleK))
+    def hashes(c: Column) = SketchExprs.shingleHashes(T.tokens(c), shingleK)
     val benchSet = bench.select(explode(hashes(col(textCol))).as("__s")).distinct()
     val hits = corpus
       .select(col(idCol).as("__id"), explode(hashes(col(textCol))).as("__s"))
@@ -348,10 +349,7 @@ object Prep {
                          textCol: String, shingleK: Int = 5,
                          minShared: Int = 1, fpp: Double = 0.01,
                          expectedDistinct: Option[Long] = None): DataFrame = {
-    graft.plans.SketchExprs.register(corpus.sparkSession)
-    graft.plans.BloomExprs.register(corpus.sparkSession)
-    def hashes(df: DataFrame) =
-      call_function("graft_shingle_hashes", toks(df, textCol), lit(shingleK))
+    def hashes(df: DataFrame) = SketchExprs.shingleHashes(toks(df, textCol), shingleK)
     // bench shingles are read twice, not three times: the Bloom build
     // (EAGER, here) and the lazy verify join, which recomputes the distinct
     // set once inside the caller's action (it is the SMALL side by
@@ -412,9 +410,8 @@ object Prep {
                            textCol: String, numHashes: Int = 128, bands: Int = 32,
                            shingleK: Int = 5, threshold: Double = 0.8): DataFrame = {
     import graft.functions.{HashFunctions => H}
-    graft.plans.SketchExprs.register(corpus.sparkSession)
-    def sig(c: Column) = call_function("graft_minhash",
-      call_function("graft_shingle_hashes", T.tokens(c), lit(shingleK)), lit(numHashes))
+    def sig(c: Column) =
+      SketchExprs.minhash(SketchExprs.shingleHashes(T.tokens(c), shingleK), numHashes)
     val benchSigs = bench.select(col(idCol).as("__bid"), sig(col(textCol)).as("__bsig"))
     val benchBands = benchSigs.select(col("__bid"),
         explode(H.bandHashes(col("__bsig"), numHashes, bands)).as("__bh"))
@@ -552,7 +549,6 @@ object Prep {
     require(buckets >= 2 && buckets <= (1 << 22),
       s"buckets must be in [2, 2^22] (the log-ratio table is a plan literal " +
         s"of 8*buckets bytes), got $buckets")
-    graft.plans.DsirExprs.register(corpus.sparkSession)
     // BOTH models build in ONE job (r15): a side-tagged union with a
     // conditional-count aggregation replaces two sequential
     // explode→group→collect jobs — same counts bit-for-bit, but one
@@ -591,8 +587,7 @@ object Prep {
       math.log((ctArr(i) + a) / (nt + a * vUsed)) -
         math.log((csArr(i) + a) / (ns + a * vUsed)))
     corpus.withColumn("dsir_weight",
-      coalesce(call_function("graft_dsir_score", toks(corpus, textCol),
-        lit(table)), lit(0.0)))
+      coalesce(DsirExprs.score(toks(corpus, textCol), table), lit(0.0)))
   }
 
   // ---- CCNet-style perplexity filtering ----------------------------------
@@ -682,7 +677,6 @@ object Prep {
                              smoothing: Double = 1.0): DataFrame = {
     require(buckets >= 2 && buckets <= (1 << 22),
       s"buckets must be in [2, 2^22], got $buckets")
-    graft.plans.DsirExprs.register(corpus.sparkSession)
     val a = smoothing
     val lmTokAll = lm.select(toks(lm, textCol).as("tk"))
     val lmTok = lmTokAll.filter(size(col("tk")) >= 2)
@@ -722,8 +716,7 @@ object Prep {
     corpus
       .withColumn("n_bigrams", greatest(size(tk) - 1, lit(0)).cast("long"))
       .withColumn("nll_nats",
-        call_function("graft_dsir_score", headsArr, lit(headTable)) +
-          call_function("graft_dsir_score", bigArr, lit(bigTableNeg)))
+        DsirExprs.score(headsArr, headTable) + DsirExprs.score(bigArr, bigTableNeg))
       .withColumn("ppl_nats",
         when(col("n_bigrams") > 0, col("nll_nats") / col("n_bigrams")))
   }
@@ -777,9 +770,7 @@ object Prep {
               minLines: Int = 3): DataFrame = {
     // line filtering is one native pass per document ([[graft.plans.C4KeepLinesExpr]]);
     // the page-level poison gates stay declarative (codegen'd contains)
-    graft.plans.C4Exprs.register(df.sparkSession)
-    df.withColumn("__c4",
-        call_function("graft_c4_keep_lines", col(textCol), lit(minWordsPerLine)))
+    df.withColumn("__c4", column(C4KeepLinesExpr(expression(col(textCol)), minWordsPerLine)))
       .withColumn("kept_text", col("__c4").getField("kept_text"))
       .withColumn("n_kept_lines", col("__c4").getField("n_kept_lines"))
       .drop("__c4")
@@ -809,12 +800,11 @@ object Prep {
                     maxSymbolRatio: Double = 0.1, maxBulletFrac: Double = 0.9,
                     maxEllipsisFrac: Double = 0.3, minAlphaFrac: Double = 0.8,
                     minStopwords: Long = 2L): DataFrame = {
-    graft.plans.GopherStatsExpr.register(df.sparkSession)
     val hasWords = col("__g").getField("n_words") > 0
     def ratio(num: String) =
       when(hasWords, col("__g").getField(num).cast("double") /
         col("__g").getField("n_words"))
-    df.withColumn("__g", call_function("graft_gopher_stats", col(textCol)))
+    df.withColumn("__g", column(GopherStatsExpr(expression(col(textCol)))))
       .withColumn("n_words", col("__g").getField("n_words"))
       .withColumn("mean_word_len", ratio("word_chars"))
       .withColumn("symbol_ratio", ratio("symbols"))

@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{VectorFunctions => V}
+import graft.plans.{AnnExprs, CosineSimilarityExpr}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -30,9 +31,8 @@ object Ann {
   private[graft] def topKPerQuery(scored: DataFrame, queryIdCol: String,
                                   scoreCol: String, k: Int,
                                   neighborCol: String = "neighbor_id"): DataFrame = {
-    graft.plans.AnnExprs.register(scored.sparkSession)
     scored.groupBy(col(queryIdCol))
-      .agg(call_function("graft_topk", col(scoreCol), col(neighborCol), lit(k)).as("__tk"))
+      .agg(AnnExprs.topK(col(scoreCol), col(neighborCol), k).as("__tk"))
       .select(col(queryIdCol), posexplode(col("__tk")).as(Seq("__p", "__e")))
       .select(col(queryIdCol), col("__e.id").as(neighborCol),
         col("__e.score").as(scoreCol), (col("__p") + 1).cast("int").as("rank"))
@@ -43,11 +43,10 @@ object Ann {
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      queryIdCol: String = "query_id"): DataFrame = {
-    graft.plans.CosineSimilarityExpr.register(corpus.sparkSession)
     val q = queries.select(col(idCol).as(queryIdCol), col(vecCol).as("__qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
     val scored = c.join(broadcast(q), col(queryIdCol) =!= col("neighbor_id"))
-      .withColumn("cosine", call_function("graft_cosine", col("__qv"), col("__cv")))
+      .withColumn("cosine", CosineSimilarityExpr.cosine(col("__qv"), col("__cv")))
     topKPerQuery(scored, queryIdCol, "cosine", k)
       .select(col(queryIdCol), col("neighbor_id"), col("cosine"), col("rank"))
   }
@@ -109,10 +108,9 @@ object Ann {
       .withColumn("__qbucket", lshBucket(col("__qv"), dim, nBits, seed))
       .withColumn("__probe", explode(probes))
       .withColumn("__bucket", col("__qbucket").bitwiseXOR(col("__probe")))
-    graft.plans.CosineSimilarityExpr.register(corpus.sparkSession)
     val scored = c.join(broadcast(q), Seq("__bucket"))
       .filter(col(queryIdCol) =!= col("neighbor_id"))
-      .withColumn("cosine", call_function("graft_cosine", col("__qv"), col("__cv")))
+      .withColumn("cosine", CosineSimilarityExpr.cosine(col("__qv"), col("__cv")))
     // a pair can match in several probe buckets: BoundedTopKAgg's
     // dedup-by-id collapses those duplicates (same id ⇒ same cosine), which
     // is what the old `.distinct()` + window did with an extra exchange

@@ -2,6 +2,8 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalBridge.{column, expression}
+import graft.plans.{CosineSimilarityExpr, NearestCellsExpr, VecSumAgg}
 
 /** IVF-flat approximate nearest neighbor: partition the corpus into nlist
   * Voronoi cells around centroid vectors; queries probe only the nprobe
@@ -40,7 +42,6 @@ object Ivf {
       .select(monotonically_increasing_id().as("cell"), col(vecCol).as("__centroid"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    graft.plans.AnnExprs.register(corpus.sparkSession)
     for (_ <- 0 until lloydIters) {
       val members = assignCells(corpus, centroids, 1, idCol, vecCol)
       // element-wise mean via a bounded-state vector-sum aggregate: each
@@ -49,7 +50,7 @@ object Ivf {
       // corpus×dim individual element rows per round
       val means = members
         .groupBy(col("cell"))
-        .agg(call_function("graft_vec_sum", col(vecCol)).as("__sum"),
+        .agg(column(VecSumAgg(expression(col(vecCol))).toAggregateExpression()).as("__sum"),
           count(col(vecCol)).as("__n"))
         .select(col("cell"),
           transform(col("__sum"), x => (x / col("__n")).cast("float")).as("__newc"))
@@ -96,9 +97,8 @@ object Ivf {
       System.arraycopy(local(j)._2, 0, flat, j * dim, dim)
       j += 1
     }
-    graft.plans.AnnExprs.register(df.sparkSession)
-    df.withColumn("cell", explode(call_function("graft_nearest_cells",
-      col(vecCol), typedlit(cellIds), typedlit(flat), lit(dim), lit(p))))
+    df.withColumn("cell",
+      explode(column(NearestCellsExpr(expression(col(vecCol)), cellIds, flat, dim, p))))
   }
 
   /** Search: probe the nprobe closest cells per query, exact cosine within.
@@ -109,7 +109,6 @@ object Ivf {
              k: Int, nprobe: Int = 4,
              idCol: String = "vec_id", vecCol: String = "embedding",
              queryIdCol: String = "query_id"): DataFrame = {
-    graft.plans.CosineSimilarityExpr.register(assigned.sparkSession)
     val q = assignCells(
         queries.select(col(idCol).as(queryIdCol), col(vecCol).as("__qv")),
         centroids, nprobe, queryIdCol, "__qv")
@@ -117,7 +116,7 @@ object Ivf {
     val c = assigned.select(col("cell"), col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
     val scored = c.join(broadcast(q), Seq("cell"))
       .filter(col(queryIdCol) =!= col("neighbor_id"))
-      .withColumn("cosine", call_function("graft_cosine", col("__qv"), col("__cv")))
+      .withColumn("cosine", CosineSimilarityExpr.cosine(col("__qv"), col("__cv")))
     Ann.topKPerQuery(scored, queryIdCol, "cosine", k)
   }
 }

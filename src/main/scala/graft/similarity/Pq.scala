@@ -2,6 +2,8 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalBridge.{column, expression}
+import graft.plans.{CosineSimilarityExpr, PqEncodeExpr, PqExprs}
 
 /** Product-quantization ANN (PQ / IVF-PQ): the memory side of the 100 TB
   * scale path. IVF ([[Ivf]]) bounds how much of the corpus a query scans;
@@ -87,9 +89,8 @@ object Pq {
     * the codebook travels inside the plan. */
   def encode(df: DataFrame, codebook: Array[Float], m: Int, ksub: Int,
              vecCol: String = "embedding"): DataFrame = {
-    graft.plans.PqExprs.register(df.sparkSession)
     df.withColumn("pq_codes",
-      call_function("graft_pq_encode", unit(col(vecCol)), typedlit(codebook), lit(m), lit(ksub)))
+      column(PqEncodeExpr(expression(unit(col(vecCol))), codebook, m, ksub)))
   }
 
   /** ADC top-k: queries carry their lookup tables (broadcast), the encoded
@@ -101,13 +102,11 @@ object Pq {
                 k: Int, m: Int = 8, ksub: Int = 16, rescore: Int = 0,
                 idCol: String = "vec_id", vecCol: String = "embedding",
                 queryIdCol: String = "query_id"): DataFrame = {
-    graft.plans.PqExprs.register(encoded.sparkSession)
     val q = queries.select(col(idCol).as(queryIdCol),
-      call_function("graft_pq_lut", unit(col(vecCol)), typedlit(codebook), lit(m), lit(ksub))
-        .as("__lut"))
+      PqExprs.lut(unit(col(vecCol)), codebook, m, ksub).as("__lut"))
     val c = encoded.select(col(idCol).as("neighbor_id"), col("pq_codes"))
     val scored = c.join(broadcast(q), col(queryIdCol) =!= col("neighbor_id"))
-      .withColumn("adc", call_function("graft_pq_adc", col("pq_codes"), col("__lut"), lit(ksub)))
+      .withColumn("adc", PqExprs.adc(col("pq_codes"), col("__lut"), ksub))
     // bounded-state top-k (Ann.topKPerQuery): partitions reduce to ≤ pool
     // entries per query before the exchange — the ADC-scored corpus never
     // funnels through one task per query
@@ -125,12 +124,11 @@ object Pq {
   private def rescoreExact(top: DataFrame, source: DataFrame, queries: DataFrame,
                            k: Int, idCol: String, vecCol: String,
                            queryIdCol: String): DataFrame = {
-    graft.plans.CosineSimilarityExpr.register(source.sparkSession)
     val origs = source.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
     val qv = queries.select(col(idCol).as(queryIdCol), col(vecCol).as("__qv"))
     val rescored = top.join(origs, "neighbor_id")
       .join(broadcast(qv), queryIdCol)
-      .withColumn("cosine", call_function("graft_cosine", col("__qv"), col("__cv")))
+      .withColumn("cosine", CosineSimilarityExpr.cosine(col("__qv"), col("__cv")))
     Ann.topKPerQuery(rescored, queryIdCol, "cosine", k)
       .select(col(queryIdCol), col("neighbor_id"), col("cosine"), col("rank"))
   }
@@ -144,17 +142,15 @@ object Pq {
                   m: Int = 8, ksub: Int = 16, nprobe: Int = 4, rescore: Int = 0,
                   idCol: String = "vec_id", vecCol: String = "embedding",
                   queryIdCol: String = "query_id"): DataFrame = {
-    graft.plans.PqExprs.register(assignedEncoded.sparkSession)
     val q0 = Ivf.assignCells(
       queries.select(col(idCol).as(queryIdCol), col(vecCol).as("__qv")),
       centroids, nprobe, queryIdCol, "__qv")
     val q = q0.select(col(queryIdCol), col("cell"),
-      call_function("graft_pq_lut", unit(col("__qv")), typedlit(codebook), lit(m), lit(ksub))
-        .as("__lut"))
+      PqExprs.lut(unit(col("__qv")), codebook, m, ksub).as("__lut"))
     val c = assignedEncoded.select(col("cell"), col(idCol).as("neighbor_id"), col("pq_codes"))
     val scored = c.join(broadcast(q), Seq("cell"))
       .filter(col(queryIdCol) =!= col("neighbor_id"))
-      .withColumn("adc", call_function("graft_pq_adc", col("pq_codes"), col("__lut"), lit(ksub)))
+      .withColumn("adc", PqExprs.adc(col("pq_codes"), col("__lut"), ksub))
     // BoundedTopKAgg dedups by neighbor id, covering the multi-cell
     // duplicate case the old `.distinct()` handled with an extra exchange
     val top = Ann.topKPerQuery(scored, queryIdCol, "adc", math.max(k, rescore))

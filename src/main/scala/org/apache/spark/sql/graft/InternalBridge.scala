@@ -24,10 +24,11 @@ object InternalBridge {
   }
 
   /** Wrap a raw Catalyst Expression as a user-facing Column (the
-    * `private[sql]` classic-module converter). Needed by expressions whose
-    * "arguments" are not Columns — [[graft.plans.RangeBucketExpr]] carries a
-    * typed bound TABLE that has no lit() encoding, so it cannot ride the
-    * function-registry path the other graft kernels use. */
+    * `private[sql]` classic-module converter). Every library builder of a
+    * native kernel (`graft.plans`) goes through here: typed arguments —
+    * codebooks, Bloom bytes, bound tables, `k` — go straight into the
+    * expression's constructor, and the Column resolves on any session
+    * without a function-registry entry. */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 

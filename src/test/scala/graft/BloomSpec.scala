@@ -15,10 +15,6 @@ import graft.plans.BloomExprs
 class BloomSpec extends SparkSpec {
   import spark.implicits._
 
-  // mightContain builds an unresolved function call; the registry entry is
-  // what binds it (Prep/Dedup composites register it themselves)
-  BloomExprs.register(spark)
-
   private def filterOf(keys: Seq[Long], fpp: Double = 0.01): Array[Byte] = {
     val f = BloomFilter.create(math.max(keys.size.toLong, 64L), fpp)
     keys.foreach(f.putLong)
@@ -58,11 +54,10 @@ class BloomSpec extends SparkSpec {
   }
 
   test("SQL registration path matches the Column path") {
-    BloomExprs.register(spark)
     val bytes = filterOf(Seq(10L, 20L))
-    val df = Seq(10L, 30L).toDF("k")
+    val df = extSpark.range(10L, 40L, 20L).toDF("k")
     df.createOrReplaceTempView("bloom_keys")
-    val viaSql = spark.sql(
+    val viaSql = extSpark.sql(
       s"SELECT graft_bloom_might_contain(k, X'${bytes.map("%02x".format(_)).mkString}') AS hit " +
         "FROM bloom_keys ORDER BY k").collect().map(_.getBoolean(0)).toSeq
     assert(viaSql == Seq(true, false))

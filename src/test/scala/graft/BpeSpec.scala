@@ -45,7 +45,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("expression encode == reference encoder on random words") {
-    graft.plans.BpeExprs.register(spark)
     val merges = B.train(sf("documents"), "text", numMerges = 150, sampleN = 100,
       idCol = "doc_id")
     val rank = merges.zipWithIndex.toMap
@@ -66,7 +65,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("non-BMP characters stay whole code points through the expression") {
-    graft.plans.BpeExprs.register(spark)
     val pizza = new String(Character.toChars(0x1F355)) // surrogate pair
     val word = s"a${pizza}b"
     val got = Seq((1L, word)).toDF("id", "text")
@@ -100,7 +98,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("BPE encode lifts to Structured Streaming unchanged (stateless narrow map)") {
-    graft.plans.BpeExprs.register(spark)
     import org.apache.spark.sql.types._
     val merges = B.trainCorpus(sf("documents"), "text", numMerges = 60)
     val base = java.nio.file.Files.createTempDirectory("bpe_stream").toString
@@ -205,7 +202,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("more merges never increase the sub-token count (compression monotone)") {
-    graft.plans.BpeExprs.register(spark)
     val docs = sf("documents").limit(50)
     val m50 = B.train(docs, "text", numMerges = 50, sampleN = 50, idCol = "doc_id")
     val m200 = B.train(docs, "text", numMerges = 200, sampleN = 50, idCol = "doc_id")

@@ -53,7 +53,7 @@ class CorpusCleanSpec extends SparkSpec {
   }
 
   test("SpanHashPairsExpr: ceil(n/k) ragged windows, content-keyed, two independent hashes") {
-    graft.plans.SketchExprs.register(spark)
+    val ext = extSpark; import ext.implicits._
     def pairs(tokens: Seq[String], k: Int): Seq[(Long, Long)] =
       Seq(Tuple1(tokens)).toDF("t")
         .select(call_function("graft_span_hash_pairs", col("t"), lit(k)).as("hp"))
@@ -155,9 +155,9 @@ class CorpusCleanSpec extends SparkSpec {
   // ---------------------------------------------------- compression ratio
 
   test("deflate ratio matches java.util.zip exactly and ranks repetition < prose < noise") {
-    graft.plans.DeflateRatioExpr.register(spark)
     val rep = "spam " * 500
     val prose = sf("documents").select("text").as[String].head()
+    val ext = extSpark; import ext.implicits._
     val noise = {
       val rnd = new scala.util.Random(42)
       (1 to 2000).map(_ => (rnd.nextInt(94) + 33).toChar).mkString
@@ -176,7 +176,6 @@ class CorpusCleanSpec extends SparkSpec {
   }
 
   test("compression-ratio gate lifts to Structured Streaming unchanged (stateless)") {
-    graft.plans.DeflateRatioExpr.register(spark)
     import org.apache.spark.sql.types._
     val T = graft.functions.TextFunctions
     val base = java.nio.file.Files.createTempDirectory("compress_stream").toString
@@ -197,7 +196,7 @@ class CorpusCleanSpec extends SparkSpec {
   }
 
   test("deflate ratio null semantics: null and empty text yield null") {
-    graft.plans.DeflateRatioExpr.register(spark)
+    val ext = extSpark; import ext.implicits._
     val df = Seq((1L, ""), (2L, null.asInstanceOf[String]))
       .toDF("id", "text")
       .select(call_function("graft_deflate_ratio", col("text")).as("r"))

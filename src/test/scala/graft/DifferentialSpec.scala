@@ -1013,7 +1013,6 @@ class DifferentialSpec extends SparkSpec {
     // that forced strip-before-normalize), ligatures, fullwidth forms, CJK,
     // marks with no base character, bare controls. DuckDB's nfc_normalize is
     // an independent Unicode implementation, not a mirror of the JDK's.
-    graft.plans.UnicodeExprs.register(spark)
     val r = new scala.util.Random(20260813)
     val pool = Seq("a", "b", "Z", "1", " ", "\t", "\n", "\r",
       "\u0301", "\u0308", "\u00e9", "e", "\u00c5", "A", "\u030a",
@@ -1950,7 +1949,6 @@ class DifferentialSpec extends SparkSpec {
     try st0.execute(
       s"CREATE VIEW IF NOT EXISTS documents AS SELECT * FROM '$sfDir/documents.parquet'")
     finally st0.close()
-    graft.plans.AnnExprs.register(spark)
     val docs = sf("documents")
     val P = graft.prep.Prep.P; val M = graft.prep.Prep.Mult
     for (seed <- 4500 until 4530) {

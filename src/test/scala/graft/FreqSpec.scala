@@ -8,8 +8,6 @@ import graft.functions.{TextFunctions => T}
 class FreqSpec extends SparkSpec {
   import spark.implicits._
 
-  graft.plans.FreqExprs.register(spark)
-
   /** (token, est) entries of the sketch over `rows` at `parts` partitions. */
   private def sketch(rows: Seq[Seq[String]], k: Int, parts: Int): Map[String, Long] =
     rows.toDF("toks").repartition(parts)
@@ -84,8 +82,7 @@ class FreqSpec extends SparkSpec {
   }
 
   test("typed k: integral widths accepted, bad k a clean ANALYSIS error (ADVICE r13)") {
-    graft.plans.FreqExprs.register(spark)
-    val df = Seq(Seq("a", "a", "b")).toDF("toks")
+    val df = extSpark.createDataFrame(Seq(Tuple1(Seq("a", "a", "b")))).toDF("toks")
     // a long-literal k (the natural Scala spelling) and an int k agree
     val viaLong = df.select(expr("graft_topfreq(toks, 4L)")).collect()
     val viaInt = df.select(expr("graft_topfreq(toks, 4)")).collect()

@@ -83,7 +83,6 @@ class InterpretedModeSpec extends SparkSpec {
     val interp = spark.newSession()
     interp.conf.set("spark.sql.codegen.wholeStage", "false")
     interp.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    graft.plans.CosineSimilarityExpr.register(interp)
     interp
   }
 

@@ -45,11 +45,10 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("graft_bucketize: binary search == brute force; quantizedRank near-uniform on skew") {
-    graft.plans.LayoutExprs.register(spark)
     val bounds = Seq(1.0, 3.0, 3.0, 7.5, 100.0)
     val vals = Seq(0.5, 1.0, 2.9, 3.0, 5.0, 7.5, 99.9, 100.0, 250.0, -1e18)
     val got = vals.toDF("v")
-      .select(call_function("graft_bucketize", col("v"), typedLit(bounds)).as("b"))
+      .select(graft.plans.LayoutExprs.bucketize(col("v"), bounds.toArray).as("b"))
       .as[Int].collect()
     val expect = vals.map(v => bounds.count(_ <= v))
     assert(got.toSeq == expect, s"${got.toSeq} vs $expect")

@@ -89,7 +89,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("sorted-merge intersection: exact size for passers, -1 only for provable failures") {
-    graft.plans.SketchExprs.register(spark)
     val rnd = new scala.util.Random(7)
     val cases = (0 until 200).map { _ =>
       val a = Seq.fill(rnd.nextInt(30))(rnd.nextInt(40).toLong).distinct.sorted
@@ -98,8 +97,8 @@ class PipelineSpec extends SparkSpec {
     } :+ ((Seq.empty[Long], Seq(1L, 2L))) :+ ((Seq(1L, 2L, 3L), Seq(1L, 2L, 3L)))
     for (t <- Seq(0.3, 0.5, 0.8, 1.0)) {
       val df0 = cases.toDF("a", "b")
-      val got = df0.select(call_function("graft_sorted_inter_size",
-        col("a"), col("b"), lit(t)).as("i")).collect().map(_.getInt(0))
+      val got = df0.select(graft.plans.SketchExprs.sortedInterSize(col("a"), col("b"), t).as("i"))
+        .collect().map(_.getInt(0))
       cases.zip(got).foreach { case ((a, b), g) =>
         val inter = a.toSet.intersect(b.toSet).size
         val na = a.size; val nb = b.size
@@ -115,7 +114,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("native graft_shingles == HOF shingles (randomized, incl. short docs)") {
-    graft.plans.SketchExprs.register(spark)
+    val ext = extSpark; import ext.implicits._
     val rnd = new scala.util.Random(7)
     val words = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "x", "yy")
     val texts = (0 until 60).map { i =>
@@ -134,7 +133,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("graft_shingle_hashes == xxhash64 of string shingles; fused minhash identical") {
-    graft.plans.SketchExprs.register(spark)
+    val ext = extSpark; import ext.implicits._
     val rnd = new scala.util.Random(11)
     val words = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta")
     val texts = (0 until 40).map { _ =>
@@ -157,7 +156,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("repetition signals: dup-line fractions, top-ngram share, gopher gate") {
-    graft.plans.SketchExprs.register(spark)
     val T = graft.functions.TextFunctions
     val docs = Seq(
       // 4 lines, "dup dup" twice: dup_line_frac=1/4, dup chars 14/(7+7+7+5)
@@ -184,7 +182,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("dup-ngram char fractions: hand-computed, codepoint counting, edges") {
-    graft.plans.SketchExprs.register(spark)
     val cases = Seq(
       // "a b","b a","a b","b c" -> "a b" x2 of 4 grams, all len 3: 6/12
       (1L, "a b a b c"),
@@ -211,7 +208,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("dup-ngram profile: native == HOF formulation on randomized docs") {
-    graft.plans.SketchExprs.register(spark)
     val rnd = new scala.util.Random(4242)
     val vocab = Vector("aa", "bb", "cc", "dd", "ee", "ff", "longword", "x")
     val docsR = (0 until 40).map { i =>
@@ -232,7 +228,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("gopher repetition gate: full §A1.2 verdict") {
-    graft.plans.SketchExprs.register(spark)
     val phrase = "one two three four five six seven eight nine ten"
     val clean = (1 to 40).map(i => s"w$i").mkString(" ") // all-distinct tokens
     val docsG = Seq(
@@ -307,10 +302,11 @@ class PipelineSpec extends SparkSpec {
     "q78_interval_join_outer", "q79_interval_join_full",
     "q82_interval_join_right", "q83_interval_join_full_sink",
     "qd03_ngram_jaccard", "qd10_dedup_components", "qd16_jaccard_prefix",
-    "qd18_decontaminate", "qd28_span_dedup", "qd34_decontaminate_bloom",
-    "qd36_dsir_weights", "qd37_dsir_select", "qd39_perplexity",
+    "qd18_decontaminate", "qd22_mixture", "qd23_pack_global", "qd28_span_dedup",
+    "qd34_decontaminate_bloom", "qd36_dsir_weights", "qd37_dsir_select", "qd39_perplexity",
     "qd41_pipeline_quality_select", "qd41h_pipeline_quality_select_hashed",
-    "qd43_html_extract", "qd53_leakage_safe_split")
+    "qd42_temperature_mixture", "qd43_html_extract", "qd47_pack_spans",
+    "qd53_leakage_safe_split")
 
   test("faces sharing a run or oracle fragment match DuckDB exactly at sf0.001") {
     val bad = oracleMismatches(parityFaces)
@@ -386,7 +382,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("blocklist: Aho-Corasick pass == per-phrase contains (randomized, nested)") {
-    graft.plans.BlocklistHitsExpr.register(spark)
     // nested and overlapping phrases stress the suffix output links; "kq"
     // plus the Kelvin/İ frags pin the lower()-parity fold (U+212A -> k,
     // U+0130 -> i + combining dot)
@@ -411,13 +406,12 @@ class PipelineSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
     assert(native === declared)
     // golden: "abcd" contains ab, abc, bc, c -> 4 distinct phrases
-    val g = df.sparkSession.sql("SELECT graft_blocklist_hits('abcd', array('ab','abc','bc','c','bad phrase','phrase one','xyz')) AS h")
+    val g = extSpark.sql("SELECT graft_blocklist_hits('abcd', array('ab','abc','bc','c','bad phrase','phrase one','xyz')) AS h")
       .head().getInt(0)
     assert(g == 4)
   }
 
   test("dup-paragraph signals: blank-line blocks, inner newlines fold to spaces") {
-    graft.plans.SketchExprs.register(spark)
     val got = Seq(
       // para A repeated (with DIFFERENT inner line structure - must still
       // match after the fold), one unique para: 2 of 3 paras dup
@@ -465,7 +459,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("gopher stats: native one-pass == declarative formulation (randomized)") {
-    graft.plans.GopherStatsExpr.register(spark)
+    val ext = extSpark; import ext.implicits._
     val rnd = new scala.util.Random(44)
     val frags = Array("the", "be", "to", "of", "and", "that", "have", "with",
       "word", "xx", "#", "...", "…", "•", "- ", "a.", "ok...", "line…", "\t",
@@ -532,7 +526,6 @@ class PipelineSpec extends SparkSpec {
     // Structured Streaming unchanged: project/filter stages stay stateless,
     // only the dedup needs watermarked state
     import org.apache.spark.sql.types._
-    graft.plans.SketchExprs.register(spark)
     val T = graft.functions.TextFunctions
     val base = java.nio.file.Files.createTempDirectory("prep_stream").toString
     val mkTs = (m: Int) => java.sql.Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
@@ -604,7 +597,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("langId picks the dominant stopword language deterministically") {
-    graft.plans.SketchExprs.register(spark)
     val df = Seq(
       "the cat sat on the mat and it was happy",
       "der hund ist nicht auf der couch und das ist gut",
@@ -614,7 +606,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("native dup-line stats == HOF (randomized multiline docs, empty/dup-heavy)") {
-    graft.plans.SketchExprs.register(spark)
     val rnd = new scala.util.Random(31)
     val linePool = Seq("header nav", "footer", "unique " , "a", "", "long boilerplate line here")
     val texts = (0 until 120).map { i =>
@@ -629,7 +620,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("native langId == HOF langId (randomized, incl. ties and shared stopwords)") {
-    graft.plans.SketchExprs.register(spark)
     val rnd = new scala.util.Random(23)
     // pool mixes all dictionaries (incl. es/fr-shared "que", es "de") plus
     // noise and case/whitespace variation; ties exercise first-max order
@@ -663,7 +653,9 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("cosine: HOF vs native codegen expression agree bit-exactly") {
-    val e = sf("embeddings")
+    // graft_cosine is reached by name: the frame lives on the extensions session
+    val emb = sf("embeddings")
+    val e = extSpark.createDataFrame(java.util.Arrays.asList(emb.collect(): _*), emb.schema)
     val pairs = e.alias("a").join(e.alias("b"),
         col("a.vec_id") + 100 === col("b.vec_id"))
       .select(V.cosine(col("a.embedding"), col("b.embedding")).as("hof"),

@@ -283,6 +283,47 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("native-kernel builders resolve and evaluate on a fresh session with nothing registered") {
+    import graft.api.syntax._
+    val T = graft.functions.TextFunctions
+    // a new session's function registry holds no earlier suite's temp functions
+    val fresh = spark.newSession()
+    val df = fresh.createDataFrame(Seq((1L, "the cat and the dog\nthe cat and the dog", "12",
+        java.sql.Timestamp.valueOf("2024-06-15 12:00:00"))))
+      .toDF("id", "text", "n", "ts")
+    val bloom = org.apache.spark.util.sketch.BloomFilter.create(64L, 0.01)
+    bloom.putLong(1L)
+    val rank = graft.operators.Layout.quantizedRank(df, Seq("id"), bits = 2).head
+    val r = df.select(
+      T.langId(col("text")),
+      T.compressionRatio(col("text")),
+      T.normalizeUnicode(lit("café")),
+      T.dupLineFraction(col("text")),
+      T.topNgramShare(col("text"), 2),
+      T.dupNgramProfile(col("text"), 2, 3).getField("dup2_frac"),
+      T.blocklistHits(col("text"), Seq("cat", "fish")),
+      graft.functions.Bpe.tokenCount(col("text"), Seq(("t", "h"), ("th", "e"))),
+      col("n").castStrict("int"),
+      col("ts").dt.replaceTimeZone("Europe/Berlin"),
+      graft.plans.BloomExprs.mightContain(col("id"), graft.plans.BloomExprs.serialize(bloom)),
+      rank).head()
+    assert(r.getString(0) == "en")
+    assert(r.getDouble(1) > 0.0)
+    assert(r.getString(2) == "café")
+    assert(r.getDouble(3) == 0.5)
+    assert(r.getDouble(4) == 2.0 / 9)
+    assert(r.getDouble(5) > 0.0)
+    assert(r.getInt(6) == 1)
+    assert(r.getInt(7) > 0)
+    assert(r.getInt(8) == 12)
+    assert(!r.isNullAt(9))
+    assert(r.getBoolean(10))
+    assert(r.getInt(11) >= 0 && r.getInt(11) < 4)
+    val top = df.agg(T.heavyHitters(T.tokens(col("text")), 2).as("hh"))
+      .select(col("hh")(0).getField("item")).head().getString(0)
+    assert(top == "the")
+  }
+
   test("hash split/sample is shuffle-free (narrow map over the scan)") {
     val P = graft.prep.Prep
     val df = SparkEntry.t(spark, "/root/testdata/sf0.001", "documents")
@@ -292,7 +333,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("dup-ngram profile is a narrow map: zero exchange, no window, no join") {
-    graft.plans.SketchExprs.register(spark)
     val T = graft.functions.TextFunctions
     val df = SparkEntry.t(spark, "/root/testdata/sf0.001", "documents")
       .withColumn("p", T.dupNgramProfile(col("text"), 5, 10))

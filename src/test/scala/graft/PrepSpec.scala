@@ -55,7 +55,6 @@ class PrepSpec extends SparkSpec {
   }
 
   test("stratifiedSampleKeys/Exact: exact k per stratum, brute-force ranks, partition-invariant, no window") {
-    graft.plans.AnnExprs.register(spark)
     val got = Prep.stratifiedSampleKeys(docs, "doc_id", "lang", k = 25, salt = 7L)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     // exact k per stratum (both strata have >= 25 rows: en 80, zh 320)
@@ -89,7 +88,6 @@ class PrepSpec extends SparkSpec {
   }
 
   test("weightedSampleKeys: brute-force A-Res ranks, weight monotonicity, domain exclusions") {
-    graft.plans.AnnExprs.register(spark)
     val data = (0L until 300L).map { i =>
       val w: Option[Double] =
         if (i % 37 == 0) None                      // null weight

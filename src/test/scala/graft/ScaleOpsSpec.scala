@@ -141,7 +141,6 @@ class ScaleOpsSpec extends SparkSpec {
     // distinct scores (forced ties), null scores, and multi-emitted pairs
     // (the multi-probe/multi-cell duplication ANN paths produce).
     import org.apache.spark.sql.expressions.Window
-    graft.plans.AnnExprs.register(spark)
     for (seed <- 0 until 15) {
       val rnd = new scala.util.Random(seed)
       val k = 1 + rnd.nextInt(7)
@@ -177,10 +176,9 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("graft_topk duplicate ids with DIFFERING scores keep the better-ranked entry") {
     // the ANN paths only ever duplicate a (query, id) pair with an identical
-    // score, but graft_topk is registered session-wide — a SQL caller can
-    // feed one id several scores. The buffer must keep the best (score, id)
-    // per id regardless of partition/merge arrival order.
-    graft.plans.AnnExprs.register(spark)
+    // score, but graft_topk is callable from SQL — a SQL caller can feed
+    // one id several scores. The buffer must keep the best (score, id) per
+    // id regardless of partition/merge arrival order.
     val rows = Seq(
       (1L, 10L, Some(0.2)), (1L, 10L, Some(0.9)), (1L, 10L, Some(0.5)),
       (1L, 20L, Some(0.7)), (1L, 30L, None), (1L, 30L, Some(0.1)),
@@ -205,6 +203,7 @@ class ScaleOpsSpec extends SparkSpec {
     // NULL embedding columns (same null-cosine ranking — the expression must
     // assign the lowest p cells, not return null and vanish from the index).
     import org.apache.spark.sql.expressions.Window
+    val ext = extSpark; import ext.implicits._ // the reference reaches graft_cosine by name
     for (seed <- 0 until 8) {
       val rnd = new scala.util.Random(seed)
       val dim = 8
@@ -238,7 +237,7 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("graft_vec_sum: bounded-state element-wise sum == posexplode mean formulation") {
-    graft.plans.AnnExprs.register(spark)
+    val ext = extSpark; import ext.implicits._
     val rnd = new scala.util.Random(5)
     val rows = (0 until 300).map(i =>
       (i % 7, Array.fill(16)(rnd.nextFloat())))

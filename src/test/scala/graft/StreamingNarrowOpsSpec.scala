@@ -13,26 +13,23 @@ import graft.functions.{TextFunctions => T}
 class StreamingNarrowOpsSpec extends SparkSpec {
   import spark.implicits._
 
-  graft.plans.BloomExprs.register(spark)
-  graft.plans.DsirExprs.register(spark)
-  graft.plans.UnicodeExprs.register(spark)
-
   private val rows = Seq(
     (1L, "the cat sat"),
     (2L, "café bar bar"),
     (3L, "zzqq zz"),
     (4L, ""))
 
-  private def streamed(name: String)(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
+  private def streamed(name: String, session: org.apache.spark.sql.SparkSession = spark)(
+      f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
+    implicit val sqlCtx = session.sqlContext
     val in = MemoryStream[(Long, String)]
     val q = f(in.toDF.toDF("doc_id", "text"))
       .writeStream.outputMode("append").format("memory").queryName(name).start()
     try {
       in.addData(rows: _*)
       q.processAllAvailable()
-      spark.table(name).orderBy("doc_id").collect().toSeq
+      session.table(name).orderBy("doc_id").collect().toSeq
     } finally q.stop()
   }
 
@@ -67,8 +64,10 @@ class StreamingNarrowOpsSpec extends SparkSpec {
     def pipe(df: org.apache.spark.sql.DataFrame) =
       df.select(col("doc_id"),
         call_function("graft_dsir_score", T.tokens(col("text")), lit(table)).as("w"))
-    val got = streamed("graft_stream_dsir")(pipe)
-    val want = pipe(rows.toDF("doc_id", "text")).orderBy("doc_id").collect().toSeq
+    // graft_dsir_score is reached by its SQL name: run on the extensions session
+    val got = streamed("graft_stream_dsir", extSpark)(pipe)
+    val want = pipe(extSpark.createDataFrame(rows).toDF("doc_id", "text"))
+      .orderBy("doc_id").collect().toSeq
     assert(got.map(_.toString) == want.map(_.toString))
   }
 

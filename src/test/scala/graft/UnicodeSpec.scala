@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => T}
-import graft.plans.UnicodeExprs
 
 /** Unicode normalization ([[graft.plans.NormalizeUnicodeExpr]]) and the
   * cleanup composite [[graft.functions.TextFunctions.cleanText]]. All
@@ -11,8 +10,6 @@ import graft.plans.UnicodeExprs
   * silently re-normalized by tooling. */
 class UnicodeSpec extends SparkSpec {
   import spark.implicits._
-
-  UnicodeExprs.register(spark)
 
   private val Decomposed = "cafe\u0301" // 'e' + COMBINING ACUTE
   private val Composed = "caf\u00e9" // LATIN SMALL E WITH ACUTE
