@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graft.InternalBridge
 import org.apache.spark.sql.types.DataType
 
 /** SparkSessionExtensions packaging for the library's native expressions.
@@ -44,6 +45,12 @@ import org.apache.spark.sql.types.DataType
   *  - `graft_c4_keep_lines(text, minWords)` — C4 line filter, one pass
   *  - `graft_gopher_stats(text)` — Gopher quality statistics, one pass
   *  - `graft_blocklist_hits(text, phrases)` — Aho–Corasick blocklist gate
+  *
+  * It also sizes Spark's generated-class cache for the engine
+  * ([[GraftExtensions.CodegenCacheEntries]]) unless the user set
+  * `spark.sql.codegen.cache.maxEntries`. That takes effect only when these
+  * extensions are installed at the JVM's first session, before any query
+  * has compiled: the cache is built once, at the first compile.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -51,6 +58,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    InternalBridge.sizeCodegenCache(GraftExtensions.CodegenCacheEntries)
+
     ext.injectFunction((FunctionIdentifier("graft_cosine"),
       info("graft_cosine", "graft_cosine(a, b) - cosine similarity of two numeric arrays"),
       (exprs: Seq[Expression]) => plans.CosineSimilarityExpr(exprs(0), exprs(1))))
@@ -179,4 +188,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[Expression]) =>
         plans.BlocklistHitsExpr(exprs(0), plans.BlocklistHitsExpr.strings(exprs(1)))))
   }
+}
+
+object GraftExtensions {
+
+  /** Entries in Spark's generated-class cache (Spark's default is 100).
+    * The cache is keyed on (context class loader, source), and in local
+    * mode a stage compiles under two loaders (the driver's validation
+    * compile and the task's), so each stage holds about two entries. At
+    * 100, a repeated `perfbench` `corpus_pipeline` job missed on nearly
+    * every lookup and recompiled ~207 classes. A whole recorded run leaves
+    * 330 entries (368 for `frame_queries`), so 1,024 holds about three. */
+  val CodegenCacheEntries = 1024
 }

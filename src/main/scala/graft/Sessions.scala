@@ -1,12 +1,19 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.InternalBridge
 
 /** Shared SparkSession construction for the driver entry points (Verify,
   * Bench) and tests — one place for the configs every run needs. */
 object Sessions {
   def local(cpus: String): SparkSession = {
+    // the engine's codegen cache size (GraftExtensions.CodegenCacheEntries)
+    // unless a spark.* system property already names one
+    val conf = new SparkConf()
+    InternalBridge.sizeCodegenCache(conf, GraftExtensions.CodegenCacheEntries)
     val spark = SparkSession.builder()
+      .config(conf)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

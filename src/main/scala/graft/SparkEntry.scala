@@ -2080,19 +2080,15 @@ object SparkEntry {
     "qs03_ann_ivf" -> ((s, d) => {
       val e = t(s, d, "embeddings")
       val q = e.filter(col("vec_id") < 10)
-      // the index (centroids + cell-partitioned corpus) is a caller-owned
-      // handle; the recall row is bounded, so it localizes and releases the
-      // index before returning
+      // the cell-partitioned corpus is a caller-owned handle; the recall row
+      // is bounded, so it localizes and releases the index before returning
       val (centroids, assigned) = graft.similarity.Ivf.buildIndex(e, nlist = 16)
       try
         localize(s, annRecallRow(
           graft.similarity.Ivf.search(assigned, centroids, q, k = 5, nprobe = 4),
           graft.similarity.Ann.bruteForceTopK(e, q, k = 5),
           k = 5, minMeanRecall = 0.4))
-      finally {
-        assigned.unpersist(blocking = true)
-        centroids.unpersist(blocking = true)
-      }
+      finally assigned.unpersist(blocking = true)
     }),
 
     // product-quantization ANN: train codebook on a bounded sample, encode

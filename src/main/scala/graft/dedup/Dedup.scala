@@ -449,16 +449,15 @@ object Dedup {
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
                     nlist: Int, threshold: Double, lloydIters: Int = 2,
                     seed: Long = 42L): DataFrame = {
-    val (centroids, assigned) = graft.similarity.Ivf.buildIndex(
+    val (_, assigned) = graft.similarity.Ivf.buildIndex(
       df.select(col(idCol), col(vecCol)), nlist, seed, idCol, vecCol, lloydIters)
-    // release the index handles BEFORE building the result plan: the trained
+    // release the index handle BEFORE building the result plan: the trained
     // centroid table already rode into `assigned`'s lineage as a plan
     // literal (assignCells collects it eagerly at build time), so the plan
     // below recomputes only the narrow assignment + cell exchange — once,
     // shared by both self-join sides via ReuseExchange — and this op leaves
     // no cache blocks behind (CacheHygieneSpec). Lloyd refinement cost was
     // already paid eagerly inside buildIndex.
-    centroids.unpersist(blocking = true)
     assigned.unpersist(blocking = true)
     val drops = embeddingCosinePairs(assigned, idCol, vecCol, "cell", threshold)
       .select(col("id_b").as(idCol)).distinct()

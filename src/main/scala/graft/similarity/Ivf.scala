@@ -31,16 +31,20 @@ object Ivf {
     * aggregation) → re-collect the nlist-row centroid table; empty cells
     * keep their previous centroid. Better-balanced cells mean fewer
     * over-full probes at search time — the classic IVF build trade: pay
-    * once at index time. */
+    * once at index time.
+    *
+    * Each centroid table (the sampled seeds, then one per round) is
+    * collected once, by one job, into a local relation: the next
+    * assignment, the next round's join and the returned `centroids` read
+    * it without another job, and nothing is persisted for it. */
   def buildIndex(corpus: DataFrame, nlist: Int, seed: Long = 42L,
                  idCol: String = "vec_id", vecCol: String = "embedding",
                  lloydIters: Int = 0): (DataFrame, DataFrame) = {
     // deterministic sample: hash-rank rows, take nlist as centroids
-    var centroids = corpus
+    var centroids = local(corpus
       .withColumn("__r", xxhash64(col(idCol), lit(seed)))
       .orderBy(col("__r")).limit(nlist)
-      .select(monotonically_increasing_id().as("cell"), col(vecCol).as("__centroid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(monotonically_increasing_id().as("cell"), col(vecCol).as("__centroid")))
 
     for (_ <- 0 until lloydIters) {
       val members = assignCells(corpus, centroids, 1, idCol, vecCol)
@@ -54,12 +58,8 @@ object Ivf {
           count(col(vecCol)).as("__n"))
         .select(col("cell"),
           transform(col("__sum"), x => (x / col("__n")).cast("float")).as("__newc"))
-      val next = centroids.join(means, Seq("cell"), "left")
-        .select(col("cell"), coalesce(col("__newc"), col("__centroid")).as("__centroid"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      next.count() // materialize before unpersisting the previous round
-      centroids.unpersist()
-      centroids = next
+      centroids = local(centroids.join(means, Seq("cell"), "left")
+        .select(col("cell"), coalesce(col("__newc"), col("__centroid")).as("__centroid")))
     }
 
     val assigned = assignCells(corpus, centroids, 1, idCol, vecCol)
@@ -67,6 +67,11 @@ object Ivf {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     (centroids, assigned)
   }
+
+  /** `df` collected into a local relation: later collects of it (and of
+    * projections of it) are driver-local and start no job. */
+  private def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** Attach each row's top-`p` nearest cells (p=1 for corpus assignment,
     * p=nprobe for queries) as a NARROW map: the nlist-row centroid table is

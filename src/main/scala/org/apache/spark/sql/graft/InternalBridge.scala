@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.internal.StaticSQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Narrow bridge into Spark's `private[sql]` surface (hence the package):
@@ -43,4 +45,16 @@ object InternalBridge {
     * back-to-back reclaim that memory immediately instead. */
   def unloadStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
+
+  /** Size Spark's generated-class cache to `entries` unless `conf` already
+    * names a size: a user's value always wins. The size is a static SQL
+    * conf, read once per JVM when the first query compiles. */
+  def sizeCodegenCache(conf: SparkConf, entries: Int): Unit =
+    conf.setIfMissing(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, entries.toString)
+
+  /** [[sizeCodegenCache]] on the active context's own conf (`private[spark]`).
+    * Called while a session is being built, before its `SQLConf` copies
+    * the context's conf. */
+  def sizeCodegenCache(entries: Int): Unit =
+    SparkContext.getActive.foreach(sc => sizeCodegenCache(sc.conf, entries))
 }
