@@ -46,11 +46,12 @@ import org.apache.spark.sql.types.DataType
   *  - `graft_gopher_stats(text)` — Gopher quality statistics, one pass
   *  - `graft_blocklist_hits(text, phrases)` — Aho–Corasick blocklist gate
   *
-  * It also sizes Spark's generated-class cache for the engine
-  * ([[GraftExtensions.CodegenCacheEntries]]) unless the user set
-  * `spark.sql.codegen.cache.maxEntries`. That takes effect only when these
-  * extensions are installed at the JVM's first session, before any query
-  * has compiled: the cache is built once, at the first compile.
+  * It also sets the engine's session defaults
+  * (`InternalBridge.engineDefaults`: the generated-class cache size and the
+  * streaming checkpoint file manager) unless the user set them. The cache
+  * size takes effect only when these extensions are installed at the JVM's
+  * first session, before any query has compiled: the cache is built once,
+  * at the first compile.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -58,7 +59,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    InternalBridge.sizeCodegenCache(GraftExtensions.CodegenCacheEntries)
+    InternalBridge.setEngineDefaults()
 
     ext.injectFunction((FunctionIdentifier("graft_cosine"),
       info("graft_cosine", "graft_cosine(a, b) - cosine similarity of two numeric arrays"),

@@ -8,10 +8,10 @@ import org.apache.spark.sql.graft.InternalBridge
   * Bench) and tests — one place for the configs every run needs. */
 object Sessions {
   def local(cpus: String): SparkSession = {
-    // the engine's codegen cache size (GraftExtensions.CodegenCacheEntries)
-    // unless a spark.* system property already names one
+    // the engine's session defaults (InternalBridge.engineDefaults) unless a
+    // spark.* system property already names them
     val conf = new SparkConf()
-    InternalBridge.sizeCodegenCache(conf, GraftExtensions.CodegenCacheEntries)
+    InternalBridge.setEngineDefaults(conf)
     val spark = SparkSession.builder()
       .config(conf)
       .master(s"local[$cpus]")

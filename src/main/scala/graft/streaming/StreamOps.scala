@@ -132,24 +132,44 @@ object StreamOps {
     * query's FIRST checkpoint and can never change afterwards, so it is a
     * genuine per-query sizing decision, not a session default: every
     * stateful operator pays per-partition-per-batch store-lifecycle costs
-    * (the stream-stream join runs FOUR store commits per partition per
-    * micro-batch — measured: the q77 drive is near-LINEAR in partition
-    * count at constant data, 8.0 s at 32 partitions vs 2.8 s at 8,
-    * BASELINE.md round-13 decomposition), while too few partitions caps
-    * state-processing parallelism at scale. Size `n` to expected state
-    * volume/throughput: high-rate production topics amortize many
-    * partitions; a low-rate stream wants few.
+    * (with the default provider a stream-stream join commits four stores
+    * per partition per micro-batch — measured: the q77 drive is
+    * near-LINEAR in partition count at constant data, 8.0 s at 32
+    * partitions vs 2.8 s at 8, BASELINE.md round-13 decomposition), while
+    * too few partitions caps state-processing parallelism at scale. Size
+    * `n` to expected state volume/throughput with [[suggestStatePartitions]]
+    * or [[sizedStatePartitionsForInput]]: high-rate production topics
+    * amortize many partitions; a low-rate stream wants few.
+    *
+    * The child keeps the default state provider: RocksDB
+    * ([[withRocksDbStateStore]], one store per join partition) cuts the
+    * per-batch commit of a small stream but made the sf0.1 interval-join
+    * faces ~1.4x slower, whose batches carry tens of thousands of rows
+    * (SCALE_CONTRACTS.md, "Streaming: per-micro-batch floor").
     *
     * The child shares the SparkContext, extensions, and catalog; only its
     * runtime SQLConf (and temp-view registry) is separate, so build the
     * `readStream` sources and start the query THROUGH the session `body`
-    * receives. Size `n` with [[suggestStatePartitions]]. */
+    * receives. */
   def withStatePartitions[A](spark: org.apache.spark.sql.SparkSession, n: Int)
                             (body: org.apache.spark.sql.SparkSession => A): A = {
     require(n > 0, s"withStatePartitions: n must be positive, got $n")
-    val child = spark.newSession()
+    val child = stateSession(spark)
     child.conf.set("spark.sql.shuffle.partitions", n.toString)
     body(child)
+  }
+
+  /** A child session of `spark` for stateful queries, without a
+    * per-session artifact class loader. Spark's codegen cache is keyed on
+    * the class loader; with isolation on, each started query (a clone of
+    * its session) runs its tasks under a new loader and compiles its
+    * generated classes again at every start (31 for the `perfbench`
+    * interval join). The flag is set before the child's first use because
+    * Spark's `ArtifactManager` reads it lazily. */
+  private def stateSession(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession = {
+    val child = spark.newSession()
+    child.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    child
   }
 
   /** Suggested state-partition count for a stateful query (r16 directive
@@ -231,8 +251,9 @@ object StreamOps {
     math.max(stateTerm, math.max(1, throughputTerm))
   }
 
-  /** Run `body` in a child session whose stateful streaming queries use the
-    * RocksDB state-store provider — the 100 TB state engine. The default
+  /** Run `body` in a stateful-query child session ([[withStatePartitions]]'s,
+    * at the parent's partition count) whose streaming queries keep state in
+    * Spark's RocksDB provider — the 100 TB state engine. The default
     * HDFSBackedStateStoreProvider keeps each partition's working state map
     * ON THE JVM HEAP (fine for watermark horizons of thousands of rows;
     * GC-fatal for the billions a high-rate stream × a long horizon holds),
@@ -240,9 +261,15 @@ object StreamOps {
     * with block-cache + WAL, checkpointed via snapshot/changelog files —
     * state volume stops being a heap-sizing problem. Semantics are
     * identical by Spark's state-store contract (RocksDbStateSpec pins
-    * stream results AND engagement). Same child-session isolation as
-    * [[withStatePartitions]]: the provider choice never leaks into the
-    * parent, and it is fixed at the query's first checkpoint.
+    * stream results AND engagement). The provider choice never leaks into
+    * the parent, and it is fixed at the query's first checkpoint.
+    *
+    * Join state format 3 keeps a stream-stream join's four states (each
+    * side's keys and values) as column families of ONE store per
+    * partition, so a partition commits once per micro-batch instead of
+    * four times. A query restarted from an older checkpoint keeps the
+    * provider and join format it was written with: Spark restores both
+    * from the offset log (StreamRestartSpec).
     *
     * `changelogCheckpointing` (r16 directive 5, DEFAULT since r17) switches
     * RocksDB's per-batch checkpoint artifact from a full SST snapshot
@@ -260,12 +287,13 @@ object StreamOps {
   def withRocksDbStateStore[A](spark: org.apache.spark.sql.SparkSession,
                                changelogCheckpointing: Boolean = true)
                               (body: org.apache.spark.sql.SparkSession => A): A = {
-    val child = spark.newSession()
+    val child = stateSession(spark)
     child.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     child.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
       changelogCheckpointing.toString)
+    child.conf.set("spark.sql.streaming.join.stateFormatVersion", "3")
     body(child)
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.internal.StaticSQLConf
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 import org.apache.spark.sql.types.StructType
 
 /** Narrow bridge into Spark's `private[sql]` surface (hence the package):
@@ -46,15 +46,27 @@ object InternalBridge {
   def unloadStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
 
-  /** Size Spark's generated-class cache to `entries` unless `conf` already
-    * names a size: a user's value always wins. The size is a static SQL
-    * conf, read once per JVM when the first query compiles. */
-  def sizeCodegenCache(conf: SparkConf, entries: Int): Unit =
-    conf.setIfMissing(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, entries.toString)
+  /** The engine's session defaults, one table. [[setEngineDefaults]]
+    * sets each on a conf unless the conf already names it, so a user's
+    * value (builder `.config`, `--conf`, `-D` system property) always wins.
+    *  - Spark's generated-class cache holds
+    *    [[graft.GraftExtensions.CodegenCacheEntries]] classes. It is a static
+    *    SQL conf, read once per JVM when the first query compiles.
+    *  - Streaming checkpoint files go through
+    *    [[graft.streaming.ForkFreeCheckpointFileManager]], which forks no
+    *    process per file on a local path. */
+  private val engineDefaults: Seq[(String, String)] = Seq(
+    StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key ->
+      graft.GraftExtensions.CodegenCacheEntries.toString,
+    SQLConf.STREAMING_CHECKPOINT_FILE_MANAGER_CLASS.parent.key ->
+      classOf[graft.streaming.ForkFreeCheckpointFileManager].getName)
 
-  /** [[sizeCodegenCache]] on the active context's own conf (`private[spark]`).
-    * Called while a session is being built, before its `SQLConf` copies
-    * the context's conf. */
-  def sizeCodegenCache(entries: Int): Unit =
-    SparkContext.getActive.foreach(sc => sizeCodegenCache(sc.conf, entries))
+  def setEngineDefaults(conf: SparkConf): Unit =
+    engineDefaults.foreach { case (k, v) => conf.setIfMissing(k, v) }
+
+  /** [[setEngineDefaults]] on the active context's own conf
+    * (`private[spark]`). Called while a session is being built, before its
+    * `SQLConf` copies the context's conf. */
+  def setEngineDefaults(): Unit =
+    SparkContext.getActive.foreach(sc => setEngineDefaults(sc.conf))
 }

@@ -74,6 +74,44 @@ class RocksDbStateSpec extends SparkSpec {
       .exists(_.contains("RocksDB")))
   }
 
+  test("interval join: the RocksDB child keeps one store per state partition (join format 3)") {
+    // join state format 3 keeps the join's four states (each side's keys
+    // and values) in one store, so a partition commits once per batch
+    val root = java.nio.file.Files.createTempDirectory("graft_rocksdb_wsp").toString
+    Seq((1L, ts(10000), 5.0), (2L, ts(20000), 7.0))
+      .toDF("k", "lts", "lv").write.parquet(s"$root/l")
+    Seq((1L, ts(5000), 1.0), (2L, ts(19000), 3.0), (4L, ts(2000), 9.0))
+      .toDF("k", "rts", "rv").write.parquet(s"$root/r")
+    def drive(sess: SparkSession, qn: String)
+        : (Seq[Seq[Any]], org.apache.spark.sql.streaming.StateOperatorProgress) = {
+      val out = StreamOps.intervalJoin(
+        sess.readStream.schema(sess.read.parquet(s"$root/l").schema).parquet(s"$root/l"),
+        sess.readStream.schema(sess.read.parquet(s"$root/r").schema).parquet(s"$root/r"),
+        "lts", "rts", by = Seq(("k", "k")),
+        before = "15m", after = "0s", watermark = "0 seconds")
+      val q = out.writeStream.outputMode("append").format("memory").queryName(qn).start()
+      try {
+        q.processAllAvailable()
+        val rows = sess.table(qn).orderBy(col("k")).collect().map(_.toSeq).toSeq
+        (rows, q.lastProgress.stateOperators.head)
+      } finally {
+        q.stop(); sess.catalog.dropTempView(qn)
+        StreamOps.releaseStateStores()
+      }
+    }
+    val (dRows, dOp) = drive(spark, "graft_rdb_wsp_default")
+    val (rows, op) = StreamOps.withRocksDbStateStore(spark)(drive(_, "graft_rdb_wsp_rocks"))
+    assert(rows.size == 2 && rows == dRows, s"state layout changed results: $rows vs $dRows")
+    assert(op.customMetrics.keySet().toArray.exists(_.toString.toLowerCase.contains("rocksdb")),
+      s"RocksDB provider did not engage; metric keys: ${op.customMetrics.keySet()}")
+    assert(op.numStateStoreInstances == op.numShufflePartitions,
+      s"expected one store per state partition, got ${op.numStateStoreInstances} " +
+        s"stores for ${op.numShufflePartitions} partitions")
+    // the default provider (join format 2) keeps four stores per partition
+    assert(dOp.numStateStoreInstances == 4 * dOp.numShufflePartitions,
+      s"default drive: ${dOp.numStateStoreInstances} stores for ${dOp.numShufflePartitions} partitions")
+  }
+
   test("windowed agg (streaming aggregation state): RocksDB == default, and engaged") {
     val root = java.nio.file.Files.createTempDirectory("graft_rocksdb_w").toString
     // two keys across two 1-minute windows, plus a watermark-advancing

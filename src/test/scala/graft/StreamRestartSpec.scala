@@ -198,6 +198,60 @@ class StreamRestartSpec extends SparkSpec {
     rocksDbRestartRoundTrip(changelog = true)
   }
 
+  test("interval join: a FileContext-manager, join-format-2 checkpoint restarts in the RocksDB child") {
+    // phase 1 writes the layout of an engine without its checkpoint
+    // default: the HDFS-backed provider, join state format 2, files renamed
+    // through Spark's FileContext manager. Phase 2 resumes it through the
+    // fork-free manager in the RocksDB/format-3 child: Spark restores the
+    // provider and the join format from the offset log, so the resumed
+    // query keeps them whatever its new session says.
+    val root = java.nio.file.Files.createTempDirectory("graft_restart_layout").toString
+    val (inL, inR) = (s"$root/l", s"$root/r")
+    Seq((1L, ts(10000), 5.0), (2L, ts(20000), 7.0))
+      .toDF("k", "lts", "lv").write.mode("append").parquet(inL)
+    Seq((1L, ts(5000), 1.0))
+      .toDF("k", "rts", "rv").write.mode("append").parquet(inR)
+    def drive(sess: org.apache.spark.sql.SparkSession, out: String, ckpt: String)
+        : org.apache.spark.sql.streaming.StateOperatorProgress = {
+      val lS = sess.read.parquet(inL).schema
+      val rS = sess.read.parquet(inR).schema
+      val q = StreamOps.sinkFileStream(StreamOps.intervalJoin(
+          sess.readStream.schema(lS).parquet(inL),
+          sess.readStream.schema(rS).parquet(inR),
+          "lts", "rts", by = Seq(("k", "k")),
+          before = "15m", after = "0s", watermark = "10 minutes"),
+        "parquet", out, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+      try { q.processAllAvailable(); q.lastProgress.stateOperators.head }
+      finally { q.stop(); StreamOps.releaseStateStores() }
+    }
+    val parentLayout = spark.newSession()
+    parentLayout.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      classOf[org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager].getName)
+    parentLayout.conf.set("spark.sql.streaming.join.stateFormatVersion", "2")
+    drive(parentLayout, s"$root/out", s"$root/ckpt")
+    Seq((2L, ts(19000), 3.0), (3L, ts(40000), 8.0))
+      .toDF("k", "rts", "rv").write.mode("append").parquet(inR)
+    val (resumed, control) = StreamOps.withRocksDbStateStore(spark) { sess =>
+      (drive(sess, s"$root/out", s"$root/ckpt"), drive(sess, s"$root/out_ctl", s"$root/ckpt_ctl"))
+    }
+    val metricKeys = (op: org.apache.spark.sql.streaming.StateOperatorProgress) =>
+      op.customMetrics.keySet().toArray.map(_.toString.toLowerCase)
+    assert(!metricKeys(resumed).exists(_.contains("rocksdb")) &&
+      resumed.numStateStoreInstances == 4 * resumed.numShufflePartitions,
+      s"the resumed query left the checkpoint's provider or join format: " +
+        s"${resumed.numStateStoreInstances} stores, metrics ${metricKeys(resumed).mkString(",")}")
+    assert(metricKeys(control).exists(_.contains("rocksdb")) &&
+      control.numStateStoreInstances == control.numShufflePartitions,
+      s"the control did not run on one RocksDB store per partition: ${control.numStateStoreInstances}")
+    val restarted = readSorted(s"$root/out", Seq("k", "lts", "rts"))
+    val uninterrupted = readSorted(s"$root/out_ctl", Seq("k", "lts", "rts"))
+    assert(restarted.map(_.head).toSet == Set(1L, 2L),
+      s"expected k=1 (phase 1) and k=2 (cross-restart) matches, got $restarted")
+    assert(restarted == uninterrupted,
+      s"restart diverged from uninterrupted control: $restarted vs $uninterrupted")
+  }
+
   test("windowed agg: restart merges phase-1 and phase-2 rows into ONE window aggregate") {
     val root = java.nio.file.Files.createTempDirectory("graft_restart_wa").toString
     val inE = s"$root/e"
