@@ -1,34 +1,25 @@
 package graft
 
+import graft.faces.Faces
+
 object Bench {
 
-  /** Streaming-runtime drives (micro-batch machinery + state stores): their
-    * cost profile (fixed per-batch overhead, low CPU parallelism while the
-    * runtime coordinates) is a different population from the batch plans, so
-    * the artifact reports them as their own SECTION with its own noise floor
-    * (r12 directive 8) — one ambient burst can then contaminate at most one
-    * section's floor, and the gate can regress each section against its own
-    * reference population.
-    *
-    * NAMING CONTRACT (ADVICE r14): a streaming bench face's name MUST
-    * contain "_stream" or "interval_join" — BenchRefsSpec derives the
-    * expected membership of this set from that convention and fails on any
-    * drift in either direction, so a new streaming face named outside the
-    * convention is caught at test time instead of silently gating against
-    * the core noise floor. */
-  private[graft] val StreamingFaces = Set(
-    "q61_stream_window", "q73_sessionize_stream", "q74_stream_dedup",
-    "q75_asof_stream", "q76_asof_stream_fwd", "q77_interval_join_stream",
-    "q77s_interval_join_sized", "q78_interval_join_outer",
-    "q79_interval_join_full", "q82_interval_join_right",
-    "q83_interval_join_full_sink")
+  /** The streaming faces' names. Streaming-runtime drives (micro-batch
+    * machinery + state stores) have a cost profile (fixed per-batch
+    * overhead, low CPU parallelism while the runtime coordinates) that is a
+    * different population from the batch plans, so the artifact reports
+    * them as their own SECTION with its own noise floor (r12 directive 8) —
+    * one ambient burst can then contaminate at most one section's floor, and
+    * the gate can regress each section against its own reference
+    * population. */
+  private lazy val streamingNames: Set[String] = Faces.streaming.map(_.name).toSet
 
   /** Gate multiplier for a face: 2 x (1 + the noisier of the reference
     * population's floor and the evaluating run's own SECTION floor) —
     * the BASELINE.md formula, testable in isolation (BenchRefsSpec). */
   private[graft] def gateFor(name: String, nfRunCore: Double,
                              nfRunStreaming: Double): Double = {
-    val isStr = StreamingFaces(name)
+    val isStr = streamingNames(name)
     2.0 * (1.0 + math.max(
       if (isStr) BenchRefs.NfRefStreaming else BenchRefs.NfRefCore,
       if (isStr) nfRunStreaming else nfRunCore))
@@ -189,10 +180,9 @@ object Bench {
     // single-face profiles; the full suite (empty filter) stays the artifact
     // of record. An unknown name fails the run before the session starts.
     val only = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "").split(',').map(_.trim).filter(_.nonEmpty).toSet
-    // the bench times OPERATOR faces: benchQueries == queries except where a
-    // correctness face embeds its verification contract (qd04/qd05/qs04) or
-    // a fixture oracle (qd32) — those names map to the raw operator here
-    val selected = SparkEntry.selectFaces(SparkEntry.benchQueries, only)
+    // the bench times OPERATOR faces: a face's bench twin where it has one
+    // (Face.bench), its correctness plan otherwise
+    val selected = Faces.select(only)
     val spark = Sessions.local(cpus)
     val sc = spark.sparkContext
     val counters = MetricsProbe.install(sc)
@@ -238,7 +228,8 @@ object Bench {
                  tasks: Double, shuffleMb: Double, spillMb: Double,
                  oldGenMb: Double, nFailed: Int)
     val load1Start = load1()
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = selected.sortBy(_.name).map { face =>
+      val name = face.name
       val qLoad1 = load1()
       def rep(): Rep = {
         // isolate reps AND queries: operators persist internals (signatures,
@@ -269,7 +260,7 @@ object Bench {
         // valid reading. Failures surface in the artifact's queries_failed
         // map and override the row's mechanism verdict.
         val ok =
-          try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true } catch {
+          try { face.benchRun(spark, sfDir).write.mode("overwrite").format("noop").save(); true } catch {
             case e: Throwable =>
               System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
           }
@@ -340,7 +331,7 @@ object Bench {
       val ok = rs.filter(r => !r.med.isNaN)
       s"""{"n":${rs.size},"total_warm_median":${r4(ok.map(_.med).sum)},"cold_total":${r4(rs.map(_.cold).sum)},"noise_floor_rel":${r4(median(ok.map(_.spread)))}}"""
     }
-    val (strRs, coreRs) = results.partition(r => StreamingFaces(r.name))
+    val (strRs, coreRs) = results.partition(r => streamingNames(r.name))
     val sections =
       s""""sections":{"core":${sectionJson(coreRs)},"streaming":${sectionJson(strRs)}}"""
     // ------------------------------------------- in-run frozen-ref gate

@@ -2,13 +2,11 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
-import graft.api.frame._
-import graft.api.syntax._
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2, with a DuckDB-runnable oracle in `oracleSql` wherever the
-  * semantics are ANSI-SQL-expressible.
+/** Driver contract — [[entry]], the sf-table loader [[t]] and the fixtures
+  * the face families in `graft.faces` share. Every face (one per
+  * implemented operator from SURVEY.md §2) and its DuckDB oracle live in
+  * [[graft.faces.Faces]].
   *
   * Float determinism: all money/ratio aggregates go through exact
   * DECIMAL(18,2/4) sums and only then cast to DOUBLE, so Spark and DuckDB
@@ -23,12 +21,6 @@ final case class G66Rec(id: Long, name: String, score: Double)
 
 object SparkEntry {
 
-  /** qd48's demo blocklist: overlapping prefixes ("bad ...") and a nested
-    * phrase pair ("casino bonus" contains "bonus") to exercise the
-    * Aho-Corasick suffix output links; mirrored verbatim in the oracle. */
-  private[graft] val DemoBlocklist: Seq[String] =
-    Seq("bad phrase one", "badword", "casino bonus", "bonus", "zzz qqq")
-
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = s.read.parquet(s"$dir/$name.parquet")
     // events.ts is TIMESTAMP(NANOS) parquet, read as long nanos under
@@ -42,19 +34,19 @@ object SparkEntry {
     }
   }
 
-  /** Exact decimal view of a 2dp money column. */
-  private def dec2(c: Column): Column = c.cast("decimal(18,2)")
-  private def dec4(c: Column): Column = c.cast("decimal(18,4)")
+  /** Exact decimal view of a 4dp value column. */
+  private[graft] def dec4(c: Column): Column = c.cast("decimal(18,4)")
 
   /** Materialized `Files.list` / `Files.walk` that CLOSE the underlying
     * directory stream (ADVICE r13: the bare streams leak one directory fd
     * per call until GC — drainStream pays two per streaming bench rep). */
-  private def listDir(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
+  private[graft] def listDir(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
     val st = java.nio.file.Files.list(p)
     try st.iterator().asScala.toSeq finally st.close()
   }
-  private def walkDir(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
+
+  private[graft] def walkDir(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
     val st = java.nio.file.Files.walk(p)
     try st.iterator().asScala.toSeq finally st.close()
@@ -65,7 +57,7 @@ object SparkEntry {
     * Repeated bench reps / verify runs overwrite in place instead of
     * accumulating a fresh parquet-sized temp copy per invocation
     * (ADVICE r10: Files.createTempDirectory leaked a dir per call). */
-  private def scratchDir(name: String): String = {
+  private[graft] def scratchDir(name: String): String = {
     val base = java.nio.file.Paths.get(
       sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_scratch", name)
     if (java.nio.file.Files.exists(base))
@@ -81,57 +73,16 @@ object SparkEntry {
     * `getPersistentRDDs` is empty the moment the lambda returns
     * (CacheHygieneSpec). Only legal where the result is bounded by
     * construction: `maxRows` is a hard guard, not a limit. */
-  private def localize(s: SparkSession, df: DataFrame, maxRows: Int = 100000): DataFrame = {
+  private[graft] def localize(s: SparkSession, df: DataFrame, maxRows: Int = 100000): DataFrame = {
     val rows = df.collect()
     require(rows.length <= maxRows,
       s"localize() is for bounded results; got ${rows.length} rows > $maxRows")
     s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
 
-  /** Driver-checkable contract for APPROXIMATE search queries: the query
-    * itself computes recall against the in-engine exact top-k and emits one
-    * aggregate row `(n_queries, recall_ok)` — the oracle states the EXPECTED
-    * verdict (n_queries from the same table scan, `recall_ok = true`), so a
-    * recall regression flips the hash comparison red instead of hiding
-    * behind a rows-only check. Thresholds are face-specific floors measured
-    * across SFs with margin; ANN outputs stay pinned exactly by the ScalaTest
-    * recall/determinism specs. */
-  private def annRecallRow(ann: DataFrame, exact: DataFrame, k: Int,
-                           minMeanRecall: Double): DataFrame = {
-    val pair = Seq("query_id", "neighbor_id")
-    val overlap = ann.select(pair.map(col): _*)
-      .join(exact.select(pair.map(col): _*), pair)
-    exact.select(col("query_id")).distinct()
-      .agg(count(lit(1)).as("n_queries"))
-      .crossJoin(overlap.agg(count(lit(1)).as("__ov")))
-      .select(col("n_queries"),
-        (col("__ov").cast("double") / (col("n_queries") * k) >= minMeanRecall)
-          .as("recall_ok"))
-  }
-
-  /** Fixed, training-shaped BPE merge table (qd49): every side is a base
-    * symbol or an earlier merge's output — the "valid table" class real BPE
-    * training always produces, and exactly the class where best-rank-first
-    * encoding coincides with sequential rank-order application (the SQL
-    * oracle's replace chain). English-suffix flavored so it actually fires
-    * on the synthetic corpus. */
-  private[graft] val fixedMerges: Seq[(String, String)] = Seq(
-    ("e", "</w>"), ("t", "h"), ("th", "e</w>"), ("i", "n"), ("in", "g"),
-    ("ing", "</w>"), ("a", "n"), ("o", "n"), ("s", "</w>"), ("e", "r"),
-    ("o", "r"), ("a", "t"), ("t", "</w>"), ("d", "</w>"), ("an", "d</w>"))
-
-  /** The faces of `all` that a name filter selects: every face for an
-    * empty filter. A name that is no face fails fast with all unknown names
-    * listed — a typo must not yield an empty or partial run. */
-  private[graft] def selectFaces[F](all: Map[String, F], only: Set[String]): Map[String, F] = {
-    val unknown = only.diff(all.keySet)
-    require(unknown.isEmpty, s"unknown face name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    if (only.isEmpty) all else all.filter(kv => only(kv._1))
-  }
-
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    queries("q01_groupby_agg")(spark, "/root/testdata/sf0.001")
+    graft.faces.Faces("q01_groupby_agg").run(spark, "/root/testdata/sf0.001")
 
   // ---------------------------------------- bench input fixtures (r10 d4)
   //
@@ -145,111 +96,25 @@ object SparkEntry {
   // scan it, timing the operator the row measures rather than the fixture
   // arithmetic — the same contract/bench split qd04/qd05/qs04/qd32 use.
 
-  private val fixtureCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val fixtureCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** qd50's query terms — shared by the Spark face and the generated oracle
-    * so they cannot drift; 'zebra' never occurs in the corpus (df = 0),
-    * exercising the zero-tf / max-idf path. */
-  private[graft] val Bm25Terms: Seq[String] =
-    Seq("hash", "join", "stream", "window", "zebra")
-
-  /** BM25 oracle generator — the DuckDB rendering of [[graft.prep.Prep.bm25]]
-    * with the expression tree mirrored verbatim (micro-unit quantization per
-    * term before the exact integer sum). Shared by qd50's oracle and the
-    * grammar-35 differential fuzz so Spark and SQL can never drift. k1/b are
-    * emitted with full `Double.toString` precision so both engines parse the
-    * identical double literal. */
-  private[graft] def bm25OracleSql(terms: Seq[String], k1: Double, b: Double): String = {
-    val toks = "list_filter(string_split_regex(text, '\\s+'), x -> x <> '')"
-    val k1s = java.lang.Double.toString(k1)
-    val bs = java.lang.Double.toString(b)
-    val dfAggs = terms.zipWithIndex.map { case (t, i) =>
-      s"sum(CASE WHEN list_contains(toks, '$t') THEN 1 ELSE 0 END) AS df$i"
-    }.mkString(",\n    ")
-    val tfCols = terms.zipWithIndex.map { case (t, i) =>
-      s"CAST(len(list_filter(toks, x -> x = '$t')) AS DOUBLE) AS tf$i"
-    }.mkString(",\n    ")
-    val dfdCols = terms.indices.map(i => s"CAST(df$i AS DOUBLE) AS dfd$i")
-      .mkString(", ")
-    val termSum = terms.indices.map { i =>
-      s"CAST(floor(ln((n - dfd$i + 0.5) / (dfd$i + 0.5) + 1.0) * " +
-        s"((tf$i * ($k1s + 1.0)) / (tf$i + $k1s * (1.0 - $bs + $bs * " +
-        s"(CAST(len AS DOUBLE) / (CAST(tl AS DOUBLE) / n))))) * 1e6 + 0.5) AS BIGINT)"
-    }.mkString("\n  + ")
-    s"""WITH dd AS (
-       |  SELECT doc_id, lang, $toks AS toks FROM documents
-       |), d2 AS (SELECT doc_id, lang, toks, len(toks) AS len FROM dd),
-       |m AS (
-       |  SELECT count(*) AS n, sum(len) AS tl,
-       |    $dfAggs
-       |  FROM d2
-       |), s AS (
-       |  SELECT doc_id, lang, len, n, tl, $dfdCols,
-       |    $tfCols
-       |  FROM d2 CROSS JOIN m
-       |)
-       |SELECT doc_id, lang,
-       |  $termSum AS bm25_uscore
-       |FROM s ORDER BY doc_id""".stripMargin
-  }
-
-  /** q70's co-located join over per-(JVM, SF) bucketed tables. The layout
-    * write (`bucketBy(8, key).sortBy(key)` after a repartition that puts
-    * exactly one file in each bucket) happens once per session and lives in
-    * the session catalog as an external table under /tmp/graft_fixtures —
-    * the bucketed-table analogue of [[fixtureScan]]'s parquet fixtures. The
-    * returned join carries NO exchange and NO per-query sort: bucket
-    * hashing on both sides matches Spark's join partitioning, and the
-    * one-file-per-bucket sorted layout satisfies the SMJ ordering
-    * requirement (both properties asserted by PlanSpec). */
-  private[graft] def q70Join(s: SparkSession, d: String): DataFrame = {
-    sweepStaleFixtures
-    // key the layout by SOURCE IDENTITY (full path + size + mtime of each
-    // input) and by JVM: a sanitized dir name alone silently reused a stale
-    // layout when the source data changed within a session, could collide
-    // two distinct dirs after sanitization ("sf0.1" vs "sf0_1"), and let
-    // two concurrent JVMs overwrite one shared path mid-read (ADVICE r11)
-    def tok(f: String): String = {
-      val p = java.nio.file.Paths.get(f)
-      // ADVICE r12: a dataset may be a DIRECTORY whose part files are
-      // rewritten in place (parent mtime unchanged) — hash child count +
-      // total size + max child mtime, not the top-level entry alone; a
-      // missing input falls through to the normal read error instead of
-      // NoSuchFileException here
-      val sig =
-        if (!java.nio.file.Files.exists(p)) s"$f|missing"
-        else if (java.nio.file.Files.isDirectory(p)) {
-          val kids = listDir(p)
-          val total = kids.map(k =>
-            try java.nio.file.Files.size(k) catch { case _: java.io.IOException => 0L }).sum
-          val maxM = (p +: kids).map(k =>
-            try java.nio.file.Files.getLastModifiedTime(k).toMillis
-            catch { case _: java.io.IOException => 0L }).max
-          s"$f|d${kids.size}|$total|$maxM"
-        } else s"$f|${java.nio.file.Files.size(p)}|" +
-          java.nio.file.Files.getLastModifiedTime(p).toMillis
-      java.lang.Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(sig))
-    }
-    val suf = tok(s"$d/lineitem.parquet") + "_" + tok(s"$d/orders.parquet") +
-      "_p" + ProcessHandle.current().pid()
-    val lt = s"g70_li_$suf"; val ot = s"g70_o_$suf"
-    def ensure(name: String, df: DataFrame, key: String): Unit =
-      if (!s.catalog.tableExists(name)) {
-        val path = java.nio.file.Paths.get(
-          sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fixtures",
-          name).toString
-        df.repartition(8, col(key))
-          .write.mode("overwrite")
-          .bucketBy(8, key).sortBy(key)
-          .option("path", path).saveAsTable(name)
-      }
-    ensure(lt, t(s, d, "lineitem")
-      .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice")),
-      "l_orderkey")
-    ensure(ot, t(s, d, "orders")
-      .select(col("o_orderkey"), col("o_orderpriority")), "o_orderkey")
-    val li = s.table(lt); val o = s.table(ot)
-    li.hint("merge").join(o.hint("merge"), li("l_orderkey") === o("o_orderkey"))
+  /** Build-once-scan-thereafter fixture parquet, keyed by (name, sfDir). */
+  private[graft] def fixtureScan(s: SparkSession, sfDir: String, name: String)
+                                (build: => DataFrame): DataFrame = {
+    val key = name + ":" + sfDir
+    val dir = fixtureCache.computeIfAbsent(key, _ => {
+      val p = java.nio.file.Paths.get(
+        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fixtures",
+        name + "_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")).toString
+      // spread the fixture over the session's parallelism: the synthesized
+      // tables are small (tens of MB), and a single parquet file would read
+      // back as ONE input split — serializing the per-row decode/kernel the
+      // bench face exists to measure
+      build.repartition(s.sparkContext.defaultParallelism)
+        .write.mode("overwrite").parquet(p)
+      p
+    })
+    s.read.parquet(dir)
   }
 
   /** One-time sweep of pid-suffixed fixture layouts (`..._p<pid>`: q70
@@ -257,7 +122,7 @@ object SparkEntry {
     * longer exist — without it every bench/verify run leaks its copies
     * into /tmp forever. Entries owned by LIVE pids are kept (the
     * concurrent-JVM race the pid suffix exists to prevent). */
-  private lazy val sweepStaleFixtures: Unit = {
+  private[graft] lazy val sweepStaleFixtures: Unit = {
     val root = java.nio.file.Paths.get(
       sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fixtures")
     if (java.nio.file.Files.isDirectory(root)) {
@@ -275,5079 +140,14 @@ object SparkEntry {
     }
   }
 
-  /** Per-(JVM, SF) cached parquet DIRECTORY for stream-input fixtures
-    * (q73/q74): synthesized once, then every rep/invocation re-streams the
-    * same files instead of paying the fixture write per rep. Returns the
-    * path (readStream needs a directory, not a frame). */
-  private def streamFixture(s: SparkSession, sfDir: String, name: String)
-                           (build: => DataFrame): String = {
-    sweepStaleFixtures
-    fixtureCache.computeIfAbsent(name + ":stream:" + sfDir, _ => {
-      // per-JVM path: q73 APPENDS flush batches to its fixture dir, so two
-      // JVMs sharing one path would interleave overwrites with live streams
-      // (the q70 layout race, ADVICE r11)
-      val p = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fixtures",
-        name + "_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
-          "_p" + ProcessHandle.current().pid()).toString
-      build.write.mode("overwrite").parquet(p)
-      p
-    })
-  }
-
-  /** Drive a started stream to COMPLETION: drain everything available,
-    * append an EMPTY batch to `flushDir` (the watermark advanced at the
-    * previous batch's end, so this batch fires the event-time timeouts that
-    * flush open state), drain again. The query stops and its state stores
-    * release even when the drive fails, and the empty flush files are
-    * DELETED (ADVICE r12): `flushDir` is the cached per-JVM fixture
-    * directory, so leaving them would grow the dir by one file per
-    * rep/invocation, skewing later reps' listing/read cost and leaking files
-    * until the pid sweep. Returns the query's recent progress. */
-  private def driveToCompletion(s: SparkSession, flushDir: String,
-                                flushSchema: org.apache.spark.sql.types.StructType)
-                               (start: => StreamingQuery): Array[StreamingQueryProgress] = {
-    val flushPath = java.nio.file.Paths.get(flushDir)
-    def ls: Set[java.nio.file.Path] = listDir(flushPath).toSet
-    val preFlush = ls
-    val q = start
-    try {
-      q.processAllAvailable()
-      s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), flushSchema)
-        .write.mode("append").parquet(flushDir)
-      q.processAllAvailable()
-      q.recentProgress
-    } finally {
-      q.stop()
-      graft.streaming.StreamOps.releaseStateStores()
-      (ls -- preFlush).foreach(p =>
-        try java.nio.file.Files.deleteIfExists(p)
-        catch { case _: java.io.IOException => () })
-    }
-  }
-
-  /** [[driveToCompletion]] through a memory sink, returning the projected
-    * result as a driver-local frame (`localize` guard). The temp view is
-    * dropped even when projection fails — a failed bench rep must not leave
-    * catalog residue. */
-  private def drainStream(s: SparkSession, out: DataFrame, qn: String,
-                          flushDir: String,
-                          flushSchema: org.apache.spark.sql.types.StructType)
-                         (project: DataFrame => DataFrame): DataFrame = {
-    driveToCompletion(s, flushDir, flushSchema)(
-      out.writeStream.outputMode("append").format("memory").queryName(qn).start())
-    try localize(s, project(s.table(qn)))
-    finally s.catalog.dropTempView(qn)
-  }
-
-  /** A timestamp literal one year past `df`'s latest `ts` (a 1-row agg):
-    * a stream fixture's sentinel row carries it so the watermark passes
-    * every real window and all open state finalizes. */
-  private def farFuture(df: DataFrame): Column = {
-    val maxTs = df.agg(max(col("ts").cast("timestamp"))).head.getTimestamp(0)
-    lit(new java.sql.Timestamp(maxTs.getTime + 365L * 86400000L)).cast("timestamp")
-  }
-
-  /** Purchases as a stream fixture: (event_id, user_id, ts, value), with
-    * `sentinel` plus one far-future row of user -1. */
-  private def purchasesFixture(s: SparkSession, d: String, sentinel: Boolean): String =
-    streamFixture(s, d, if (sentinel) "q78_left" else "q75_left") {
-      val ev = t(s, d, "events")
-      val rows = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"),
-          col("ts").cast("timestamp").as("ts"), col("value"))
-      if (!sentinel) rows
-      else rows.unionByName(s.range(1).select(lit(-1L).as("event_id"),
-        lit(-1L).as("user_id"), farFuture(ev).as("ts"), lit(0.0).as("value")))
-    }
-
-  /** The continuous as-of faces (q75 backward, q76 forward with
-    * tolerance): purchases stream-joined per user to the events of
-    * `rightType`, whose value rides as `<prefix>_value` (with `withTs`, their
-    * time too, as `<prefix>_ts`). A far-future right-side sentinel (user -1)
-    * advances the unioned watermark past every purchase so all matches
-    * finalize; the empty flush batch fires the timeouts that emit them. */
-  private def asofStreamFace(s: SparkSession, d: String, n: String,
-                             rightType: String, prefix: String, withTs: Boolean,
-                             strategy: graft.operators.AsofJoin.Strategy,
-                             tolerance: Option[String]): DataFrame = {
-    val inL = purchasesFixture(s, d, sentinel = false)
-    val inR = streamFixture(s, d, s"q${n}_right") {
-      val ev = t(s, d, "events")
-      val rows = ev.filter(col("event_type") === rightType)
-        .select(col("user_id"), col("ts").cast("timestamp").as("ts"),
-          col("value").as(s"${prefix}_value"))
-      val sentinel = s.range(1).select(lit(-1L).as("user_id"),
-        farFuture(ev).as("ts"), lit(0.0).as(s"${prefix}_value"))
-      if (!withTs) rows.unionByName(sentinel)
-      else rows.withColumn(s"${prefix}_ts", col("ts")).unionByName(
-        sentinel.withColumn(s"${prefix}_ts", lit(null).cast("timestamp")))
-    }
-    // input-sized state partitioning (r18, guide §2) — see intervalJoinFace
-    val nSp = graft.streaming.StreamOps.sizedStatePartitionsForInput(s, Seq(inL, inR))
-    graft.streaming.StreamOps.withStatePartitions(s, nSp) { s2 =>
-      val lSchema = s2.read.parquet(inL).schema
-      val rSchema = s2.read.parquet(inR).schema
-      val out = graft.streaming.AsofStream.asofStream(
-        s2.readStream.schema(lSchema).parquet(inL),
-        s2.readStream.schema(rSchema).parquet(inR),
-        "ts", "ts", by = Seq(("user_id", "user_id")), watermark = "0 seconds",
-        strategy = strategy, tolerance = tolerance)
-      drainStream(s2, out, s"g${n}_stream", inL, lSchema) { t =>
-        t.select(Seq(col("event_id"), col("user_id"),
-          col("ts").cast("timestamp_ntz").as("ts"), col("value"),
-          col(s"${prefix}_value")) ++
-          (if (withTs) Seq(col(s"${prefix}_ts").cast("timestamp_ntz").as(s"${prefix}_ts"))
-           else Nil): _*)
-      }.orderBy(col("event_id"))
-    }
-  }
-
-  /** Where an interval-join face drives its stream: the memory-sink
-    * harness under a temp view (bounded by `localize`), or the production
-    * file sink (`StreamOps.sinkFileStream`: append mode, checkpointed,
-    * exactly-once) under `dir`, whose output never reaches the driver, so
-    * it drives at any SF. `onProgress` sees the file-sink query's progress. */
-  private[graft] sealed trait IjSink
-  private[graft] final case class MemorySink(view: String) extends IjSink
-  private[graft] final case class FileSink(
-      dir: String, onProgress: Array[StreamingQueryProgress] => Unit = _ => ())
-    extends IjSink
-
-  /** The interval-join faces' purchase and click stream fixtures (left:
-    * event_id, user_id, ts, value; right: click_id, user_id, click_ts,
-    * click_value). With `sentinels`, BOTH streams carry a far-future row of
-    * user -1 — the global watermark is the min across sources, so only a
-    * sentinel on each side advances it past every real window and lets the
-    * outer nulls finalize. */
-  private[graft] def intervalJoinInputs(s: SparkSession, d: String,
-                                        sentinels: Boolean): (String, String) = {
-    val inR = streamFixture(s, d, if (sentinels) "q78_right" else "q77_right") {
-      val ev = t(s, d, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          col("ts").cast("timestamp").as("click_ts"),
-          col("value").as("click_value"))
-      if (!sentinels) clicks
-      else clicks.unionByName(s.range(1).select(lit(-1L).as("click_id"),
-        lit(-1L).as("user_id"), farFuture(ev).as("click_ts"),
-        lit(0.0).as("click_value")))
-    }
-    (purchasesFixture(s, d, sentinels), inR)
-  }
-
-  /** The interval join every face and probe runs: each purchase with the
-    * same user's clicks from the preceding day. */
-  private[graft] def intervalJoinOf(l: DataFrame, r: DataFrame, joinType: String): DataFrame =
-    graft.streaming.StreamOps.intervalJoin(l, r, "ts", "click_ts",
-      by = Seq(("user_id", "user_id")), before = "1d", after = "0s",
-      watermark = "0 seconds", joinType = joinType)
-
-  /** One interval-join face: [[intervalJoinOf]] over the stream fixtures,
-    * driven to completion through `sink`. Outer join types read the
-    * sentinel fixtures and drop the sentinel rows (user -1) from the
-    * output; inner joins need neither.
-    *
-    * State partitioning is sized to the input volume (r18, guide §2):
-    * each state partition pays fixed store-lifecycle work per micro-batch
-    * (4 store commits for a stream-stream join), so the 32-partition
-    * session default billed ~3x the sized drive at sf0.1 while a bigger SF
-    * derives proportionally more partitions. Results are
-    * partition-count-independent (the same oracle hash at any count). */
-  private[graft] def intervalJoinFace(s: SparkSession, d: String,
-                                      joinType: String, sink: IjSink): DataFrame = {
-    val outer = joinType != "inner"
-    val (inL, inR) = intervalJoinInputs(s, d, sentinels = outer)
-    val nSp = graft.streaming.StreamOps.sizedStatePartitionsForInput(s, Seq(inL, inR))
-    graft.streaming.StreamOps.withStatePartitions(s, nSp) { s2 =>
-      val lSchema = s2.read.parquet(inL).schema
-      val rSchema = s2.read.parquet(inR).schema
-      val out = intervalJoinOf(s2.readStream.schema(lSchema).parquet(inL),
-        s2.readStream.schema(rSchema).parquet(inR), joinType)
-      def project(t: DataFrame): DataFrame =
-        (if (outer) t.filter(col("user_id") >= 0L) else t)
-          .select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp_ntz").as("ts"), col("value"),
-            col("click_id"),
-            col("click_ts").cast("timestamp_ntz").as("click_ts"),
-            col("click_value"))
-      (sink match {
-        case MemorySink(view) => drainStream(s2, out, view, inL, lSchema)(project)
-        case FileSink(dir, onProgress) =>
-          onProgress(driveToCompletion(s2, inL, lSchema)(
-            graft.streaming.StreamOps.sinkFileStream(out, "parquet", s"$dir/out",
-              s"$dir/ckpt", org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))))
-          project(s2.read.parquet(s"$dir/out"))
-      }).orderBy(col("event_id"), col("click_id"))
-    }
-  }
-
-  /** The quality-selection flagship's stage pipeline, shared by exact qd41
-    * and hashed qd41h, parameterised only by its two scoring steps:
-    *
-    *  - tokenize ONCE (r19, guide §1.2/§5) into a token table — before,
-    *    every stage re-ran the whitespace tokenizer over corpus-scale text
-    *    (~3.3 corpus-equivalents of regex splitting + parquet text decode
-    *    per pipeline). Every stage reads pre-split arrays (Prep ops pass
-    *    array<string> text columns through), and survivors carry only
-    *    (doc_id, tk). Tokenization is deterministic, so every downstream
-    *    value is bit-identical;
-    *  - stage 1: `gate` the token table (the perplexity cut);
-    *  - stage 2: drop survivors sharing any 5-shingle with the eval bench
-    *    (Bloom-prefiltered exact decontamination);
-    *  - stage 3: `score` the clean pool (DSIR weights, deterministic top-k).
-    *
-    * Inter-stage checkpoints: each stage's survivors feed MULTIPLE
-    * downstream scans (stage 2 reads s1 twice: prefilter + verify
-    * join-back; stage 3 reads s2 up to four times). Without the persist
-    * every re-read re-runs the whole upstream pipeline — at 100 TB the
-    * survivors-to-disk checkpoint between stages is the standard shape
-    * (SCALE_CONTRACTS.md "flagship cache lifecycle"). DISK_ONLY (r12
-    * directive 1b): under memory pressure MEMORY_AND_DISK evicts and the
-    * downstream re-scans re-run the WHOLE upstream; DISK_ONLY bounds the
-    * worst case at a local disk re-read. The scored result is BOUNDED, so it
-    * localizes eagerly and ALL stage caches release before returning — a
-    * long-lived session chaining flagship runs retains nothing. */
-  private def qualitySelect(s: SparkSession, d: String)
-                           (gate: DataFrame => DataFrame)
-                           (score: DataFrame => DataFrame): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.DISK_ONLY
-    val toks = t(s, d, "documents").select(col("doc_id"),
-        graft.functions.TextFunctions.tokens(col("text")).as("tk"))
-      .persist(lvl)
-    val s1 = gate(toks).select(col("doc_id"), col("tk")).persist(lvl)
-    val s2 = graft.prep.Prep.contaminationBloom(s1, toks.filter(col("doc_id") % 89 === 0),
-        "doc_id", "tk", shingleK = 5, minShared = 1, fpp = 0.01)
-      .filter(!col("contaminated"))
-      .select(col("doc_id"), col("tk"))
-      .persist(lvl)
-    try localize(s, score(s2))
-    finally {
-      s2.unpersist(blocking = true)
-      s1.unpersist(blocking = true)
-      toks.unpersist(blocking = true)
-    }
-  }
-
-  /** Build-once-scan-thereafter fixture parquet, keyed by (name, sfDir). */
-  private def fixtureScan(s: SparkSession, sfDir: String, name: String)
-                         (build: => DataFrame): DataFrame = {
-    val key = name + ":" + sfDir
-    val dir = fixtureCache.computeIfAbsent(key, _ => {
-      val p = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fixtures",
-        name + "_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")).toString
-      // spread the fixture over the session's parallelism: the synthesized
-      // tables are small (tens of MB), and a single parquet file would read
-      // back as ONE input split — serializing the per-row decode/kernel the
-      // bench face exists to measure
-      build.repartition(s.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(dir)
-  }
-
-  /** qd40's dirty-corpus synthesis: 6-word lines, terminal '.' on
-    * (i+doc_id)%3!=0 lines, 'javascript' every 7th line, page poison
-    * ('{' / 'lorem ipsum') on doc_id%13 / %17. */
-  private def qd40Dirty(docs: DataFrame): DataFrame = {
-    val tf = graft.functions.TextFunctions
-    val w = tf.tokens(col("text"))
-    val nLines = greatest(ceil(size(w) / lit(6.0)).cast("int"), lit(1))
-    val lines = transform(sequence(lit(0), nLines - 1), i =>
-      concat(
-        concat_ws(" ", slice(w, i * 6 + 1, lit(6))),
-        when(i % 7 === 0, lit(" javascript")).otherwise(lit("")),
-        when((i + col("doc_id")) % 3 =!= 0, lit(".")).otherwise(lit(""))))
-    val dirty = concat(
-      array_join(lines, "\n"),
-      when(col("doc_id") % 13 === 0, lit(" {")).otherwise(lit("")),
-      when(col("doc_id") % 17 === 0, lit("\nlorem ipsum.")).otherwise(lit("")))
-    docs.select(col("doc_id"), dirty.as("text"))
-  }
-
-  /** qd40's operator stage: C4 line/page clean over a (doc_id, text) input. */
-  private def qd40Run(input: DataFrame): DataFrame =
-    graft.prep.Prep.c4Clean(input, "text")
-      .select(col("doc_id"), col("n_kept_lines"), col("keep"), col("kept_text"))
-      .orderBy(col("doc_id"))
-
-  /** qd44's structured-corpus synthesis: 6-word lines, "- " bullets on
-    * (i+doc_id)%5 lines, "..." vs "." endings on %7, " the"/" of" stopword
-    * injection on %3/%4, " #" symbols on %11. */
-  private def qd44Structured(docs: DataFrame): DataFrame = {
-    val tf = graft.functions.TextFunctions
-    val w = tf.tokens(col("text"))
-    val nLines = greatest(ceil(size(w) / lit(6.0)).cast("int"), lit(1))
-    val lines = transform(sequence(lit(0), nLines - 1), i =>
-      concat(
-        when((i + col("doc_id")) % 5 === 0, lit("- ")).otherwise(lit("")),
-        concat_ws(" ", slice(w, i * 6 + 1, lit(6))),
-        when((i + col("doc_id")) % 3 === 0, lit(" the")).otherwise(lit("")),
-        when((i + col("doc_id")) % 4 === 0, lit(" of")).otherwise(lit("")),
-        when((i + col("doc_id")) % 11 === 0, lit(" #")).otherwise(lit("")),
-        when((i + col("doc_id")) % 7 === 0, lit("...")).otherwise(lit("."))))
-    docs.select(col("doc_id"), array_join(lines, "\n").as("text"))
-  }
-
-  /** qd44's operator stage: the full Gopher signal set + page verdict. */
-  private def qd44Run(input: DataFrame): DataFrame =
-    graft.prep.Prep.gopherQuality(input, "text")
-      .select(col("doc_id"), col("n_words"), col("mean_word_len"),
-        col("symbol_ratio"), col("bullet_frac"), col("ellipsis_frac"),
-        col("alpha_frac"), col("n_stopwords"), col("gopher_keep"))
-      .orderBy(col("doc_id"))
-
-  /** qd46's paragraph synthesis: 8-word paragraphs with an inner newline
-    * (must fold to a space, not split the paragraph), every i%3==2
-    * paragraph a copy of paragraph 0. */
-  private def qd46Paras(docs: DataFrame): DataFrame = {
-    val T = graft.functions.TextFunctions
-    val w = T.tokens(col("text"))
-    val nP = greatest(ceil(size(w) / lit(8.0)).cast("int"), lit(1))
-    def para(j: Column) = concat(
-      concat_ws(" ", slice(w, j * 8 + 1, lit(4))), lit("\n"),
-      concat_ws(" ", slice(w, j * 8 + 5, lit(4))))
-    val paras = transform(sequence(lit(0), nP - 1), i =>
-      when(i % 3 === 2, para(lit(0))).otherwise(para(i)))
-    docs.select(col("doc_id"), array_join(paras, "\n\n").as("text"))
-  }
-
-  /** qd46's operator stage: native one-pass dup-paragraph kernels. */
-  private def qd46Run(s: SparkSession, input: DataFrame): DataFrame = {
-    val T = graft.functions.TextFunctions
-    input.select(col("doc_id"),
-        T.dupParagraphFraction(col("text")).as("dup_para_frac"),
-        T.dupParagraphCharFraction(col("text")).as("dup_para_char_frac"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** q54's crawl-page synthesis: deterministic HTML (6-word <p> lines,
-    * javascript bait on i%7, unpunctuated lines on (i+doc_id)%3,
-    * '{'-poison pages on doc_id%13). */
-  private def q54Html(docs: DataFrame): DataFrame = {
-    val T = graft.functions.TextFunctions
-    val w = T.tokens(col("text"))
-    val nL = greatest(ceil(size(w) / lit(6.0)).cast("int"), lit(1))
-    val paras = transform(sequence(lit(0), nL - 1), i => concat(
-      lit("<p>"),
-      concat_ws(" ", slice(w, i * 6 + 1, lit(6))),
-      when(i % 7 === 0, lit(" javascript")).otherwise(lit("")),
-      when((i + col("doc_id")) % 3 =!= 0, lit(".")).otherwise(lit("")),
-      lit("</p>")))
-    val html = concat(
-      lit("<html><head><style>p{x}</style><script>var i=0;</script></head><body>"),
-      array_join(paras, ""),
-      when(col("doc_id") % 13 === 0, lit("<p>{ x }.</p>")).otherwise(lit("")),
-      lit("<!-- c --></body></html>"))
-    docs.select(col("doc_id"), col("lang"), html.as("html"))
-  }
-
-  /** q54's operator chain over (doc_id, lang, html): htmlToText → C4 clean
-    * → Gopher gate → boilerplate fingerprint dedup → chunk → rollup. */
-  private def q54Run(input: DataFrame): DataFrame = {
-    val P = graft.prep.Prep
-    val T = graft.functions.TextFunctions
-    val extracted = input.select(col("doc_id"), col("lang"),
-      T.htmlToText(col("html")).as("text"))
-    val gated = P.gopherQuality(
-        P.c4Clean(extracted, "text").withColumnRenamed("keep", "c4_keep"),
-        "kept_text", minWords = 20L, minStopwords = 0L)
-      .filter(col("c4_keep") && col("gopher_keep"))
-      .select(col("doc_id"), col("lang"), col("kept_text").as("text"))
-    val deduped = graft.dedup.Dedup.exact(
-        gated.withColumn("__fp",
-          T.fingerprint(concat_ws(" ", slice(T.tokens(col("text")), 1, 3)))),
-        Seq("__fp"), "doc_id")
-      .drop("__fp")
-    P.chunk(deduped, "doc_id", "text", chunkSize = 32, stride = 32,
-        carryCols = Seq("lang"))
-      .groupBy(col("lang"))
-      .agg(countDistinct(col("doc_id")).as("n_docs"),
-        count(lit(1)).as("n_chunks"),
-        sum(col("n_chunk_tokens")).as("n_tokens"))
-      .orderBy(col("lang"))
-  }
-
-  /** qm02's payload synthesis: real PNG/WAV bytes from doc_id formulas
-    * (even ids → gray PNG via ImageIO, odd → square-wave WAV). */
-  private def qm02Payloads(s: SparkSession, docs: DataFrame): DataFrame = {
-    import s.implicits._
-    docs.select(col("doc_id")).as[Long]
-      .mapPartitions(_.map(id => (id, graft.multimodal.MediaFixtures.payload(id))))
-      .toDF("doc_id", "bin")
-  }
-
-  /** qm02's operator stage: partition-parallel decode through the real JDK
-    * codecs + the banded signal verdict over a (doc_id, bin) input. */
-  private def qm02Run(payloads: DataFrame): DataFrame = {
-    val M = graft.multimodal.Multimodal
-    val media = M.asMediaTable(payloads, "doc_id", "bin")
-    def f(i: Int) = element_at(col("features"), i)
-    val id = col("media_id")
-    val expLum = ((id % 16) * 16).cast("double") / lit(255.0)
-    val expAmp = (lit(8192) + (id % 7) * 1024).cast("double") / lit(32768.0)
-    M.decodeFeatures(media, featureDim = 16, decodeFn = M.mediaDecode)
-      .select(id, col("meta.format").as("format"),
-        f(1).cast("long").as("d0"),
-        f(2).cast("long").as("d1"),
-        when(col("meta.format") === "riff", f(3).cast("long")).as("d2"),
-        when(col("meta.format") === "png", abs(f(3) - expLum) < 0.02)
-          .otherwise(abs(f(4) - expAmp) < 1e-4 && abs(f(5) - expAmp) < 1e-4)
-          .as("signal_ok"))
-      .orderBy(id)
-  }
-
-  // ---------------------------------------------------------------- queries
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // §2.5 group_by().agg() with the full core agg set (sum/mean/min/max/
-    // count/len) — reference lazy.rs:168-184, expr.rs:208-211,881-888,1125-1130
-    "q01_groupby_agg" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(col("l_quantity")).as("sum_qty"),
-          sum(dec2(col("l_extendedprice"))).cast("double").as("sum_price"),
-          (sum(dec2(col("l_discount"))).cast("double") / count(lit(1))).as("avg_disc"),
-          min(col("l_quantity")).as("min_qty"),
-          max(col("l_quantity")).as("max_qty"),
-          count(col("l_quantity")).as("cnt_qty"),
-          graft.api.syntax.len().as("n_rows"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    // §2.3 filter + select + arithmetic/comparison exprs — lazy.rs:84-88,
-    // expr.rs:222-243
-    "q02_filter_project" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .filter(col("l_quantity") > lit(30.0) && col("l_discount") <= lit(0.05))
-        .select(
-          col("l_orderkey"), col("l_linenumber"),
-          (dec2(col("l_extendedprice")) * (lit(1).cast("decimal(18,2)") - dec2(col("l_discount"))))
-            .cast("double").as("revenue"),
-          (col("l_quantity") + col("l_tax")).as("qty_plus_tax"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    // §2.4 inner equi-join (multi-table) + agg — lazy.rs:462-488
-    "q03_join_inner" -> ((s, d) => {
-      val li = t(s, d, "lineitem"); val o = t(s, d, "orders"); val c = t(s, d, "customer")
-      // pre-aggregate revenue per order BEFORE the customer join: shrinks the
-      // join input from lineitem-cardinality to orders-cardinality, the
-      // orderkey exchange is reused by the join, and countDistinct(o_orderkey)
-      // degenerates to a plain count (one row per order survives the pre-agg),
-      // eliminating the distinct expand. Decimal sums re-associate exactly, so
-      // the result is bit-identical to the single big aggregate.
-      val perOrder = li.groupBy(col("l_orderkey")).agg(
-        sum(dec2(col("l_extendedprice")) * (lit(1).cast("decimal(18,2)") - dec2(col("l_discount"))))
-          .as("order_rev"))
-      perOrder.join(o, perOrder("l_orderkey") === o("o_orderkey"), "inner")
-        .join(c, o("o_custkey") === c("c_custkey"), "inner")
-        .groupBy(col("c_mktsegment"))
-        .agg(
-          sum(col("order_rev")).cast("double").as("revenue"),
-          count(lit(1)).as("n_orders"))
-        .orderBy(col("c_mktsegment"))
-    }),
-
-    // §2.4 left join with null-producing right side — utils.rs:98-107 (code 1)
-    "q04_join_left" -> ((s, d) => {
-      val c = t(s, d, "customer"); val o = t(s, d, "orders")
-      c.joinCoalesced(o.groupBy(col("o_custkey")).agg(
-          count(lit(1)).as("n_orders"),
-          sum(dec2(col("o_totalprice"))).cast("double").as("total_spend")),
-        Seq("c_custkey"), Seq("o_custkey"), JoinHow.Left)
-        .select(col("c_custkey"), col("c_name"),
-          coalesce(col("n_orders"), lit(0L)).as("n_orders"),
-          coalesce(col("total_spend"), lit(0.0)).as("total_spend"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // §2.4 semi join (code 4)
-    "q05_join_semi" -> ((s, d) => {
-      val c = t(s, d, "customer"); val o = t(s, d, "orders")
-      c.joinCoalesced(o.filter(col("o_totalprice") > lit(100000.0)),
-          Seq("c_custkey"), Seq("o_custkey"), JoinHow.Semi)
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // §2.4 anti join (code 5)
-    "q06_join_anti" -> ((s, d) => {
-      val c = t(s, d, "customer"); val o = t(s, d, "orders")
-      c.joinCoalesced(o, Seq("c_custkey"), Seq("o_custkey"), JoinHow.Anti)
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // §2.4 cross join (code 3) — small dims
-    "q07_join_cross" -> ((s, d) => {
-      val r = t(s, d, "region"); val n = t(s, d, "nation")
-      r.joinCoalesced(n, Seq(), Seq(), JoinHow.Cross)
-        .select(col("r_regionkey"), col("r_name"), col("n_nationkey"), col("n_name"))
-        .orderBy(col("r_regionkey"), col("n_nationkey"))
-    }),
-
-    // §2.7 multi-key sort + limit (top-k) — lazy.rs:99-164
-    "q08_sort_limit" -> ((s, d) => {
-      t(s, d, "orders")
-        .sortBy(Seq(("o_totalprice", true), ("o_orderkey", false)))
-        .limit(10)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    }),
-
-    // §2.3 distinct/unique (SQL-path parity)
-    "q09_distinct" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .select(col("l_returnflag"), col("l_linestatus"))
-        .unique()
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    // §2.6 expr.over(partition) — whole-partition window agg broadcast back
-    // to rows (expr.rs:994-1013)
-    "q10_window_over" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("o_custkey"))
-      t(s, d, "orders")
-        .withColumn("cust_total",
-          sum(dec2(col("o_totalprice"))).over(w).cast("double"))
-        .withColumn("cust_n", count(lit(1)).over(w))
-        .filter(col("o_totalprice") > col("cust_total") / col("cust_n"))
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-          col("cust_total"), col("cust_n"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // §2.11 if_else / is_between / cast / math — expr.rs:706-723,865-876,1103-1122
-    "q11_case_cast_math" -> ((s, d) => {
-      t(s, d, "part")
-        .select(
-          col("p_partkey"),
-          ifElse(col("p_size").isBetween(lit(10), lit(30)), lit("mid"), lit("extreme")).as("size_class"),
-          col("p_size").cast("long").as("size_l"),
-          col("p_retailprice").roundTo(0).as("price_round"),
-          abs(col("p_size") - lit(25)).as("size_dist"),
-          sqrt(col("p_size").cast("double")).as("size_sqrt"),
-          pow(col("p_size").cast("double"), lit(2.0)).as("size_sq"))
-        .orderBy(col("p_partkey"))
-    }),
-
-    // §2.11 lenient cast semantics (expr.rs:1015-1033 strict=false):
-    // overflow and unparseable input → null, matching TRY_CAST on the oracle
-    // side. The strict twin (castStrict, ANSI raise) is spec-verified in
-    // ExprSpec — an oracle can't observe a thrown error.
-    "q40_try_cast" -> ((s, d) => {
-      t(s, d, "part")
-        .select(
-          col("p_partkey"),
-          col("p_partkey").castLenient("tinyint").as("small_key"),
-          col("p_name").castLenient("double").as("name_num"),
-          concat(lit("BAD"), col("p_brand")).castLenient("date").as("bad_date"),
-          col("p_size").castLenient("smallint").as("size_small"))
-        .orderBy(col("p_partkey"))
-    }),
-
-    // §2.11 string namespace — upper/lower/len/contains/slice/extract/
-    // replace/starts/ends (expr.rs:262-499)
-    "q12_str_funcs" -> ((s, d) => {
-      t(s, d, "part")
-        .select(
-          col("p_partkey"),
-          col("p_name").str.toUppercase.as("name_upper"),
-          col("p_name").str.lenChars.as("name_len"),
-          col("p_name").str.contains("ste").as("has_ste"),
-          col("p_name").str.slice(0, 5).as("name_head"),
-          col("p_brand").str.extract("Brand#(\\d+)", 1).as("brand_num"),
-          col("p_type").str.replaceAll(" ", "_", useRegex = false).as("type_snake"),
-          col("p_type").str.startsWith("STANDARD").as("is_std"),
-          col("p_type").str.endsWith("TIN").as("is_tin"))
-        .orderBy(col("p_partkey"))
-    }),
-
-    // §2.11 temporal namespace — year/month/day/hour/weekday/ordinal/truncate
-    // (expr.rs:247-257,568-579)
-    "q13_dt_funcs" -> ((s, d) => {
-      t(s, d, "events")
-        .select(
-          col("event_id"),
-          col("ts").dt.year.as("y"),
-          col("ts").dt.month.as("mo"),
-          col("ts").dt.day.as("dom"),
-          col("ts").dt.ordinalDay.as("doy"),
-          col("ts").dt.weekday.as("wd"),
-          col("ts").dt.hour.as("h"),
-          col("ts").dt.minute.as("mi"),
-          col("ts").dt.truncate("1h").cast("timestamp_ntz").as("ts_hour"),
-          col("ts").dt.timestamp("us").as("epoch_us"))
-        .orderBy(col("event_id"))
-    }),
-
-    // §2.3 explode + §2.11 str.split (expr.rs:374-386, lazy.rs:275-309)
-    "q14_split_explode" -> ((s, d) => {
-      t(s, d, "documents")
-        .filter(col("doc_id") < lit(50L))
-        .select(col("doc_id"), col("text").str.split(" ").as("words"))
-        .explodeCol("words")
-        .groupBy(col("words")).agg(count(lit(1)).as("n"))
-        .orderBy(col("words"))
-    }),
-
-    // §2.8 concat diagonal (unionByName w/ null-fill) — lazy.rs:450
-    "q15_concat_diagonal" -> ((s, d) => {
-      val a = t(s, d, "customer").select(col("c_custkey").as("key"), col("c_name").as("name"))
-      val b = t(s, d, "supplier").select(col("s_suppkey").as("key"), col("s_acctbal").as("bal"))
-      a.concatDiagonal(b)
-        .orderBy(col("key"), col("name"), col("bal"))
-    }),
-
-    // §2.9 unpivot/melt — lazy.rs:345-406
-    "q16_unpivot" -> ((s, d) => {
-      t(s, d, "part")
-        .select(col("p_partkey"), col("p_size").cast("double").as("size"),
-          col("p_retailprice").as("retail"))
-        .unpivotOn(Seq("p_partkey"), Seq("size", "retail"), "variable", "value")
-        .orderBy(col("p_partkey"), col("variable"))
-    }),
-
-    // §2.9 pivot — eager.rs:553-605 (sum agg)
-    "q17_pivot" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .pivotOn(Seq("l_returnflag"), "l_linestatus", "l_quantity", "sum")
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // §2.11 fill_null / coalesce + drop_nulls interplay — expr.rs:242
-    "q18_fill_null" -> ((s, d) => {
-      val c = t(s, d, "customer"); val o = t(s, d, "orders")
-      c.joinCoalesced(
-          o.groupBy(col("o_custkey")).agg(max(col("o_totalprice")).as("max_price")),
-          Seq("c_custkey"), Seq("o_custkey"), JoinHow.Left)
-        .select(col("c_custkey"),
-          col("max_price").fillNull(lit(-1.0)).as("max_price_filled"),
-          col("max_price").isNull.as("was_null"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // §2.5 median/quantile — expr.rs:1147-1176 (linear interpolation =
-    // DuckDB quantile_cont; quantities are integers so exact)
-    "q19_quantile" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          median(col("l_quantity")).as("med_qty"),
-          percentile(col("l_quantity"), lit(0.25)).as("q25_qty"),
-          percentile(col("l_quantity"), lit(0.9)).as("q90_qty"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // §2.6 shift/diff over ordered window — expr.rs:1035-1062
-    "q20_shift_diff" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      t(s, d, "events")
-        .withColumn("prev_value", lag(col("value"), 1).over(w))
-        .withColumn("value_diff",
-          (dec4(col("value")) - dec4(lag(col("value"), 1).over(w))).cast("double"))
-        .select(col("event_id"), col("user_id"), col("value"), col("prev_value"), col("value_diff"))
-        .orderBy(col("event_id"))
-    }),
-
-    // §2.4 as-of join BACKWARD with by-groups — lazy.rs:501-569; the
-    // union+window composition (one shuffle, no range explosion)
-    "q21_asof_backward" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("value").as("click_value"))
-        .withColumn("click_ts", col("ts"))
-      graft.operators.AsofJoin.join(p, c, "ts", "ts", Seq(("user_id", "user_id")))
-        .orderBy(col("event_id"))
-    }),
-
-    // §2.4 as-of join with tolerance — lazy.rs:533-547
-    "q22_asof_tolerance" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("value").as("click_value"))
-      graft.operators.AsofJoin.join(p, c, "ts", "ts", Seq(("user_id", "user_id")),
-          tolerance = Some("1h"))
-        .orderBy(col("event_id"))
-    }),
-
-    // §2.4 as-of join FORWARD — strategy map lazy.rs:526-531
-    "q23_asof_forward" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val c = ev.filter(col("event_type") === "error")
-        .select(col("user_id"), col("ts"), col("value").as("err_value"))
-      graft.operators.AsofJoin.join(p, c, "ts", "ts", Seq(("user_id", "user_id")),
-          strategy = graft.operators.AsofJoin.Forward)
-        .orderBy(col("event_id"))
-    }),
-
-    // §2.4 as-of join NEAREST (tie → backward, Polars semantics)
-    "q24_asof_nearest" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("value").as("near_value"))
-      graft.operators.AsofJoin.join(p, c, "ts", "ts", Seq(("user_id", "user_id")),
-          strategy = graft.operators.AsofJoin.Nearest)
-        .orderBy(col("event_id"))
-    }),
-
-    // §2.5 group_by_dynamic: 6h tumbling windows by event_type —
-    // lazy.rs:186-273 → Spark window() expression
-    "q25_group_by_dynamic" -> ((s, d) => {
-      graft.operators.DynamicGroupBy(t(s, d, "events"), "ts", every = "6h",
-          by = Seq("event_type"))(
-          sum(dec4(col("value"))).cast("double").as("sum_value"),
-          count(lit(1)).as("n"))
-        .withColumn("ts", col("ts").cast("timestamp_ntz"))
-        .orderBy(col("ts"), col("event_type"))
-    }),
-
-    // §2.6 rolling fixed-row window (rowsBetween) — expr.rs:102-141
-    "q26_rolling_rows" -> ((s, d) => {
-      val spec = graft.operators.Rolling.fixedSpec("7i",
-        Seq(col("o_orderdate"), col("o_orderkey")), Seq(col("o_custkey")))
-      t(s, d, "orders")
-        .withColumn("roll_sum", sum(dec2(col("o_totalprice"))).over(spec).cast("double"))
-        .withColumn("roll_n", count(lit(1)).over(spec))
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-          col("roll_sum"), col("roll_n"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // §2.6 rolling time-based window (rangeBetween, closed=Both) —
-    // expr.rs:151-191
-    "q27_rolling_time" -> ((s, d) => {
-      val spec = graft.operators.Rolling.timeSpec("3d", col("ts"),
-        Seq(col("user_id")), graft.operators.Rolling.Both)
-      t(s, d, "events")
-        .withColumn("roll_3d_sum", sum(dec4(col("value"))).over(spec).cast("double"))
-        .select(col("event_id"), col("user_id"), col("value"), col("roll_3d_sum"))
-        .orderBy(col("event_id"))
-    }),
-
-    // §2.6 forward/backward fill — expr.rs:1066-1101
-    "q28_fill_directional" -> ((s, d) => {
-      val masked = when(col("event_type") =!= "error", col("value"))
-      t(s, d, "events")
-        .withColumn("value_masked", masked)
-        .withColumn("value_ffill", graft.operators.Fill.forwardFill(
-          masked, Seq(col("ts"), col("event_id")), Seq(col("user_id"))))
-        .withColumn("value_bfill", graft.operators.Fill.backwardFill(
-          masked, Seq(col("ts"), col("event_id")), Seq(col("user_id"))))
-        .select(col("event_id"), col("user_id"), col("value_masked"),
-          col("value_ffill"), col("value_bfill"))
-        .orderBy(col("event_id"))
-    }),
-
-    // §2.4 as-of WITHOUT by-keys (lazy.rs:501-569 allows it) — exercises the
-    // range-partitioned boundary-carry path, oracle'd by DuckDB global ASOF.
-    // The right side is pre-deduped to unique ts (max value) so ties are
-    // deterministic on both engines.
-    "q41_asof_unkeyed" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("ts"))
-      val c = ev.filter(col("event_type") === "click")
-        .groupBy(col("ts"))
-        .agg(max(dec4(col("value"))).cast("double").as("click_value"))
-      graft.operators.AsofJoin.join(p, c, "ts", "ts")
-        .orderBy(col("event_id"))
-    }),
-
-    // §2.6 unkeyed whole-frame forward fill — Fill.fillGlobal's
-    // range-partition + broadcast-carry plan vs a DuckDB global window.
-    "q42_fill_global" -> ((s, d) => {
-      val ev = t(s, d, "events")
-        .withColumn("value_ffill", when(col("event_type") =!= "error", col("value")))
-      graft.operators.Fill.fillGlobal(ev, Seq("value_ffill"), Seq(col("ts"), col("event_id")))
-        .select(col("event_id"), col("value_ffill"))
-        .orderBy(col("event_id"))
-    }),
-
-    // §2.6 UNKEYED whole-frame rolling — the boundary-context scale path
-    // (Rolling.fixedGlobal / timeGlobal) vs DuckDB global window frames.
-    "q45_rolling_global_rows" -> ((s, d) => {
-      graft.operators.Rolling.fixedGlobal(
-          t(s, d, "orders"), "25i", Seq(col("o_orderkey")),
-          Seq("roll_sum" -> (w => sum(dec2(col("o_totalprice"))).over(w).cast("double")),
-              "roll_n" -> (w => count(lit(1)).over(w))))
-        .select(col("o_orderkey"), col("roll_sum"), col("roll_n"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    "q46_rolling_global_time" -> ((s, d) => {
-      // diffSums/diffCounts: O(n) running-difference plan — the sliding
-      // range frame would rebuild its buffer per row (O(n·w): 141 s at
-      // sf0.1, this ~2 s). Both subtractable aggregates go through the
-      // two-incremental-frames path (round-11 directive 6: the count face
-      // is oracle-graded here, not just grammar-33 fuzzed).
-      graft.operators.Rolling.timeGlobal(t(s, d, "events"), "3d", col("ts"),
-          diffSums = Seq("roll_sum" -> dec4(col("value"))),
-          diffCounts = Seq("roll_n" -> lit(1)))
-        .select(col("event_id"), col("roll_sum").cast("double").as("roll_sum"),
-          col("roll_n"))
-        .orderBy(col("event_id"))
-    }),
-
-    // §2.5 calendar-true monthly group_by_dynamic ("1mo" = real month
-    // boundaries, not 30-day grids) vs DuckDB date_trunc('month').
-    "q43_calendar_month" -> ((s, d) => {
-      graft.operators.DynamicGroupBy(t(s, d, "events"), "ts", every = "1mo",
-          by = Seq("event_type"))(
-          sum(dec4(col("value"))).cast("double").as("sum_value"),
-          count(lit(1)).as("n"))
-        .withColumn("ts", col("ts").cast("timestamp_ntz"))
-        .orderBy(col("ts"), col("event_type"))
-    }),
-
-    // §2.11 calendar-true offset_by / truncate (mo/q units) — DuckDB's
-    // INTERVAL month arithmetic clamps day-of-month exactly like Polars'
-    // offset_by, so both sides are deterministic and comparable.
-    "q44_calendar_offset" -> ((s, d) => {
-      t(s, d, "orders")
-        .select(col("o_orderkey"),
-          col("o_orderdate").cast("timestamp").as("ts0"))
-        .select(col("o_orderkey"),
-          col("ts0").dt.offsetBy("1mo").cast("timestamp_ntz").as("plus_1mo"),
-          col("ts0").dt.offsetBy("1q").cast("timestamp_ntz").as("plus_1q"),
-          col("ts0").dt.offsetBy("-1y").cast("timestamp_ntz").as("minus_1y"),
-          col("ts0").dt.offsetBy("1mo2d").cast("timestamp_ntz").as("plus_mixed"),
-          col("ts0").dt.truncate("1mo").cast("timestamp_ntz").as("trunc_mo"),
-          col("ts0").dt.truncate("1q").cast("timestamp_ntz").as("trunc_q"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // ---- training-data pipeline operators (driver north-star extensions) ----
-
-    // exact dedup: deterministic keep-first per key group
-    "qd01_dedup_exact" -> ((s, d) => {
-      graft.dedup.Dedup.exact(t(s, d, "documents"), Seq("lang", "source"), "doc_id")
-        .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // fingerprint dedup: count distinct normalized-text fingerprints per lang
-    // (oracle counts distinct normalized text — equal iff no 64-bit collisions)
-    "qd02_fingerprint" -> ((s, d) => {
-      t(s, d, "documents")
-        .groupBy(col("lang"))
-        .agg(countDistinct(graft.functions.TextFunctions.fingerprint(col("text"))).as("n_fp"),
-          count(lit(1)).as("n_docs"))
-        .orderBy(col("lang"))
-    }),
-
-    // exact n-gram Jaccard near-dup pairs (5-gram shingles, tau=0.5)
-    "qd03_ngram_jaccard" -> ((s, d) => {
-      graft.dedup.Dedup.ngramJaccardPairs(t(s, d, "documents"), "doc_id", "text",
-          shingleK = 5, threshold = 0.5)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // MinHash LSH near-dup pairs, emitted as a driver-checkable verdict
-    // (same pattern as the qs02-qs04 recall contracts): the query verifies
-    // its own pairs against the EXACT prefix-filtered Jaccard join —
-    // precision (every found pair really has J >= 0.5; measured min 0.857
-    // across SFs, the synthetic near-dups are strong) and recall (every
-    // exact pair at J >= 0.7 is found; 32 bands x 4 rows misses such a pair
-    // with p ~ 2e-4, measured 0 missed). The raw pair lists stay pinned by
-    // the Chernoff-band ScalaTest spec.
-    "qd04_minhash_pairs" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val D = graft.dedup.Dedup
-      val mh = D.minhashPairs(docs, "doc_id", "text",
-          numHashes = 128, bands = 32, shingleK = 5, threshold = 0.5)
-        .select(col("id_a"), col("id_b"))
-      val exact = D.ngramJaccardPairsPrefix(docs, "doc_id", "text",
-        shingleK = 5, threshold = 0.5)
-      val falsePos = mh.join(exact.select(col("id_a"), col("id_b")),
-        Seq("id_a", "id_b"), "left_anti")
-      val missedHi = exact.filter(col("jaccard") >= 0.7)
-        .select(col("id_a"), col("id_b"))
-        .join(mh, Seq("id_a", "id_b"), "left_anti")
-      mh.agg(count(lit(1)).as("__n"))
-        .crossJoin(falsePos.agg(count(lit(1)).as("__fp")))
-        .crossJoin(missedHi.agg(count(lit(1)).as("__miss")))
-        .select((col("__n") >= 1).as("found_pairs"),
-          (col("__fp") === 0).as("precision_ok"),
-          (col("__miss") === 0).as("recall_ok"))
-    }),
-
-    // SimHash near-dup pairs (4-chunk pigeonhole blocking, hamming <= 3),
-    // verdict-emitting: SimHash approximates token-FREQUENCY similarity
-    // (not shingle overlap), so the verification metric is token-multiset
-    // cosine — every found pair must clear 0.6 (measured min 0.77/0.78 at
-    // sf0.001/sf0.01). Hamming/monotonicity behavior stays spec-pinned.
-    "qd05_simhash_pairs" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val T = graft.functions.TextFunctions
-      val pairs = graft.dedup.Dedup.simhashPairs(docs, "doc_id", "text",
-          chunks = 4, maxHamming = 3)
-        .select(col("id_a"), col("id_b"))
-      val tf = docs.select(col("doc_id"), explode(T.tokens(col("text"))).as("w"))
-        .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).cast("double").as("c"))
-      val norms = tf.groupBy(col("doc_id")).agg(sum(col("c") * col("c")).as("n2"))
-      val dots = pairs
-        .join(tf.select(col("doc_id").as("id_a"), col("w"), col("c").as("ca")), Seq("id_a"))
-        .join(tf.select(col("doc_id").as("id_b"), col("w"), col("c").as("cb")), Seq("id_b", "w"))
-        .groupBy(col("id_a"), col("id_b")).agg(sum(col("ca") * col("cb")).as("dot"))
-      // precision as a RATE, not min-over-pairs (r14): SimHash is a
-      // probabilistic blocker, so as the corpus (and pair count) grows an
-      // occasional sub-threshold candidate is EXPECTED — a min() verdict
-      // fails by construction at scale while saying nothing about the
-      // operator. Measured cos>=0.6 rates: 1.0 / 1.0 / 0.998 at
-      // sf0.001/0.01/0.1 (525 pairs, one at 0.543); floor 0.95 with margin.
-      pairs
-        .join(dots, Seq("id_a", "id_b"), "left")
-        .join(norms.select(col("doc_id").as("id_a"), col("n2").as("na")), "id_a")
-        .join(norms.select(col("doc_id").as("id_b"), col("n2").as("nb")), "id_b")
-        .select((coalesce(col("dot"), lit(0.0)) / sqrt(col("na") * col("nb"))).as("__cos"))
-        .agg(count(lit(1)).as("__n"),
-          avg(when(col("__cos") >= 0.6, 1.0).otherwise(0.0)).as("__rate"))
-        .select((col("__n") >= 1).as("found_pairs"),
-          (col("__rate") >= 0.95).as("precision_ok"))
-    }),
-
-    // heuristic language ID (stopword scoring; oracle generated from the
-    // same dictionaries — see langIdOracleSql)
-    "qd06_langid" -> ((s, d) => {
-      t(s, d, "documents")
-        .select(col("doc_id"), col("lang"),
-          graft.functions.TextFunctions.langId(col("text")).as("lang_pred"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // token counting: whitespace + BPE-ish regex pre-tokenizer
-    "qd07_token_stats" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          T.tokenCount(col("text")).cast("long").as("n_tokens"),
-          T.bpeTokenCount(col("text")).cast("long").as("n_bpe"),
-          T.nChars(col("text")).cast("long").as("n_chars"),
-          T.meanTokenLen(col("text")).as("mean_tok_len"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // quality scoring: length/alnum/stopword signals + composite
-    "qd08_quality" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          T.alnumRatio(col("text")).as("alnum_ratio"),
-          T.stopwordRatio(col("text")).as("stop_ratio"),
-          T.qualityScore(col("text")).as("quality"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // embedding near-dup pairs: exact cosine >= 0.35 within label blocks
-    "qd09_embedding_dedup" -> ((s, d) => {
-      graft.dedup.Dedup.embeddingCosinePairs(t(s, d, "embeddings"), "vec_id",
-          "embedding", "label", threshold = 0.35)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // duplicate-cluster resolution: connected components (iterative min-label
-    // propagation) over the exact-Jaccard near-dup graph
-    "qd10_dedup_components" -> ((s, d) => {
-      val pairs = graft.dedup.Dedup.ngramJaccardPairs(t(s, d, "documents"),
-        "doc_id", "text", shingleK = 5, threshold = 0.5)
-      graft.dedup.ConnectedComponents.components(pairs)
-        .orderBy(col("id"))
-    }),
-
-    // Gopher-style repetition signals: duplicate-line ratios + top-n-gram
-    // count shares, and the combined keep/drop gate
-    "qd11_repetition" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          T.dupLineFraction(col("text")).as("dup_line_frac"),
-          T.dupLineCharFraction(col("text")).as("dup_line_char_frac"),
-          T.topNgramShare(col("text"), 2).as("top2_share"),
-          T.topNgramShare(col("text"), 3).as("top3_share"),
-          T.repetitionOk(col("text")).as("rep_ok"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // URL canonicalization + crawl-style URL dedup: messy URLs are built
-    // deterministically from (source, doc_id) so both engines normalize the
-    // same inputs — mixed-case host, default port, www, tracking params,
-    // unsorted query, fragment, trailing slash all get canonicalized, then
-    // the first doc per canonical URL wins
-    "qd12_url_dedup" -> ((s, d) => {
-      val U = graft.functions.UrlFunctions
-      val docs = t(s, d, "documents").withColumn("url",
-        concat(lit("https://WWW."), col("source"), lit(".Example.COM:443/Path/"),
-          (col("doc_id") % 7).cast("string"), lit("/?b=2&utm_source=x&a=1#frag")))
-      U.dedupByUrl(docs, "url", "doc_id")
-        .select(col("doc_id"), col("source"),
-          U.normalize(col("url")).as("url_norm"),
-          U.host(col("url")).as("host"),
-          U.domain(col("url")).as("domain"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // PII scrubbing: synthetic emails/IPs/phones appended deterministically
-    // per row (documents carry none), then redacted + counted. Phone digit
-    // counts straddle the 7-digit minimum so the boundary is exercised.
-    "qd13_pii_redact" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      val withPii = t(s, d, "documents").withColumn("pii_text",
-        concat(col("text"), lit(" contact user"), col("doc_id"),
-          lit("@mail.example.com ip 10.0.0."), (col("doc_id") % 256).cast("string"),
-          lit(" tel +1555"), (col("doc_id") % 10000).cast("string")))
-      withPii.select(col("doc_id"),
-          T.redactPii(col("pii_text")).as("redacted"),
-          T.matchCount(col("pii_text"), T.EmailRe).cast("long").as("n_emails"),
-          T.matchCount(col("pii_text"), T.Ipv4Re).cast("long").as("n_ips"),
-          T.matchCount(col("pii_text"), T.PhoneRe).cast("long").as("n_phones"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // corpus vocabulary: distributed word-count with a frequency floor
-    "qd14_vocab" -> ((s, d) => {
-      graft.functions.TextFunctions.vocab(t(s, d, "documents"), "text", minCount = 50L)
-        .orderBy(col("n").desc, col("token"))
-    }),
-
-    // token-budget corpus cap: keep documents (in doc_id order) until each
-    // language's cumulative token budget is reached — the standard way a
-    // training mix caps a source. One window per lang partition; the
-    // cumulative sum is integer-exact so the cut point is deterministic.
-    "qd15_token_budget" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, d, "documents")
-        .withColumn("n_tokens", T.tokenCount(col("text")).cast("long"))
-        .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
-        .filter(col("cum_tokens") <= 10000L)
-        .select(col("doc_id"), col("lang"), col("n_tokens"), col("cum_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // prefix-filtered exact Jaccard (AllPairs/PPJoin candidate generation):
-    // same answer as qd03 — the oracle is shared — but candidates join only
-    // on each doc's rarest shingles, the 100 TB-safe plan when boilerplate
-    // n-grams make the shingle-keyed self-join fan out quadratically
-    "qd16_jaccard_prefix" -> ((s, d) => {
-      graft.dedup.Dedup.ngramJaccardPairsPrefix(t(s, d, "documents"), "doc_id", "text",
-          shingleK = 5, threshold = 0.5)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // deterministic hash split + stratified subsampling: content-keyed
-    // buckets from exact modular arithmetic (reproducible across engines,
-    // stable under retries, zero shuffle), 80/10/10 split, then per-lang
-    // keep rates en=500‰ / zh=250‰ / rest=1000‰ on an independent salt
-    "qd17_hash_split" -> ((s, d) => {
-      val P = graft.prep.Prep
-      t(s, d, "documents")
-        .withColumn("bucket", P.hashBucket(col("doc_id"), 1000))
-        .withColumn("split", P.split(col("doc_id"), trainPm = 800, validPm = 100))
-        .filter(P.stratifiedKeep(col("doc_id"), col("lang"),
-          Map("en" -> 500, "zh" -> 250), defaultPm = 1000))
-        .select(col("doc_id"), col("lang"), col("bucket"), col("split"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // benchmark decontamination: docs sharing any 5-gram shingle with the
-    // eval subset (doc_id % 97 == 0) are flagged; the benchmark shingle set
-    // is broadcast so the corpus is never shuffled
-    "qd18_decontaminate" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val bench = docs.filter(col("doc_id") % 97 === 0)
-      graft.prep.Prep.contamination(docs, bench, "doc_id", "text",
-          shingleK = 5, minShared = 1)
-        .select(col("doc_id"), col("lang"), col("n_shared"), col("contaminated"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // context-window chunking: 64-token chunks, stride 48 (16-token
-    // overlap) — narrow map + generator, no shuffle
-    "qd19_chunk" -> ((s, d) => {
-      graft.prep.Prep.chunk(t(s, d, "documents"), "doc_id", "text",
-          chunkSize = 64, stride = 48)
-        .orderBy(col("doc_id"), col("chunk_id"))
-    }),
-
-    // sequence packing (concat-then-chunk): per-lang doc_id-ordered token
-    // stream cut into 2048-token training sequences; each doc reports the
-    // sequence id + offset where it begins
-    "qd20_pack" -> ((s, d) => {
-      graft.prep.Prep.pack(t(s, d, "documents"), "lang", "doc_id", "text",
-          budget = 2048L)
-        .select(col("doc_id"), col("lang"), col("n_tokens"),
-          col("seq_id"), col("seq_offset"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // FLAGSHIP training-data-prep pipeline: language-ID gate (prediction
-    // must agree with the label) → quality gate → Gopher repetition gate →
-    // exact fingerprint dedup (keep-first) → per-(lang, source) corpus
-    // stats. Every stage is deterministic, so the whole pipeline is
-    // oracle-checkable end-to-end — the way single-op tests can't check
-    // stage interactions. Aggregates are chosen order-independent
-    // (count / integer sum / max) so distributed execution is bit-stable.
-    "q51_pipeline_data_prep" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      val scored = t(s, d, "documents").select(
-        col("doc_id"), col("lang"), col("source"), col("text"),
-        T.langId(col("text")).as("lang_pred"),
-        T.qualityScore(col("text")).as("quality"),
-        T.tokenCount(col("text")).as("n_tokens"))
-      val kept = scored.filter(col("lang_pred") === col("lang") &&
-        col("quality") >= 0.5 && T.repetitionOk(col("text")))
-      graft.dedup.Dedup.byFingerprint(kept, "text", "doc_id")
-        .groupBy(col("lang_pred"), col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("total_tokens"),
-          max(col("quality")).as("max_quality"))
-        .orderBy(col("lang_pred"), col("source"))
-    }),
-
-    // data mixing: per-lang keep rates hit target token shares within a
-    // 10k-token budget (tiny driver-side rate table, zero-shuffle keep
-    // filter); per-lang kept totals are the oracle-checked output
-    "qd22_mixture" -> ((s, d) => {
-      val P = graft.prep.Prep
-      val T = graft.functions.TextFunctions
-      val docs = t(s, d, "documents")
-        .withColumn("n_tokens", T.tokenCount(col("text")).cast("long"))
-      val rates = P.mixtureRatesPm(docs, "lang", "n_tokens",
-        Map("en" -> 0.4, "de" -> 0.2, "es" -> 0.15, "fr" -> 0.15, "zh" -> 0.1),
-        tokenBudget = 10000L)
-      docs.filter(P.stratifiedKeep(col("doc_id"), col("lang"), rates, defaultPm = 0))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
-        .orderBy(col("lang"))
-    }),
-
-    // temperature mixture (p_i ∝ n_i^0.5): sqrt-share rates derived from the
-    // data itself, then the same deterministic stratified keep as qd22 —
-    // upweights the low-token languages relative to proportional sampling
-    "qd42_temperature_mixture" -> ((s, d) => {
-      val P = graft.prep.Prep
-      val T = graft.functions.TextFunctions
-      val docs = t(s, d, "documents")
-        .withColumn("n_tokens", T.tokenCount(col("text")).cast("long"))
-      val shares = P.temperatureShares(docs, "lang", "n_tokens", alpha = 0.5)
-      val rates = P.mixtureRatesPm(docs, "lang", "n_tokens", shares, tokenBudget = 10000L)
-      docs.filter(P.stratifiedKeep(col("doc_id"), col("lang"), rates, defaultPm = 0))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
-        .orderBy(col("lang"))
-    }),
-
-    // HTML → text extraction (the crawl step BEFORE every quality gate):
-    // each doc is wrapped in a deterministic page — invisible script/style
-    // (with entity-bait contents), a comment, tags, and the core named
-    // entities — and htmlToText must recover exactly text + decoded suffix.
-    // The regex chain is RE2-portable, so the oracle runs the SAME chain
-    "qd43_html_extract" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      val html = concat(
-        lit("<html><head><style>p{color:red}</style>" +
-          "<script>var i=0; if (i<1 && true) { i = 2; }</script></head><body><h1>"),
-        col("text"),
-        lit("</h1><!-- hidden\ncomment --><p>Tom &amp; Jerry &lt;3 " +
-          "&quot;quoted&quot; &#39;s&#39;&nbsp;fin.</p></body></html>"))
-      t(s, d, "documents")
-        .select(col("doc_id"), T.htmlToText(html).as("extracted"))
-        .withColumn("n_chars", length(col("extracted")).cast("long"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Gopher quality rules (Rae et al. 2021 §A1.1): the flat corpus gets
-    // deterministic structure — 6-word lines, "- " bullets on (i+doc_id)%5
-    // lines, "..." vs "." endings on %7, " the"/" of" stopword injection on
-    // %3/%4, " #" symbols on %11 — then gopherQuality computes the full
-    // signal set and page verdict, every rule mirrored in the oracle
-    "qd44_gopher_quality" -> ((s, d) =>
-      qd44Run(qd44Structured(t(s, d, "documents")))),
-
-    // FOURTH FLAGSHIP — crawl-to-corpus: deterministic HTML pages (6-word
-    // <p> lines, javascript bait on i%7, unpunctuated lines on (i+doc_id)%3,
-    // '{'-poison pages on doc_id%13) → htmlToText (block tags become line
-    // structure) → C4 line/page clean → Gopher quality gate (relaxed knobs
-    // for the short synthetic docs) → leading-3-token boilerplate dedup →
-    // 32-token chunking → per-lang corpus stats. Every stage oracle-mirrored
-    "q54_pipeline_crawl" -> ((s, d) =>
-      q54Run(q54Html(t(s, d, "documents")))),
-
-    // §2.11 dt.to_string across the specifier space Spark's date_format
-    // cannot express: ISO week fields compile to expressions (Spark bans
-    // Java week-based pattern letters outright), composites expand, literal
-    // runs quote — DuckDB's independent C-style strftime is the oracle
-    "q55_strftime_iso" -> ((s, d) => {
-      t(s, d, "events")
-        .select(col("event_id"),
-          col("ts").dt.toString("%G-W%V-%u").as("iso_week_date"),
-          col("ts").dt.toString("%Y-%m-%dT%H:%M:%S.%f").as("iso_ts"),
-          col("ts").dt.toString("%A, %B %d (%a %b) day %j").as("verbose"),
-          col("ts").dt.toString("%I:%M %p").as("clock12"),
-          col("ts").dt.toString("%w|%u").as("weekday_conventions"))
-        .orderBy(col("event_id"))
-    }),
-
-    // §2.1/2.2 CSV round-trip, driver-graded like q47's JDBC one: write a
-    // lineitem slice (quoted comment strings, doubles, timestamps) to CSV,
-    // scan it back with the explicit schema, compare against the parquet
-    // truth. Java's shortest-round-trip double printing makes the numeric
-    // cells bit-exact; the oracle never sees the CSV
-    "q56_csv_roundtrip" -> ((s, d) => {
-      val dir = scratchDir("q56")
-      val src = t(s, d, "lineitem").filter(col("l_orderkey") % 7 === 0)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-          col("l_returnflag"),
-          // synthesized comma+quote payload: the column that makes the CSV
-          // writer actually quote and escape
-          concat(col("l_returnflag"), lit(", \""), col("l_linestatus"), lit("\""))
-            .as("quoted_note"),
-          col("l_shipdate"))
-      graft.sources.IO.sinkCsv(src, dir)
-      graft.sources.IO.scanCsv(s, dir, Some(src.schema))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    // §2.1/2.2 Arrow-IPC (Feather) round-trip through the custom
-    // batch-granular reader/streamed writer
-    "q57_ipc_roundtrip" -> ((s, d) => {
-      val dir = scratchDir("q57")
-      val path = dir + "/events.arrow"
-      val src = t(s, d, "events").filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      graft.sources.ArrowIpc.write(src, path)
-      graft.sources.ArrowIpc.read(s, path).orderBy(col("event_id"))
-    }),
-
-    // §2.1/2.2 NDJSON round-trip (schema re-asserted after inference:
-    // JSON has no int32, so inferred longs cast back to the parquet types)
-    "q58_ndjson_roundtrip" -> ((s, d) => {
-      val dir = scratchDir("q58")
-      val src = t(s, d, "part").filter(col("p_partkey") % 3 === 0)
-        .select(col("p_partkey"), col("p_name"), col("p_retailprice"), col("p_size"))
-      graft.sources.IO.sinkJson(src, dir)
-      val back = graft.sources.IO.scanNdjson(s, dir)
-      back.select(src.schema.fields.map(f => col(f.name).cast(f.dataType)).toIndexedSeq: _*)
-        .orderBy(col("p_partkey"))
-    }),
-
-    // §2.14 SQL context: register frames, run ANSI SQL through the facade —
-    // the same text DuckDB executes as the oracle (join + grouped agg +
-    // having + order, exercising the whole register/execute path)
-    "q59_sql_context" -> ((s, d) => {
-      val ctx = graft.api.SqlContext(s)
-        .register("g59_orders", t(s, d, "orders"))
-        .register("g59_customer", t(s, d, "customer"))
-      val out = ctx.execute(
-        """SELECT c.c_mktsegment AS seg, o.o_orderpriority AS prio,
-          |  count(*) AS n,
-          |  CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-          |FROM g59_orders o JOIN g59_customer c ON o.o_custkey = c.c_custkey
-          |WHERE o.o_orderstatus <> 'P'
-          |GROUP BY c.c_mktsegment, o.o_orderpriority
-          |HAVING count(*) > 5
-          |ORDER BY seg, prio""".stripMargin)
-      // the plan is resolved at execute(); drop the views so repeated
-      // invocations don't leak catalog entries into the long-lived session
-      ctx.unregister("g59_orders").unregister("g59_customer")
-      out
-    }),
-
-    // §1.1 Series: the eager single-column surface driven end to end —
-    // fromColumn → vectorized arith/abs/sqrt chain → toFrame. The result is
-    // a keyless single column; the driver compare sorts rows, so the value
-    // multiset is the contract
-    "q60_series_ops" -> ((s, d) => {
-      val ser = graft.api.Series.fromColumn("l_quantity", t(s, d, "lineitem"))
-      ((ser * 2.0) - 5.0).abs.sqrt.rename("sv").toFrame
-    }),
-
-    // single-stream packing via the boundary-carry scale path (no grouped
-    // window): results are partition-count-independent, so a plain global
-    // window is the oracle
-    "qd23_pack_global" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      graft.prep.Prep.packGlobal(
-          t(s, d, "documents")
-            .withColumn("n_tokens", T.tokenCount(col("text")).cast("long")),
-          Seq("doc_id"), "n_tokens", budget = 1024L)
-        .select(col("doc_id"), col("n_tokens"), col("seq_id"), col("seq_offset"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // phrase-blocklist page gate (C4 "bad words"): deterministic phrase
-    // injections (mixed case on %7, nested phrase pair on %13 — "casino
-    // bonus" must count BOTH itself and its suffix "bonus"), hits counted
-    // by one Aho-Corasick pass, mirrored by per-phrase contains in SQL
-    "qd48_blocklist" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      val dirty = concat(col("text"),
-        when(col("doc_id") % 7 === 0, lit(" Bad Phrase One")).otherwise(lit("")),
-        when(col("doc_id") % 11 === 0, lit(" some badword here")).otherwise(lit("")),
-        when(col("doc_id") % 13 === 0, lit(" casino bonus spin")).otherwise(lit("")))
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          T.blocklistHits(dirty, SparkEntry.DemoBlocklist).as("hits"))
-        .withColumn("keep", col("hits") === 0)
-        .orderBy(col("doc_id"))
-    }),
-
-    // attention-mask spans over the packed corpus: one row per (sequence,
-    // doc fragment), straddling docs split at every budget boundary —
-    // narrow generator over qd23's packing, zero extra shuffle
-    "qd47_pack_spans" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      graft.prep.Prep.packSpans(
-          graft.prep.Prep.packGlobal(
-            t(s, d, "documents")
-              .withColumn("n_tokens", T.tokenCount(col("text")).cast("long")),
-            Seq("doc_id"), "n_tokens", budget = 1024L),
-          budget = 1024L, idCol = "doc_id")
-        .orderBy(col("doc_id"), col("seq_id"))
-    }),
-
-    // near-dup decontamination (MinHash-banded vs broadcast benchmark) —
-    // sketch-based, no SQL oracle; rows-only + recall property in PrepSpec
-    // verdict-emitting (the per-doc minhash estimates are hash-valued, so
-    // the contract verifies the CLASSIFICATION against the exact shingle
-    // jaccard vs the benchmark): soundness — every flagged doc really
-    // shares >= 0.6 exact max-J with some bench doc (the flagged set is the
-    // bench docs themselves, J = 1, plus their strong near-dups, J >= 0.86);
-    // completeness — every doc at exact max-J >= 0.9 is flagged (banded
-    // minhash misses such a doc with p ~ 1e-4; measured clean separation:
-    // unflagged docs top out at exact 0.009)
-    "qd21_decontaminate_neardup" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val bench = docs.filter(col("doc_id") % 97 === 0)
-      val flags = graft.prep.Prep.contaminationNearDup(docs, bench, "doc_id", "text",
-          numHashes = 128, bands = 32, shingleK = 5, threshold = 0.8)
-        .select(col("doc_id"), col("contaminated"))
-      // exact per-doc max jaccard vs bench: bench shingle sets broadcast
-      // (the small side by construction), corpus stays narrow until the
-      // per-doc max agg
-      val bsh = broadcast(bench.select(col("doc_id").as("__bid"),
-        graft.dedup.Dedup.distinctShingleHashes(col("text"), 5).as("__bs"),
-        size(graft.dedup.Dedup.distinctShingleHashes(col("text"), 5)).as("__bn")))
-      val exactJ = docs.select(col("doc_id"),
-          graft.dedup.Dedup.distinctShingleHashes(col("text"), 5).as("__cs"))
-        .withColumn("__cn", size(col("__cs")))
-        .crossJoin(bsh)
-        .withColumn("__i", size(array_intersect(col("__cs"), col("__bs"))))
-        .withColumn("__j", when(col("__cn") + col("__bn") - col("__i") > 0,
-          col("__i").cast("double") / (col("__cn") + col("__bn") - col("__i")))
-          .otherwise(lit(0.0)))
-        .groupBy(col("doc_id")).agg(max(col("__j")).as("__maxj"))
-      val joined = flags.join(exactJ, Seq("doc_id"))
-      joined.agg(
-          sum(when(col("contaminated"), 1L).otherwise(0L)).as("__nc"),
-          sum(when(col("contaminated") && col("__maxj") < 0.6, 1L).otherwise(0L)).as("__unsound"),
-          sum(when(col("__maxj") >= 0.9 && !col("contaminated"), 1L).otherwise(0L)).as("__missed"))
-        .select((col("__nc") >= 1).as("found_some"),
-          (col("__unsound") === 0).as("soundness_ok"),
-          (col("__missed") === 0).as("completeness_ok"))
-    }),
-
-    // deterministic global training-order shuffle: multiplicative-hash key
-    // + dense global position via range partition + broadcast count carry
-    // (no single-task window); the same permutation on any engine
-    "qd24_shuffle" -> ((s, d) => {
-      graft.prep.Prep.shuffled(t(s, d, "documents"), "doc_id", salt = 7L)
-        .select(col("doc_id"), col("lang"), col("shuffle_key"), col("shuffle_pos"))
-        .orderBy(col("shuffle_pos"))
-    }),
-
-    // unigram-rarity scoring: per-doc OOV share + mean corpus frequency
-    // against the corpus's own floored vocabulary — the integer-exact
-    // stand-in for LM-perplexity quality filtering
-    "qd25_rarity" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      val docs = t(s, d, "documents")
-      T.rarityStats(docs, "doc_id", "text", T.vocab(docs, "text", minCount = 50L))
-        .orderBy(col("doc_id"))
-    }),
-
-    // shuffled packing (operator interaction): documents packed into
-    // training sequences in deterministic-shuffle order — the order a real
-    // corpus build packs in. One range exchange on the hash key; the packer
-    // never sees a single-task window
-    "qd26_shuffle_pack" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      val docs = t(s, d, "documents")
-        .withColumn("n_tokens", T.tokenCount(col("text")).cast("long"))
-        .withColumn("shuffle_key", graft.prep.Prep.shuffleKey(col("doc_id"), 7L))
-      graft.prep.Prep.packGlobal(docs, Seq("shuffle_key", "doc_id"), "n_tokens",
-          budget = 1024L)
-        .select(col("doc_id"), col("shuffle_key"), col("n_tokens"),
-          col("seq_id"), col("seq_offset"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // deterministic up-sampling (epoch repetition): zh×3, en×2, others
-    // dropped — the up-weighting half of a data mix; narrow generator,
-    // exact row multiset on any engine
-    "qd27_upsample" -> ((s, d) => {
-      graft.prep.Prep.upsample(t(s, d, "documents"), col("lang"),
-          Map("zh" -> 3, "en" -> 2), defaultFactor = 0)
-        .select(col("doc_id"), col("lang"), col("epoch"))
-        .orderBy(col("doc_id"), col("epoch"))
-    }),
-
-    // cross-document span dedup (C4-style duplicate-span removal on fixed
-    // 20-word windows): every distinct span survives once corpus-wide,
-    // documents reassembled from their surviving spans
-    "qd28_span_dedup" -> ((s, d) => {
-      graft.dedup.Dedup.spanDedupGlobal(
-          t(s, d, "documents").select(col("doc_id"), col("lang"), col("text")),
-          "doc_id", "text", spanWords = 20)
-        .select(col("doc_id"), col("lang"), col("text"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // trainable BPE tokenizer (Sennrich ACL'16) — merge-ORDER oracle on a
-    // deterministic fixture: every document carries the classic
-    // running-example corpus (low x5, lower x2, newest x6, widest x3), so
-    // the distributed word-frequency table is the classic table scaled by
-    // ndocs — uniform scaling preserves every argmax and every count tie,
-    // making the 10-merge sequence (which exercises three distinct
-    // lexicographic tie-breaks) SF-invariant and hand-derivable; the oracle
-    // states it as literals. This hash-pins the FULL distributed training
-    // path (explode → map-side-combined word table → bounded vocab cut →
-    // incremental merge learner) end to end. The real-corpus train+encode
-    // workload stays the BENCH face of this name (benchQueries); encode
-    // itself is hash-pinned by qd49's DuckDB replay and BpeSpec.
-    "qd32_bpe_tokenize" -> ((s, d) => {
-      import s.implicits._
-      val classic = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
-        Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).mkString(" ")
-      val fixture = t(s, d, "documents").select(col("doc_id"))
-        .withColumn("text", lit(classic))
-      graft.functions.Bpe.trainCorpus(fixture, "text", numMerges = 10)
-        .zipWithIndex
-        .map { case ((a, b), i) => (i, a, b) }
-        .toDF("m_rank", "m_left", "m_right")
-        .orderBy(col("m_rank"))
-    }),
-
-    // the ENCODE half of the tokenizer under a FIXED merge table — the
-    // oracle-checkable face qd32's trained pipeline can't have (sequential
-    // merge LEARNING has no SQL formulation, but applying a known table
-    // does). The oracle replays the same merges as a sequential replace
-    // chain over delimiter-framed symbols; for a valid (training-shaped)
-    // table that is exactly best-rank-first encoding, because a merge can
-    // only ever CREATE pairs that rank after it (its output symbol did not
-    // exist earlier), so ranks fire in table order either way.
-    "qd49_bpe_encode_fixed" -> ((s, d) => {
-      t(s, d, "documents").select(col("doc_id"),
-          graft.functions.Bpe.tokenCount(col("text"), fixedMerges).as("n_bpe_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // two-sided salted self-join (the AQE-off skew fallback): within-lang
-    // document pairs — lang is the realistic hot blocking key (few values,
-    // thousands of docs each). The salted plan must be row-for-row the
-    // plain self-join, which IS the DuckDB oracle
-    "qd33_salted_pairs" -> ((s, d) => {
-      graft.operators.Skew.saltedSelfJoin(
-          t(s, d, "documents").select(col("lang"), col("doc_id")),
-          "lang", "doc_id", nSalts = 8)
-        .filter(col("doc_id") < col("doc_id_b"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(col("doc_id") + col("doc_id_b")).as("id_sum"))
-        .orderBy(col("lang"))
-    }),
-
-    // bloom-prefiltered exact decontamination: same semantics as qd18 (other
-    // bench split), but the corpus-side membership test is a narrow Bloom
-    // prefilter and only survivors reach the exact verify join — the oracle
-    // is the exact-join SQL because the bloom has no false negatives
-    "qd34_decontaminate_bloom" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val bench = docs.filter(col("doc_id") % 89 === 0)
-      graft.prep.Prep.contaminationBloom(docs, bench, "doc_id", "text",
-          shingleK = 5, minShared = 1, fpp = 0.01)
-        .select(col("doc_id"), col("lang"), col("n_shared"), col("contaminated"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // incremental-crawl dedup: keep current-split docs whose fingerprint is
-    // new vs the prior-snapshot split. The synthetic corpus has no full-text
-    // duplicates, so the fingerprint runs over the first two tokens (a
-    // deliberate collision surface, same spirit as qd31's transform); the
-    // oracle is the plain anti-join — the Bloom path must reproduce it
-    // exactly because false positives are re-verified and there are no
-    // false negatives
-    "qd35_snapshot_dedup" -> ((s, d) => {
-      val docs = t(s, d, "documents").withColumn("head",
-        concat_ws(" ", slice(graft.functions.TextFunctions.tokens(col("text")), 1, 2)))
-      val previous = docs.filter(col("doc_id") % 3 === 0)
-      val current = docs.filter(col("doc_id") % 3 =!= 0)
-      graft.dedup.Dedup.newSinceSnapshot(current, previous, "head", fpp = 0.01)
-        .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // DSIR importance weights (exact word-feature face, micro-nat
-    // quantization so the per-doc sum is integer-exact cross-engine):
-    // target = every 17th doc as the "high quality" exemplar set, source =
-    // the whole corpus
-    "qd36_dsir_weights" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val target = docs.filter(col("doc_id") % 17 === 0)
-      graft.prep.Prep.importanceWeightsMicro(docs, target, "doc_id", "text")
-        .select(col("doc_id"), col("lang"), col("dsir_uweight"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // DSIR selection: deterministic top-50 slice by weight (ties by id) —
-    // TakeOrderedAndProject, never a full sort
-    "qd37_dsir_select" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val target = docs.filter(col("doc_id") % 17 === 0)
-      graft.prep.Prep.selectTopK(
-          graft.prep.Prep.importanceWeightsMicro(docs, target, "doc_id", "text"),
-          "dsir_uweight", "doc_id", k = 50)
-        .select(col("doc_id"), col("dsir_uweight"))
-    }),
-
-    // unicode cleanup (the C4/CCNet pre-filter step): NFC-normalize +
-    // control-char strip. The synthetic corpus is clean ASCII, so each doc
-    // gets a deterministic dirty suffix (BEL + decomposed 'café' + US) that
-    // the cleanup must compose and strip — mirrored verbatim in the oracle
-    "qd38_clean_text" -> ((s, d) => {
-      val tf = graft.functions.TextFunctions
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          tf.cleanText(concat(col("text"), lit("\u0007 cafe\u0301 \u001f")))
-            .as("cleaned"))
-        .withColumn("n_chars", length(col("cleaned")))
-        .orderBy(col("doc_id"))
-    }),
-
-    // CCNet-style perplexity: bigram-LM NLL (micro-nat ints) under an add-1
-    // LM trained on every 11th doc; the keep gate compares integer
-    // cross-products so it is exact too
-    "qd39_perplexity" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val lmSet = docs.filter(col("doc_id") % 11 === 0)
-      graft.prep.Prep.perplexityBigram(docs, lmSet, "doc_id", "text")
-        .select(col("doc_id"), col("lang"), col("n_bigrams"), col("nll_unats"))
-        .withColumn("keep",
-          col("n_bigrams") > 0 && col("nll_unats") <= lit(3500000L) * col("n_bigrams"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // C4 line/page quality rules (Raffel et al. 2020 §2.2): the flat word
-    // corpus gets deterministic structure first — 6-word lines, terminal '.'
-    // on (i+doc_id)%3!=0 lines, a 'javascript' mention every 7th line, page
-    // poison ('{' / 'lorem ipsum') on doc_id%13 / %17 — then c4Clean must
-    // keep exactly the punctuated, clean, >=3-word lines and flag pages
-    "qd40_c4_filter" -> ((s, d) =>
-      qd40Run(qd40Dirty(t(s, d, "documents")))),
-
-    // THIRD FLAGSHIP pipeline — quality-driven selection: CCNet perplexity
-    // gate → Bloom-prefiltered exact decontamination → DSIR importance
-    // weighting → deterministic top-50. Exercises the round-6 operator set
-    // END-TO-END (each stage's model retrains on the previous stage's
-    // survivors) where qd34/qd36/qd37/qd39 test the pieces in isolation.
-    "qd41_pipeline_quality_select" -> ((s, d) => {
-      val P = graft.prep.Prep
-      qualitySelect(s, d) { toks =>
-        // stage 1: perplexity gate (LM = every 11th doc, keep <= 3.5 nats/bigram)
-        P.perplexityBigram(toks, toks.filter(col("doc_id") % 11 === 0), "doc_id", "tk")
-          .filter(col("n_bigrams") > 0 &&
-            col("nll_unats") <= lit(3500000L) * col("n_bigrams"))
-      } { s2 =>
-        // stage 3: DSIR micro-nat weights on the clean pool, deterministic cut
-        P.selectTopK(
-            P.importanceWeightsMicro(s2, s2.filter(col("doc_id") % 17 === 0),
-              "doc_id", "tk"),
-            "dsir_uweight", "doc_id", k = 50)
-          .select(col("doc_id"), col("dsir_uweight"))
-      }
-    }),
-
-    // qd41h — the hashed flagship as a VERDICT CONTRACT (round 10): run the
-    // hashed twin AND the exact oracle-anchored face, emit the selection
-    // overlap verdict the oracle states. SF-PORTABLE since r18 (r17
-    // verdict item 2: the old `n_selected=50` oracle constant was
-    // sf0.1-scoped — at sf1 the rotated-text fixture defeats the
-    // perplexity gates, the scored pool drops below k, and the face was
-    // the single red row of the first sf1 oracle pass). The contract now
-    // states invariants that travel across SF:
-    //   n_selected_ok — the top-k cut selected exactly min(50, pool):
-    //     anchors the selection count to the pipeline's own scored-pool
-    //     size instead of a fixture-scoped constant;
-    //   overlap_ok   — hashed∩exact ≥ 80% of min(n_hashed, n_exact):
-    //     the same 40/50 floor at every driver SF (measured 49/50 at
-    //     sf0.001, 44/50 at sf0.01 — residual daylight is hashed-vs-exact
-    //     score ties at the cut boundary), degrading honestly to vacuous
-    //     when either side selects nothing. The absolute anchor lives in
-    //     qd41's own fully-DuckDB-replayed oracle; a collision regression
-    //     or pipeline divergence still flips this face red. The raw hashed
-    //     pipeline ([[qd41hRun]]) stays the BENCH face — the plan a real
-    //     corpus build runs — and DsirSpec pins the overlap at spec level.
-    "qd41h_pipeline_quality_select_hashed" -> ((s, d) => {
-      val hashed = qd41hRun(s, d, withPool = true)
-      val exact = queries("qd41_pipeline_quality_select")(s, d).select(col("doc_id"))
-      hashed.agg(count(lit(1)).as("n_hashed"),
-          first(col("n_pool")).as("n_pool"))
-        .crossJoin(exact.agg(count(lit(1)).as("n_exact")))
-        .crossJoin(hashed.select(col("doc_id")).join(exact, "doc_id")
-          .agg(count(lit(1)).as("__ov")))
-        .select(
-          (col("n_hashed") ===
-            least(lit(50L), coalesce(col("n_pool"), lit(0L)))).as("n_selected_ok"),
-          (col("__ov") * 5 >= least(col("n_hashed"), col("n_exact")) * 4)
-            .as("overlap_ok"))
-    }),
-
-    // duplicate-PARAGRAPH repetition signals (Gopher §A1.1's paragraph
-    // variants): 8-word paragraphs with an inner newline (must fold to a
-    // space, not split the paragraph), every i%3==2 paragraph a copy of
-    // paragraph 0 — dup fractions computed by the native line-stats kernel
-    // over the blank-line→sentinel transform
-    "qd46_dup_paragraphs" -> ((s, d) =>
-      qd46Run(s, qd46Paras(t(s, d, "documents")))),
-
-    // cross-document SENTENCE dedup: every word becomes a one-word sentence
-    // ("w1. w2. ... wn.") — the same deliberate collision surface as qd31 —
-    // and common sentences >= 5 chars dedup corpus-wide (first (doc,
-    // position) wins); short sentences always survive
-    "qd45_sentence_dedup" -> ((s, d) => {
-      graft.dedup.Dedup.sentenceDedupGlobal(
-          t(s, d, "documents").select(col("doc_id"), col("lang"),
-            concat(replace(col("text"), lit(" "), lit(". ")), lit(".")).as("text")),
-          "doc_id", "text", minChars = 5)
-        .select(col("doc_id"), col("lang"), col("text"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // cross-document LINE dedup (the literal C4 step): spaces become line
-    // breaks so every word is a line — common words >= 4 chars dedup
-    // corpus-wide (first (doc, position) wins), short words always survive
-    "qd31_line_dedup" -> ((s, d) => {
-      graft.dedup.Dedup.lineDedupGlobal(
-          t(s, d, "documents").select(col("doc_id"), col("lang"),
-            translate(col("text"), " ", "\n").as("text")),
-          "doc_id", "text", sep = "\n", minChars = 4)
-        .select(col("doc_id"), col("lang"), col("text"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // semantic dedup (SemDeDup): k-means cells over embeddings, drop all but
-    // the min id of every within-cell cosine>=0.3 group (the synthetic
-    // embeddings are near-orthogonal, so 0.3 plays the role 0.9+ plays for
-    // real encoders — same dial as qd09). k-means output has no SQL oracle;
-    // CorpusCleanSpec pins exact-dup recall, precision, and determinism
-    // verdict-emitting: the survivor set depends on k-means cell blocking,
-    // so the contract is SOUNDNESS against the exact metric — every dropped
-    // vector must have at least one other vector at exact cosine >= the 0.3
-    // threshold (a drop without a justifying near-duplicate partner means
-    // the op removed unique data, the one failure semantic dedup must never
-    // have). Cell-blocking recall stays pinned by the SemDeDup witness spec.
-    "qd29_semantic_dedup" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val surv = graft.dedup.Dedup.semanticDedup(emb, "vec_id", "embedding",
-        nlist = 8, threshold = 0.3, lloydIters = 2)
-      val drops = emb.select(col("vec_id"), col("embedding"))
-        .join(surv.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      // justification scan: dropped side is the small side — broadcast it
-      // against the full corpus, exact cosine, per-drop max
-      val justified = emb.select(col("vec_id").as("__oid"), col("embedding").as("__ov"))
-        .join(broadcast(drops.select(col("vec_id").as("__did"), col("embedding").as("__dv"))),
-          col("__oid") =!= col("__did"))
-        .select(col("__did"),
-          graft.plans.CosineSimilarityExpr.cosine(col("__dv"), col("__ov")).as("__cos"))
-        .groupBy(col("__did")).agg(max(col("__cos")).as("__maxcos"))
-      drops.agg(count(lit(1)).as("__nd"))
-        .crossJoin(justified.agg(
-          sum(when(col("__maxcos") < 0.3, 1L).otherwise(0L)).as("__unjust")))
-        .select((col("__nd") >= 1).as("dropped_some"),
-          (coalesce(col("__unjust"), lit(0L)) === 0).as("all_drops_justified"))
-    }),
-
-    // compression-ratio quality signal: deflate/raw byte ratio per document
-    // + the quality gate it feeds. DuckDB has no deflate, so the contract
-    // is a VERDICT row (the qd41h/qs02-qs04 pattern): the native
-    // DeflateRatioExpr output is recomputed per row by an INDEPENDENT
-    // java.util.zip UDF (its own Deflater, the spec-pinned level-6/nowrap
-    // parameters CompressSpec also pins byte-exactly) and must match
-    // bit-for-bit; the oracle states the expected verdict plus the
-    // SQL-expressible aggregates. An expression regression flips the hash
-    // red where the previous rows-only check was blind. The raw per-row
-    // operator stays the BENCH face.
-    "qd30_compress_ratio" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      val refRatio = udf((text: String) => {
-        if (text == null || text.isEmpty) null.asInstanceOf[java.lang.Double]
-        else {
-          val bytes = text.getBytes("UTF-8")
-          val dfl = new java.util.zip.Deflater(6, true)
-          dfl.setInput(bytes); dfl.finish()
-          val sink = new Array[Byte](8192)
-          var total = 0L
-          while (!dfl.finished()) total += dfl.deflate(sink)
-          dfl.end()
-          java.lang.Double.valueOf(total.toDouble / bytes.length)
-        }
-      })
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          T.compressionRatio(col("text")).as("ratio"),
-          refRatio(col("text")).as("ref_ratio"),
-          T.tokenCount(col("text")).cast("long").as("n_tokens"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("n_tokens_total"),
-          count(col("ratio")).as("n_rated"),
-          (count(lit(1)) === sum(when(col("ratio") === col("ref_ratio") ||
-            (col("ratio").isNull && col("ref_ratio").isNull), 1L).otherwise(0L)))
-            .as("ratio_ok"))
-    }),
-
-    // SECOND FLAGSHIP pipeline — corpus build: benchmark decontamination →
-    // deterministic train split → context-window chunking → sequence
-    // packing → per-(lang, sequence) stats. Exercises the prep operators
-    // END-TO-END (chunker output feeds the packer through a composite
-    // order key) where qd17–qd20 test them in isolation.
-    "q52_pipeline_corpus_build" -> ((s, d) => {
-      val P = graft.prep.Prep
-      val docs = t(s, d, "documents")
-      val bench = docs.filter(col("doc_id") % 97 === 0)
-      val clean = P.contamination(docs, bench, "doc_id", "text",
-          shingleK = 5, minShared = 1)
-        .filter(!col("contaminated"))
-        .filter(P.split(col("doc_id"), 800, 100) === "train")
-      val chunks = P.chunk(clean, "doc_id", "text",
-        chunkSize = 64, stride = 48, carryCols = Seq("lang"))
-      P.packByTokens(chunks, "lang", Seq("doc_id", "chunk_id"),
-          "n_chunk_tokens", budget = 512L)
-        .groupBy(col("lang"), col("seq_id"))
-        .agg(count(lit(1)).as("n_chunks"),
-          sum(col("n_chunk_tokens")).as("n_tokens"),
-          min(col("doc_id")).as("first_doc"),
-          max(col("doc_id")).as("last_doc"))
-        .orderBy(col("lang"), col("seq_id"))
-    }),
-
-    // THIRD FLAGSHIP pipeline — C4-style cleaning: cross-document span
-    // dedup → token-count floor → global sequence packing. Exercises the
-    // round-4 span dedup INSIDE a chain (its reassembled text feeds the
-    // tokenizer of the packer) where qd28 tests it in isolation
-    "q53_pipeline_clean_pack" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      val deduped = graft.dedup.Dedup.spanDedupGlobal(
-        t(s, d, "documents").select(col("doc_id"), col("lang"), col("text")),
-        "doc_id", "text", spanWords = 20)
-      val filtered = deduped
-        .withColumn("n_tokens", T.tokenCount(col("text")).cast("long"))
-        .filter(col("n_tokens") >= 10)
-      // r18 (verdict item 4): sample the packer's split points from the RAW
-      // doc_id scan, not from `filtered` — the packer's own sampling job
-      // would otherwise re-run the whole span-dedup pipeline just to read
-      // the key column (measured: the q53 job timeline paid the dedup
-      // twice). The survivor ids are a subset of the raw ids, so the raw
-      // quantiles only skew bucket sizes, never results.
-      graft.prep.Prep.packGlobal(filtered, Seq("doc_id"), "n_tokens", budget = 512L,
-          sampleFrom = Some(t(s, d, "documents").select(col("doc_id"))))
-        .select(col("doc_id"), col("lang"), col("n_tokens"),
-          col("seq_id"), col("seq_offset"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // IVF-flat ANN: Voronoi cells around sampled centroids, nprobe search.
-    // Emits the recall contract vs the in-engine exact top-k (recall floor
-    // 0.4: measured 0.44/0.46 at sf0.001/sf0.01 with nprobe=4 of nlist=16
-    // over the weakly-clustered synthetic vectors); IvfSpec pins the
-    // neighbor lists themselves.
-    "qs03_ann_ivf" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val q = e.filter(col("vec_id") < 10)
-      // the cell-partitioned corpus is a caller-owned handle; the recall row
-      // is bounded, so it localizes and releases the index before returning
-      val (centroids, assigned) = graft.similarity.Ivf.buildIndex(e, nlist = 16)
-      try
-        localize(s, annRecallRow(
-          graft.similarity.Ivf.search(assigned, centroids, q, k = 5, nprobe = 4),
-          graft.similarity.Ann.bruteForceTopK(e, q, k = 5),
-          k = 5, minMeanRecall = 0.4))
-      finally assigned.unpersist(blocking = true)
-    }),
-
-    // product-quantization ANN: train codebook on a bounded sample, encode
-    // the corpus to 16-byte codes (narrow map), ADC scan + exact rescore of
-    // the top pool — the memory-bounded 100 TB search path. The rescore
-    // makes it near-exact, so the contract is PER-QUERY: every query must
-    // recover >= 4 of its true top-5; PqSpec pins recall, reconstruction,
-    // and determinism. The rescore pool SCALES with the corpus (r14):
-    // the fixture's embeddings are STRUCTURELESS random vectors — the
-    // hardest ADC input, where true neighbors are barely separated from
-    // the crowd — so the misranked crowd ahead of a true neighbor grows
-    // with corpus size itself: a fixed pool of 100 measured 49-50/50 at
-    // sf0.001/0.01 (n=500) but dropped one query to 2/5 at sf0.1
-    // (n=2000, pool still 100 = 5% of corpus). max(100, n/5) restores
-    // 50/50 with margin (real, clustered corpora need far smaller
-    // fractions; the knob is the operator's production sizing lever).
-    "qs04_ann_pq" -> ((s, d) => {
-      val P = graft.similarity.Pq
-      val e = t(s, d, "embeddings")
-      val q = e.filter(col("vec_id") < 10)
-      val cb = P.train(e, dim = 64, m = 16, ksub = 16, sampleN = 1000)
-      val ann = P.searchAdc(P.encode(e, cb, m = 16, ksub = 16), cb,
-        q, k = 5, m = 16, ksub = 16,
-        rescore = math.max(100L, e.count() / 5L).toInt)
-      val exact = graft.similarity.Ann.bruteForceTopK(e, q, k = 5)
-      val ov = ann.select(col("query_id"), col("neighbor_id"))
-        .join(exact.select(col("query_id"), col("neighbor_id")),
-          Seq("query_id", "neighbor_id"))
-        .groupBy(col("query_id")).agg(count(lit(1)).as("__ov"))
-      q.select(col("vec_id").as("query_id")).distinct()
-        .join(ov, Seq("query_id"), "left")
-        .select(col("query_id"),
-          (coalesce(col("__ov"), lit(0L)) >= 4).as("recall_ok"))
-        .orderBy(col("query_id"))
-    }),
-
-    // similarity search: exact brute-force cosine top-5 for 10 query vectors
-    "qs01_cosine_topk" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      graft.similarity.Ann.bruteForceTopK(e, e.filter(col("vec_id") < 10), k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ANN via sign-LSH bucketing + multiprobe — approximate by construction.
-    // Emits the recall contract vs the in-engine exact top-k (floor 0.3:
-    // measured 0.36/0.54 at sf0.001/sf0.01 — sign-LSH at nBits=4 probes
-    // ~5/16 of the corpus); AnnSpec pins the neighbor lists and the
-    // radius-recall monotonicity.
-    "qs02_ann_lsh" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val q = e.filter(col("vec_id") < 10)
-      // nBits sizes the bucket count to the corpus: 2^4 buckets over ~5k
-      // vectors keeps ~recall/cost balance; at 100 TB you raise bits with
-      // corpus size so bucket cardinality stays bounded
-      annRecallRow(
-        graft.similarity.Ann.lshTopK(e, q, k = 5, dim = 64, nBits = 4),
-        graft.similarity.Ann.bruteForceTopK(e, q, k = 5),
-        k = 5, minMeanRecall = 0.3)
-    }),
-
-    // multimodal: binary payload + sniffed metadata (SQL-mirrorable part)
-    "qm01_media_meta" -> ((s, d) => {
-      val docs = t(s, d, "documents").withColumn("bin", col("text").cast("binary"))
-      graft.multimodal.Multimodal.asMediaTable(docs, "doc_id", "bin")
-        .select(col("media_id"), col("meta.format").as("format"),
-          col("meta.n_bytes").as("n_bytes"))
-        .orderBy(col("media_id"))
-    }),
-
-    // video container metadata (honest scope: MP4 moov/mvhd/tkhd atom walk,
-    // no frame decode — the JDK has no video codec). Round-trip oracle:
-    // headers are SYNTHESIZED from doc_id formulas, parsed back by the
-    // pure-JVM box walk, and the oracle recomputes the formulas in SQL —
-    // so Mp4.parse(Mp4.buildHeader(x)) == x is exactly what DuckDB checks
-    "qm04_video_meta" -> ((s, d) => {
-      import s.implicits._
-      val M = graft.multimodal.Multimodal
-      val media = t(s, d, "documents").select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          val w = 320 + (id % 8).toInt * 16
-          val h = 240 + (id % 5).toInt * 16
-          (id, graft.multimodal.Mp4.buildHeader("isom", 600L,
-            600L + id % 2400L, 1 + (id % 3).toInt, w, h))
-        }).toDF("doc_id", "bin")
-      M.videoMeta(M.asMediaTable(media, "doc_id", "bin"))
-        .select(col("media_id"), col("meta.format").as("format"),
-          col("video.brand").as("brand"),
-          col("video.duration_s").as("duration_s"),
-          col("video.timescale").as("timescale"),
-          col("video.n_tracks").as("n_tracks"),
-          col("video.width").as("width"), col("video.height").as("height"))
-        .orderBy(col("media_id"))
-    }),
-
-    // §2.13 typed scalar UDFs (Expr.Map parity): dtype-changing int->string
-    // map + double arithmetic map, both optimizer barriers like the reference
-    "q29_udf_map" -> ((s, d) => {
-      val priceBump = graft.functions.Udfs.map((x: Double) => x * 1.1)
-      val sizeTag = graft.functions.Udfs.map((n: Int) => s"size_$n")
-      t(s, d, "part")
-        .select(col("p_partkey"),
-          priceBump(col("p_retailprice")).as("bumped"),
-          sizeTag(col("p_size")).as("size_tag"))
-        .orderBy(col("p_partkey"))
-    }),
-
-    // §2.11 str extras: byte length, char strip sets, prefix strip, split+join
-    "q30_str_extra" -> ((s, d) => {
-      t(s, d, "part")
-        .select(col("p_partkey"),
-          col("p_name").str.lenBytes.cast("long").as("n_bytes"),
-          col("p_brand").str.stripPrefix("Brand#").as("brand_id"),
-          col("p_name").str.stripChars("aeiou ").as("consonant_trim"),
-          col("p_type").str.split(" ").list.join("-").as("type_dashed"))
-        .orderBy(col("p_partkey"))
-    }),
-
-    // §2.11 dt extras: strftime, time-of-day nanos, epoch ms
-    "q31_dt_extra" -> ((s, d) => {
-      t(s, d, "events")
-        .select(col("event_id"),
-          col("ts").dt.toString("%Y-%m-%d %H:%M").as("formatted"),
-          col("ts").dt.time.as("tod_nanos"),
-          col("ts").dt.timestamp("ms").as("epoch_ms"),
-          col("ts").dt.date.as("d"))
-        .orderBy(col("event_id"))
-    }),
-
-    // §2.11 list namespace over real array data
-    "q32_list_ops" -> ((s, d) => {
-      t(s, d, "embeddings")
-        .select(col("vec_id"),
-          col("embedding").list.get(0).as("f0"),
-          col("embedding").list.len.cast("long").as("dim"),
-          col("embedding").list.min.as("vmin"),
-          col("embedding").list.max.as("vmax"),
-          graft.functions.VectorFunctions.dot(
-            slice(col("embedding"), 1, 4), slice(col("embedding"), 1, 4)).as("head_sq"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // §2.11 struct namespace: as_struct + field access + json encode
-    "q33_struct_ops" -> ((s, d) => {
-      val st = asStruct(col("c_name").as("name"),
-        (dec2(col("c_acctbal")) * 100).cast("long").as("bal_cents"))
-      t(s, d, "customer")
-        .select(col("c_custkey"),
-          st.struct_.fieldByName("name").as("name"),
-          st.struct_.jsonEncode.as("as_json"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // §2.8 horizontal concat: positional zip of two differently-ordered
-    // projections (row-index join under the hood)
-    "q34_concat_horizontal" -> ((s, d) => {
-      val c = t(s, d, "customer")
-      val a = c.orderBy(col("c_custkey")).select(col("c_custkey"), col("c_name"))
-      val b = c.orderBy(col("c_custkey").desc).select(col("c_acctbal").as("rev_bal"))
-      a.concatHorizontal(b).orderBy(col("c_custkey"))
-    }),
-
-    // §2.5 group_by_dynamic label=Right + include_boundaries
-    "q35_gbd_boundaries" -> ((s, d) => {
-      graft.operators.DynamicGroupBy(t(s, d, "events"), "ts", every = "12h",
-          label = graft.operators.DynamicGroupBy.LabelRight,
-          includeBoundaries = true)(
-          count(lit(1)).as("n"))
-        .withColumn("ts", col("ts").cast("timestamp_ntz"))
-        .withColumn("_lower_boundary", col("_lower_boundary").cast("timestamp_ntz"))
-        .withColumn("_upper_boundary", col("_upper_boundary").cast("timestamp_ntz"))
-        .orderBy(col("ts"))
-    }),
-
-    // §2.5 quantile interpolation modes (nearest/higher/lower/midpoint/
-    // linear — expr.rs:1156-1176) via sorted-group-list composition
-    "q37_quantile_modes" -> ((s, d) => {
-      val Q = graft.functions.Quantiles
-      val v = col("l_quantity")
-      t(s, d, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          Q.quantile(v, 0.35, Q.Lower).as("q_lower"),
-          Q.quantile(v, 0.35, Q.Higher).as("q_higher"),
-          Q.quantile(v, 0.35, Q.Nearest).as("q_nearest"),
-          Q.quantile(v, 0.35, Q.Midpoint).as("q_midpoint"),
-          Q.quantile(v, 0.35, Q.Linear).as("q_linear"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // §2.12 selector algebra driving a projection: numeric columns of part
-    // minus the key, via set operations resolved against the schema
-    "q38_selectors" -> ((s, d) => {
-      import graft.api.{Selectors => Sel}
-      t(s, d, "part")
-        .selectSel((Sel.numeric - Sel.byName("p_partkey")) | Sel.matches("^p_partkey$"))
-        .orderBy(col("p_partkey"))
-    }),
-
-    // §2.15 describe-style stats as typed columns (count/null_count/mean/
-    // min/quantiles/max — the reference Describe stat set, DataFrame.cs:665-727)
-    "q39_describe_stats" -> ((s, d) => {
-      val Q = graft.functions.Quantiles
-      val v = col("p_retailprice")
-      t(s, d, "part").agg(
-        count(v).as("cnt"),
-        sum(when(v.isNull, 1L).otherwise(0L)).as("null_count"),
-        (sum(dec2(v)).cast("double") / count(v)).as("mean"),
-        min(v).as("vmin"),
-        Q.quantile(v, 0.25, Q.Nearest).as("q25"),
-        Q.quantile(v, 0.5, Q.Nearest).as("q50"),
-        Q.quantile(v, 0.75, Q.Nearest).as("q75"),
-        max(v).as("vmax"))
-    }),
-
-    // §2.3 deterministic seeded sampling (hash-ranked exact-n), verdict-
-    // emitting: the drawn SET is seed/hash-valued (no SQL formulation), but
-    // its invariants are exact — exactly n rows, no duplicates (without
-    // replacement), and every drawn row is a real orders row. The draw's
-    // determinism and seed-sensitivity stay pinned by the sampling spec.
-    "q36_sample" -> ((s, d) => {
-      val orders = t(s, d, "orders")
-      val samp = orders.sampleN(100, seed = 7)
-        .select(col("o_orderkey"), col("o_custkey"))
-      val notInOrders = samp.join(
-        orders.select(col("o_orderkey"), col("o_custkey")),
-        Seq("o_orderkey", "o_custkey"), "left_anti")
-      samp.agg(count(lit(1)).as("__n"),
-          countDistinct(col("o_orderkey")).as("__nd"))
-        .crossJoin(notInOrders.agg(count(lit(1)).as("__bad")))
-        .select((col("__n") === 100).as("n_ok"),
-          (col("__nd") === 100).as("distinct_ok"),
-          (col("__bad") === 0).as("subset_ok"))
-    }),
-
-    // multimodal decode round-trip through REAL JDK codecs: payloads are
-    // SYNTHESIZED from doc_id formulas (even ids → gray PNG via ImageIO,
-    // odd ids → mono 16-bit square-wave WAV via javax.sound —
-    // [[graft.multimodal.MediaFixtures]]), decoded back by the
-    // partition-parallel decodeFeatures pipeline (mediaDecode: the real
-    // ImageIO / AudioSystem codecs), and the oracle recomputes the formulas
-    // in SQL — decoded dimensions (width/height; sample-rate/channels/
-    // frames) hash-compare exactly, and the analog signal level (mean
-    // luminance / RMS+peak of the square wave) is a banded in-engine check
-    // whose verdict the oracle states. Same round-trip pattern as qm04's
-    // MP4 header walk, now through actual compression codecs.
-    "qm02_decode_features" -> ((s, d) =>
-      qm02Run(qm02Payloads(s, t(s, d, "documents")))),
-
-    // multimodal frame sampling: deterministic byte-offset "frames" — the
-    // explode + offset arithmetic is plain SQL, so this one IS oracle-able
-    // (frame payload bytes themselves stay out of the compare; the plumbing
-    // and offsets are the testable part)
-    "qm03_frame_sample" -> ((s, d) => {
-      val docs = t(s, d, "documents").withColumn("bin", col("text").cast("binary"))
-      val media = graft.multimodal.Multimodal.asMediaTable(docs, "doc_id", "bin")
-      graft.multimodal.Multimodal.sampleFrames(media, n = 4)
-        .select(col("media_id"), col("frame_idx").cast("long").as("frame_idx"),
-          col("frame_offset"),
-          octet_length(col("frame")).cast("long").as("frame_len"))
-        .orderBy(col("media_id"), col("frame_idx"))
-    }),
-
-    // §2.1/§2.2 database round-trip e2e: write customer to an embedded Derby
-    // DB (real JDBC engine, IntegrationTests.cs intent), scan it back
-    // partitioned — the oracle sees only the parquet, so any fidelity loss in
-    // the DB hop (types, nulls, values) breaks the hash
-    "q47_jdbc_roundtrip" -> ((s, d) => {
-      System.setProperty("derby.system.home", System.getProperty("java.io.tmpdir"))
-      val url = "jdbc:derby:memory:graft_q47;create=true"
-      val cust = t(s, d, "customer")
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      graft.sources.IO.writeJdbc(cust, url, "q47_customer")
-      graft.sources.IO.scanJdbcPartitioned(s, url, "q47_customer",
-          "c_custkey", 1L, 150000L, 8)
-        .orderBy(col("c_custkey"))
-    }),
-
-    // composite pipeline: scan → keyed as-of join → group_by_dynamic (1d
-    // tumble, by user bucket) → pivot buckets to columns. Exercises operator
-    // INTERACTION (as-of payload feeding a dynamic grid feeding a reshape),
-    // which single-op queries can't catch
-    "q48_pipeline_asof_pivot" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("value").as("click_value"))
-      val asof = graft.operators.AsofJoin.join(p, c, "ts", "ts",
-        Seq(("user_id", "user_id")))
-      val bucketed = asof.withColumn("bucket", (col("user_id") % 3).cast("int"))
-      graft.operators.DynamicGroupBy(bucketed, "ts", every = "1d",
-          by = Seq("bucket"))(
-          sum(dec4(col("click_value"))).cast("double").as("v"))
-        // bucket values pinned: total schema even if a bucket is empty at
-        // some scale, and no eager distinct-values scan
-        .pivotOn(index = Seq("ts"), columns = "bucket", values = "v",
-          columnValues = Seq(0, 1, 2))
-        .withColumnRenamed("0", "b0").withColumnRenamed("1", "b1")
-        .withColumnRenamed("2", "b2")
-        .withColumn("ts", col("ts").cast("timestamp_ntz"))
-        .orderBy(col("ts"))
-    }),
-
-    // §1.2 Categorical (datatypes.rs:76): dictionary-encode, aggregate on the
-    // dense int codes (the compute-side win of a physical categorical), then
-    // decode through the broadcast dictionary
-    "q50_categorical" -> ((s, d) => {
-      val (enc, dict) = graft.functions.Categorical.encode(
-        t(s, d, "customer"), "c_mktsegment", "seg_code")
-      enc.groupBy(col("seg_code"))
-        .agg(count(lit(1)).as("n"),
-          sum(dec2(col("c_acctbal"))).cast("double").as("bal_sum"))
-        // left join: a null-category group (null code) must survive decode,
-        // matching the oracle's GROUP BY null-row semantics
-        .join(broadcast(dict), Seq("seg_code"), "left")
-        .select(col("c_mktsegment"), col("seg_code"), col("n"), col("bal_sum"))
-        .orderBy(col("c_mktsegment"))
-    }),
-
-    // composite pipeline: near-dup pairs → connected components → keeper per
-    // cluster (min id) → anti-join the corpus down to the keep-list — the
-    // full dedup flow a training-data pipeline runs
-    "q49_pipeline_dedup_keeplist" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val pairs = graft.dedup.Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        shingleK = 5, threshold = 0.5)
-      val comps = graft.dedup.ConnectedComponents.components(pairs)
-      val losers = comps.filter(col("id") =!= col("component")).select(col("id"))
-      docs.join(losers, docs("doc_id") === losers("id"), "left_anti")
-        .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // §2.10 Structured Streaming leaves spec-land: the SAME windowed
-    // aggregation runs as a streaming query (readStream over the events
-    // parquet → event-time watermark → 1d tumbling window → complete-mode
-    // memory sink, Trigger.AvailableNow) and the batch SQL oracle recomputes
-    // it. The memory-sink result is BOUNDED by construction (one row per
-    // (day, event_type) group); the sink view is dropped before returning so
-    // repeated invocations leave no catalog or state residue.
-    "q61_stream_window" -> ((s, d) => {
-      // FileStreamSource wants a DIRECTORY. The driver's per-SF table is a
-      // single parquet FILE, so link it into a scratch dir (read-only
-      // source data — never copied); a Spark-written table (the ScaleUp
-      // sf1/sf10 fixtures) is already a DIRECTORY and streams as-is — the
-      // symlink dance would nest it one level too deep for the source's
-      // non-recursive listing (r16: first cross-scale run of this face).
-      val src = java.nio.file.Paths.get(s"$d/events.parquet")
-      val path =
-        if (java.nio.file.Files.isDirectory(src)) src.toString
-        else {
-          val dir = scratchDir("q61")
-          java.nio.file.Files.createSymbolicLink(
-            java.nio.file.Paths.get(dir, "events.parquet"), src)
-          dir
-        }
-      // input-sized state partitioning (r18, guide §2) — see q77
-      val nSp61 = graft.streaming.StreamOps.sizedStatePartitionsForInput(s, Seq(path))
-      graft.streaming.StreamOps.withStatePartitions(s, nSp61) { s2 =>
-        val schema = s2.read.parquet(path).schema
-        // normalize ts to a session-TZ timestamp before the watermark — long
-        // nanos under legacy nanosAsLong, TIMESTAMP_NTZ otherwise (the same
-        // branch the batch loader `t` takes)
-        val tsIsLong = schema.fields.exists(f =>
-          f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType)
-        val ev0 = s2.readStream.schema(schema).parquet(path)
-        val ev =
-          if (tsIsLong)
-            ev0.withColumn("ts", expr("cast(timestamp_micros(ts div 1000) as timestamp)"))
-          else ev0.withColumn("ts", col("ts").cast("timestamp"))
-        val out = graft.streaming.StreamOps.windowedAgg(ev, "ts", every = "1d",
-            by = Seq("event_type"))(
-            count(lit(1)).as("n"),
-            sum(dec4(col("value"))).as("__sum"))
-        val qn = "g61_stream"
-        val query = out.writeStream.format("memory").queryName(qn)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try query.awaitTermination() finally {
-          query.stop()
-          graft.streaming.StreamOps.releaseStateStores()
-        }
-        val res = localize(s2, s2.table(qn)
-          .select(col("ts").cast("timestamp_ntz").as("ts"), col("event_type"),
-            col("n"), col("__sum").cast("double").as("sum_value")))
-        s2.catalog.dropTempView(qn)
-        res.orderBy(col("ts"), col("event_type"))
-      }
-    }),
-
-    // §2.1 multiline-JSON ARRAY read (reference ReadJson io.rs:130-142, vs
-    // the NDJSON scan q58 covers): the nation table — fixed 25 rows at every
-    // SF by the TPC-H spec, so the array document is bounded — round-trips
-    // through a single pretty-printed JSON array that only
-    // option("multiLine") can parse.
-    "q62_json_multiline" -> ((s, d) => {
-      val dir = scratchDir("q62")
-      val src = t(s, d, "nation")
-      val docs = src.orderBy(col("n_nationkey")).toJSON.collect() // 25 rows by spec
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(dir, "nation.json"),
-        docs.mkString("[\n  ", ",\n  ", "\n]"))
-      graft.sources.IO.readJson(s, dir + "/nation.json")
-        .select(src.schema.fields.map(f => col(f.name).cast(f.dataType)).toIndexedSeq: _*)
-        .orderBy(col("n_nationkey"))
-    }),
-
-    // §2.1 Arrow in-memory stream interchange (the reference's zero-copy
-    // handoff into the host language, eager.rs:824-926): frame → Arrow IPC
-    // stream bytes → frame. The byte buffer is driver-local BY DESIGN — this
-    // is the in-process interchange surface, not a file scan — bounded here
-    // to the filtered supplier slice (s_suppkey % 5, ≈ supplier/5 rows).
-    "q63_arrow_handoff" -> ((s, d) => {
-      val src = t(s, d, "supplier").filter(col("s_suppkey") % 5 === 0)
-        .select(col("s_suppkey"), col("s_name"), col("s_nationkey"), col("s_acctbal"))
-        .orderBy(col("s_suppkey"))
-      val bytes = graft.sources.ArrowIpc.toArrowStreamBytes(src)
-      graft.sources.ArrowIpc.fromArrowStreamBytes(s, bytes)
-        .orderBy(col("s_suppkey"))
-    }),
-
-    // §2.1 anonymous scan (AnonymousScan lazy.rs:646-763): four parallel
-    // deterministic generators through the V2 source (projection + limit
-    // pushdown wired); the oracle recomputes the generator formulas over
-    // DuckDB's range(). Scores are multiples of 1/8 so the double sum is
-    // exact under any accumulation order.
-    "q64_anonymous_scan" -> ((s, d) => {
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("grp", IntegerType, nullable = false),
-        StructField("score", DoubleType, nullable = false)))
-      val parts = 4
-      val perPart = 2500
-      val factories: Seq[() => Iterator[org.apache.spark.sql.Row]] =
-        (0 until parts).map { p => () =>
-          Iterator.tabulate(perPart) { i =>
-            val id = p.toLong * perPart + i
-            org.apache.spark.sql.Row(id, (id % 7).toInt, (id * 31 % 1000) / 8.0)
-          }
-        }
-      graft.sources.IteratorSource.scanPartitioned(s, "q64", schema, factories)
-        .groupBy(col("grp"))
-        .agg(count(lit(1)).as("n"), sum(col("score")).as("score_sum"))
-        .orderBy(col("grp"))
-    }),
-
-    // §2.1 async read/collect (CollectAsync/ScanAsync DataFrame.cs:163-196):
-    // the Future-based surface awaited back to a frame, then a normal
-    // aggregation — proves the async path yields the same plan the sync
-    // scan does.
-    "q65_async_read" -> ((s, d) => {
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fut = graft.sources.IO.scanParquetAsync(s, s"$d/orders.parquet")
-      val orders = scala.concurrent.Await.result(
-        fut, scala.concurrent.duration.Duration(120, "s"))
-      orders.filter(col("o_orderpriority") === "1-URGENT")
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"),
-          sum(dec2(col("o_totalprice"))).cast("double").as("total"))
-        .orderBy(col("o_orderstatus"))
-    }),
-
-    // §2.1 from objects/records: a case-class Seq through the product
-    // encoder (Dataset[G66Rec]) joined (broadcast) against a real table —
-    // the construction surface plus proof it composes with scans.
-    "q66_from_records" -> ((s, d) => {
-      val recs = (0 until 60).map(i =>
-        G66Rec(i.toLong, "rec_" + (i % 8), (i * 13 % 40) / 4.0))
-      val nat = t(s, d, "nation").select(col("n_nationkey"), col("n_name"))
-      import s.implicits._
-      s.createDataset(recs).toDF()
-        .join(broadcast(nat), col("id") % 25 === col("n_nationkey"))
-        .select(col("id"), col("name"), col("score"), col("n_name"))
-        .orderBy(col("id"))
-    }),
-
-    // §2.2 batch export (pl_dataframe_export_batches io.rs:608-657): stream
-    // the region table — fixed 5 rows at every SF — to the caller via the
-    // partition-at-a-time iterator and rebuild a frame from the exported
-    // rows. Driver-side BY CONTRACT: the reference streams batches into the
-    // host process the same way.
-    "q67_export_batches" -> ((s, d) => {
-      val src = t(s, d, "region").select(col("r_regionkey"), col("r_name"))
-      val exported = graft.sources.IO.exportBatches(src).toSeq // 5 rows by spec
-      s.createDataFrame(java.util.Arrays.asList(exported: _*), src.schema)
-        .orderBy(col("r_regionkey"))
-    }),
-
-    // §2.3 drop / rename / drop_nulls as the Frame-API chain (eager.rs:
-    // 291-326) — nulls injected first so drop_nulls has real work, two
-    // renames so the rename path is exercised on both a synthesized and an
-    // original column.
-    "q68_drop_rename_nulls" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .withColumn("qty_or_null",
-          when(col("l_quantity") % 5 === 0, lit(null)).otherwise(col("l_quantity")))
-        .dropNulls("qty_or_null")
-        .rename("qty_or_null", "qty")
-        .rename("l_returnflag", "flag")
-        .select(col("l_orderkey"), col("l_linenumber"), col("flag"), col("qty"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    // beyond-reference: gap-based SESSIONIZATION, batch face — the
-    // declarative twin of the streaming state machine (Sessionize.sessions,
-    // FidelitySpec proves stream == batch): per-user 30-min-gap sessions
-    // over click events, vs DuckDB's lag/running-sum recomputation
-    "q72_sessionize" -> ((s, d) => {
-      graft.streaming.Sessionize.sessionsBatch(
-          t(s, d, "events").filter(col("event_type") === "click")
-            .select(col("user_id"), col("ts"), col("value"), col("event_id")),
-          "user_id", "ts", "value", gap = "30m", tieCols = Seq("event_id"))
-        .orderBy(col("user_id"), col("session_id"))
-    }),
-
-    // beyond-reference: the STREAMING sessionize face driven through the
-    // real Structured-Streaming runtime (flatMapGroupsWithState, event-time
-    // timeout) against the SAME DuckDB recomputation q72's batch twin uses —
-    // completing the stream == batch == oracle triangle q61 has for
-    // windowed aggs. A far-future sentinel click (user_id -1, filtered from
-    // the result) advances the watermark past every real session's
-    // end + gap, and a second empty micro-batch fires the event-time
-    // timeouts so open sessions flush; per-session sums accumulate in 1e-4
-    // fixed point inside the state machine, so the emitted doubles are
-    // bitwise the oracle's exact DECIMAL(18,4) sums.
-    "q73_sessionize_stream" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      implicit val sp: SparkSession = s
-      val in = streamFixture(s, d, "q73_in") {
-        val clicks = t(s, d, "events").filter(col("event_type") === "click")
-          .select(col("user_id").as("userId"),
-            col("ts").cast("timestamp").as("ts"), col("value"))
-        clicks.unionByName(s.range(1).select(lit(-1L).as("userId"),
-          farFuture(clicks).as("ts"), lit(0.0).as("value")))
-      }
-      // input-sized state partitioning (r18, guide §2) — see intervalJoinFace
-      val nSp73 = graft.streaming.StreamOps.sizedStatePartitionsForInput(s, Seq(in))
-      graft.streaming.StreamOps.withStatePartitions(s, nSp73) { s2 =>
-        val schema = s2.read.parquet(in).schema
-        import s2.implicits._
-        val stream = s2.readStream.schema(schema).parquet(in)
-          .as[graft.streaming.Sessionize.Event]
-        val out = graft.streaming.Sessionize
-          .sessions(stream, gap = "30m", watermarkDelay = "0 seconds").toDF()
-        drainStream(s2, out, "g73_stream", in, schema) { t =>
-          t.filter(col("userId") >= 0L)
-            .select(col("userId").as("user_id"),
-              col("sessionStart").cast("timestamp_ntz").as("session_start"),
-              col("sessionEnd").cast("timestamp_ntz").as("session_end"),
-              col("nEvents").as("n_events"), col("sumValue").as("sum_value"))
-        }.orderBy(col("user_id"), col("session_start"))
-      }
-    }),
-
-    // beyond-reference: streaming EXACT-DEDUP ingest face
-    // (StreamOps.dedupStream = watermark-bounded dropDuplicates, the
-    // exactly-once first stage of a 100 TB/day pipeline) driven through the
-    // real runtime against a deterministically DUPLICATED fixture — every
-    // click once, every 3rd a second time, every 21st a third time. The
-    // oracle is the distinct base truth: keep-first semantics are
-    // unambiguous because duplicate rows are bit-identical. Completes the
-    // stream==batch==oracle triangle for dedup (qd01 is the batch face).
-    "q74_stream_dedup" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val in = streamFixture(s, d, "q74_in") {
-        val clicks = t(s, d, "events").filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp").as("ts"), col("value"))
-        clicks.unionByName(clicks.filter(col("event_id") % 3 === 0))
-          .unionByName(clicks.filter(col("event_id") % 21 === 0))
-      }
-      // input-sized state partitioning (r18, guide §2) — see intervalJoinFace
-      val nSp74 = graft.streaming.StreamOps.sizedStatePartitionsForInput(s, Seq(in))
-      graft.streaming.StreamOps.withStatePartitions(s, nSp74) { s2 =>
-        val schema = s2.read.parquet(in).schema
-        // watermark covers the fixture's whole event-time span (ADVICE r12):
-        // keep-first must hold even if the source splits the fixture across
-        // micro-batches — with the 10-minute default, a duplicate delivered
-        // after its key's state was watermark-evicted would re-emit
-        val out = graft.streaming.StreamOps.dedupStream(
-          s2.readStream.schema(schema).parquet(in), Seq("event_id"), "ts",
-          watermark = "3650 days")
-        val qn = "g74_stream"
-        val q = out.writeStream.outputMode("append").format("memory").queryName(qn)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally {
-          q.stop()
-          graft.streaming.StreamOps.releaseStateStores()
-        }
-        val res = localize(s2, s2.table(qn)
-          .select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp_ntz").as("ts"), col("value")))
-        s2.catalog.dropTempView(qn)
-        res.orderBy(col("event_id"))
-      }
-    }),
-
-    // beyond-reference: CONTINUOUS event-time as-of join (AsofStream,
-    // flatMapGroupsWithState with a bounded right-frontier state) driven
-    // through the real streaming runtime — same shape as the q21 batch
-    // as-of, so the SAME DuckDB native-ASOF oracle grades both: purchases
-    // stream-joined to the latest click at-or-before them per user.
-    "q75_asof_stream" -> ((s, d) =>
-      asofStreamFace(s, d, "75", "click", "click", withTs = true,
-        graft.operators.AsofJoin.Backward, tolerance = None)),
-
-    // beyond-reference: FORWARD continuous as-of with tolerance — "the
-    // next error within 1 day of each purchase". The forward direction is
-    // the interesting streaming case: a null can only finalize once the
-    // watermark passes the whole tolerance window (an unbounded forward
-    // wait never could), and a candidate finalizes early once it sits
-    // below the watermark. Same DuckDB rendering as q23 plus q22's
-    // tolerance CASE.
-    "q76_asof_stream_fwd" -> ((s, d) =>
-      asofStreamFace(s, d, "76", "error", "err", withTs = false,
-        graft.operators.AsofJoin.Forward, tolerance = Some("1d"))),
-
-    // beyond-reference: watermarked STREAM-STREAM INTERVAL JOINS (the Flink
-    // intervalJoin shape, composed from Spark's native
-    // StreamingSymmetricHashJoin — no custom state): every purchase joined
-    // to the same user's clicks from the preceding day. Inner matches emit
-    // as found; state on both sides is evicted by the derived state
-    // watermark, so a 100 TB/day correlation join holds bounded state.
-    // One function ([[intervalJoinFace]]) serves the whole family.
-    "q77_interval_join_stream" -> ((s, d) =>
-      intervalJoinFace(s, d, "inner", MemorySink("g77_stream"))),
-
-    // The state-partition sizing lever, driver-graded: the IDENTICAL inner
-    // join driven through the PRODUCTION FILE SINK (since r18). The memory
-    // sink materializes every joined row on the driver and its 100k
-    // localize guard aborted this face at sf10 (872,700 output rows); the
-    // file sink keeps the output distributed end to end, so the sized face
-    // — the one that IS the scale lever — drives and gates at any SF.
-    // q77 keeps the memory-sink harness as the in-bound twin, so both sink
-    // paths stay covered.
-    "q77s_interval_join_sized" -> ((s, d) =>
-      intervalJoinFace(s, d, "inner", FileSink(scratchDir("q77s_sink")))),
-
-    // the LEFT-OUTER interval join — purchases with NO click in the
-    // preceding day still emit (null click columns); a null can only
-    // finalize once the watermark passes the purchase's whole window
-    "q78_interval_join_outer" -> ((s, d) =>
-      intervalJoinFace(s, d, "left_outer", MemorySink("g78_stream"))),
-
-    // the FULL-OUTER interval join (r12 directive 5): unmatched rows on
-    // BOTH sides emit with the other side's columns null; the output key
-    // is coalesce(left, right) so unmatched-right rows keep their user.
-    // Each side's nulls finalize once the watermark passes that side's
-    // whole window (left: ts + after; right: click_ts + before).
-    "q79_interval_join_full" -> ((s, d) =>
-      intervalJoinFace(s, d, "full_outer", MemorySink("g79_stream"))),
-
-    // the RIGHT-OUTER interval join (r13 directive 3): clicks with NO
-    // purchase in the following day still emit (null purchase columns),
-    // finalized once the watermark passes `click_ts + before`; the key
-    // coalesces to the right's user_id.
-    "q82_interval_join_right" -> ((s, d) =>
-      intervalJoinFace(s, d, "right_outer", MemorySink("g82_stream"))),
-
-    // The PRODUCTION-SINK twin of q79 (r16 verdict item 1): the identical
-    // full-outer join through the checkpointed file sink, with NO
-    // driver-side bound — q78/q79/q82's memory sinks abort at the 100k
-    // localize guard above sf0.1 (a harness bound, not a face bound), so
-    // this face gives the outer-null finalization machinery — the most
-    // state-intensive streaming path in the repo — valid walls at any SF
-    // (reference lazy.rs:329-341 never-materialize streaming collect +
-    // io.rs:391-479 streaming sink).
-    "q83_interval_join_full_sink" -> ((s, d) =>
-      intervalJoinFace(s, d, "full_outer", FileSink(scratchDir("q83_sink")))),
-
-    // Multi-dimensional Z-order (Morton) layout — bucketing's sibling
-    // (q70) for the 100 TB table filtered on several columns at once:
-    // sorting by the interleaved-bit curve bounds EVERY interleaved
-    // column's range within each parquet row group, so footer min/max
-    // stats prune scans on ANY of them (LayoutSpec measures the pruning
-    // with reader metrics against a single-sort control). The curve is
-    // exact integer bit arithmetic, graded here against a bit-for-bit
-    // generated SQL mirror.
-    "q80_zorder_curve" -> ((s, d) => {
-      val b = t(s, d, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"),
-        pmod(col("l_partkey").cast("long"), lit(1024L)).as("zx"),
-        pmod(col("l_suppkey").cast("long"), lit(1024L)).as("zy"))
-      b.withColumn("z",
-          graft.operators.Layout.zValue(Seq(col("zx"), col("zy")), 10))
-        .orderBy(col("z"), col("l_orderkey"), col("l_linenumber"))
-        .limit(100)
-    }),
-
-    // The full Z-order layout CYCLE driver-graded: write lineitem z-ordered
-    // on two dims of very different widths (x spans the full 0..1023,
-    // y = suppkey%1024 only 0..#suppliers — ~100 at sf0.01), read the
-    // footer min/max stats back DISTRIBUTED, and reduce to the clustering
-    // diagnostic. The RANK path is load-bearing here: raw interleave gives
-    // the narrow dim no high-bit discrimination (measured cf 0.79 — the
-    // curve traverses its whole range inside every group), while
-    // quantile-rank spreads it over the full bit space (cf ~0.1). Global
-    // min/max per column are exact (the union of group ranges IS the
-    // column range — DuckDB recomputes them from the data); the clustering
-    // factors depend on sampled range/quantile boundaries, so they grade
-    // as a contract verdict (both dims under 0.6 — at 16 KiB groups the
-    // rank curve sits near sqrt(groupRows/total), 0.1–0.45 across SFs).
-    "q81_layout_stats" -> ((s, d) => {
-      val L = graft.operators.Layout
-      val dir = scratchDir("q81")
-      val base = t(s, d, "lineitem").select(
-        pmod(col("l_partkey").cast("long"), lit(1024L)).as("x"),
-        pmod(col("l_suppkey").cast("long"), lit(1024L)).as("y"),
-        col("l_orderkey"))
-      // r18 (guide §2.5/§5): targetFiles was pinned at 4 — four tasks
-      // sorted the whole table regardless of scale (the r15 sf10
-      // pathology: 15M rows/sorter, 418 MB spill/lane, the 115 s wall).
-      // r19 (verdict item 6): the count is DATA-derived — AutoFiles sizes
-      // from the knownSize-guarded input estimate at the PRODUCTION
-      // 128 MB block (sizingBlockBytes), so the file count scales with
-      // table bytes (max(shuffle-parallelism floor, ceil(bytes/256 MB)):
-      // both graded SFs sit at the floor — identical to the r18 explicit
-      // value — and a 100 TB table derives ~400k files instead of
-      // inheriting a machine constant). The 16 KiB blockBytes DEMO
-      // geometry stays for the WRITE only — row-group size, not file
-      // count, sets the pruning granularity, so the clustering-factor
-      // contract and the exact global min/max are unchanged (oracle
-      // re-proven hash-exact).
-      L.writeZOrderedByRank(base, Seq("x", "y"), bits = 10, dir,
-        targetFiles = L.AutoFiles,
-        blockBytes = 16L << 10,
-        sizingBlockBytes = 128L << 20)
-      // persist the row-group-stats frame ONCE (ADVICE r13: it feeds two
-      // plan branches — clusteringFactor + the gmin/gmax agg — which would
-      // otherwise open and parse every parquet footer twice). PERSIST, not
-      // localize (r18): the stats frame is row-group-count-sized, and the
-      // 16 KiB demo geometry yields 176k rows at sf10 — past the 100k
-      // driver guard that aborted this face's sf10 bench coverage (r17
-      // verdict). The stats stay distributed; only the 2-row diagnostic
-      // verdict localizes, which also lets the cache release before return.
-      val stats = L.rowGroupStats(s, dir, Seq("x", "y"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try
-        localize(s, L.clusteringFactor(stats)
-          .join(stats.groupBy(col("column")).agg(
-            min(col("min_value")).as("gmin"), max(col("max_value")).as("gmax")),
-            Seq("column"))
-          .select(col("column").as("col_name"), col("gmin"), col("gmax"),
-            (col("clustering_factor") < 0.6).as("clustered"))
-          .orderBy(col("col_name")))
-      finally stats.unpersist(blocking = true)
-    }),
-
-    // §2.1/2.2 beyond-reference: ORC round-trip (write → scan vs the
-    // parquet truth, the q56/q57/q58 pattern) — covers lakes already on
-    // Spark's other native columnar format, with timestamps in the payload
-    "q71_orc_roundtrip" -> ((s, d) => {
-      val dir = scratchDir("q71")
-      val src = t(s, d, "events").filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      graft.sources.IO.sinkOrc(src, dir)
-      graft.sources.IO.scanOrc(s, dir).orderBy(col("event_id"))
-    }),
-
-    // Okapi BM25 corpus scoring against a fixed query-term list (incl. a
-    // zero-df term exercising the absent-term path): ONE bounded model
-    // aggregation broadcast back, then narrow per-row scoring — the
-    // retrieval scorer a curation pipeline uses for quality-weighted
-    // selection. The oracle SQL is GENERATED from the same term list
-    // ([[Bm25Terms]]) so the two sides cannot drift.
-    "qd50_bm25" -> ((s, d) => {
-      graft.prep.Prep.bm25(t(s, d, "documents"), "doc_id", "text", Bm25Terms)
-        .select(col("doc_id"), col("lang"), col("bm25_uscore"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // HLL cardinality estimation (approx_count_distinct, rsd=0.02) — the
-    // 100 TB cardinality tool (vocabulary sizes, dedup-key counts, join-key
-    // explosion checks): sketches merge map-side, so the plan is one
-    // partial-agg exchange regardless of key cardinality. Contract face
-    // (the qd04 pattern): exact per-group distincts are hash-checked
-    // against DuckDB, and the sketch estimate must land within 3x rsd of
-    // exact (HLL++ is deterministic — no seed, no flake) — an estimator
-    // regression flips the verdict booleans red.
-    "qd51_approx_distinct" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      ev.groupBy(col("event_type")).agg(
-          countDistinct(col("user_id")).as("exact_users"),
-          approx_count_distinct(col("user_id"), 0.02).as("__au"),
-          countDistinct(col("event_id")).as("exact_events"),
-          approx_count_distinct(col("event_id"), 0.02).as("__ae"))
-        .select(col("event_type"), col("exact_users"), col("exact_events"),
-          (abs(col("__au") - col("exact_users")).cast("double") /
-            col("exact_users") <= 0.06).as("users_ok"),
-          (abs(col("__ae") - col("exact_events")).cast("double") /
-            col("exact_events") <= 0.06).as("events_ok"))
-        .orderBy(col("event_type"))
-    }),
-
-    // §2.4 at 100 TB: BUCKETED co-located fact-fact join. Both tables are
-    // laid out once per (JVM, SF) as 8-bucket key-sorted tables (repartition
-    // to one file per bucket first), after which the join plans as a
-    // ZERO-EXCHANGE sort-merge join — the shuffle that dominates a 100 TB
-    // fact-fact join is paid once at layout time and amortized over every
-    // subsequent join (PlanSpec asserts the exchange-free shape).
-    "q70_bucketed_join" -> ((s, d) => {
-      q70Join(s, d)
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"),
-          sum(dec2(col("l_extendedprice"))).cast("double").as("rev"),
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("qty"))
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    // §2.7 per-row list.sort (+ unique / join) — the fuzz-grammar-25
-    // rendering promoted to a driver-graded row: sort_array/array_join vs
-    // DuckDB list_sort/list_aggregate over the same split words.
-    "q69_list_sort" -> ((s, d) => {
-      t(s, d, "part")
-        .select(col("p_partkey"),
-          split(col("p_name"), " ").list.sort(descending = true)
-            .list.join("-").as("sorted_desc"),
-          array_join(array_sort(array_distinct(split(col("p_name"), " "))), "|")
-            .as("uniq_asc"))
-        .orderBy(col("p_partkey"))
-    }),
-
-    // Gopher §A1.2 duplicate-n-gram character gates — the repetition
-    // signals qd11's line/top-n-gram kernels don't cover (Rae et al. 2021
-    // Table A1: drop when dup-{5..10}-gram char fraction exceeds
-    // 0.15/0.14/0.13/0.12/0.11/0.10). Repetition is injected
-    // deterministically — doc_id % 4 copies of a doc-keyed six-word phrase
-    // appended to each document, so both engines see the same duplicated
-    // n-grams and the verdict varies across the corpus. The struct profile
-    // is materialized ONCE (separate projection — CollapseProject won't
-    // inline a non-trivial producer into 12 field uses), so all six
-    // fractions plus the gate cost one native pass per row.
-    "qd52_dup_ngrams" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      val docs = t(s, d, "documents").withColumn("rep_text",
-        concat(col("text"), lit(" "),
-          call_function("repeat",
-            concat(lit("rep"), (col("doc_id") % 5).cast("string"),
-              lit(" alpha beta gamma delta epsilon ")),
-            (col("doc_id") % 4).cast("int"))))
-      val prof = docs.withColumn("__p", T.dupNgramProfile(col("rep_text"), 5, 10))
-      // coalesce each fraction to 0.0 (ADVICE r13): the native profile is
-      // null-intolerant, while the DuckDB mirror LEFT JOINs per-n fractions
-      // and coalesces a missing one to 0.0 / the gate to TRUE — a NULL text
-      // row (none in the current fixtures) must agree on both sides
-      def frac(n: Int): Column =
-        coalesce(col("__p").getField(s"dup${n}_frac"), lit(0.0))
-      prof.select(
-          col("doc_id") +:
-          (5 to 10).map(n => frac(n).as(s"dup${n}_frac")) :+
-          T.DupNgramThresholds
-            .map { case (n, thr) => frac(n) <= thr }
-            .reduce(_ && _).as("ngram_ok"): _*)
-        .orderBy(col("doc_id"))
-    }),
-
-    // Leakage-safe train/valid/test split: qd17's exact modular-hash
-    // assignment keyed on qd10's near-dup cluster representative instead of
-    // the raw doc_id — every member of a duplicate cluster lands in the
-    // same split, so near-duplicates of a training document can never leak
-    // into validation/test. Singletons represent themselves.
-    "qd53_leakage_safe_split" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val pairs = graft.dedup.Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        shingleK = 5, threshold = 0.5)
-      graft.prep.Prep.leakageSafeSplit(docs, "doc_id", pairs,
-          trainPm = 800, validPm = 100)
-        .select(col("doc_id"), col("rep"), col("bucket"), col("split"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Exact-k deterministic per-stratum sample: each language keeps its 25
-    // smallest-shuffle-key docs — exact-size where qd17's rate filter is
-    // only exact-in-expectation, reproducible on any engine/cluster/retry.
-    // One bounded partial agg (graft_topk reduces every partition to <=k
-    // entries per stratum before the exchange — no global sort, no
-    // per-stratum window, so a 90%-one-language corpus has no hot-key
-    // cliff) plus a broadcast join back for the payload columns.
-    "qd54_stratified_sample" -> ((s, d) => {
-      graft.prep.Prep.stratifiedSampleExact(
-          t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars")),
-          "doc_id", "lang", k = 25, salt = 7L)
-        .select(col("lang"), col("rk"), col("doc_id"), col("n_chars"))
-        .orderBy(col("lang"), col("rk"))
-    }),
-
-    // Bounded-memory heavy hitters (Misra–Gries, mergeable) — the
-    // approximate complement to qd14's exact vocabulary, graded like qd51:
-    // the deterministic exact top-10 rows carry corpus-wide contract
-    // verdicts that the algorithm's invariants make provably TRUE on any
-    // partitioning (membership of sub-threshold tokens is arrival-order
-    // dependent by nature, so the sketch's borderline set is asserted
-    // through the contract, never enumerated). Sketch state: 64 counters
-    // per partition vs the exact path's full-vocabulary shuffle.
-    "qd55_heavy_hitters" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      val k = 64
-      val docs = t(s, d, "documents")
-      val exact = docs.select(explode(T.tokens(col("text"))).as("token"))
-        .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-      val total = exact.agg(sum(col("cnt")).as("__n")) // 1-row broadcast
-      val sketch = docs.agg(T.heavyHitters(T.tokens(col("text")), k).as("__sk"))
-        .select(explode(col("__sk")).as("e"))
-        .select(col("e.item").as("token"), col("e.est").as("est")) // <= k rows
-      val err = floor(col("__n") / (k + 1))
-      val checks = exact.join(broadcast(sketch), Seq("token"), "left")
-        .crossJoin(broadcast(total))
-        .agg(
-          min(when(col("est").isNull, true).otherwise(col("est") <= col("cnt")))
-            .as("no_overestimate"),
-          min(when(col("est").isNull, true).otherwise(col("cnt") - col("est") <= err))
-            .as("bound_ok"),
-          min(when(col("cnt") > err, col("est").isNotNull).otherwise(true))
-            .as("heavy_present"))
-      docs.select(explode(T.tokens(col("text"))).as("token"))
-        .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("token")).limit(10)
-        .crossJoin(broadcast(checks))
-        .orderBy(col("cnt").desc, col("token"))
-    }),
-
-    // qd55's GROUPED face: one Misra–Gries summary per language — the
-    // per-group bounded-buffer path (ObjectHashAggregate holds k counters
-    // per (lang, partition); the exchange carries langs × partitions × k
-    // counters). Same contract discipline: exact per-lang top-3 rows carry
-    // per-lang verdicts the MG invariants make provably true (n and the
-    // n/(k+1) bound are PER GROUP).
-    "qd57_heavy_hitters_by_lang" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      val k = 64
-      val docs = t(s, d, "documents")
-      val exact = docs.select(col("lang"), explode(T.tokens(col("text"))).as("token"))
-        .groupBy(col("lang"), col("token")).agg(count(lit(1)).as("cnt"))
-      val totals = exact.groupBy(col("lang")).agg(sum(col("cnt")).as("__n"))
-      val sketch = docs.groupBy(col("lang"))
-        .agg(T.heavyHitters(T.tokens(col("text")), k).as("__sk"))
-        .select(col("lang"), explode(col("__sk")).as("e"))
-        .select(col("lang"), col("e.item").as("token"), col("e.est").as("est"))
-      val err = floor(col("__n") / (k + 1))
-      val checks = exact.join(broadcast(sketch), Seq("lang", "token"), "left")
-        .join(broadcast(totals), Seq("lang"))
-        .groupBy(col("lang"))
-        .agg(
-          min(when(col("est").isNull, true).otherwise(col("est") <= col("cnt")))
-            .as("no_overestimate"),
-          min(when(col("est").isNull, true).otherwise(col("cnt") - col("est") <= err))
-            .as("bound_ok"),
-          min(when(col("cnt") > err, col("est").isNotNull).otherwise(true))
-            .as("heavy_present"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("lang")).orderBy(col("cnt").desc, col("token"))
-      exact.withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
-        .join(broadcast(checks), Seq("lang"))
-        .select(col("lang"), col("rk").cast("long").as("rk"), col("token"),
-          col("cnt"), col("no_overestimate"), col("bound_ok"), col("heavy_present"))
-        .orderBy(col("lang"), col("rk"))
-    }),
-
-    // Weighted sample WITHOUT replacement (Efraimidis–Spirakis A-Res):
-    // 40 docs drawn ∝ n_chars via the deterministic top-k-by-ln(u)/w
-    // reservoir — the quality-weighted corpus-selection primitive. One
-    // bounded partial agg (no per-row RNG state, no global sort) + a
-    // broadcast join back; content-keyed u, so any engine reproduces the
-    // exact sample (the oracle mirrors the formula verbatim).
-    "qd56_weighted_sample" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val keys = graft.prep.Prep.weightedSampleKeys(
-        docs, "doc_id", "n_chars", k = 40, salt = 11L)
-      docs.join(broadcast(keys), Seq("doc_id"))
-        .select(col("rk"), col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy(col("rk"))
-    }),
-  )
-
-  /** qd41's HASHED twin — the same three-stage selection with every scoring
-    * pass on its 100 TB face: perplexity and DSIR models are B-bounded
-    * bucket arrays riding as plan literals, so BOTH scoring stages are
-    * narrow maps (zero corpus shuffle; the only corpus-wide exchanges left
-    * are the bloom-verify join and the top-k). This is the plan a real
-    * corpus build runs — the qd41h BENCH face; the qd41h CORRECTNESS face
-    * wraps it in the overlap contract against exact qd41, with the
-    * scored-pool count riding along (`withPool`: `n_pool` on every selected
-    * row, computed inside the same stage-cache lifecycle) as its SF-portable
-    * selection-count anchor. */
-  private def qd41hRun(s: SparkSession, d: String, withPool: Boolean): DataFrame = {
-    val P = graft.prep.Prep
-    qualitySelect(s, d) { toks =>
-      // hashed perplexity gate: smoothed over its occupied-bucket support,
-      // so its NLL sits on the exact face's scale and the SAME cut applies
-      P.perplexityBigramHashed(toks, toks.filter(col("doc_id") % 11 === 0), "tk")
-        .filter(col("n_bigrams") > 0 && col("ppl_nats") <= 3.5)
-    } { s2 =>
-      // hashed DSIR — scoring is one narrow expression over s2
-      val weights = P.importanceWeightsHashed(s2,
-        s2.filter(col("doc_id") % 17 === 0), "tk")
-      val top = P.selectTopK(weights, "dsir_weight", "doc_id", k = 50)
-        .select(col("doc_id"), col("dsir_weight"))
-      // n_pool re-scans persisted s2 once — contract-face-only cost
-      if (!withPool) top
-      else top.crossJoin(weights.agg(count(lit(1)).as("n_pool")))
-    }
-  }
-
-  // ------------------------------------------------------------ bench faces
-
-  /** BENCH faces: the benchmark times each operator's PRODUCTION plan. Four
-    * queries' correctness faces run something other than the raw operator —
-    * qd04/qd05/qs04 embed an exact self-verification contract (round 9
-    * measured qd04 at 4.8x its operator-only baseline because the bench was
-    * timing the embedded verifier, not the operator), and qd32 trains on the
-    * small fixture corpus its merge-order oracle needs. Overridden here
-    * under the SAME names with the raw operator workload, so `BENCH_r{N}`
-    * gates the plan a 100 TB user runs while `CORRECTNESS_r{N}` (Verify →
-    * `queries`) keeps gating the verification contracts. */
-  val benchQueries: Map[String, (SparkSession, String) => DataFrame] = queries ++ Map[String, (SparkSession, String) => DataFrame](
-
-    // raw MinHash-LSH candidate pairs (the qd04 contract's operator half;
-    // its exact-verify half is qd16's workload, benched there)
-    "qd04_minhash_pairs" -> ((s, d) => {
-      graft.dedup.Dedup.minhashPairs(t(s, d, "documents"), "doc_id", "text",
-        numHashes = 128, bands = 32, shingleK = 5, threshold = 0.5)
-    }),
-
-    // raw Misra–Gries sketch aggregation (the qd55 contract's operator
-    // half, r13 directive 5: the contract face's exact token groupBy +
-    // top-k is verification workload — the term that grows with data; the
-    // operator a 100 TB user runs is the bounded-counter sketch alone)
-    "qd55_heavy_hitters" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      t(s, d, "documents")
-        .agg(T.heavyHitters(T.tokens(col("text")), 64).as("__sk"))
-        .select(explode(col("__sk")).as("e"))
-        .select(col("e.item").as("token"), col("e.est").as("est"))
-    }),
-
-    // raw GROUPED Misra–Gries sketch (qd57's operator half — one bounded
-    // summary per language, k counters per (lang, partition))
-    "qd57_heavy_hitters_by_lang" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      t(s, d, "documents").groupBy(col("lang"))
-        .agg(T.heavyHitters(T.tokens(col("text")), 64).as("__sk"))
-        .select(col("lang"), explode(col("__sk")).as("e"))
-        .select(col("lang"), col("e.item").as("token"), col("e.est").as("est"))
-    }),
-
-    // raw HLL sketch aggregation (the qd51 contract's operator half; the
-    // exact countDistinct there is verification workload, not the operator)
-    "qd51_approx_distinct" -> ((s, d) => {
-      t(s, d, "events").groupBy(col("event_type")).agg(
-          approx_count_distinct(col("user_id"), 0.02).as("approx_users"),
-          approx_count_distinct(col("event_id"), 0.02).as("approx_events"))
-        .orderBy(col("event_type"))
-    }),
-
-    // raw SimHash pigeonhole candidate pairs
-    "qd05_simhash_pairs" -> ((s, d) => {
-      graft.dedup.Dedup.simhashPairs(t(s, d, "documents"), "doc_id", "text",
-        chunks = 4, maxHamming = 3)
-    }),
-
-    // raw SemDeDup survivors — the contract face additionally runs the
-    // exact-cosine justification scan over every dropped vector
-    // (correctness-only, like qd04's exact-verify half)
-    "qd29_semantic_dedup" -> ((s, d) => {
-      graft.dedup.Dedup.semanticDedup(t(s, d, "embeddings"), "vec_id",
-        "embedding", nlist = 8, threshold = 0.3, lloydIters = 2)
-    }),
-
-    // raw near-dup decontamination flags — the contract face additionally
-    // recomputes every doc's exact max-Jaccard against the bench set for
-    // the sketch-vs-exact verdict (correctness-only)
-    "qd21_decontaminate_neardup" -> ((s, d) => {
-      graft.prep.Prep.contaminationNearDup(t(s, d, "documents"),
-          t(s, d, "documents").filter(col("doc_id") % 97 === 0),
-          "doc_id", "text",
-          numHashes = 128, bands = 32, shingleK = 5, threshold = 0.8)
-        .select(col("doc_id"), col("contaminated"))
-    }),
-
-    // PQ ANN: codebook train + corpus encode + ADC search with rescore —
-    // the full production index+search path, minus the brute-force exact
-    // re-scan that exists only to feed the correctness contract (rescore
-    // pool scales with the corpus, same rule as the contract face)
-    "qs04_ann_pq" -> ((s, d) => {
-      val P = graft.similarity.Pq
-      val e = t(s, d, "embeddings")
-      val q = e.filter(col("vec_id") < 10)
-      val cb = P.train(e, dim = 64, m = 16, ksub = 16, sampleN = 1000)
-      P.searchAdc(P.encode(e, cb, m = 16, ksub = 16), cb,
-        q, k = 5, m = 16, ksub = 16,
-        rescore = math.max(100L, e.count() / 5L).toInt)
-    }),
-
-    // the raw hashed flagship (the contract face runs this PLUS exact qd41)
-    "qd41h_pipeline_quality_select_hashed" -> ((s, d) => qd41hRun(s, d, withPool = false)),
-
-    // fixture-scan twins (r10 directive 4): the synthesized input columns
-    // materialize to a per-SF parquet once per JVM; the bench face times
-    // the OPERATOR over a scan while the contract face keeps the in-query
-    // formula construction the oracle recomputes
-    "qd40_c4_filter" -> ((s, d) =>
-      qd40Run(fixtureScan(s, d, "qd40")(qd40Dirty(t(s, d, "documents"))))),
-    "qd44_gopher_quality" -> ((s, d) =>
-      qd44Run(fixtureScan(s, d, "qd44")(qd44Structured(t(s, d, "documents"))))),
-    "qd46_dup_paragraphs" -> ((s, d) =>
-      qd46Run(s, fixtureScan(s, d, "qd46")(qd46Paras(t(s, d, "documents"))))),
-    "q54_pipeline_crawl" -> ((s, d) =>
-      q54Run(fixtureScan(s, d, "q54")(q54Html(t(s, d, "documents"))))),
-    // decode-only face: the per-row PNG/WAV ENCODE moves into the fixture;
-    // the timed plan decodes pre-synthesized bytes through the real codecs
-    // (the r10 verdict's last >2x baseline row was paying the encode)
-    "qm02_decode_features" -> ((s, d) =>
-      qm02Run(fixtureScan(s, d, "qm02")(qm02Payloads(s, t(s, d, "documents"))))),
-
-    // raw per-row deflate walk + gate — the contract face additionally
-    // recomputes every ratio through the independent UDF reference
-    "qd30_compress_ratio" -> ((s, d) => {
-      val T = graft.functions.TextFunctions
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          T.compressionRatio(col("text")).as("compress_ratio"),
-          T.tokenCount(col("text")).as("n_tokens"))
-        .withColumn("keep", col("compress_ratio").between(0.25, 1.1))
-        .orderBy(col("doc_id"))
-    }),
-
-    // trainable BPE on the REAL corpus (distributed word-frequency table →
-    // corpus-exact merges → narrow-map encode) — the original qd32 workload
-    "qd32_bpe_tokenize" -> ((s, d) => {
-      val B = graft.functions.Bpe
-      val T = graft.functions.TextFunctions
-      val docs = t(s, d, "documents")
-      val merges = B.trainCorpus(docs, "text", numMerges = 40)
-      docs.select(col("doc_id"),
-          T.tokenCount(col("text")).as("n_words"),
-          B.tokenCount(col("text"), merges).as("n_bpe_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-  )
-
-  // ------------------------------------------------------------- oracle SQL
-
-  /** DuckDB mirror of TextFunctions.langScore — generated from the SAME
-    * dictionaries so Spark and oracle can never drift. */
-  private def langScoreSql(lang: String): String = {
-    val words = graft.functions.TextFunctions.Stopwords.toMap.apply(lang)
-      .map(w => s"'$w'").mkString(", ")
-    s"len(list_filter(string_split_regex(lower(text), '\\s+'), x -> x IN ($words)))"
-  }
-
-  /** langId mirror without ordering — nestable as a FROM subquery. */
-  private def langPredSql: String = {
-    val langs = graft.functions.TextFunctions.Stopwords.map(_._1)
-    val scoreCols = langs.map(l => s"${langScoreSql(l)} AS s_$l").mkString(",\n  ")
-    val allZero = langs.map(l => s"s_$l = 0").mkString(" AND ")
-    val branches = langs.map { l =>
-      val isMax = langs.filter(_ != l).map(o => s"s_$l >= s_$o").mkString(" AND ")
-      s"WHEN $isMax THEN '$l'"
-    }.mkString("\n    ")
-    s"""WITH s AS (SELECT doc_id, lang,
-       |  $scoreCols
-       |FROM documents)
-       |SELECT doc_id, lang,
-       |  CASE WHEN $allZero THEN 'und'
-       |    $branches
-       |    ELSE 'und' END AS lang_pred
-       |FROM s""".stripMargin
-  }
-
-  private def langIdOracleSql: String =
-    s"SELECT * FROM ($langPredSql) ORDER BY doc_id"
-
-  /** Repetition-signal mirror (TextFunctions.dupLineFraction/
-    * dupLineCharFraction/topNgramShare/repetitionOk) without ordering —
-    * nestable as a FROM subquery. */
-  private val repetitionSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
-      |  FROM documents
-      |),
-      |lrow AS (
-      |  SELECT doc_id, unnest(list_filter(string_split(text, chr(10)), x -> x <> '')) AS line
-      |  FROM documents
-      |),
-      |lg AS (SELECT doc_id, line, count(*) AS c, length(line) AS len
-      |       FROM lrow GROUP BY doc_id, line),
-      |lagg AS (
-      |  SELECT doc_id,
-      |    CAST(sum(c) - count(*) AS DOUBLE) / sum(c) AS dup_line_frac,
-      |    CAST(sum(CASE WHEN c > 1 THEN c * len ELSE 0 END) AS DOUBLE)
-      |      / sum(c * len) AS dup_line_char_frac
-      |  FROM lg GROUP BY doc_id),
-      |s2 AS (
-      |  SELECT doc_id, unnest(CASE WHEN len(w) >= 2
-      |    THEN [list_aggregate(w[i:i+1], 'string_agg', ' ') FOR i IN range(1, len(w))]
-      |    ELSE [list_aggregate(w, 'string_agg', ' ')] END) AS s
-      |  FROM toks WHERE len(w) > 0),
-      |c2 AS (SELECT doc_id, s, count(*) AS c FROM s2 GROUP BY doc_id, s),
-      |a2 AS (SELECT doc_id, CAST(max(c) AS DOUBLE) / sum(c) AS top2 FROM c2 GROUP BY doc_id),
-      |s3 AS (
-      |  SELECT doc_id, unnest(CASE WHEN len(w) >= 3
-      |    THEN [list_aggregate(w[i:i+2], 'string_agg', ' ') FOR i IN range(1, len(w) - 1)]
-      |    ELSE [list_aggregate(w, 'string_agg', ' ')] END) AS s
-      |  FROM toks WHERE len(w) > 0),
-      |c3 AS (SELECT doc_id, s, count(*) AS c FROM s3 GROUP BY doc_id, s),
-      |a3 AS (SELECT doc_id, CAST(max(c) AS DOUBLE) / sum(c) AS top3 FROM c3 GROUP BY doc_id)
-      |SELECT d.doc_id,
-      |  coalesce(lagg.dup_line_frac, 0.0) AS dup_line_frac,
-      |  coalesce(lagg.dup_line_char_frac, 0.0) AS dup_line_char_frac,
-      |  coalesce(a2.top2, 0.0) AS top2_share,
-      |  coalesce(a3.top3, 0.0) AS top3_share,
-      |  (coalesce(lagg.dup_line_frac, 0.0) <= 0.30
-      |    AND coalesce(lagg.dup_line_char_frac, 0.0) <= 0.20
-      |    AND coalesce(a2.top2, 0.0) <= 0.20 AND coalesce(a3.top3, 0.0) <= 0.18) AS rep_ok
-      |FROM documents d
-      |LEFT JOIN lagg ON d.doc_id = lagg.doc_id
-      |LEFT JOIN a2 ON d.doc_id = a2.doc_id
-      |LEFT JOIN a3 ON d.doc_id = a3.doc_id""".stripMargin
-
-  /** DSIR weight computation shared by qd36/qd37: Laplace-smoothed unigram
-    * models (target = doc_id % 17, source = whole corpus) over the shared
-    * vocabulary. Per-word log-ratios are quantized to micro-nats
-    * (`floor(lr*1e6 + 0.5)` — exact int64) BEFORE the per-doc sum, because
-    * `ln` is the one op the two libms disagree on in the last ulp; the
-    * integer sum is then order-independent and bitwise-exact. */
-  private val dsirWeightsCte =
-    s"""WITH ctok AS (
-      |  SELECT doc_id, unnest(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS w
-      |  FROM documents
-      |),
-      |$dsirModelCtes,
-      |weights AS (
-      |  SELECT d.doc_id, d.lang, CAST(coalesce(ws.uw, 0) AS BIGINT) AS dsir_uweight
-      |  FROM documents d LEFT JOIN wsum ws ON d.doc_id = ws.doc_id
-      |)""".stripMargin
-
-  /** The DSIR model over a `ctok(doc_id, w)` token CTE defined before it
-    * (target = doc_id % 17 of those tokens): per-word micro-nat log-ratios
-    * `lr(w, ulr)` and their per-doc sums `wsum(doc_id, uw)`. Shared by
-    * [[dsirWeightsCte]] and qd41's oracle. */
-  private lazy val dsirModelCtes =
-    """ttok AS (SELECT w FROM ctok WHERE doc_id % 17 = 0),
-      |cs AS (SELECT w, count(*) AS c FROM ctok GROUP BY w),
-      |ts AS (SELECT w, count(*) AS c FROM ttok GROUP BY w),
-      |vocab AS (SELECT w FROM cs UNION SELECT w FROM ts),
-      |consts AS (SELECT (SELECT count(*) FROM vocab) AS v,
-      |                  (SELECT count(*) FROM ctok) AS ns,
-      |                  (SELECT count(*) FROM ttok) AS nt),
-      |lr AS (
-      |  SELECT vocab.w,
-      |    CAST(floor((ln((coalesce(ts.c, 0) + 1.0) / (nt + 1.0 * v)) -
-      |                ln((coalesce(cs.c, 0) + 1.0) / (ns + 1.0 * v))) * 1000000.0 + 0.5)
-      |         AS BIGINT) AS ulr
-      |  FROM vocab LEFT JOIN cs ON vocab.w = cs.w
-      |             LEFT JOIN ts ON vocab.w = ts.w, consts
-      |),
-      |wsum AS (
-      |  SELECT t.doc_id, sum(lr.ulr) AS uw
-      |  FROM ctok t JOIN lr ON t.w = lr.w
-      |  GROUP BY t.doc_id
-      |)""".stripMargin
-
-  /** Shared DuckDB shingle CTE (5-gram, whitespace tokens) mirroring
-    * TextFunctions.tokens + shingles. */
-  private val shingleCte =
-    """WITH toks AS (
-      |  SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
-      |  FROM documents
-      |),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, unnest(CASE WHEN len(w) >= 5
-      |    THEN [list_aggregate(w[i:i+4], 'string_agg', ' ') FOR i IN range(1, len(w) - 3)]
-      |    ELSE [list_aggregate(w, 'string_agg', ' ')] END) AS s
-      |  FROM toks
-      |)""".stripMargin
-
-  /** The qd03 exact-Jaccard pair query as a nestable subquery (DuckDB allows
-    * CTEs inside FROM subqueries) — reused by the connected-components
-    * oracle so the edge list cannot drift from qd03's. */
-  private lazy val jaccardPairsSql: String =
-    s"""$shingleCte,
-       |cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-       |p AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-       |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2
-       |)
-       |SELECT id_a, id_b
-       |FROM p JOIN cnt ca ON id_a = ca.doc_id JOIN cnt cb ON id_b = cb.doc_id
-       |WHERE CAST(shared AS DOUBLE) / (ca.n + cb.n - shared) >= 0.5""".stripMargin
-
-  /** Exact 5-shingle Jaccard pairs (>= 0.5) with their similarity: qd03's
-    * oracle, and qd16's verbatim (only its candidate-generation plan
-    * differs on the Spark side). */
-  private lazy val ngramJaccardSql: String =
-    s"""$shingleCte,
-       |cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-       |pairs AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-       |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2
-       |)
-       |SELECT id_a, id_b, CAST(shared AS DOUBLE) / (ca.n + cb.n - shared) AS jaccard
-       |FROM pairs JOIN cnt ca ON id_a = ca.doc_id JOIN cnt cb ON id_b = cb.doc_id
-       |WHERE CAST(shared AS DOUBLE) / (ca.n + cb.n - shared) >= 0.5
-       |ORDER BY id_a, id_b""".stripMargin
-
-  /** qd03's Jaccard pairs closed under recursive reach: opens a
-    * `WITH RECURSIVE` chain ending in `comp(id, component)`, every paired
-    * doc mapped to its cluster's minimum doc_id (unpaired docs absent).
-    * Shared by the qd10, qd53 and q49 oracles. */
-  private lazy val componentsCte: String =
-    s"""WITH RECURSIVE pairs AS (
-       |  SELECT id_a, id_b FROM ($jaccardPairsSql)
-       |),
-       |edges AS (
-       |  SELECT id_a AS src, id_b AS dst FROM pairs
-       |  UNION SELECT id_b, id_a FROM pairs
-       |),
-       |reach(src, dst) AS (
-       |  SELECT src, dst FROM edges
-       |  UNION
-       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-       |),
-       |comp AS (SELECT src AS id, least(src, min(dst)) AS component
-       |         FROM reach GROUP BY src)""".stripMargin
-
-  /** The interval-join faces' oracle, keyed by join kind: the plain batch
-    * range join — every (purchase, click-from-the-preceding-day) pair per
-    * user, plus each outer side's unmatched rows with the other side's
-    * columns null. For right/full joins user_id coalesces to the click's,
-    * so unmatched-right rows keep their user. Sink choice and state
-    * partitioning must not change a single row, so faces that differ only
-    * there (q77/q77s, q79/q83) share one text. */
-  private def intervalJoinSql(joinType: String): String = {
-    val join = Map("inner" -> "JOIN", "left_outer" -> "LEFT JOIN",
-      "right_outer" -> "RIGHT JOIN", "full_outer" -> "FULL JOIN")(joinType)
-    val user =
-      if (joinType == "right_outer" || joinType == "full_outer")
-        "coalesce(p.user_id, c.user_id) AS user_id"
-      else "p.user_id"
-    s"""SELECT p.event_id, $user, p.ts, p.value,
-       |  c.event_id AS click_id, c.ts AS click_ts, c.value AS click_value
-       |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-       |$join (SELECT * FROM events WHERE event_type = 'click') c
-       |  ON p.user_id = c.user_id
-       |  AND c.ts BETWEEN p.ts - INTERVAL 1 DAY AND p.ts
-       |ORDER BY p.event_id, click_id""".stripMargin
-  }
-
   /** The batch backward as-of (DuckDB's native ASOF): each purchase with
     * the latest click at-or-before it, per user. Shared by q21 and its
     * continuous twin q75, which must reproduce it exactly. */
-  private val asofBackwardSql: String =
+  private[graft] val asofBackwardSql: String =
     """SELECT p.event_id, p.user_id, p.ts, p.value,
       |  c.value AS click_value, c.ts AS click_ts
       |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
       |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
       |  ON p.user_id = c.user_id AND p.ts >= c.ts
       |ORDER BY p.event_id""".stripMargin
-
-  /** The qd39 perplexity model as CTEs over a `toks(doc_id, tk)` CTE
-    * defined before it: the add-1 bigram LM on every 11th doc, scored per
-    * doc bigram as `scored(doc_id, unll)` (micro-nat quantized). Shared by
-    * the qd39 and qd41 oracles. */
-  private val perplexityCtes: String =
-    """lmtk AS (SELECT tk FROM toks WHERE doc_id % 11 = 0),
-      |vv AS (SELECT count(DISTINCT w) AS v FROM (SELECT unnest(tk) AS w FROM lmtk)),
-      |c1 AS (
-      |  SELECT w1, count(*) AS c1 FROM (
-      |    SELECT unnest(tk[1:len(tk)-1]) AS w1 FROM lmtk WHERE len(tk) >= 2
-      |  ) GROUP BY w1
-      |),
-      |c12 AS (
-      |  SELECT bg, count(*) AS c12 FROM (
-      |    SELECT unnest([tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))]) AS bg
-      |    FROM lmtk WHERE len(tk) >= 2
-      |  ) GROUP BY bg
-      |),
-      |docbg AS (
-      |  SELECT doc_id, unnest([tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))]) AS bg
-      |  FROM toks WHERE len(tk) >= 2
-      |),
-      |scored AS (
-      |  SELECT d.doc_id,
-      |    CAST(floor((ln(coalesce(c1.c1, 0) + 1.0 * vv.v) -
-      |                ln(coalesce(c12.c12, 0) + 1.0)) * 1000000.0 + 0.5) AS BIGINT) AS unll
-      |  FROM docbg d
-      |  LEFT JOIN c12 ON d.bg = c12.bg
-      |  LEFT JOIN c1 ON string_split(d.bg, ' ')[1] = c1.w1, vv
-      |)""".stripMargin
-
-  /** qd49 oracle: BPE-encode each word by replaying [[fixedMerges]] as a
-    * sequential replace chain over a delimiter-framed symbol string
-    * (`␟t␟h␟e␟</w>␟` with ␟ = chr(31), absent from the corpus). One
-    * left-to-right non-overlapping `replace` per merge IS `Bpe.mergeOnce`,
-    * and for a valid table sequential application equals the encoder's
-    * best-rank-first loop (see the qd49 query comment). Sub-token count per
-    * word = delimiters − 1. */
-  private lazy val bpeEncodeFixedSql: String = {
-    val D = "chr(31)"
-    def q(x: String) = "'" + x.replace("'", "''") + "'"
-    val init = D + " || regexp_replace(w, '(.)', '" + "\\1' || " + D + ", 'g') || '</w>' || " + D
-    val chain = fixedMerges.foldLeft(init) { case (acc, (a, b)) =>
-      "replace(" + acc + ", " + D + " || " + q(a) + " || " + D + " || " + q(b) + " || " + D +
-        ", " + D + " || " + q(a + b) + " || " + D + ")"
-    }
-    """WITH words AS (
-      |  SELECT doc_id, unnest(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS w
-      |  FROM documents
-      |),
-      |enc AS (SELECT doc_id, """.stripMargin + chain + """ AS s FROM words),
-      |per_doc AS (
-      |  SELECT doc_id, sum(length(s) - length(replace(s, chr(31), '')) - 1) AS n
-      |  FROM enc GROUP BY doc_id
-      |)
-      |SELECT d.doc_id, CAST(coalesce(p.n, 0) AS INT) AS n_bpe_tokens
-      |FROM documents d LEFT JOIN per_doc p USING (doc_id)
-      |ORDER BY d.doc_id""".stripMargin
-  }
-
-  /** DuckDB mirror of TextFunctions.htmlToText over an `html` column: the
-    * SAME RE2-portable regex chain and entity order. Shared by the qd43
-    * and q54 oracles. */
-  private val htmlToTextSql: String =
-    """trim(
-      |  regexp_replace(
-      |    regexp_replace(
-      |      replace(replace(replace(replace(replace(replace(
-      |        regexp_replace(
-      |          regexp_replace(
-      |            regexp_replace(
-      |              regexp_replace(html, '(?is)<(script|style)[^>]*>.*?</(script|style)[ \t\n\r\f]*>', ' ', 'g'),
-      |              '(?s)<!--.*?-->', ' ', 'g'),
-      |            '(?i)</?(br|pre|p|div|h[1-6]|li|tr|table|ul|ol|blockquote|section|article|header|footer)\b[^>]*>', chr(10), 'g'),
-      |          '<[^>]*>', ' ', 'g'),
-      |        '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''), '&amp;', '&'),
-      |      '[ \t\r\f]+', ' ', 'g'),
-      |    ' ?\n[\n ]*', chr(10), 'g'),
-      |  ' ' || chr(10))""".stripMargin
-
-  /** The exact decontamination oracle: docs sharing any 5-gram shingle
-    * with the eval bench (doc_id % `benchMod` = 0). Shared by qd18 and
-    * qd34, whose Bloom prefilter must be invisible in the result. */
-  private def decontaminationSql(benchMod: Int): String =
-    s"""$shingleCte,
-       |bsh AS (SELECT DISTINCT s FROM sh WHERE doc_id % $benchMod = 0),
-       |hits AS (
-       |  SELECT sh.doc_id, count(*) AS n_shared
-       |  FROM sh JOIN bsh ON sh.s = bsh.s
-       |  GROUP BY sh.doc_id
-       |)
-       |SELECT d.doc_id, d.lang,
-       |  CAST(coalesce(h.n_shared, 0) AS BIGINT) AS n_shared,
-       |  coalesce(h.n_shared, 0) >= 1 AS contaminated
-       |FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
-       |ORDER BY d.doc_id""".stripMargin
-
-  /** qd28's span dedup as CTEs: whitespace tokens, 20-word
-    * non-overlapping spans, keep-first by (doc_id, pos), and each doc's
-    * surviving spans re-joined as `k(doc_id, text)`. Shared by the qd28
-    * and q53 oracles. */
-  private val spanDedupCtes: String =
-    """WITH t AS (
-      |  SELECT doc_id, lang,
-      |    list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
-      |  FROM documents
-      |),
-      |c AS (
-      |  SELECT doc_id,
-      |    unnest([list_aggregate(w[i*20+1:i*20+20], 'string_agg', ' ')
-      |            FOR i IN range(CAST(ceil(len(w) / 20.0) AS BIGINT))]) AS span,
-      |    unnest(range(CAST(ceil(len(w) / 20.0) AS BIGINT))) AS pos
-      |  FROM t
-      |),
-      |r AS (
-      |  SELECT doc_id, pos, span,
-      |    row_number() OVER (PARTITION BY span ORDER BY doc_id, pos) AS rn
-      |  FROM c
-      |),
-      |k AS (
-      |  SELECT doc_id, string_agg(span, ' ' ORDER BY pos) AS text
-      |  FROM r WHERE rn = 1 GROUP BY doc_id
-      |)""".stripMargin
-
-  /** qd22/qd42's mixture frame: per-doc token counts `d`, per-language
-    * totals `tot`, then the salted-bucket rollup of the docs kept under a
-    * per-language `r(lang, rate)` that `rateCtes` defines over `tot`. */
-  private def mixtureSql(rateCtes: String): String =
-    s"""WITH d AS (
-       |  SELECT doc_id, lang,
-       |    CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
-       |  FROM documents
-       |),
-       |tot AS (SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS tok FROM d GROUP BY lang),
-       |$rateCtes
-       |SELECT d.lang, count(*) AS n_docs, CAST(sum(d.n_tokens) AS BIGINT) AS n_tokens
-       |FROM d JOIN r ON d.lang = r.lang
-       |WHERE ((doc_id + 1) % 1000000007) * 2654435761 % 1000000007 % 1000 < rate
-       |GROUP BY d.lang ORDER BY d.lang""".stripMargin
-
-  /** The prefix-sum packing shared by the qd23 and qd47 oracles: each
-    * doc's whitespace-token count and the exclusive running total `prev`
-    * in doc_id order. */
-  private val packedSql: String =
-    """  SELECT doc_id, n_tokens,
-      |    CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prev
-      |  FROM (
-      |    SELECT doc_id,
-      |      CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
-      |    FROM documents
-      |  )""".stripMargin
-
-  val oracleSql: Map[String, String] = Map(
-    "qd01_dedup_exact" ->
-      """SELECT doc_id, lang, source FROM (
-        |  SELECT doc_id, lang, source,
-        |    row_number() OVER (PARTITION BY lang, source ORDER BY doc_id) AS rn
-        |  FROM documents
-        |) WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    "qd02_fingerprint" ->
-      """SELECT lang,
-        |  count(DISTINCT trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g'))) AS n_fp,
-        |  count(*) AS n_docs
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "qd03_ngram_jaccard" -> ngramJaccardSql,
-
-    "qd06_langid" -> langIdOracleSql,
-
-    "qd07_token_stats" -> {
-      val bpe = graft.functions.TextFunctions.BpePattern.replace("'", "''")
-      s"""SELECT doc_id,
-         |  len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS n_tokens,
-         |  len(regexp_extract_all(text, '$bpe')) AS n_bpe,
-         |  length(text) AS n_chars,
-         |  CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE)
-         |    / len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS mean_tok_len
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-
-    "qd08_quality" -> {
-      val enScore = langScoreSql("en")
-      s"""SELECT doc_id,
-         |  CAST(length(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g')) AS DOUBLE) / length(text) AS alnum_ratio,
-         |  CAST($enScore AS DOUBLE)
-         |    / len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS stop_ratio,
-         |  (CASE WHEN len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) BETWEEN 10 AND 100000
-         |        THEN 1.0 ELSE 0.0 END * 0.4)
-         |  + (CAST(length(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g')) AS DOUBLE) / length(text) * 0.4)
-         |  + (least(CAST($enScore AS DOUBLE)
-         |      / len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) * 10.0, 1.0) * 0.2) AS quality
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-
-    "qd09_embedding_dedup" ->
-      """WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)
-        |SELECT id_a, id_b, cosine FROM (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    list_sum(list_transform(list_zip(a.v, b.v), x -> x[1] * x[2]))
-        |      / sqrt(list_sum(list_transform(a.v, x -> x * x)) * list_sum(list_transform(b.v, x -> x * x))) AS cosine
-        |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-        |) WHERE cosine >= 0.35 ORDER BY id_a, id_b""".stripMargin,
-
-    "qd10_dedup_components" ->
-      s"""$componentsCte
-         |SELECT id, component FROM comp ORDER BY id""".stripMargin,
-
-    "qs01_cosine_topk" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-        |scored AS (
-        |  SELECT query_id, e.vec_id AS neighbor_id,
-        |    list_sum(list_transform(list_zip(qv, e.v), x -> x[1] * x[2]))
-        |      / sqrt(list_sum(list_transform(qv, x -> x * x)) * list_sum(list_transform(e.v, x -> x * x))) AS cosine
-        |  FROM q JOIN e ON e.vec_id <> q.query_id
-        |)
-        |SELECT query_id, neighbor_id, cosine, CAST(rn AS INT) AS rank FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-        |  FROM scored
-        |) WHERE rn <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // Sketch-dedup verdict contracts (same pattern as the ANN recall rows
-    // below): the Spark query verifies its approximate pairs against the
-    // exact metric in-engine and emits booleans the oracle states.
-    "qd04_minhash_pairs" ->
-      "SELECT true AS found_pairs, true AS precision_ok, true AS recall_ok",
-    "qd05_simhash_pairs" ->
-      "SELECT true AS found_pairs, true AS precision_ok",
-    "qd21_decontaminate_neardup" ->
-      "SELECT true AS found_some, true AS soundness_ok, true AS completeness_ok",
-    "qd29_semantic_dedup" ->
-      "SELECT true AS dropped_some, true AS all_drops_justified",
-    // deflate-ratio verdict contract: DuckDB cannot deflate, so the query
-    // proves every native-expression ratio equals an independent
-    // java.util.zip recomputation and the oracle states the verdict plus
-    // the SQL-expressible token/row aggregates (zero-no_oracle, r10 d3)
-    "qd30_compress_ratio" ->
-      """SELECT count(*) AS n_docs,
-        |  CAST(sum(len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))) AS BIGINT)
-        |    AS n_tokens_total,
-        |  count(*) FILTER (WHERE length(text) > 0) AS n_rated,
-        |  true AS ratio_ok
-        |FROM documents""".stripMargin,
-    // hashed flagship vs exact flagship selection-overlap contract —
-    // SF-portable verdict booleans (r18): the count anchors to the
-    // pipeline's own scored pool, the overlap floor is fractional
-    "qd41h_pipeline_quality_select_hashed" ->
-      "SELECT true AS n_selected_ok, true AS overlap_ok",
-    "q36_sample" ->
-      "SELECT true AS n_ok, true AS distinct_ok, true AS subset_ok",
-
-    // Approximate-search recall contracts: the Spark query computes mean
-    // recall vs its own exact top-k and emits the verdict; the oracle
-    // states the expected verdict (a recall regression hash-mismatches).
-    "qs02_ann_lsh" ->
-      "SELECT count(DISTINCT vec_id) AS n_queries, true AS recall_ok FROM embeddings WHERE vec_id < 10",
-    "qs03_ann_ivf" ->
-      "SELECT count(DISTINCT vec_id) AS n_queries, true AS recall_ok FROM embeddings WHERE vec_id < 10",
-    // PQ+rescore is near-exact, so its contract is per-query
-    "qs04_ann_pq" ->
-      "SELECT vec_id AS query_id, true AS recall_ok FROM embeddings WHERE vec_id < 10 ORDER BY query_id",
-
-    // BPE encode under the fixed merge table (the trainable pipeline's
-    // encode half): full replay in DuckDB
-    "qd49_bpe_encode_fixed" -> bpeEncodeFixedSql,
-
-    // BPE merge-order fixture oracle: the classic Sennrich corpus (low x5,
-    // lower x2, newest x6, widest x3) repeated per document scales every
-    // pair count by ndocs, so the greedy merge sequence is SF-invariant.
-    // Hand derivation (count, tie-break on lexicographically smallest pair):
-    //   es(9) over {es,st,t</w>} ties → est(9) over {est,t</w>} →
-    //   est</w>(9) → lo(7) over {lo,ow} → low(7) →
-    //   ew(6) over {ew,ne,w·est</w>} → ewest</w>(6) over {ew·est</w>,n·ew} →
-    //   newest</w>(6) → low</w>(5) → dest</w>(3) over {d·est</w>,id,wi}
-    "qd32_bpe_tokenize" ->
-      """SELECT CAST(r AS INTEGER) AS m_rank, l AS m_left, rt AS m_right
-        |FROM (VALUES
-        |  (0, 'e', 's'), (1, 'es', 't'), (2, 'est', '</w>'),
-        |  (3, 'l', 'o'), (4, 'lo', 'w'),
-        |  (5, 'e', 'w'), (6, 'ew', 'est</w>'), (7, 'n', 'ewest</w>'),
-        |  (8, 'low', '</w>'), (9, 'd', 'est</w>')) AS t(r, l, rt)
-        |ORDER BY m_rank""".stripMargin,
-
-    // Real-codec decode round-trip: payload dimensions are doc_id formulas
-    // (MediaFixtures), the Spark side decodes through actual ImageIO /
-    // javax.sound codecs, and this mirror recomputes the formulas — any
-    // encode or decode fidelity loss breaks the hash. The banded analog
-    // check (luminance/RMS/peak) is an in-engine verdict this states.
-    "qm02_decode_features" ->
-      """SELECT doc_id AS media_id,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'riff' END AS format,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN 16 + (doc_id // 2) % 8
-        |            ELSE 8000 END AS BIGINT) AS d0,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN 12 + (doc_id // 2) % 5
-        |            ELSE 1 END AS BIGINT) AS d1,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN NULL
-        |            ELSE 800 + doc_id % 97 END AS BIGINT) AS d2,
-        |  true AS signal_ok
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    // Repetition signals: line ratios via per-line GROUP BY (counts exact,
-    // each ratio one division — bit-identical doubles), top-n-gram shares
-    // via non-distinct shingle unnest. documents contain no '\n' and no
-    // token-less text at any SF, so the LEFT JOIN/coalesce guards (empty-
-    // line docs -> 0.0 line fracs; zero-token docs -> 0.0 shares, matching
-    // TopNgramShareExpr's empty-array branch) never fire on testdata.
-    "qd11_repetition" ->
-      s"SELECT * FROM ($repetitionSql) ORDER BY doc_id",
-
-    // PII mirror: same construction + the same RE2-safe patterns applied in
-    // the same order (email -> ip -> phone)
-    "qd13_pii_redact" -> {
-      val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      val ip = "\\b([0-9]{1,3}\\.){3}[0-9]{1,3}\\b"
-      val phone = "\\+[0-9]{7,15}"
-      s"""WITH p AS (
-         |  SELECT doc_id,
-         |    text || ' contact user' || CAST(doc_id AS VARCHAR)
-         |      || '@mail.example.com ip 10.0.0.' || CAST(doc_id % 256 AS VARCHAR)
-         |      || ' tel +1555' || CAST(doc_id % 10000 AS VARCHAR) AS pii_text
-         |  FROM documents
-         |)
-         |SELECT doc_id,
-         |  regexp_replace(regexp_replace(regexp_replace(pii_text,
-         |    '$email', '<EMAIL>', 'g'),
-         |    '$ip', '<IP>', 'g'),
-         |    '$phone', '<PHONE>', 'g') AS redacted,
-         |  len(regexp_extract_all(pii_text, '$email')) AS n_emails,
-         |  len(regexp_extract_all(pii_text, '$ip')) AS n_ips,
-         |  len(regexp_extract_all(pii_text, '$phone')) AS n_phones
-         |FROM p ORDER BY doc_id""".stripMargin
-    },
-
-    // vocabulary mirror: unnest + group by with the same floor
-    "qd14_vocab" ->
-      """SELECT token, count(*) AS n FROM (
-        |  SELECT unnest(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS token
-        |  FROM documents
-        |) GROUP BY token HAVING count(*) >= 50
-        |ORDER BY n DESC, token""".stripMargin,
-
-    // token-budget mirror: same cumulative window, sum cast to BIGINT
-    "qd15_token_budget" ->
-      """SELECT doc_id, lang, n_tokens, cum_tokens FROM (
-        |  SELECT doc_id, lang, n_tokens,
-        |    CAST(sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-        |  FROM (
-        |    SELECT doc_id, lang,
-        |      len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS n_tokens
-        |    FROM documents
-        |  )
-        |) WHERE cum_tokens <= 10000
-        |ORDER BY doc_id""".stripMargin,
-
-    // Prefix-filtered exact Jaccard returns the SAME pairs as the
-    // co-occurrence formulation — qd03's oracle verbatim (only the Spark
-    // candidate-generation plan differs)
-    "qd16_jaccard_prefix" -> ngramJaccardSql,
-
-    // hash split mirror: identical exact-int64 modular arithmetic
-    // (salt 0 for the split bucket, salt 1 for the subsample draw)
-    "qd17_hash_split" ->
-      """WITH b AS (
-        |  SELECT doc_id, lang,
-        |    (doc_id % 1000000007) * 2654435761 % 1000000007 % 1000 AS bucket,
-        |    ((doc_id + 1) % 1000000007) * 2654435761 % 1000000007 % 1000 AS sbucket
-        |  FROM documents
-        |)
-        |SELECT doc_id, lang, bucket,
-        |  CASE WHEN bucket < 800 THEN 'train'
-        |       WHEN bucket < 900 THEN 'valid'
-        |       ELSE 'test' END AS split
-        |FROM b
-        |WHERE sbucket < (CASE WHEN lang = 'en' THEN 500
-        |                      WHEN lang = 'zh' THEN 250 ELSE 1000 END)
-        |ORDER BY doc_id""".stripMargin,
-
-    // decontamination mirror: same 5-gram shingle sets (string-valued here,
-    // XXH64-hashed in Spark — counts agree absent 64-bit collisions),
-    // benchmark = doc_id % 97 == 0
-    "qd18_decontaminate" -> decontaminationSql(benchMod = 97),
-
-    // chunking mirror: same start offsets (0, 48, … while < max(n-16, 1)),
-    // same clamped 64-token slices; string_agg over an empty slice is NULL
-    // in DuckDB where Spark's concat_ws gives '' — hence the coalesce
-    "qd19_chunk" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
-        |  FROM documents
-        |),
-        |c AS (
-        |  SELECT doc_id,
-        |    unnest([st // 48 FOR st IN range(0, greatest(len(w) - 16, 1), 48)]) AS chunk_id,
-        |    unnest([len(w[st+1:st+64]) FOR st IN range(0, greatest(len(w) - 16, 1), 48)]) AS n_chunk_tokens,
-        |    unnest([coalesce(list_aggregate(w[st+1:st+64], 'string_agg', ' '), '')
-        |            FOR st IN range(0, greatest(len(w) - 16, 1), 48)]) AS chunk_text
-        |  FROM toks
-        |)
-        |SELECT doc_id, chunk_id, n_chunk_tokens, chunk_text
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
-
-    // mixture mirror: same rate formula with every operand forced DOUBLE so
-    // both engines run the identical left-to-right fp ops (DuckDB parses
-    // bare decimal literals as DECIMAL, which would round differently),
-    // same salt-1 bucket arithmetic as stratifiedKeep
-    "qd22_mixture" -> mixtureSql(
-      """r AS (
-        |  SELECT lang, least(1000, CAST(floor(
-        |    CAST(1000.0 AS DOUBLE) *
-        |    (CASE lang WHEN 'en' THEN CAST(0.4 AS DOUBLE)
-        |               WHEN 'de' THEN CAST(0.2 AS DOUBLE)
-        |               WHEN 'es' THEN CAST(0.15 AS DOUBLE)
-        |               WHEN 'fr' THEN CAST(0.15 AS DOUBLE)
-        |               WHEN 'zh' THEN CAST(0.1 AS DOUBLE)
-        |               ELSE CAST(0 AS DOUBLE) END) * 10000 / tok) AS BIGINT)) AS rate
-        |  FROM tot
-        |)""".stripMargin),
-
-    // temperature-mixture mirror: sqrt is correctly-rounded IEEE (unlike
-    // pow), the denominator folds ascending, every other op is the qd22
-    // rate/bucket arithmetic
-    "qd42_temperature_mixture" -> mixtureSql(
-      """den AS (
-        |  SELECT list_reduce(list_sort(list(sqrt(CAST(tok AS DOUBLE)))), (a, b) -> a + b) AS den
-        |  FROM tot
-        |),
-        |r AS (
-        |  SELECT lang, least(1000, CAST(floor(
-        |    CAST(1000.0 AS DOUBLE) * (sqrt(CAST(tok AS DOUBLE)) / den) * 10000 / tok
-        |  ) AS BIGINT)) AS rate
-        |  FROM tot, den
-        |)""".stripMargin),
-
-    // HTML mirror: the page wrapper around each doc, then htmlToTextSql
-    // (chr(10) embeds the comment's newline without breaking stripMargin)
-    "qd43_html_extract" ->
-      ("""WITH h AS (
-        |  SELECT doc_id,
-        |    '<html><head><style>p{color:red}</style><script>var i=0; if (i<1 && true) { i = 2; }</script></head><body><h1>'
-        |    || text ||
-        |    '</h1><!-- hidden' || chr(10) || 'comment --><p>Tom &amp; Jerry &lt;3 &quot;quoted&quot; &#39;s&#39;&nbsp;fin.</p></body></html>'
-        |    AS html
-        |  FROM documents
-        |)
-        |, x AS (
-        |  SELECT doc_id,
-        |    """ + htmlToTextSql + """ AS extracted
-        |  FROM h
-        |)
-        |SELECT doc_id, extracted, CAST(length(extracted) AS BIGINT) AS n_chars
-        |FROM x ORDER BY doc_id""").stripMargin,
-
-    // crawl flagship mirror: page synthesis, the qd43 extraction chain, the
-    // qd40 C4 rules, the qd44 Gopher statistics (relaxed thresholds, stop
-    // clause dropped because minStopwords=0 is trivially true), dedup by the
-    // normalized 3-token prefix (the string the fingerprint hashes), qd19's
-    // chunk-start arithmetic, and the final per-lang rollup
-    "q54_pipeline_crawl" ->
-      ("""WITH toks0 AS (
-        |  SELECT doc_id, lang, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
-        |  FROM documents
-        |),
-        |built AS (
-        |  SELECT doc_id, lang,
-        |    [ '<p>' || list_aggregate(w[i*6+1 : i*6+6], 'string_agg', ' ')
-        |        || CASE WHEN i % 7 = 0 THEN ' javascript' ELSE '' END
-        |        || CASE WHEN (i + doc_id) % 3 <> 0 THEN '.' ELSE '' END
-        |        || '</p>'
-        |      FOR i IN range(0, greatest(CAST(ceil(len(w) / 6.0) AS INT), 1)) ] AS paras
-        |  FROM toks0
-        |),
-        |page AS (
-        |  SELECT doc_id, lang,
-        |    '<html><head><style>p{x}</style><script>var i=0;</script></head><body>'
-        |    || list_aggregate(paras, 'string_agg', '')
-        |    || CASE WHEN doc_id % 13 = 0 THEN '<p>{ x }.</p>' ELSE '' END
-        |    || '<!-- c --></body></html>' AS html
-        |  FROM built
-        |),
-        |ext AS (
-        |  SELECT doc_id, lang,
-        |    """ + htmlToTextSql + """ AS text
-        |  FROM page
-        |),
-        |c4 AS (
-        |  SELECT doc_id, lang, text,
-        |    list_filter(string_split(text, chr(10)), l ->
-        |      l[-1] IN ('.', '!', '?', '"')
-        |      AND len(list_filter(string_split_regex(l, '\s+'), x -> x <> '')) >= 3
-        |      AND NOT contains(lower(l), 'javascript')) AS kept
-        |  FROM ext
-        |),
-        |c4k AS (
-        |  SELECT doc_id, lang,
-        |    coalesce(list_aggregate(kept, 'string_agg', chr(10)), '') AS ktext,
-        |    (len(kept) >= 3 AND NOT contains(lower(text), 'lorem ipsum')
-        |      AND NOT contains(text, '{')) AS c4_keep
-        |  FROM c4
-        |),
-        |gst AS (
-        |  SELECT doc_id, lang, ktext, c4_keep,
-        |    list_filter(string_split_regex(ktext, '\s+'), x -> x <> '') AS tw,
-        |    string_split(ktext, chr(10)) AS lns
-        |  FROM c4k
-        |),
-        |gagg AS (
-        |  SELECT doc_id, lang, ktext, c4_keep, tw,
-        |    CAST(len(tw) AS BIGINT) AS n_words,
-        |    CAST(list_sum(list_transform(tw, x -> length(x))) AS BIGINT) AS word_chars,
-        |    CAST(len(list_filter(tw, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT) AS alpha_words,
-        |    CAST(len(lns) AS BIGINT) AS n_lines,
-        |    CAST(len(list_filter(lns, l -> l LIKE '•%' OR l LIKE '- %')) AS BIGINT) AS bullet_lines,
-        |    CAST(len(list_filter(lns, l -> l LIKE '%...' OR l LIKE '%…')) AS BIGINT) AS ellipsis_lines,
-        |    CAST((length(ktext) - length(replace(ktext, '#', '')))
-        |      + (length(ktext) - length(replace(ktext, '...', ''))) / 3
-        |      + (length(ktext) - length(replace(ktext, '…', ''))) AS BIGINT) AS symbols
-        |  FROM gst
-        |),
-        |gated AS (
-        |  SELECT doc_id, lang, ktext, tw
-        |  FROM gagg
-        |  WHERE c4_keep
-        |    AND n_words >= 20 AND n_words <= 100000
-        |    AND CAST(word_chars AS DOUBLE) / n_words >= 3.0
-        |    AND CAST(word_chars AS DOUBLE) / n_words <= 10.0
-        |    AND CAST(symbols AS DOUBLE) / n_words <= 0.1
-        |    AND CAST(bullet_lines AS DOUBLE) / n_lines <= 0.9
-        |    AND CAST(ellipsis_lines AS DOUBLE) / n_lines <= 0.3
-        |    AND CAST(alpha_words AS DOUBLE) / n_words >= 0.8
-        |),
-        |keyed AS (
-        |  SELECT doc_id, lang, tw,
-        |    trim(regexp_replace(regexp_replace(lower(
-        |      coalesce(list_aggregate(tw[1:3], 'string_agg', ' '), '')),
-        |      '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g')) AS key
-        |  FROM gated
-        |),
-        |ded AS (
-        |  SELECT doc_id, lang, tw FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY key ORDER BY doc_id) AS rn FROM keyed
-        |  ) WHERE rn = 1
-        |),
-        |ch AS (
-        |  SELECT doc_id, lang,
-        |    unnest([len(tw[st+1 : st+32]) FOR st IN range(0, greatest(len(tw), 1), 32)]) AS n_chunk_tokens
-        |  FROM ded
-        |)
-        |SELECT lang, count(DISTINCT doc_id) AS n_docs, count(*) AS n_chunks,
-        |  CAST(sum(n_chunk_tokens) AS BIGINT) AS n_tokens
-        |FROM ch GROUP BY lang ORDER BY lang""").stripMargin,
-
-    // round-trip oracles: the SQL is the parquet truth; any write/read
-    // fidelity loss (quoting, type mapping, timestamp format) breaks the hash
-    "q56_csv_roundtrip" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag,
-        |  l_returnflag || ', "' || l_linestatus || '"' AS quoted_note,
-        |  l_shipdate
-        |FROM lineitem WHERE l_orderkey % 7 = 0
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q57_ipc_roundtrip" ->
-      """SELECT event_id, user_id, ts, value
-        |FROM events WHERE event_type = 'purchase'
-        |ORDER BY event_id""".stripMargin,
-
-    "q58_ndjson_roundtrip" ->
-      """SELECT p_partkey, p_name, p_retailprice, p_size
-        |FROM part WHERE p_partkey % 3 = 0
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q60_series_ops" ->
-      """SELECT sqrt(abs(l_quantity * CAST(2.0 AS DOUBLE) - CAST(5.0 AS DOUBLE))) AS sv
-        |FROM lineitem""".stripMargin,
-
-    "q59_sql_context" ->
-      """SELECT c.c_mktsegment AS seg, o.o_orderpriority AS prio,
-        |  count(*) AS n,
-        |  CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |WHERE o.o_orderstatus <> 'P'
-        |GROUP BY c.c_mktsegment, o.o_orderpriority
-        |HAVING count(*) > 5
-        |ORDER BY seg, prio""".stripMargin,
-
-    // DuckDB's strftime is an independent C-style implementation of the
-    // same chrono specifier set (%w is C's Sunday-0 weekday, %u ISO's
-    // Monday-1; %f is the µs fraction on both — the engine's documented
-    // chrono-%f delta)
-    "q55_strftime_iso" ->
-      """SELECT event_id,
-        |  strftime(ts, '%G-W%V-%u') AS iso_week_date,
-        |  strftime(ts, '%Y-%m-%dT%H:%M:%S.%f') AS iso_ts,
-        |  strftime(ts, '%A, %B %d (%a %b) day %j') AS verbose,
-        |  strftime(ts, '%I:%M %p') AS clock12,
-        |  strftime(ts, '%w|%u') AS weekday_conventions
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    // Gopher mirror: same synthesized structure, every statistic recomputed
-    // with list functions, thresholds verbatim; mean/ratio doubles are one
-    // int64/int64 division each so they compare bit-exactly
-    "qd44_gopher_quality" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
-        |  FROM documents
-        |),
-        |built AS (
-        |  SELECT doc_id,
-        |    [ CASE WHEN (i + doc_id) % 5 = 0 THEN '- ' ELSE '' END
-        |        || list_aggregate(w[i*6+1 : i*6+6], 'string_agg', ' ')
-        |        || CASE WHEN (i + doc_id) % 3 = 0 THEN ' the' ELSE '' END
-        |        || CASE WHEN (i + doc_id) % 4 = 0 THEN ' of' ELSE '' END
-        |        || CASE WHEN (i + doc_id) % 11 = 0 THEN ' #' ELSE '' END
-        |        || CASE WHEN (i + doc_id) % 7 = 0 THEN '...' ELSE '.' END
-        |      FOR i IN range(0, greatest(CAST(ceil(len(w) / 6.0) AS INT), 1)) ] AS lines
-        |  FROM toks
-        |),
-        |dirty AS (
-        |  SELECT doc_id, list_aggregate(lines, 'string_agg', chr(10)) AS text FROM built
-        |),
-        |st AS (
-        |  SELECT doc_id, text,
-        |    list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS tw,
-        |    string_split(text, chr(10)) AS lns
-        |  FROM dirty
-        |),
-        |agg AS (
-        |  SELECT doc_id,
-        |    CAST(len(tw) AS BIGINT) AS n_words,
-        |    CAST(list_sum(list_transform(tw, x -> length(x))) AS BIGINT) AS word_chars,
-        |    CAST(len(list_filter(tw, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT) AS alpha_words,
-        |    CAST(len(list_filter(['the','be','to','of','and','that','have','with'],
-        |      sw -> list_contains(tw, sw))) AS BIGINT) AS stop_hits,
-        |    CAST(len(lns) AS BIGINT) AS n_lines,
-        |    CAST(len(list_filter(lns, l -> l LIKE '•%' OR l LIKE '- %')) AS BIGINT) AS bullet_lines,
-        |    CAST(len(list_filter(lns, l -> l LIKE '%...' OR l LIKE '%…')) AS BIGINT) AS ellipsis_lines,
-        |    CAST((length(text) - length(replace(text, '#', '')))
-        |      + (length(text) - length(replace(text, '...', ''))) / 3
-        |      + (length(text) - length(replace(text, '…', ''))) AS BIGINT) AS symbols
-        |  FROM st
-        |)
-        |SELECT doc_id, n_words,
-        |  CASE WHEN n_words > 0 THEN CAST(word_chars AS DOUBLE) / n_words END AS mean_word_len,
-        |  CASE WHEN n_words > 0 THEN CAST(symbols AS DOUBLE) / n_words END AS symbol_ratio,
-        |  CAST(bullet_lines AS DOUBLE) / n_lines AS bullet_frac,
-        |  CAST(ellipsis_lines AS DOUBLE) / n_lines AS ellipsis_frac,
-        |  CASE WHEN n_words > 0 THEN CAST(alpha_words AS DOUBLE) / n_words END AS alpha_frac,
-        |  stop_hits AS n_stopwords,
-        |  (n_words >= 50 AND n_words <= 100000
-        |    AND CAST(word_chars AS DOUBLE) / n_words >= 3.0
-        |    AND CAST(word_chars AS DOUBLE) / n_words <= 10.0
-        |    AND CAST(symbols AS DOUBLE) / n_words <= 0.1
-        |    AND CAST(bullet_lines AS DOUBLE) / n_lines <= 0.9
-        |    AND CAST(ellipsis_lines AS DOUBLE) / n_lines <= 0.3
-        |    AND CAST(alpha_words AS DOUBLE) / n_words >= 0.8
-        |    AND stop_hits >= 2) AS gopher_keep
-        |FROM agg ORDER BY doc_id""".stripMargin,
-
-    // shuffle mirror: identical exact-int64 multiplicative-hash key, dense
-    // rank from one global row_number (what Spark computes distributed via
-    // per-partition ranks + a broadcast count carry)
-    "qd24_shuffle" ->
-      """SELECT doc_id, lang, shuffle_key,
-        |  CAST(row_number() OVER (ORDER BY shuffle_key, doc_id) - 1 AS BIGINT) AS shuffle_pos
-        |FROM (
-        |  SELECT doc_id, lang,
-        |    ((doc_id + 7) % 1000000007) * 2654435761 % 1000000007 AS shuffle_key
-        |  FROM documents
-        |)
-        |ORDER BY shuffle_pos""".stripMargin,
-
-    // rarity mirror: same tokenization, same floored vocabulary, exact
-    // integer counts; the only fp ops are the two single final divisions
-    "qd25_rarity" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS token
-        |  FROM documents
-        |),
-        |v AS (
-        |  SELECT token, count(*) AS n FROM toks GROUP BY token HAVING count(*) >= 50
-        |)
-        |SELECT t.doc_id,
-        |  count(*) AS n_tokens,
-        |  count(v.n) AS n_invocab,
-        |  CAST(count(*) - count(v.n) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS oov_share,
-        |  CASE WHEN count(v.n) > 0
-        |    THEN CAST(sum(v.n) AS DOUBLE) / CAST(count(v.n) AS DOUBLE) END AS mean_token_freq
-        |FROM toks t LEFT JOIN v ON t.token = v.token
-        |GROUP BY t.doc_id
-        |ORDER BY t.doc_id""".stripMargin,
-
-    // shuffle-pack mirror: one unpartitioned exclusive running sum in
-    // hash-key order (Spark computes it distributed via per-partition sums
-    // + a broadcast offset carry over the range partitioning)
-    "qd26_shuffle_pack" ->
-      """SELECT doc_id, shuffle_key, n_tokens,
-        |  prev // 1024 AS seq_id, prev % 1024 AS seq_offset
-        |FROM (
-        |  SELECT doc_id, shuffle_key, n_tokens,
-        |    CAST(coalesce(sum(n_tokens) OVER (ORDER BY shuffle_key, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prev
-        |  FROM (
-        |    SELECT doc_id,
-        |      ((doc_id + 7) % 1000000007) * 2654435761 % 1000000007 AS shuffle_key,
-        |      CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
-        |    FROM documents
-        |  )
-        |)
-        |ORDER BY doc_id""".stripMargin,
-
-    // upsample mirror: per-lang repeat factors via generate_series; factor-0
-    // strata produce no rows
-    "qd27_upsample" ->
-      """SELECT doc_id, lang, CAST(epoch AS INTEGER) AS epoch
-        |FROM (
-        |  SELECT doc_id, lang,
-        |    unnest(range(1, 1 + (CASE lang WHEN 'zh' THEN 3
-        |                                   WHEN 'en' THEN 2
-        |                                   ELSE 0 END))) AS epoch
-        |  FROM documents
-        |)
-        |ORDER BY doc_id, epoch""".stripMargin,
-
-    // span-dedup mirror: same tokenization (\s+, empties dropped), same
-    // 20-word non-overlapping windows, keep-first by (doc_id, pos) as a
-    // row_number window (the Spark side's groupBy-min is the same winner),
-    // documents reassembled with single-space joins
-    "qd28_span_dedup" ->
-      (spanDedupCtes + """
-        |SELECT d.doc_id, d.lang, coalesce(k.text, '') AS text
-        |FROM documents d LEFT JOIN k USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin),
-
-    // line-dedup mirror: same separator split (empties kept), length-gated
-    // row_number winner, lines below the floor pass unconditionally,
-    // separator-joined reassembly
-    "qd33_salted_pairs" ->
-      """SELECT a.lang, count(*) AS n_pairs,
-        |  CAST(sum(a.doc_id + b.doc_id) AS BIGINT) AS id_sum
-        |FROM documents a JOIN documents b ON a.lang = b.lang AND a.doc_id < b.doc_id
-        |GROUP BY a.lang ORDER BY a.lang""".stripMargin,
-
-    // bloom decontamination mirror: the EXACT shingle-join SQL (bench =
-    // doc_id % 89) — the bloom prefilter must be invisible in the result
-    "qd34_decontaminate_bloom" -> decontaminationSql(benchMod = 89),
-
-    // snapshot-dedup mirror: plain anti-join on the normalized two-token
-    // head (string-valued here, XXH64-hashed in Spark — equal absent 64-bit
-    // collisions); NOT IN is null-safe because the corpus has no null text
-    "qd35_snapshot_dedup" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang, source,
-        |    trim(regexp_replace(regexp_replace(lower(
-        |      array_to_string(list_filter(string_split_regex(text, '\s+'), x -> x <> '')[1:2], ' ')),
-        |      '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g')) AS nt
-        |  FROM documents
-        |),
-        |prev AS (SELECT DISTINCT nt FROM h WHERE doc_id % 3 = 0)
-        |SELECT doc_id, lang, source FROM h
-        |WHERE doc_id % 3 <> 0 AND nt NOT IN (SELECT nt FROM prev)
-        |ORDER BY doc_id""".stripMargin,
-
-    "qd36_dsir_weights" ->
-      s"""$dsirWeightsCte
-         |SELECT doc_id, lang, dsir_uweight FROM weights
-         |ORDER BY doc_id""".stripMargin,
-
-    // selection mirror: same weights, same deterministic tiebreak — the
-    // driver compare is order-insensitive, so only WHICH 50 rows matters
-    "qd37_dsir_select" ->
-      s"""$dsirWeightsCte
-         |SELECT doc_id, dsir_uweight FROM weights
-         |ORDER BY dsir_uweight DESC, doc_id LIMIT 50""".stripMargin,
-
-    // cleanup mirror: DuckDB's nfc_normalize is the same Unicode standard
-    // the JDK implements; the control-char class is shared verbatim
-    "qd38_clean_text" ->
-      """SELECT doc_id,
-        |  nfc_normalize(regexp_replace(
-        |    text || chr(7) || ' cafe' || chr(769) || ' ' || chr(31),
-        |    '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g')) AS cleaned,
-        |  CAST(length(nfc_normalize(regexp_replace(
-        |    text || chr(7) || ' cafe' || chr(769) || ' ' || chr(31),
-        |    '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'))) AS INT) AS n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // perplexity mirror: same add-1 bigram LM (lm = doc_id % 11), same
-    // micro-nat quantization per bigram, integer sums and an integer
-    // cross-product keep gate
-    "qd39_perplexity" ->
-      s"""WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS tk
-        |  FROM documents
-        |),
-        |$perplexityCtes,
-        |agg AS (SELECT doc_id, count(*) AS nb, sum(unll) AS nll FROM scored GROUP BY doc_id)
-        |SELECT d.doc_id, d.lang,
-        |  CAST(coalesce(a.nb, 0) AS BIGINT) AS n_bigrams,
-        |  CAST(coalesce(a.nll, 0) AS BIGINT) AS nll_unats,
-        |  coalesce(a.nb, 0) > 0 AND coalesce(a.nll, 0) <= 3500000 * coalesce(a.nb, 0) AS keep
-        |FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // C4 mirror: identical integer line construction, then the same three
-    // line rules and two page rules over the rebuilt text
-    "qd40_c4_filter" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
-        |  FROM documents
-        |),
-        |built AS (
-        |  SELECT doc_id,
-        |    [ list_aggregate(w[i*6+1 : i*6+6], 'string_agg', ' ')
-        |        || CASE WHEN i % 7 = 0 THEN ' javascript' ELSE '' END
-        |        || CASE WHEN (i + doc_id) % 3 <> 0 THEN '.' ELSE '' END
-        |      FOR i IN range(0, greatest(CAST(ceil(len(w) / 6.0) AS INT), 1)) ] AS lines
-        |  FROM toks
-        |),
-        |dirty AS (
-        |  SELECT doc_id,
-        |    list_aggregate(lines, 'string_agg', chr(10))
-        |      || CASE WHEN doc_id % 13 = 0 THEN ' {' ELSE '' END
-        |      || CASE WHEN doc_id % 17 = 0 THEN chr(10) || 'lorem ipsum.' ELSE '' END AS text
-        |  FROM built
-        |),
-        |cleaned AS (
-        |  SELECT doc_id, text,
-        |    list_filter(string_split(text, chr(10)), l ->
-        |      l[-1] IN ('.', '!', '?', '"')
-        |      AND len(list_filter(string_split_regex(l, '\s+'), x -> x <> '')) >= 3
-        |      AND NOT contains(lower(l), 'javascript')) AS kept
-        |  FROM dirty
-        |)
-        |SELECT doc_id,
-        |  CAST(len(kept) AS INT) AS n_kept_lines,
-        |  len(kept) >= 3 AND NOT contains(lower(text), 'lorem ipsum')
-        |    AND NOT contains(text, '{') AS keep,
-        |  coalesce(list_aggregate(kept, 'string_agg', chr(10)), '') AS kept_text
-        |FROM cleaned ORDER BY doc_id""".stripMargin,
-
-    // flagship mirror: the qd39 perplexity CTEs gate s1, the qd34 shingle
-    // join flags s2 (bench drawn from ALL docs, intersected with s1), the
-    // qd36 DSIR CTEs retrain on the s2 pool, LIMIT 50 with the id tiebreak
-    "qd41_pipeline_quality_select" ->
-      s"""WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS tk
-        |  FROM documents
-        |),
-        |$perplexityCtes,
-        |s1 AS (
-        |  SELECT doc_id FROM (
-        |    SELECT doc_id, count(*) AS nb, sum(unll) AS nll FROM scored GROUP BY doc_id
-        |  ) WHERE nll <= 3500000 * nb
-        |),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, unnest(CASE WHEN len(tk) >= 5
-        |    THEN [list_aggregate(tk[i:i+4], 'string_agg', ' ') FOR i IN range(1, len(tk) - 3)]
-        |    ELSE [list_aggregate(tk, 'string_agg', ' ')] END) AS s
-        |  FROM toks
-        |),
-        |bsh AS (SELECT DISTINCT s FROM sh WHERE doc_id % 89 = 0),
-        |contaminated AS (SELECT DISTINCT sh.doc_id FROM sh JOIN bsh ON sh.s = bsh.s),
-        |s2 AS (
-        |  SELECT doc_id FROM s1
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
-        |),
-        |ctok AS (SELECT t.doc_id, unnest(t.tk) AS w FROM toks t JOIN s2 ON t.doc_id = s2.doc_id),
-        |$dsirModelCtes
-        |SELECT s2.doc_id, CAST(coalesce(ws.uw, 0) AS BIGINT) AS dsir_uweight
-        |FROM s2 LEFT JOIN wsum ws ON s2.doc_id = ws.doc_id
-        |ORDER BY dsir_uweight DESC, s2.doc_id LIMIT 50""".stripMargin,
-
-    // dup-paragraph mirror: same synthesis, same blank-line→sentinel
-    // transform, dup fractions via group-count aggregation (one division
-    // each, so the doubles compare bit-exactly)
-    "qd46_dup_paragraphs" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
-        |  FROM documents
-        |),
-        |built AS (
-        |  SELECT doc_id,
-        |    [ CASE WHEN i % 3 = 2
-        |        THEN coalesce(list_aggregate(w[1:4], 'string_agg', ' '), '') || chr(10)
-        |          || coalesce(list_aggregate(w[5:8], 'string_agg', ' '), '')
-        |        ELSE coalesce(list_aggregate(w[i*8+1 : i*8+4], 'string_agg', ' '), '') || chr(10)
-        |          || coalesce(list_aggregate(w[i*8+5 : i*8+8], 'string_agg', ' '), '')
-        |      END
-        |      FOR i IN range(0, greatest(CAST(ceil(len(w) / 8.0) AS INT), 1)) ] AS paras
-        |  FROM toks
-        |),
-        |dirty AS (
-        |  SELECT doc_id, list_aggregate(paras, 'string_agg', chr(10) || chr(10)) AS text
-        |  FROM built
-        |),
-        |pl AS (
-        |  SELECT doc_id,
-        |    replace(replace(regexp_replace(text, '\n{2,}', chr(1), 'g'),
-        |      chr(10), ' '), chr(1), chr(10)) AS text
-        |  FROM dirty
-        |),
-        |lrow AS (
-        |  SELECT doc_id, unnest(list_filter(string_split(text, chr(10)), x -> x <> '')) AS line
-        |  FROM pl
-        |),
-        |lg AS (SELECT doc_id, line, count(*) AS c, length(line) AS len
-        |       FROM lrow GROUP BY doc_id, line),
-        |lagg AS (
-        |  SELECT doc_id,
-        |    CAST(sum(c) - count(*) AS DOUBLE) / sum(c) AS dup_para_frac,
-        |    CAST(sum(CASE WHEN c > 1 THEN c * len ELSE 0 END) AS DOUBLE)
-        |      / sum(c * len) AS dup_para_char_frac
-        |  FROM lg GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  coalesce(l.dup_para_frac, 0.0) AS dup_para_frac,
-        |  coalesce(l.dup_para_char_frac, 0.0) AS dup_para_char_frac
-        |FROM documents d LEFT JOIN lagg l USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // sentence-dedup mirror: the same sentinel-split segmentation (RE2 `\1`
-    // backreference = Java `$1`), keep-first election by (doc, position),
-    // single-space reassembly
-    "qd45_sentence_dedup" ->
-      """WITH src AS (
-        |  SELECT doc_id, lang, replace(text, ' ', '. ') || '.' AS text FROM documents
-        |),
-        |seg AS (
-        |  SELECT doc_id, lang, text,
-        |    list_filter(list_transform(
-        |      string_split(regexp_replace(text, '([.!?]+) +', '\1' || chr(1), 'g'), chr(1)),
-        |      x -> trim(x)), x -> x <> '') AS ss
-        |  FROM src
-        |),
-        |l AS (
-        |  SELECT doc_id, unnest(ss) AS u, unnest(range(len(ss))) AS pos FROM seg
-        |),
-        |r AS (
-        |  SELECT doc_id, pos, u,
-        |    CASE WHEN length(u) >= 5
-        |         THEN row_number() OVER (PARTITION BY u ORDER BY doc_id, pos)
-        |         ELSE 1 END AS rn
-        |  FROM l
-        |),
-        |k AS (
-        |  SELECT doc_id, string_agg(u, ' ' ORDER BY pos) AS text
-        |  FROM r WHERE rn = 1 GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, d.lang, coalesce(k.text, '') AS text
-        |FROM src d LEFT JOIN k USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "qd31_line_dedup" ->
-      """WITH src AS (
-        |  SELECT doc_id, lang, replace(text, ' ', chr(10)) AS text FROM documents
-        |),
-        |s AS (SELECT doc_id, lang, string_split(text, chr(10)) AS ls FROM src),
-        |l AS (
-        |  SELECT doc_id, unnest(ls) AS line, unnest(range(len(ls))) AS pos FROM s
-        |),
-        |r AS (
-        |  SELECT doc_id, pos, line,
-        |    CASE WHEN length(line) >= 4
-        |         THEN row_number() OVER (PARTITION BY line ORDER BY doc_id, pos)
-        |         ELSE 1 END AS rn
-        |  FROM l
-        |),
-        |k AS (
-        |  SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS text
-        |  FROM r WHERE rn = 1 GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, d.lang, coalesce(k.text, '') AS text
-        |FROM src d LEFT JOIN k USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // clean→filter→pack flagship mirror: qd28's span-dedup CTEs feed a
-    // token floor and the global-pack exclusive running sum
-    "q53_pipeline_clean_pack" ->
-      (spanDedupCtes + """,
-        |f AS (
-        |  SELECT d.doc_id, d.lang,
-        |    CAST(len(list_filter(string_split_regex(coalesce(k.text, ''), '\s+'),
-        |      x -> x <> '')) AS BIGINT) AS n_tokens
-        |  FROM documents d LEFT JOIN k USING (doc_id)
-        |),
-        |p AS (
-        |  SELECT doc_id, lang, n_tokens,
-        |    CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prev
-        |  FROM f WHERE n_tokens >= 10
-        |)
-        |SELECT doc_id, lang, n_tokens,
-        |  CAST(floor(prev / 512) AS BIGINT) AS seq_id,
-        |  prev % 512 AS seq_offset
-        |FROM p
-        |ORDER BY doc_id""".stripMargin),
-
-    // global-pack mirror: one unpartitioned exclusive running sum — what
-    // the Spark side computes distributed via per-partition sums + a
-    // broadcast offset carry
-    // blocklist mirror: per-phrase contains over the same injected text
-    // (the O(phrases x text) formulation the Aho-Corasick pass replaces)
-    "qd48_blocklist" ->
-      """WITH dirty AS (
-        |  SELECT doc_id,
-        |    text
-        |    || CASE WHEN doc_id % 7 = 0 THEN ' Bad Phrase One' ELSE '' END
-        |    || CASE WHEN doc_id % 11 = 0 THEN ' some badword here' ELSE '' END
-        |    || CASE WHEN doc_id % 13 = 0 THEN ' casino bonus spin' ELSE '' END AS t
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  CAST(len(list_filter(
-        |    ['bad phrase one', 'badword', 'casino bonus', 'bonus', 'zzz qqq'],
-        |    p -> contains(lower(t), p))) AS INT) AS hits,
-        |  CAST(len(list_filter(
-        |    ['bad phrase one', 'badword', 'casino bonus', 'bonus', 'zzz qqq'],
-        |    p -> contains(lower(t), p))) AS INT) = 0 AS keep
-        |FROM dirty ORDER BY doc_id""".stripMargin,
-
-    // pack-spans mirror: the qd23 prefix-sum packing, then one span per
-    // budget-boundary-delimited fragment (integer interval arithmetic)
-    "qd47_pack_spans" ->
-      s"""WITH packed AS (
-        |$packedSql
-        |),
-        |sp AS (
-        |  SELECT doc_id, prev, n_tokens,
-        |    unnest(range(prev // 1024, (prev + n_tokens - 1) // 1024 + 1)) AS seq_id
-        |  FROM packed WHERE n_tokens > 0
-        |)
-        |SELECT doc_id, seq_id,
-        |  greatest(prev, seq_id * 1024) - seq_id * 1024 AS span_start,
-        |  least(prev + n_tokens, (seq_id + 1) * 1024) - greatest(prev, seq_id * 1024) AS span_len
-        |FROM sp ORDER BY doc_id, seq_id""".stripMargin,
-
-    "qd23_pack_global" ->
-      s"""SELECT doc_id, n_tokens, prev // 1024 AS seq_id, prev % 1024 AS seq_offset
-        |FROM (
-        |$packedSql
-        |)
-        |ORDER BY doc_id""".stripMargin,
-
-    // corpus-build flagship mirror: decontaminate (shared-shingle anti
-    // filter) -> train-bucket arithmetic -> chunk comprehension -> packing
-    // window keyed (doc_id, chunk_id) -> BIGINT-cast aggregates
-    "q52_pipeline_corpus_build" ->
-      """WITH toks0 AS (
-        |  SELECT doc_id, lang, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
-        |  FROM documents
-        |),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, unnest(CASE WHEN len(w) >= 5
-        |    THEN [list_aggregate(w[i:i+4], 'string_agg', ' ') FOR i IN range(1, len(w) - 3)]
-        |    ELSE [list_aggregate(w, 'string_agg', ' ')] END) AS s
-        |  FROM toks0
-        |),
-        |bsh AS (SELECT DISTINCT s FROM sh WHERE doc_id % 97 = 0),
-        |contam AS (SELECT DISTINCT sh.doc_id FROM sh JOIN bsh ON sh.s = bsh.s),
-        |clean AS (
-        |  SELECT doc_id, lang, w FROM toks0
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM contam)
-        |    AND (doc_id % 1000000007) * 2654435761 % 1000000007 % 1000 < 800
-        |),
-        |c AS (
-        |  SELECT doc_id, lang,
-        |    unnest([st // 48 FOR st IN range(0, greatest(len(w) - 16, 1), 48)]) AS chunk_id,
-        |    unnest([len(w[st+1:st+64]) FOR st IN range(0, greatest(len(w) - 16, 1), 48)]) AS n_chunk_tokens
-        |  FROM clean
-        |),
-        |p AS (
-        |  SELECT doc_id, lang, chunk_id, n_chunk_tokens,
-        |    CAST(coalesce(sum(n_chunk_tokens) OVER (PARTITION BY lang
-        |      ORDER BY doc_id, chunk_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) // 512 AS seq_id
-        |  FROM c
-        |)
-        |SELECT lang, seq_id, count(*) AS n_chunks,
-        |  CAST(sum(n_chunk_tokens) AS BIGINT) AS n_tokens,
-        |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM p GROUP BY lang, seq_id
-        |ORDER BY lang, seq_id""".stripMargin,
-
-    // packing mirror: exclusive running sum per lang, integer div/mod
-    "qd20_pack" ->
-      """SELECT doc_id, lang, n_tokens,
-        |  prev // 2048 AS seq_id, prev % 2048 AS seq_offset
-        |FROM (
-        |  SELECT doc_id, lang, n_tokens,
-        |    CAST(coalesce(sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prev
-        |  FROM (
-        |    SELECT doc_id, lang,
-        |      CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
-        |    FROM documents
-        |  )
-        |)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Flagship pipeline mirror: langid + quality (qd08's expression) +
-    // repetition + fingerprint dedup + order-independent aggregates.
-    // sum() is CAST to BIGINT (DuckDB sums to HUGEINT, which would
-    // hash-mismatch Spark's LongType).
-    "q51_pipeline_data_prep" -> {
-      val enScore = langScoreSql("en")
-      s"""WITH base AS (
-         |  SELECT d.doc_id, d.source, lp.lang_pred, d.text,
-         |    (CASE WHEN len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) BETWEEN 10 AND 100000
-         |          THEN 1.0 ELSE 0.0 END * 0.4)
-         |    + (CAST(length(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g')) AS DOUBLE) / length(text) * 0.4)
-         |    + (least(CAST($enScore AS DOUBLE)
-         |        / len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) * 10.0, 1.0) * 0.2) AS quality,
-         |    len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS n_tokens,
-         |    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g')) AS fp
-         |  FROM documents d
-         |  JOIN ($langPredSql) lp ON d.doc_id = lp.doc_id
-         |  JOIN ($repetitionSql) rep ON d.doc_id = rep.doc_id
-         |  WHERE lp.lang_pred = lp.lang AND rep.rep_ok
-         |),
-         |ded AS (
-         |  SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-         |  FROM base WHERE quality >= 0.5
-         |)
-         |SELECT lang_pred, source,
-         |  count(*) AS n_docs,
-         |  CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-         |  max(quality) AS max_quality
-         |FROM ded WHERE rn = 1
-         |GROUP BY lang_pred, source
-         |ORDER BY lang_pred, source""".stripMargin
-    },
-
-    // URL canonicalization mirror: each regex step matches UrlFunctions
-    // one-to-one (RE2-safe syntax on both engines)
-    "qd12_url_dedup" ->
-      """WITH u AS (
-        |  SELECT doc_id, source,
-        |    'https://WWW.' || source || '.Example.COM:443/Path/'
-        |      || CAST(doc_id % 7 AS VARCHAR) || '/?b=2&utm_source=x&a=1#frag' AS url
-        |  FROM documents
-        |),
-        |n AS (
-        |  SELECT doc_id, source,
-        |    lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS sch,
-        |    regexp_replace(regexp_replace(url, '^[A-Za-z][A-Za-z0-9+.-]*://', ''), '#.*$', '') AS rest
-        |  FROM u
-        |),
-        |parts AS (
-        |  SELECT doc_id, source, sch,
-        |    regexp_replace(regexp_replace(lower(regexp_extract(rest, '^([^/?]+)', 1)),
-        |      ':[0-9]+$', ''), '^www\.', '') AS host,
-        |    regexp_extract(regexp_replace(rest, '^[^/?]+', ''), '^([^?]*)', 1) AS rawpath,
-        |    regexp_extract(rest, '\?(.*)$', 1) AS q
-        |  FROM n
-        |),
-        |norm AS (
-        |  SELECT doc_id, source, host,
-        |    regexp_extract(host, '([^.]+\.[^.]+)$', 1) AS domain,
-        |    sch || '://' || host ||
-        |    (CASE WHEN regexp_replace(rawpath, '/$', '') = '' THEN '/'
-        |          ELSE regexp_replace(rawpath, '/$', '') END) ||
-        |    (CASE WHEN len(kept) > 0 THEN '?' || array_to_string(kept, '&') ELSE '' END) AS url_norm
-        |  FROM (SELECT *, list_sort(list_filter(string_split(q, '&'),
-        |          p -> NOT regexp_matches(p, '^(utm_[^=]*|fbclid|gclid)=') AND p <> '')) AS kept
-        |        FROM parts)
-        |)
-        |SELECT doc_id, source, url_norm, host, domain FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY url_norm ORDER BY doc_id) AS rn FROM norm
-        |) WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    "q29_udf_map" ->
-      """SELECT p_partkey, p_retailprice * 1.1 AS bumped,
-        |  'size_' || CAST(p_size AS VARCHAR) AS size_tag
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "q30_str_extra" ->
-      """SELECT p_partkey,
-        |  strlen(p_name) AS n_bytes,
-        |  CASE WHEN starts_with(p_brand, 'Brand#') THEN substr(p_brand, 7) ELSE p_brand END AS brand_id,
-        |  trim(p_name, 'aeiou ') AS consonant_trim,
-        |  list_aggregate(string_split(p_type, ' '), 'string_agg', '-') AS type_dashed
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "q31_dt_extra" ->
-      """SELECT event_id,
-        |  strftime(ts, '%Y-%m-%d %H:%M') AS formatted,
-        |  (epoch_us(ts) - epoch_us(CAST(CAST(ts AS DATE) AS TIMESTAMP))) * 1000 AS tod_nanos,
-        |  epoch_ms(ts) AS epoch_ms,
-        |  CAST(ts AS DATE) AS d
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q32_list_ops" ->
-      """SELECT vec_id,
-        |  embedding[1] AS f0,
-        |  len(embedding) AS dim,
-        |  list_min(embedding) AS vmin,
-        |  list_max(embedding) AS vmax,
-        |  list_sum(list_transform(embedding[1:4], x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS head_sq
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    "q33_struct_ops" ->
-      """SELECT c_custkey, c_name AS name,
-        |  CAST(to_json(struct_pack(name := c_name,
-        |    bal_cents := CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT))) AS VARCHAR) AS as_json
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "q34_concat_horizontal" ->
-      """WITH a AS (SELECT c_custkey, c_name, row_number() OVER (ORDER BY c_custkey) AS rn FROM customer),
-        |b AS (SELECT c_acctbal AS rev_bal, row_number() OVER (ORDER BY c_custkey DESC) AS rn FROM customer)
-        |SELECT a.c_custkey, a.c_name, b.rev_bal FROM a JOIN b USING (rn)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q35_gbd_boundaries" ->
-      """SELECT time_bucket(INTERVAL '12 hours', ts) + INTERVAL 12 HOURS AS ts,
-        |  time_bucket(INTERVAL '12 hours', ts) AS _lower_boundary,
-        |  time_bucket(INTERVAL '12 hours', ts) + INTERVAL 12 HOURS AS _upper_boundary,
-        |  count(*) AS n
-        |FROM events GROUP BY 1, 2, 3 ORDER BY ts""".stripMargin,
-
-    "q38_selectors" ->
-      """SELECT p_partkey, p_size, p_retailprice FROM part ORDER BY p_partkey""".stripMargin,
-
-    "q39_describe_stats" ->
-      """WITH s AS (SELECT list_sort(list(CAST(p_retailprice AS DOUBLE))) AS xs FROM part)
-        |SELECT
-        |  (SELECT count(p_retailprice) FROM part) AS cnt,
-        |  (SELECT CAST(sum(CASE WHEN p_retailprice IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM part) AS null_count,
-        |  (SELECT CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) / count(p_retailprice) FROM part) AS mean,
-        |  (SELECT min(p_retailprice) FROM part) AS vmin,
-        |  xs[CAST(floor(0.25 * (len(xs) - 1) + 0.5) AS INT) + 1] AS q25,
-        |  xs[CAST(floor(0.5 * (len(xs) - 1) + 0.5) AS INT) + 1] AS q50,
-        |  xs[CAST(floor(0.75 * (len(xs) - 1) + 0.5) AS INT) + 1] AS q75,
-        |  (SELECT max(p_retailprice) FROM part) AS vmax
-        |FROM s""".stripMargin,
-
-    "q37_quantile_modes" ->
-      """WITH s AS (
-        |  SELECT l_returnflag, list_sort(list(CAST(l_quantity AS DOUBLE))) AS xs
-        |  FROM lineitem GROUP BY 1
-        |)
-        |SELECT l_returnflag,
-        |  xs[CAST(floor(0.35 * (len(xs) - 1)) AS INT) + 1] AS q_lower,
-        |  xs[CAST(ceil(0.35 * (len(xs) - 1)) AS INT) + 1] AS q_higher,
-        |  xs[CAST(floor(0.35 * (len(xs) - 1) + 0.5) AS INT) + 1] AS q_nearest,
-        |  (xs[CAST(floor(0.35 * (len(xs) - 1)) AS INT) + 1]
-        |   + xs[CAST(ceil(0.35 * (len(xs) - 1)) AS INT) + 1]) / 2.0 AS q_midpoint,
-        |  xs[CAST(floor(0.35 * (len(xs) - 1)) AS INT) + 1]
-        |   + (0.35 * (len(xs) - 1) - floor(0.35 * (len(xs) - 1)))
-        |     * (xs[CAST(ceil(0.35 * (len(xs) - 1)) AS INT) + 1]
-        |        - xs[CAST(floor(0.35 * (len(xs) - 1)) AS INT) + 1]) AS q_linear
-        |FROM s ORDER BY l_returnflag""".stripMargin,
-
-    "qm01_media_meta" ->
-      """SELECT doc_id AS media_id,
-        |  CASE WHEN substr(text, 5, 4) = 'ftyp' THEN 'mp4'
-        |       WHEN starts_with(substr(text, 1, 4), 'PNG') THEN 'png'
-        |       WHEN starts_with(substr(text, 1, 4), 'RIFF') THEN 'riff'
-        |       ELSE 'raw' END AS format,
-        |  octet_length(encode(text)) AS n_bytes
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    "qm04_video_meta" ->
-      """SELECT doc_id AS media_id, 'mp4' AS format, 'isom' AS brand,
-        |  (600 + doc_id % 2400) / 600.0 AS duration_s,
-        |  CAST(600 AS BIGINT) AS timescale,
-        |  CAST(1 + doc_id % 3 AS INT) AS n_tracks,
-        |  CAST(320 + (doc_id % 8) * 16 AS INT) AS width,
-        |  CAST(240 + (doc_id % 5) * 16 AS INT) AS height
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    "qm03_frame_sample" ->
-      """SELECT doc_id AS media_id, CAST(f.frame_idx AS BIGINT) AS frame_idx,
-        |  (f.frame_idx * octet_length(encode(text))) // 4 AS frame_offset,
-        |  CAST(GREATEST(LEAST(16, octet_length(encode(text))
-        |    - (f.frame_idx * octet_length(encode(text))) // 4), 0) AS BIGINT) AS frame_len
-        |FROM documents CROSS JOIN (SELECT unnest(range(4)) AS frame_idx) f
-        |ORDER BY media_id, frame_idx""".stripMargin,
-
-    "q47_jdbc_roundtrip" ->
-      """SELECT c_custkey, c_name, c_acctbal
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "q50_categorical" ->
-      """WITH g AS (
-        |  SELECT c_mktsegment, count(*) AS n,
-        |    CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal_sum
-        |  FROM customer GROUP BY 1
-        |)
-        |SELECT c_mktsegment,
-        |  CAST(row_number() OVER (ORDER BY c_mktsegment) - 1 AS INT) AS seg_code,
-        |  n, bal_sum
-        |FROM g ORDER BY c_mktsegment""".stripMargin,
-
-    "q48_pipeline_asof_pivot" ->
-      """WITH aj AS (
-        |  SELECT p.event_id, p.user_id, p.ts, c.value AS click_value
-        |  FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |  ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |    ON p.user_id = c.user_id AND p.ts >= c.ts
-        |)
-        |SELECT time_bucket(INTERVAL '1 day', ts) AS ts,
-        |  CAST(sum(CASE WHEN user_id % 3 = 0 THEN CAST(click_value AS DECIMAL(18,4)) END) AS DOUBLE) AS b0,
-        |  CAST(sum(CASE WHEN user_id % 3 = 1 THEN CAST(click_value AS DECIMAL(18,4)) END) AS DOUBLE) AS b1,
-        |  CAST(sum(CASE WHEN user_id % 3 = 2 THEN CAST(click_value AS DECIMAL(18,4)) END) AS DOUBLE) AS b2
-        |FROM aj GROUP BY 1 ORDER BY ts""".stripMargin,
-
-    "q49_pipeline_dedup_keeplist" ->
-      s"""$componentsCte
-        |SELECT doc_id, lang, source FROM documents
-        |WHERE doc_id NOT IN (SELECT id FROM comp WHERE id <> component)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q01_groupby_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  sum(l_quantity) AS sum_qty,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        |  CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_disc,
-        |  min(l_quantity) AS min_qty,
-        |  max(l_quantity) AS max_qty,
-        |  count(l_quantity) AS cnt_qty,
-        |  count(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q02_filter_project" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        |  l_quantity + l_tax AS qty_plus_tax
-        |FROM lineitem WHERE l_quantity > 30.0 AND l_discount <= 0.05
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q03_join_inner" ->
-      """SELECT c_mktsegment,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  count(DISTINCT o_orderkey) AS n_orders
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q04_join_left" ->
-      """SELECT c_custkey, c_name,
-        |  coalesce(n_orders, 0) AS n_orders,
-        |  coalesce(total_spend, 0.0) AS total_spend
-        |FROM customer LEFT JOIN (
-        |  SELECT o_custkey, count(*) AS n_orders,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
-        |  FROM orders GROUP BY o_custkey
-        |) o ON c_custkey = o_custkey
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q05_join_semi" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 100000.0)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q06_join_anti" ->
-      """SELECT c_custkey, c_name, c_acctbal FROM customer
-        |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q07_join_cross" ->
-      """SELECT r_regionkey, r_name, n_nationkey, n_name
-        |FROM region CROSS JOIN nation
-        |ORDER BY r_regionkey, n_nationkey""".stripMargin,
-
-    "q08_sort_limit" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q09_distinct" ->
-      """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q10_window_over" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice, cust_total, cust_n
-        |FROM (
-        |  SELECT o_orderkey, o_custkey, o_totalprice,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (PARTITION BY o_custkey) AS DOUBLE) AS cust_total,
-        |    count(*) OVER (PARTITION BY o_custkey) AS cust_n
-        |  FROM orders
-        |) WHERE o_totalprice > cust_total / cust_n
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q11_case_cast_math" ->
-      """SELECT p_partkey,
-        |  CASE WHEN p_size BETWEEN 10 AND 30 THEN 'mid' ELSE 'extreme' END AS size_class,
-        |  CAST(p_size AS BIGINT) AS size_l,
-        |  round(p_retailprice, 0) AS price_round,
-        |  abs(p_size - 25) AS size_dist,
-        |  sqrt(CAST(p_size AS DOUBLE)) AS size_sqrt,
-        |  pow(CAST(p_size AS DOUBLE), 2.0) AS size_sq
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "q40_try_cast" ->
-      """SELECT p_partkey,
-        |  TRY_CAST(p_partkey AS TINYINT) AS small_key,
-        |  TRY_CAST(p_name AS DOUBLE) AS name_num,
-        |  TRY_CAST('BAD' || p_brand AS DATE) AS bad_date,
-        |  TRY_CAST(p_size AS SMALLINT) AS size_small
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "q12_str_funcs" ->
-      """SELECT p_partkey,
-        |  upper(p_name) AS name_upper,
-        |  length(p_name) AS name_len,
-        |  regexp_matches(p_name, 'ste') AS has_ste,
-        |  substr(p_name, 1, 5) AS name_head,
-        |  CASE WHEN regexp_extract(p_brand, 'Brand#(\d+)', 1) = '' THEN NULL
-        |       ELSE regexp_extract(p_brand, 'Brand#(\d+)', 1) END AS brand_num,
-        |  replace(p_type, ' ', '_') AS type_snake,
-        |  starts_with(p_type, 'STANDARD') AS is_std,
-        |  p_type LIKE '%TIN' AS is_tin
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "q13_dt_funcs" ->
-      """SELECT event_id,
-        |  year(ts) AS y, month(ts) AS mo, day(ts) AS dom,
-        |  dayofyear(ts) AS doy, isodow(ts) AS wd,
-        |  hour(ts) AS h, minute(ts) AS mi,
-        |  date_trunc('hour', ts) AS ts_hour,
-        |  epoch_us(ts) AS epoch_us
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q14_split_explode" ->
-      """SELECT words, count(*) AS n FROM (
-        |  SELECT unnest(string_split(text, ' ')) AS words
-        |  FROM documents WHERE doc_id < 50
-        |) GROUP BY words ORDER BY words""".stripMargin,
-
-    "q15_concat_diagonal" ->
-      """SELECT key, name, bal FROM (
-        |  SELECT c_custkey AS key, c_name AS name, NULL::DOUBLE AS bal FROM customer
-        |  UNION ALL
-        |  SELECT s_suppkey AS key, NULL AS name, s_acctbal AS bal FROM supplier
-        |) ORDER BY key, name, bal""".stripMargin,
-
-    "q16_unpivot" ->
-      """SELECT p_partkey, variable, value FROM (
-        |  SELECT p_partkey, 'size' AS variable, CAST(p_size AS DOUBLE) AS value FROM part
-        |  UNION ALL
-        |  SELECT p_partkey, 'retail' AS variable, p_retailprice AS value FROM part
-        |) ORDER BY p_partkey, variable""".stripMargin,
-
-    "q17_pivot" ->
-      """SELECT l_returnflag,
-        |  sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END) AS "F",
-        |  sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END) AS "O"
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q18_fill_null" ->
-      """SELECT c_custkey,
-        |  coalesce(max_price, -1.0) AS max_price_filled,
-        |  max_price IS NULL AS was_null
-        |FROM customer LEFT JOIN (
-        |  SELECT o_custkey, max(o_totalprice) AS max_price FROM orders GROUP BY o_custkey
-        |) o ON c_custkey = o_custkey
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q19_quantile" ->
-      """SELECT l_returnflag,
-        |  median(l_quantity) AS med_qty,
-        |  quantile_cont(l_quantity, 0.25) AS q25_qty,
-        |  quantile_cont(l_quantity, 0.9) AS q90_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q20_shift_diff" ->
-      """SELECT event_id, user_id, value, prev_value,
-        |  CAST(CAST(value AS DECIMAL(18,4)) - CAST(prev_value AS DECIMAL(18,4)) AS DOUBLE) AS value_diff
-        |FROM (
-        |  SELECT event_id, user_id, value,
-        |    lag(value, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_value
-        |  FROM events
-        |) ORDER BY event_id""".stripMargin,
-
-    "q21_asof_backward" -> asofBackwardSql,
-
-    "q22_asof_tolerance" ->
-      """SELECT p.event_id, p.user_id, p.ts,
-        |  CASE WHEN epoch_us(p.ts) - epoch_us(c.ts) <= 3600000000 THEN c.value END AS click_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin,
-
-    "q23_asof_forward" ->
-      """SELECT p.event_id, p.user_id, p.ts, c.value AS err_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') c
-        |  ON p.user_id = c.user_id AND p.ts <= c.ts
-        |ORDER BY p.event_id""".stripMargin,
-
-    "q24_asof_nearest" ->
-      """WITH p AS (SELECT * FROM events WHERE event_type = 'purchase'),
-        |c AS (SELECT * FROM events WHERE event_type = 'click'),
-        |b AS (SELECT p.event_id, c.ts AS bt, c.value AS bv FROM p
-        |      ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts),
-        |f AS (SELECT p.event_id, c.ts AS ft, c.value AS fv FROM p
-        |      ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts <= c.ts)
-        |SELECT p.event_id, p.user_id, p.ts,
-        |  CASE WHEN ft IS NULL OR (bt IS NOT NULL
-        |            AND epoch_us(p.ts) - epoch_us(bt) <= epoch_us(ft) - epoch_us(p.ts))
-        |       THEN bv ELSE fv END AS near_value
-        |FROM p JOIN b USING (event_id) JOIN f USING (event_id)
-        |ORDER BY p.event_id""".stripMargin,
-
-    "q25_group_by_dynamic" ->
-      """SELECT time_bucket(INTERVAL '6 hours', ts) AS ts, event_type,
-        |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value,
-        |  count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY ts, event_type""".stripMargin,
-
-    "q26_rolling_rows" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE) AS roll_sum,
-        |  count(*) OVER w AS roll_n
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |             ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q27_rolling_time" ->
-      """SELECT event_id, user_id, value,
-        |  CAST(sum(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE) AS roll_3d_sum
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts
-        |             RANGE BETWEEN INTERVAL 3 DAYS PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-
-    "q28_fill_directional" ->
-      """SELECT event_id, user_id,
-        |  CASE WHEN event_type <> 'error' THEN value END AS value_masked,
-        |  last_value(CASE WHEN event_type <> 'error' THEN value END IGNORE NULLS)
-        |    OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_ffill,
-        |  first_value(CASE WHEN event_type <> 'error' THEN value END IGNORE NULLS)
-        |    OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS value_bfill
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q41_asof_unkeyed" ->
-      """SELECT p.event_id, p.ts, c.click_value
-        |FROM (SELECT event_id, ts FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (
-        |  SELECT ts, CAST(max(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS click_value
-        |  FROM events WHERE event_type = 'click' GROUP BY ts) c
-        |  ON p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin,
-
-    "q42_fill_global" ->
-      """SELECT event_id,
-        |  last_value(CASE WHEN event_type <> 'error' THEN value END IGNORE NULLS)
-        |    OVER (ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS value_ffill
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q45_rolling_global_rows" ->
-      """SELECT o_orderkey,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE) AS roll_sum,
-        |  count(*) OVER w AS roll_n
-        |FROM orders
-        |WINDOW w AS (ORDER BY o_orderkey ROWS BETWEEN 24 PRECEDING AND CURRENT ROW)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q46_rolling_global_time" ->
-      """SELECT event_id,
-        |  CAST(sum(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE) AS roll_sum,
-        |  count(*) OVER w AS roll_n
-        |FROM events
-        |WINDOW w AS (ORDER BY ts RANGE BETWEEN INTERVAL 3 DAYS PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-
-    "q43_calendar_month" ->
-      """SELECT date_trunc('month', ts) AS ts, event_type,
-        |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value,
-        |  count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY ts, event_type""".stripMargin,
-
-    "q44_calendar_offset" ->
-      """SELECT o_orderkey,
-        |  CAST(o_orderdate AS TIMESTAMP) + INTERVAL 1 MONTH AS plus_1mo,
-        |  CAST(o_orderdate AS TIMESTAMP) + INTERVAL 3 MONTH AS plus_1q,
-        |  CAST(o_orderdate AS TIMESTAMP) - INTERVAL 12 MONTH AS minus_1y,
-        |  CAST(o_orderdate AS TIMESTAMP) + INTERVAL 1 MONTH + INTERVAL 2 DAY AS plus_mixed,
-        |  date_trunc('month', CAST(o_orderdate AS TIMESTAMP)) AS trunc_mo,
-        |  date_trunc('quarter', CAST(o_orderdate AS TIMESTAMP)) AS trunc_q
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    // §2.10 streaming face — the batch recomputation of the 1d tumbling
-    // window (epoch-aligned in UTC == date_trunc('day'))
-    "q61_stream_window" ->
-      """SELECT date_trunc('day', ts) AS ts, event_type,
-        |  count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY ts, event_type""".stripMargin,
-
-    "q62_json_multiline" ->
-      """SELECT n_nationkey, n_name, n_regionkey
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-
-    "q63_arrow_handoff" ->
-      """SELECT s_suppkey, s_name, s_nationkey, s_acctbal
-        |FROM supplier WHERE s_suppkey % 5 = 0 ORDER BY s_suppkey""".stripMargin,
-
-    "q64_anonymous_scan" ->
-      """SELECT CAST(i % 7 AS INTEGER) AS grp, count(*) AS n,
-        |  sum(CAST((i * 31) % 1000 AS DOUBLE) / 8.0) AS score_sum
-        |FROM range(0, 10000) t(i) GROUP BY 1 ORDER BY grp""".stripMargin,
-
-    "q65_async_read" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q66_from_records" ->
-      """SELECT i AS id, 'rec_' || CAST(i % 8 AS VARCHAR) AS name,
-        |  CAST((i * 13) % 40 AS DOUBLE) / 4.0 AS score, n_name
-        |FROM range(0, 60) t(i) JOIN nation ON i % 25 = n_nationkey
-        |ORDER BY id""".stripMargin,
-
-    "q67_export_batches" ->
-      """SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey""".stripMargin,
-
-    "q68_drop_rename_nulls" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag AS flag, l_quantity AS qty
-        |FROM lineitem WHERE l_quantity % 5 <> 0
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q71_orc_roundtrip" ->
-      """SELECT event_id, user_id, ts, value
-        |FROM events WHERE event_type = 'click'
-        |ORDER BY event_id""".stripMargin,
-
-    // NB: session_id is CAST to BIGINT — DuckDB's integer window sum
-    // returns HUGEINT (int128), which the driver's hasher renders unlike
-    // Spark's BIGINT even when every cell value matches (r11's only red
-    // cell). Both window orderings carry event_id as the tie-break so the
-    // lag pass and the running-sum pass agree on any duplicate (user, ts).
-    "q72_sessionize" ->
-      """WITH e AS (
-        |  SELECT user_id, ts, value, event_id FROM events WHERE event_type = 'click'
-        |), b AS (
-        |  SELECT user_id, ts, value, event_id,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(CAST(ts AS TIMESTAMP)) - epoch_us(CAST(lag(ts) OVER w AS TIMESTAMP)) > 1800000000
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), s AS (
-        |  SELECT user_id, ts, value,
-        |    CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM b
-        |)
-        |SELECT user_id, session_id, min(ts) AS session_start,
-        |  max(ts) AS session_end, count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM s GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
-
-    // q73: same session semantics as q72 but keyed by (user, session_start)
-    // — the stream face emits no session ordinal, and session_start is
-    // unique per user, so the grouped output needs no session_id column
-    "q73_sessionize_stream" ->
-      """WITH e AS (
-        |  SELECT user_id, ts, value FROM events WHERE event_type = 'click'
-        |), b AS (
-        |  SELECT user_id, ts, value,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(CAST(ts AS TIMESTAMP)) - epoch_us(CAST(lag(ts) OVER w AS TIMESTAMP)) > 1800000000
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        |), s AS (
-        |  SELECT user_id, ts, value,
-        |    CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM b
-        |)
-        |SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM s GROUP BY user_id, session_id
-        |ORDER BY user_id, session_start""".stripMargin,
-
-    // q74: the duplicated-ingest stream dedup face must return exactly the
-    // distinct base truth (duplicates are bit-identical, so keep-first is
-    // unambiguous)
-    "q74_stream_dedup" ->
-      """SELECT event_id, user_id, ts, value
-        |FROM events WHERE event_type = 'click'
-        |ORDER BY event_id""".stripMargin,
-
-    // q76: forward ASOF (p.ts <= c.ts) with q22's tolerance CASE — the
-    // streaming forward face must reproduce DuckDB's native forward ASOF
-    "q76_asof_stream_fwd" ->
-      """SELECT p.event_id, p.user_id, p.ts, p.value,
-        |  CASE WHEN epoch_us(c.ts) - epoch_us(p.ts) <= 86400000000 THEN c.value END AS err_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') c
-        |  ON p.user_id = c.user_id AND p.ts <= c.ts
-        |ORDER BY p.event_id""".stripMargin,
-
-    "q75_asof_stream" -> asofBackwardSql,
-
-    // the stream-stream interval joins must equal the plain batch range
-    // joins of the same kind (see intervalJoinSql)
-    "q77_interval_join_stream" -> intervalJoinSql("inner"),
-    "q77s_interval_join_sized" -> intervalJoinSql("inner"),
-    "q78_interval_join_outer" -> intervalJoinSql("left_outer"),
-    "q82_interval_join_right" -> intervalJoinSql("right_outer"),
-    "q79_interval_join_full" -> intervalJoinSql("full_outer"),
-    "q83_interval_join_full_sink" -> intervalJoinSql("full_outer"),
-
-    "qd50_bm25" -> bm25OracleSql(Bm25Terms, k1 = 1.2, b = 0.75),
-
-    // qd51: exact distincts recomputed; the oracle states the EXPECTED
-    // sketch verdict (within 3x rsd) so an estimator regression hashes red
-    "qd51_approx_distinct" ->
-      """SELECT event_type,
-        |  count(DISTINCT user_id) AS exact_users,
-        |  count(DISTINCT event_id) AS exact_events,
-        |  true AS users_ok, true AS events_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q70_bucketed_join" ->
-      """SELECT o_orderpriority, count(*) AS n,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS rev,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q69_list_sort" ->
-      """SELECT p_partkey,
-        |  list_aggregate(list_sort(string_split(p_name, ' '), 'DESC'),
-        |    'string_agg', '-') AS sorted_desc,
-        |  list_aggregate(list_sort(list_distinct(string_split(p_name, ' ')), 'ASC'),
-        |    'string_agg', '|') AS uniq_asc
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "qd52_dup_ngrams" -> dupNgramOracleSql,
-
-    // qd53 mirror: qd10's recursive-reach components (LEFT JOIN so
-    // singletons keep themselves as representative) feeding qd17's exact
-    // int64 modular arithmetic on the representative
-    "qd53_leakage_safe_split" ->
-      s"""$componentsCte,
-         |rep AS (SELECT d.doc_id, coalesce(c.component, d.doc_id) AS rep
-         |        FROM documents d LEFT JOIN comp c ON d.doc_id = c.id),
-         |b AS (SELECT doc_id, rep,
-         |        (rep % 1000000007) * 2654435761 % 1000000007 % 1000 AS bucket
-         |      FROM rep)
-         |SELECT doc_id, rep, bucket,
-         |  CASE WHEN bucket < 800 THEN 'train' WHEN bucket < 900 THEN 'valid'
-         |       ELSE 'test' END AS split
-         |FROM b ORDER BY doc_id""".stripMargin,
-
-    // qd54 mirror: the same exact int64 key arithmetic (salt 7), ranked per
-    // stratum — the oracle may window-sort freely; the Spark side must NOT
-    "qd54_stratified_sample" ->
-      """WITH r AS (
-        |  SELECT lang, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY ((doc_id + 7) % 1000000007) * 2654435761 % 1000000007
-        |    ) AS rk
-        |  FROM documents
-        |)
-        |SELECT lang, rk, doc_id, n_chars FROM r WHERE rk <= 25
-        |ORDER BY lang, rk""".stripMargin,
-
-    // q80 mirror: the identical Morton interleave, GENERATED from the same
-    // (bits, cols) parameters so the two formulas cannot drift — bit i of
-    // column j lands at position i*n + j
-    "q80_zorder_curve" -> {
-      val terms = (0 until 10).flatMap(i => Seq(
-        s"(((zx >> $i) & 1) << ${2 * i})",
-        s"(((zy >> $i) & 1) << ${2 * i + 1})")).mkString(" | ")
-      s"""WITH b AS (
-         |  SELECT l_orderkey, l_linenumber,
-         |    l_partkey % 1024 AS zx, l_suppkey % 1024 AS zy
-         |  FROM lineitem
-         |)
-         |SELECT l_orderkey, l_linenumber, zx, zy, ($terms) AS z
-         |FROM b ORDER BY z, l_orderkey, l_linenumber LIMIT 100""".stripMargin
-    },
-
-    // q81 mirror: the union of row-group ranges is the exact column range,
-    // so DuckDB recomputes gmin/gmax from the data; the sampled-boundary-
-    // dependent clustering factors grade as a TRUE contract verdict
-    "q81_layout_stats" ->
-      """SELECT 'x' AS col_name,
-        |  CAST(min(l_partkey % 1024) AS DOUBLE) AS gmin,
-        |  CAST(max(l_partkey % 1024) AS DOUBLE) AS gmax,
-        |  TRUE AS clustered
-        |FROM lineitem
-        |UNION ALL
-        |SELECT 'y',
-        |  CAST(min(l_suppkey % 1024) AS DOUBLE),
-        |  CAST(max(l_suppkey % 1024) AS DOUBLE),
-        |  TRUE
-        |FROM lineitem
-        |ORDER BY col_name""".stripMargin,
-
-    // qd55 mirror: exact top-10 with the same tokenizer; the contract
-    // booleans are provably TRUE by the Misra–Gries invariants (no
-    // overestimate; underestimate <= n/(k+1); every token above that
-    // threshold tracked), so the oracle asserts them as literals
-    "qd55_heavy_hitters" ->
-      """WITH toks AS (
-        |  SELECT unnest(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS token
-        |  FROM documents
-        |)
-        |SELECT token, count(*) AS cnt,
-        |  TRUE AS no_overestimate, TRUE AS bound_ok, TRUE AS heavy_present
-        |FROM toks GROUP BY token
-        |ORDER BY cnt DESC, token LIMIT 10""".stripMargin,
-
-    // qd57 mirror: exact per-lang top-3 with the same tokenizer; the
-    // per-lang contract booleans are provably TRUE (the MG invariants hold
-    // per group with per-group n)
-    "qd57_heavy_hitters_by_lang" ->
-      """WITH toks AS (
-        |  SELECT lang,
-        |    unnest(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS token
-        |  FROM documents
-        |), exact AS (
-        |  SELECT lang, token, count(*) AS cnt FROM toks GROUP BY lang, token
-        |), r AS (
-        |  SELECT lang, token, cnt,
-        |    row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, token) AS rk
-        |  FROM exact
-        |)
-        |SELECT lang, rk, token, cnt,
-        |  TRUE AS no_overestimate, TRUE AS bound_ok, TRUE AS heavy_present
-        |FROM r WHERE rk <= 3 ORDER BY lang, rk""".stripMargin,
-
-    // qd56 mirror: the same A-Res key — u = (shuffleKey+1)/(P+1) exact in
-    // double on both engines; the only libm call is one ln of an identical
-    // quotient (score gaps across the corpus are ~1e-3, ulp-level ln
-    // disagreement cannot flip a rank)
-    "qd56_weighted_sample" ->
-      """WITH s AS (
-        |  SELECT doc_id, lang, n_chars,
-        |    ln((((doc_id + 11) % 1000000007) * 2654435761 % 1000000007 + 1)
-        |       / 1000000008.0) / n_chars AS score
-        |  FROM documents WHERE n_chars > 0
-        |), r AS (
-        |  SELECT doc_id, lang, n_chars,
-        |    row_number() OVER (ORDER BY score DESC, doc_id) AS rk
-        |  FROM s
-        |)
-        |SELECT rk, doc_id, lang, n_chars FROM r WHERE rk <= 40
-        |ORDER BY rk""".stripMargin,
-  )
-
-  /** qd52 mirror: the same injected repetition (doc_id % 4 phrase copies),
-    * then per n in 5..10 the same all-occurrences duplicate-char fraction —
-    * n-grams via the qd11 list-comprehension windows, grouped by the n-gram
-    * STRING (the expression counts strings too, so a 64-bit-collision
-    * divergence is impossible), `length()` counting codepoints in both
-    * engines. Both sides divide long-exact char counts as doubles, so the
-    * fractions are bitwise-identical.
-    *
-    * (Lazy: referenced from the `oracleSql` val above — a strict val here
-    * would still be null when that map initializes.) */
-  private lazy val dupNgramOracleSql: String = {
-    val ns = (5 to 10).toSeq
-    val ctes = ns.map { n =>
-      s"""s$n AS (SELECT doc_id, unnest(CASE WHEN len(w) >= $n
-         |  THEN [list_aggregate(w[i:i+${n - 1}], 'string_agg', ' ') FOR i IN range(1, len(w) - ${n - 2})]
-         |  ELSE [list_aggregate(w, 'string_agg', ' ')] END) AS s
-         |  FROM toks WHERE len(w) > 0),
-         |c$n AS (SELECT doc_id, s, count(*) AS c, length(s) AS len FROM s$n GROUP BY doc_id, s),
-         |a$n AS (SELECT doc_id,
-         |  CAST(sum(CASE WHEN c > 1 THEN c * len ELSE 0 END) AS DOUBLE)
-         |    / CAST(sum(c * len) AS DOUBLE) AS f
-         |  FROM c$n GROUP BY doc_id)""".stripMargin
-    }.mkString(",\n")
-    val fields = ns.map(n => s"  coalesce(a$n.f, 0.0) AS dup${n}_frac").mkString(",\n")
-    val gate = graft.functions.TextFunctions.DupNgramThresholds
-      .map { case (n, thr) => s"coalesce(a$n.f, 0.0) <= $thr" }.mkString(" AND ")
-    val joins = ns.map(n => s"LEFT JOIN a$n ON d.doc_id = a$n.doc_id").mkString("\n")
-    s"""WITH base AS (
-       |  SELECT doc_id, text || ' ' || repeat('rep' || CAST(doc_id % 5 AS VARCHAR)
-       |    || ' alpha beta gamma delta epsilon ', CAST(doc_id % 4 AS INT)) AS text
-       |  FROM documents),
-       |toks AS (
-       |  SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS w
-       |  FROM base),
-       |$ctes
-       |SELECT d.doc_id,
-       |$fields,
-       |  ($gate) AS ngram_ok
-       |FROM documents d
-       |$joins
-       |ORDER BY d.doc_id""".stripMargin
-  }
 }

@@ -1,10 +1,11 @@
 package graft
+import graft.faces.{Face, Faces}
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+/** Driver-run correctness dump: each face's `run` result → parquet, plus
+  * oracle_sql.json, for the driver's DuckDB compare.
   *
-  * Extra args beyond <sfDir> <outDir> restrict the dump to those query
+  * Extra args beyond <sfDir> <outDir> restrict the dump to those face
   * names (dev loop; the stale-output sweep is skipped so a filtered run
   * never invalidates a previous full dump's siblings). A name that is no
   * face fails the run before anything is written. */
@@ -12,25 +13,33 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
     val only = args.drop(2).toSet
-    val selected = SparkEntry.selectFaces(SparkEntry.queries, only)
+    Faces.select(only) // an unknown name fails here, before the session starts
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.local(cpus)
-    // clear stale outputs: a failed later run must not leave a previous
-    // run's parquet + oracle_sql.json looking current
-    val outRoot = new java.io.File(outDir)
-    if (outRoot.exists() && only.isEmpty) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      outRoot.listFiles().foreach(rm)
+    dump(spark, Faces.all, sfDir, outDir, only)
+    spark.stop()
+  }
+
+  /** Writes each face of `faces` that `only` names (all of them for an
+    * empty `only`) to `$outDir/<name>`, and the oracles of all `faces` to
+    * `$outDir/oracle_sql.json`. An unfiltered run first clears `outDir`;
+    * every face first deletes its own previous output, so a face that
+    * fails leaves nothing a later compare could grade as current. */
+  def dump(spark: SparkSession, faces: Seq[Face], sfDir: String, outDir: String,
+           only: Set[String] = Set.empty): Unit = {
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete()
     }
+    val outRoot = new java.io.File(outDir)
+    if (outRoot.exists() && only.isEmpty) outRoot.listFiles().foreach(rm)
     outRoot.mkdirs()
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    for (face <- faces if only.isEmpty || only(face.name)) {
+      rm(new java.io.File(outRoot, face.name))
+      try face.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${face.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${face.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -45,9 +54,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = faces.map(f => s"${q(f.name)}: ${q(f.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

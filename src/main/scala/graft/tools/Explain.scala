@@ -16,8 +16,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
+    val face = graft.faces.Faces(name)
     val spark = graft.Sessions.local("8")
-    val df = graft.SparkEntry.benchQueries(name)(spark, sfDir)
+    val df = face.benchRun(spark, sfDir)
     val (rows, timings) = graft.api.Profile.profile(df)
     println(s"=== $name final plan (${rows.length} rows) ===")
     println(df.queryExecution.executedPlan.treeString)

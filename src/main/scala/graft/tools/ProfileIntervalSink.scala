@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.{Sessions, SparkEntry}
+import graft.Sessions
+import graft.faces.StreamFaces
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,7 +10,7 @@ import org.apache.spark.sql.functions._
   * harness, whose 100k `localize` guard bounds them above sf0.1 — a bound
   * of the HARNESS, not of the faces. This tool drives the identical outer
   * joins through the production file sink, using the faces' own function
-  * ([[SparkEntry.intervalJoinFace]]: same fixtures, same join, same drive),
+  * ([[StreamFaces.intervalJoinFace]]: same fixtures, same join, same drive),
   * so the outer-null finalization machinery — the most state-intensive
   * streaming path in the repo — gets real >sf0.1 walls.
   *
@@ -48,22 +49,22 @@ object ProfileIntervalSink {
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.read.parquet(s"$sfDir/lineitem.parquet").count() // warm-up
 
-    val (dirL, dirR) = SparkEntry.intervalJoinInputs(spark, sfDir, sentinels = true)
+    val (dirL, dirR) = StreamFaces.intervalJoinInputs(spark, sfDir, sentinels = true)
     println(s"[ij-sink] fixtures: left=$dirL right=$dirR " +
       s"purchases=${spark.read.parquet(dirL).count()} clicks=${spark.read.parquet(dirR).count()}")
     val root = java.nio.file.Files.createTempDirectory("graft_ijsink").toString
 
     for (jt <- Seq("left_outer", "right_outer", "full_outer")) {
       // batch truth once per join type, sentinel rows filtered like the faces
-      val batch = SparkEntry.intervalJoinOf(spark.read.parquet(dirL),
+      val batch = StreamFaces.intervalJoinOf(spark.read.parquet(dirL),
         spark.read.parquet(dirR), jt).filter(col("user_id") >= 0L)
       for (rep <- 1 to reps) {
         val dir = s"$root/${jt}_$rep"
         var stateRows = -1L
         var stateMb = 0.0
         val t0 = System.nanoTime()
-        val sink = SparkEntry.intervalJoinFace(spark, sfDir, jt,
-          SparkEntry.FileSink(dir, _.flatMap(_.stateOperators.headOption).foreach { so =>
+        val sink = StreamFaces.intervalJoinFace(spark, sfDir, jt,
+          StreamFaces.FileSink(dir, _.flatMap(_.stateOperators.headOption).foreach { so =>
             stateRows = math.max(stateRows, so.numRowsTotal)
             stateMb = math.max(stateMb, so.memoryUsedBytes / 1e6)
           }))

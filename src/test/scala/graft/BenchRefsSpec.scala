@@ -1,5 +1,7 @@
 package graft
 
+import graft.faces.{Face, Faces}
+
 /** The embedded frozen-ref table and the bench suite must stay in lockstep
   * (r13 directive 1's self-adjudicating artifact is only self-adjudicating
   * if every row it times has a reference): a new bench face without a
@@ -8,7 +10,7 @@ package graft
 class BenchRefsSpec extends SparkSpec {
 
   test("every bench face has a frozen ref; every ref names a live bench face") {
-    val faces = SparkEntry.benchQueries.keySet
+    val faces = Faces.all.map(_.name).toSet
     val refs = BenchRefs.refs.keySet
     val unreferenced = faces.diff(refs)
     assert(unreferenced.isEmpty,
@@ -21,15 +23,29 @@ class BenchRefsSpec extends SparkSpec {
   }
 
   test("face filters (Verify args, Bench SPARK_GRAFT_BENCH_ONLY) fail fast on unknown names") {
-    val all = Map("a" -> 1, "b" -> 2)
-    assert(SparkEntry.selectFaces(all, Set.empty) == all)
-    assert(SparkEntry.selectFaces(all, Set("b")) == Map("b" -> 2))
+    assert(Faces.select(Set.empty) == Faces.all)
+    // a filter keeps declaration order, whatever the order of its names
+    assert(Faces.select(Set("q02_filter_project", "q01_groupby_agg")).map(_.name) ==
+      Seq("q01_groupby_agg", "q02_filter_project"))
     val e = intercept[IllegalArgumentException](
-      SparkEntry.selectFaces(all, Set("b", "zz", "qq")))
+      Faces.select(Set("q01_groupby_agg", "zz", "qq")))
     assert(e.getMessage.contains("unknown face name(s): qq, zz"), e.getMessage)
-    val typo = intercept[IllegalArgumentException](SparkEntry.selectFaces(
-      SparkEntry.benchQueries, Set("q77_interval_join_stream", "q77_interval_join")))
+    val typo = intercept[IllegalArgumentException](
+      Faces.select(Set("q77_interval_join_stream", "q77_interval_join")))
     assert(typo.getMessage.endsWith(": q77_interval_join"), typo.getMessage)
+    // the single-face lookup (Explain, the specs) fails the same way
+    val one = intercept[IllegalArgumentException](Faces("q77_interval_join"))
+    assert(one.getMessage.endsWith(": q77_interval_join"), one.getMessage)
+  }
+
+  test("the face registry rejects a repeated face name") {
+    val f = Face("a", (s, d) => SparkEntry.t(s, d, "region"), "SELECT 1 AS x")
+    val g = Face("b", f.run, "SELECT 2 AS x")
+    assert(Faces.requireUniqueNames(Seq(f, g)) == Seq(f, g))
+    val e = intercept[IllegalArgumentException](
+      Faces.requireUniqueNames(Seq(f, g, f.copy(oracle = "SELECT 3 AS x"))))
+    assert(e.getMessage == "requirement failed: duplicate face name(s): a", e.getMessage)
+    assert(Faces.all.map(_.name).distinct.size == 150)
   }
 
   test("refs are sane: positive medians, non-negative cpu_frac, streaming faces known") {
@@ -38,17 +54,18 @@ class BenchRefsSpec extends SparkSpec {
       assert(cpu >= 0, s"$name: negative reference cpu_frac $cpu")
     }
     // the section split drives the gate's noise floors — a streaming face
-    // missing from Bench.StreamingFaces would gate against the core floor.
-    // NAMING CONTRACT (documented at Bench.StreamingFaces, ADVICE r14): a
-    // streaming face MUST carry "_stream" or "interval_join" in its name;
-    // this two-direction equality check is what ENFORCES the convention —
-    // a conventionally-named face absent from the declared set fails here,
-    // and so does a declared face named outside the convention.
-    val streaming = SparkEntry.benchQueries.keySet
+    // declared outside the streaming family would gate against the core
+    // floor. NAMING CONTRACT (ADVICE r14): a streaming face MUST carry
+    // "_stream" or "interval_join" in its name; this two-direction equality
+    // check is what ENFORCES the convention — a conventionally-named face
+    // outside Faces.streaming fails here, and so does a streaming face
+    // named outside the convention.
+    val streaming = Faces.all.map(_.name).toSet
       .filter(n => n.contains("_stream") || n.contains("interval_join"))
-    assert(streaming == Bench.StreamingFaces,
-      s"streaming-face set drifted: only-in-suite=${streaming.diff(Bench.StreamingFaces).toSeq.sorted} " +
-        s"only-declared=${Bench.StreamingFaces.diff(streaming).toSeq.sorted}")
+    val declared = Faces.streaming.map(_.name).toSet
+    assert(streaming == declared,
+      s"streaming-face set drifted: only-in-suite=${streaming.diff(declared).toSeq.sorted} " +
+        s"only-declared=${declared.diff(streaming).toSeq.sorted}")
     // mechanism baselines (r15): every entry must name a live ref row, with
     // sane non-negative values
     val orphanMech = BenchRefs.mechRefs.keySet.diff(BenchRefs.refs.keySet)
@@ -61,7 +78,7 @@ class BenchRefsSpec extends SparkSpec {
   }
 
   test("per-scale refs (r16): every sfRefs row names a live bench face, sane values") {
-    val faces = SparkEntry.benchQueries.keySet
+    val faces = Faces.all.map(_.name).toSet
     // the two frozen cross-scale tables (sf1 r16, sf10 r17): dropping one
     // silently downgrades that SF's runs from gated back to annotate-only
     assert(BenchRefs.sfRefs.keySet == Set("sf1", "sf10"))
@@ -100,7 +117,7 @@ class BenchRefsSpec extends SparkSpec {
     assert(missing10.isEmpty,
       s"sfRefs(sf10) faces missing from evidence.sh SF10_FACES: ${missing10.toSeq.sorted.mkString(", ")}")
     // and the runner must not select a face the bench suite doesn't have
-    val unknown = (sf1 ++ sf10).diff(SparkEntry.benchQueries.keySet)
+    val unknown = (sf1 ++ sf10).diff(Faces.all.map(_.name).toSet)
     assert(unknown.isEmpty,
       s"evidence.sh selects unknown faces: ${unknown.toSeq.sorted.mkString(", ")}")
   }

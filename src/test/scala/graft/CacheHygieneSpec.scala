@@ -1,5 +1,7 @@
 package graft
 
+import graft.faces.Faces
+
 /** Library cache-hygiene contract: no public op retains cache blocks past
   * its query's materialization.
   *
@@ -30,13 +32,14 @@ class CacheHygieneSpec extends SparkSpec {
 
   // Queries are grouped into a few suite entries (not one test per query) so
   // failure output stays readable while every query is still covered.
-  private val groups = SparkEntry.queries.keys.toSeq.sorted.grouped(20).toSeq
+  private val groups = Faces.all.sortBy(_.name).grouped(20).toSeq
 
   for (group <- groups)
-    test(s"no retained cache blocks after: ${group.head}..${group.last}") {
-      for (name <- group) {
+    test(s"no retained cache blocks after: ${group.head.name}..${group.last.name}") {
+      for (face <- group) {
+        val name = face.name
         spark.catalog.clearCache() // isolate: a leak must be THIS query's
-        SparkEntry.queries(name)(spark, dir).write.mode("overwrite")
+        face.run(spark, dir).write.mode("overwrite")
           .format("noop").save()
         val retained = spark.sparkContext.getPersistentRDDs
         assert(retained.isEmpty,
@@ -45,18 +48,15 @@ class CacheHygieneSpec extends SparkSpec {
       }
     }
 
-  // The bench-only operator faces (round 10: qd04/qd05/qs04/qd32 overrides)
+  // The bench twins (Face.bench: the operator-only plans Bench times)
   // run under the same contract — the bench's long 5-rep suite would
   // amplify any leak 5x per query.
-  private val benchOnly =
-    (SparkEntry.benchQueries.keySet -- SparkEntry.queries.keySet) ++
-      SparkEntry.benchQueries.keys.filter(k =>
-        SparkEntry.benchQueries(k) ne SparkEntry.queries.getOrElse(k, null))
+  private val benchOnly = Faces.all.filter(_.bench.isDefined).sortBy(_.name)
 
-  test(s"no retained cache blocks after bench faces: ${benchOnly.toSeq.sorted.mkString(", ")}") {
-    for (name <- benchOnly.toSeq.sorted) {
+  test(s"no retained cache blocks after bench faces: ${benchOnly.map(_.name).mkString(", ")}") {
+    for (face <- benchOnly; name = face.name; bench <- face.bench) {
       spark.catalog.clearCache()
-      SparkEntry.benchQueries(name)(spark, dir).write.mode("overwrite")
+      bench(spark, dir).write.mode("overwrite")
         .format("noop").save()
       val retained = spark.sparkContext.getPersistentRDDs
       assert(retained.isEmpty,

@@ -684,7 +684,7 @@ class DifferentialSpec extends SparkSpec {
     // mid, and absent words — df = 0 paths), k1 and b grids including the
     // b = 0 (no length normalization) and b = 1 (full normalization)
     // edges. The oracle SQL comes from the SAME generator qd50's oracle
-    // uses (SparkEntry.bm25OracleSql), so this fuzzes the expression-tree
+    // uses (PrepFaces.bm25OracleSql), so this fuzzes the expression-tree
     // mirroring itself: any associativity or literal-precision drift
     // between the Spark Column chain and the SQL rendering breaks the
     // exact integer equality.
@@ -704,7 +704,7 @@ class DifferentialSpec extends SparkSpec {
       val b = bsq(r.nextInt(bsq.length))
       val df = graft.prep.Prep.bm25(sf("documents"), "doc_id", "text", terms, k1, b)
         .select(col("doc_id"), col("lang"), col("bm25_uscore"))
-      assertSame(df, SparkEntry.bm25OracleSql(terms, k1, b))
+      assertSame(df, graft.faces.PrepFaces.bm25OracleSql(terms, k1, b))
     }
   }
 

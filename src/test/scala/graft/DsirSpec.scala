@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.faces.Faces
 
 import graft.prep.Prep
 
@@ -156,11 +157,11 @@ class DsirSpec extends SparkSpec {
     // lookalike. (Stage-1 gates are near-identical; residual daylight is
     // hashed-vs-exact score ties around the cut boundary.)
     val d = "/root/testdata/sf0.001"
-    val exact = SparkEntry.queries("qd41_pipeline_quality_select")(spark, d)
+    val exact = Faces("qd41_pipeline_quality_select").run(spark, d)
       .select("doc_id").as[Long].collect().toSet
     // the raw hashed pipeline is the qd41h BENCH face (the correctness face
     // wraps it in the overlap contract this test independently mirrors)
-    val hashed = SparkEntry.benchQueries("qd41h_pipeline_quality_select_hashed")(spark, d)
+    val hashed = Faces("qd41h_pipeline_quality_select_hashed").benchRun(spark, d)
       .select("doc_id").as[Long].collect().toSet
     assert(exact.size == 50 && hashed.size == 50)
     val overlap = (exact intersect hashed).size
@@ -168,7 +169,7 @@ class DsirSpec extends SparkSpec {
     // and the contract query itself verdicts green (SF-portable booleans
     // since r18: n_selected_ok anchors the count to the scored pool,
     // overlap_ok is the same 40/50 floor stated fractionally)
-    val row = SparkEntry.queries("qd41h_pipeline_quality_select_hashed")(spark, d).head()
+    val row = Faces("qd41h_pipeline_quality_select_hashed").run(spark, d).head()
     assert(row.getBoolean(0) && row.getBoolean(1), row.toString)
   }
 }

@@ -89,7 +89,7 @@ class InterpretedModeSpec extends SparkSpec {
   private def diverged(interp: org.apache.spark.sql.SparkSession,
                        names: Seq[String]): Seq[String] =
     names.flatMap { name =>
-      val q = SparkEntry.queries(name)
+      val q = graft.faces.Faces(name).run
       val expect = multiset(q(spark, dir).collect())
       val got = multiset(q(interp, dir).collect())
       if (expect == got) None

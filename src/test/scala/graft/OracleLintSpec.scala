@@ -1,9 +1,10 @@
 package graft
 
 import java.sql.DriverManager
+import graft.faces.Faces
 
 /** Oracle-SQL portability lint (round-12 directive 2, after the r11 q72
-  * incident): every `SparkEntry.oracleSql` entry is executed against
+  * incident): every face oracle in `Faces.all` is executed against
   * in-process DuckDB over the sf0.001 tables and each RESULT column's
   * declared type must be engine-portable. DuckDB widens some operations
   * past what Spark (or the driver's pandas-based hasher) can represent —
@@ -42,7 +43,7 @@ class OracleLintSpec extends org.scalatest.funsuite.AnyFunSuite {
         st0.execute(s"CREATE VIEW $t AS SELECT * FROM '$sfDir/$t.parquet'")
       } finally st0.close()
       val bad = scala.collection.mutable.ArrayBuffer[String]()
-      for ((name, sql) <- SparkEntry.oracleSql.toSeq.sortBy(_._1)) {
+      for (face <- Faces.all; name = face.name; sql = face.oracle) {
         val st = conn.createStatement()
         try {
           // LIMIT 0 wrap: full planning + output schema, no row movement

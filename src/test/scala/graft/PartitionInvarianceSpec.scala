@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import graft.faces.Faces
 
 /** Partition-count invariance: the property that makes a result trustworthy
   * at 100 TB. A cluster never controls how many input splits or shuffle
@@ -70,7 +71,7 @@ class PartitionInvarianceSpec extends SparkSpec {
     "qd57_heavy_hitters_by_lang") // per-group MG buffers: exact top-3 + per-lang contract across splits
 
   private def rows(name: String): Seq[String] = {
-    val df: DataFrame = SparkEntry.queries(name)(spark, sfDir)
+    val df: DataFrame = Faces(name).run(spark, sfDir)
     df.collect().toSeq
       .map(_.toSeq.map {
         case null => "NULL"

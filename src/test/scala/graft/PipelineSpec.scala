@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.faces.Faces
 import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions => V}
 
 /** Dedup / similarity / text / multimodal operator tests. */
@@ -267,11 +268,12 @@ class PipelineSpec extends SparkSpec {
       Seq("events", "documents").foreach(t =>
         st.execute(s"CREATE VIEW $t AS SELECT * FROM '$sfDir/$t.parquet'"))
       names.filter { name =>
-        val df = SparkEntry.queries(name)(spark, sfDir)
+        val face = Faces(name)
+        val df = face.run(spark, sfDir)
         val cols = df.columns.toSeq.sorted
         val got = canonical(df.select(cols.map(col): _*).collect().toSeq
           .map(r => cols.indices.map(r.get)))
-        val rs = st.executeQuery(SparkEntry.oracleSql(name))
+        val rs = st.executeQuery(face.oracle)
         val md = rs.getMetaData
         val wantCols = (1 to md.getColumnCount).map(md.getColumnLabel).sorted
         val want = canonical(Iterator.continually(rs).takeWhile(_.next())

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import graft.faces.Faces
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 
@@ -24,7 +25,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("filter + projection push down to the parquet scan (q02)") {
-    val df = SparkEntry.queries("q02_filter_project")(spark, "/root/testdata/sf0.001")
+    val df = Faces("q02_filter_project").run(spark, SparkSpec.Sf0001)
     val scanLine = df.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString("\n")
     assert(scanLine.contains("PushedFilters: ["), s"no pushed filters in:\n$scanLine")
     assert(scanLine.contains("l_quantity") && scanLine.contains("l_discount"))
@@ -33,7 +34,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("3-table join broadcasts the small sides (q03)") {
-    val df = SparkEntry.queries("q03_join_inner")(spark, "/root/testdata/sf0.001")
+    val df = Faces("q03_join_inner").run(spark, SparkSpec.Sf0001)
     val plan = planOf(df)
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join:\n$plan")
   }
@@ -42,7 +43,7 @@ class PlanSpec extends SparkSpec {
     // AQE reports 0 codegen subtrees before stages finalize; plan without it
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val df = SparkEntry.queries("q02_filter_project")(spark, "/root/testdata/sf0.001")
+      val df = Faces("q02_filter_project").run(spark, SparkSpec.Sf0001)
       val codegen = df.queryExecution.explainString(
         org.apache.spark.sql.execution.CodegenMode)
       assert(codegen.contains("WholeStageCodegen subtrees"), codegen.take(500))
@@ -126,7 +127,7 @@ class PlanSpec extends SparkSpec {
     // join key at layout time (one file per bucket) → the join itself must
     // plan WITHOUT any Exchange — re-shuffling bucketed tables would throw
     // the layout investment away
-    val p = planOf(SparkEntry.q70Join(spark, "/root/testdata/sf0.001"))
+    val p = planOf(graft.faces.FrameFaces.q70Join(spark, SparkSpec.Sf0001))
     assert(p.contains("SortMergeJoin"), s"expected a sort-merge join:\n$p")
     assert(!p.contains("Exchange"),
       s"bucketed join must not re-shuffle either side:\n$p")
@@ -192,7 +193,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("groupBy agg does partial (map-side) aggregation before the shuffle (q01)") {
-    val df = SparkEntry.queries("q01_groupby_agg")(spark, "/root/testdata/sf0.001")
+    val df = Faces("q01_groupby_agg").run(spark, SparkSpec.Sf0001)
     val plan = planOf(df)
     // two HashAggregate nodes around one exchange = partial + final
     assert("HashAggregate".r.findAllIn(plan).length >= 2, plan)
@@ -217,7 +218,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q51 flagship plan: 3 exchanges, langid CSE blowup stays fixed") {
-    val df = SparkEntry.queries("q51_pipeline_data_prep")(spark, "/root/testdata/sf0.001")
+    val df = Faces("q51_pipeline_data_prep").run(spark, SparkSpec.Sf0001)
     val p = planOf(df)
     // dedup-window shuffle + partial/final agg shuffle + output sort
     assert("Exchange".r.findAllIn(p).size <= 3, s"unexpected exchanges:\n${p.take(2000)}")

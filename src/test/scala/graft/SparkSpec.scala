@@ -14,10 +14,13 @@ trait SparkSpec extends AnyFunSuite {
   lazy val extSpark: SparkSession = SparkSpec.extensionsSession(spark)
 
   def sf(name: String): org.apache.spark.sql.DataFrame =
-    SparkEntry.t(spark, "/root/testdata/sf0.001", name)
+    SparkEntry.t(spark, SparkSpec.Sf0001, name)
 }
 
 object SparkSpec {
+  /** The sf0.001 test-data directory. */
+  val Sf0001 = "/root/testdata/sf0.001"
+
   private var ext: SparkSession = _
 
   /** One [[GraftExtensions]] session per JVM over `base`'s context. The
