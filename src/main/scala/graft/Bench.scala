@@ -2,6 +2,13 @@ package graft
 
 import graft.faces.Faces
 
+/** The face bench: times every face's bench plan and gates each warm median
+  * against the frozen references in [[BenchRefs]].
+  *
+  * Writes the full artifact to `SPARK_GRAFT_BENCH_OUT` (default
+  * `target/bench_latest.json`) and prints one stdout line, the `bench_gate`
+  * verdict. `SPARK_GRAFT_BENCH_COMPARE=<artifact>` adds a `bench_parity` line
+  * against an earlier run. */
 object Bench {
 
   /** The streaming faces' names. Streaming-runtime drives (micro-batch
@@ -30,122 +37,20 @@ object Bench {
   private[graft] def ratioFor(med: Double, ref: Double): Double =
     med / math.max(ref, 0.1)
 
-  /** Load-suspect triage: cpu_frac collapsed vs the clean reference
-    * (wall >> cpu — the JVM was starved, not busy on a worse plan), or
-    * the row started under visible machine load. */
-  private[graft] def loadSuspectFor(cpuFrac: Double, refCpuFrac: Double,
-                                    load1: Double): Boolean =
-    (refCpuFrac > 0 && cpuFrac < 0.6 * refCpuFrac) || load1 > 4.0
-
-  /** Mechanism verdict for a gate violation (round-15 directive 1): the
-    * r14 probe could say "starved" vs "did more work" but not WHICH work.
-    * Ordered tests over the new counters, each naming the dominant cause a
-    * slow row can have; a reference value of 0 means "unavailable" and that
-    * test degrades to its absolute threshold or is skipped.
-    *
-    *   - ambient-starvation — cpu collapsed vs the clean ref or visible
-    *     machine load (the r12 triage, still first: theft explains any
-    *     counter inflation downstream of it).
-    *   - gc-storm — >=25% of wall in stop-the-world collection and >=3x the
-    *     reference GC fraction: the long-lived-JVM heap-pressure signature.
-    *   - recompute — >=1.5x the reference task count: a lost persist block
-    *     re-running lineage, or an AQE re-plan multiplying stages.
-    *   - spill — per-rep spilled bytes over an absolute 64 MB floor and 4x
-    *     the reference: memory-pressure spill where the clean run had none.
-    *   - cpu-amplified — cpu_frac >=1.5x the reference with none of the
-    *     above: the work grew but no counter claims it (JIT deopt, codegen
-    *     cache miss storm, concurrent-GC cycles outside the STW beans).
-    *   - unknown — wall grew with flat cpu and flat counters.
-    *
-    * Cross-scale runs (r16 directive 1): the work-shape references —
-    * tasks, spill, cpu_frac — describe the query's sf0.1 plan, so at
-    * another data scale their growth is the DESIGN (more data = more
-    * tasks/partitions/CPU), not a lost persist or a plan flip; r15's sf10
-    * artifact labeled qd41h's expected 100x partition growth "recompute".
-    * With `crossScale=true` those three tests are suppressed: a slow row
-    * that is neither starved nor in a GC storm reads "cross-scale" —
-    * expected physics at a different SF, adjudicated by the scaling
-    * tables in BASELINE.md rather than the sf0.1 counters. */
-  private[graft] def mechanismFor(cpuFrac: Double, refCpuFrac: Double,
-                                  load1: Double, gcFrac: Double,
-                                  refGcFrac: Double, tasks: Double,
-                                  refTasks: Double, spillMb: Double,
-                                  refSpillMb: Double,
-                                  crossScale: Boolean = false): String =
-    if (loadSuspectFor(cpuFrac, refCpuFrac, load1)) "ambient-starvation"
-    else if (gcFrac >= 0.25 && (refGcFrac <= 0 || gcFrac >= 3 * refGcFrac)) "gc-storm"
-    else if (crossScale) "cross-scale"
-    else if (refTasks > 0 && tasks >= 1.5 * refTasks) "recompute"
-    else if (spillMb >= math.max(64.0, 4 * refSpillMb)) "spill"
-    else if (refCpuFrac > 0 && cpuFrac >= 1.5 * refCpuFrac) "cpu-amplified"
-    else "unknown"
-
-  /** Full mechanism label for a gated row (ADVICE r16): the work-shape
-    * references (tasks/spill/cpu) describe the query's sf0.1 plan, so on a
-    * cross-scale run they stay suppressed for EVERY row — but a row gated
-    * against its OWN frozen same-SF ref that trips is a REAL violation and
-    * must not arrive pre-labeled "cross-scale" ("expected physics, not a
-    * regression"): with no same-SF mechanism baselines to consult it reads
-    * `own-sf-untriaged`. A row with any aborted rep reads `failed` — its
-    * wall is time-to-abort, not query cost. */
-  private[graft] def gateMechanism(nFailed: Int, cpuFrac: Double,
-                                   refCpuFrac: Double, load1: Double,
-                                   gcFrac: Double, refGcFrac: Double,
-                                   tasks: Double, refTasks: Double,
-                                   spillMb: Double, refSpillMb: Double,
-                                   refScale: Boolean, ownRef: Boolean): String =
-    if (nFailed > 0) "failed"
-    else {
-      val m = mechanismFor(cpuFrac, refCpuFrac, load1, gcFrac, refGcFrac,
-        tasks, refTasks, spillMb, refSpillMb, crossScale = !refScale)
-      if (m == "cross-scale" && ownRef) "own-sf-untriaged" else m
-    }
-
-  /** Run-level quality (r16 directive 5): a dirty run should name itself in
-    * one field instead of needing per-row probe reading. Input rows are
-    * `(cpuFrac, refCpuFrac-or-0, load1)`; returns `(load_suspect_frac,
-    * cpu_collapse_frac, max load1)`.
-    *
-    * Calibration (BASELINE.md round-17): `load_suspect_frac` includes the
-    * load1>4 triage arm, which a back-to-back 32-lane suite keeps tripping
-    * with its OWN 1-minute loadavg — even the quietest runs of record read
-    * 0.38–0.59 there. The DISCRIMINATOR is `cpu_collapse_frac` (rows whose
-    * cpu_frac fell below 0.6x their clean frozen reference — work actually
-    * starved, not merely sampled after a heavy sibling): the two 0.96x
-    * quiet witnesses read 0.007, the 1.15x burst witness 0.020, the r15
-    * 1.04x run 0.034. Read cpu_collapse_frac first; the other two are the
-    * gate's own triage inputs kept for consistency. */
-  private[graft] def runQuality(rows: Seq[(Double, Double, Double)]): (Double, Double, Double) =
-    if (rows.isEmpty) (0.0, 0.0, 0.0)
-    else (rows.count { case (c, rc, l) => loadSuspectFor(c, rc, l) }.toDouble / rows.size,
-      rows.count { case (c, rc, _) => rc > 0 && c < 0.6 * rc }.toDouble / rows.size,
-      rows.map(_._3).max)
-
-  /** Repro-prior adjudication (r18 verdict item 7): a gate violation whose
-    * PRIOR ratio — the same face measured at the unchanged tree, from the
-    * committed BENCH_PRIOR.json run of record — already sat at >= 0.8x of
-    * this run's ratio is the ambient window, not this round's diff: the
-    * slowness reproduces without the code change. The prior must itself
-    * trip the `gate` — a prior inside the gate did NOT reproduce the
-    * slowness (ADVICE r19), however close its ratio. Such a row self-classifies
-    * `ambient-repro` INSTEAD of `unknown`/`ambient-starvation`/
-    * `cpu-amplified` (the three signatures with no counter evidence of new
-    * work). Counter-backed mechanisms (spill / recompute / gc-storm) and
-    * `failed` are never overridden: a standing pre-existing pathology must
-    * keep its name, and an aborted rep is not a timing at all. */
-  private[graft] def adjudicate(mech: String, ratio: Double, gate: Double,
-                                priorRatio: Option[Double]): String =
-    if (Set("unknown", "ambient-starvation", "cpu-amplified")(mech) &&
-        priorRatio.exists(p => p > gate && p >= 0.8 * ratio)) "ambient-repro"
-    else mech
+  /** Share of rows whose cpu_frac fell below 0.6x their clean frozen
+    * reference: the work was starved of CPU (wall >> cpu), not busy on a
+    * worse plan. Input rows are `(cpuFrac, refCpuFrac-or-0)`; a row with no
+    * reference never counts. Quiet runs of record read 0.007–0.04, the
+    * adjudicated-dirty witness 0.14 (BASELINE.md round-17). */
+  private[graft] def cpuCollapseFrac(rows: Seq[(Double, Double)]): Double =
+    if (rows.isEmpty) 0.0
+    else rows.count { case (c, rc) => rc > 0 && c < 0.6 * rc }.toDouble / rows.size
 
   /** Run-of-record class (r17 verdict item 7): the artifact names itself
     * `quiet` or `dirty` so the refreeze protocol is machine-checkable —
-    * BenchRefs/BENCH_PRIOR must only ever be refrozen from a quiet-class
-    * artifact, and a consumer can refuse a dirty one without reading the
-    * per-row probes. Discriminator = `cpu_collapse_frac` (BASELINE.md
-    * calibration: quiet runs of record read 0.007–0.04; the r18 dirty
-    * witness read 0.14) with the threshold at 0.08 — above every observed
+    * BenchRefs must only ever be refrozen from a quiet-class artifact
+    * (`tools/refreeze_refs.py` refuses a dirty one). Discriminator =
+    * `cpu_collapse_frac` with the threshold at 0.08 — above every observed
     * quiet run, below every adjudicated-dirty one. Caveat the field
     * inherits from its input: collapse is measured against the FROZEN
     * per-face cpu_frac refs, so a run right after a plan change that
@@ -156,18 +61,143 @@ object Bench {
     if (cpuCollapseFrac > 0.08) "dirty" else "quiet"
 
   /** Extract a flat {"name":number,...} map under `key` from a bench
-    * artifact's JSON text — the slim regex parser shared by the parity
-    * compare (SPARK_GRAFT_BENCH_COMPARE) and the repro check
-    * (SPARK_GRAFT_BENCH_PRIOR, r15 directive 5). */
+    * artifact's JSON text (the parity compare's baseline reader); a null
+    * value is skipped. */
   private[graft] def parseNumMap(text: String, key: String): Map[String, Double] =
     ("\"" + key + "\":\\{([^}]*)\\}").r.findFirstMatchIn(text).map(_.group(1))
       .toSeq.flatMap(
         "\"([^\"]+)\":([0-9.Ee+-]+)".r.findAllMatchIn(_).map(m =>
           m.group(1) -> m.group(2).toDouble)).toMap
 
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.isEmpty) 0.0
+    else if (s.length % 2 == 1) s(s.length / 2)
+    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
+  }
+
+  // 4-decimal (0.1 ms) values everywhere: full double precision is noise at
+  // this clock's resolution and triples the artifact's size. A face whose
+  // warm reps all failed has a NaN median, emitted as JSON null.
+  private def r4(x: Double): Double = math.rint(x * 1e4) / 1e4
+  private def r2(x: Double): Double = math.rint(x * 1e2) / 1e2
+  private def jnum(x: Double): String = if (x.isNaN) "null" else r4(x).toString
+
+  /** One face's reading: the median of its successful warm reps (NaN when
+    * every warm rep failed), the cold first rep, the relative warm spread
+    * ((max - min) / median), the reps run, the median cpu_frac of the
+    * successful warm reps and the number of failed reps. */
+  private[graft] final case class Row(name: String, med: Double, cold: Double,
+                                      spread: Double, nreps: Int, cpuFrac: Double,
+                                      nFailed: Int)
+
+  /** The scale tag of a fixture directory: "/tmp/graft_sf10/" is "sf10". */
+  private[graft] def sfTagOf(sfDir: String): String = {
+    val dir = sfDir.replaceAll("/+$", "")
+    Seq("sf0.001", "sf0.01", "sf0.1", "sf10", "sf1").find(dir.endsWith).getOrElse("unknown")
+  }
+
+  /** A face judged against a frozen ref; `ownRef` when the ref comes from
+    * the run's own scale's table. */
+  private[graft] final case class Gated(row: Row, ref: Double, refCpu: Double,
+                                        ratio: Double, gate: Double, ownRef: Boolean)
+
+  /** A run's gate verdict. At sf0.1 every trip is a violation. The frozen
+    * refs are sf0.1 medians, so a run at another scale still reports its
+    * ratios, but its trips against them are excursions (expected physics,
+    * not regressions); a scale with its own table in `BenchRefs.sfRefs`
+    * gates the faces it covers for real, and `n_violations` is null on a
+    * scale with no table. Trips are worst-first, so a capped list keeps the
+    * rows that matter. */
+  private[graft] final case class Verdict(sfTag: String,
+                                          ownRefs: Map[String, (Double, Double)],
+                                          nfRunCore: Double, nfRunStreaming: Double,
+                                          gated: Seq[Gated]) {
+    val refScale: Boolean = sfTag == "sf0.1"
+    val trips: Seq[Gated] = gated.filter(g => g.ratio > g.gate).sortBy(-_.ratio)
+    val violations: Seq[Gated] = if (refScale) trips else trips.filter(_.ownRef)
+    val excursions: Seq[Gated] = if (refScale) Seq.empty else trips.filterNot(_.ownRef)
+
+    private def entry(g: Gated): String =
+      "\"" + g.row.name + "\":{\"warm\":" + r4(g.row.med) + ",\"ref\":" + g.ref +
+        ",\"ratio\":" + r2(g.ratio) + ",\"gate\":" + r2(g.gate) +
+        ",\"cpu_frac\":" + r2(g.row.cpuFrac) + ",\"ref_cpu_frac\":" + g.refCpu +
+        (if (refScale) "" else ",\"ref_sf\":\"" + (if (g.ownRef) sfTag else "sf0.1") + "\"") +
+        "}"
+
+    /** The `"gate"` JSON member with at most `cap` entries per list.
+      * Violations and excursions are separate objects, each with its own
+      * truncation count, so a consumer counting violation entries against
+      * `n_violations` never counts an excursion. */
+    def json(cap: Int): String = {
+      def block(label: String, xs: Seq[Gated]): String = {
+        val truncated = if (xs.size > cap) s""","truncated_$label":${xs.size - cap}""" else ""
+        s""""$label":${xs.take(cap).map(entry).mkString("{", ",", "}")}$truncated"""
+      }
+      val refSfLabel = if (refScale || ownRefs.isEmpty) "sf0.1" else sfTag
+      val counts =
+        if (refScale) s""""n_violations":${violations.size}"""
+        else if (ownRefs.nonEmpty)
+          s""""cross_scale":true,"n_own_refs":${gated.count(_.ownRef)},"n_violations":${violations.size},"n_excursions":${excursions.size}"""
+        else s""""cross_scale":true,"n_violations":null,"n_excursions":${excursions.size}"""
+      val blocks = block("violations", violations) +
+        (if (refScale) "" else "," + block("excursions", excursions))
+      s""""gate":{"ref_sf":"$refSfLabel","n_refs":${gated.size},"nf_run":{"core":$nfRunCore,"streaming":$nfRunStreaming},$counts,$blocks}"""
+    }
+  }
+
+  /** Gate `rows` measured at scale `sfTag`: each valid row against its own
+    * scale's frozen ref, or on a cross-scale run against the sf0.1 ref, with
+    * the multiplier of [[gateFor]] over the run's per-section noise floors
+    * (the median relative warm spread of the section's valid rows). Rows
+    * whose warm reps all failed are not gated. The ref tables default to
+    * [[BenchRefs]]. */
+  private[graft] def gate(rows: Seq[Row], sfTag: String,
+                          refs: Map[String, (Double, Double)] = BenchRefs.refs,
+                          sfRefs: Map[String, Map[String, (Double, Double)]] = BenchRefs.sfRefs): Verdict = {
+    val valid = rows.filterNot(_.med.isNaN)
+    val (str, core) = valid.partition(r => streamingNames(r.name))
+    val nfRunCore = r4(median(core.map(_.spread)))
+    val nfRunStr = r4(median(str.map(_.spread)))
+    val refScale = sfTag == "sf0.1"
+    val ownRefs = if (refScale) refs else sfRefs.getOrElse(sfTag, Map.empty)
+    val gated = valid.flatMap { r =>
+      def mk(ref: (Double, Double), own: Boolean) =
+        Gated(r, ref._1, ref._2, ratioFor(r.med, ref._1),
+          gateFor(r.name, nfRunCore, nfRunStr), own)
+      ownRefs.get(r.name).map(mk(_, own = true)).orElse(
+        if (refScale) None else refs.get(r.name).map(mk(_, own = false)))
+    }
+    Verdict(sfTag, ownRefs, nfRunCore, nfRunStr, gated)
+  }
+
+  /** The `bench_parity` line of `rows` against the baseline artifact text
+    * `baseText` (read from `basePath`): each face's warm-median ratio to the
+    * baseline's, and the faces whose ratio exceeds max(1.25, 1 + the noisier
+    * of the two spreads). A spread from 3 or fewer reps is floored at 0.40
+    * on either side: two-sample spreads underestimate warm noise, and a slim
+    * baseline without spreads has unknown noise. A face whose warm reps all
+    * failed has no ratio (null) and violates. */
+  private[graft] def parityJson(rows: Seq[Row], basePath: String, baseText: String): String = {
+    val baseMed = parseNumMap(baseText, "queries")
+    val baseSpread = parseNumMap(baseText, "queries_spread")
+    val baseReps = parseNumMap(baseText, "queries_reps")
+    def floored(spread: Double, nreps: Double): Double =
+      if (nreps <= 3) math.max(spread, 0.40) else spread
+    val ratios = rows.flatMap(r => baseMed.get(r.name).map { b =>
+      val ratio = if (r.med.isNaN) Double.NaN else if (b > 0) r.med / b else 1.0
+      (r.name, ratio, math.max(floored(r.spread, r.nreps.toDouble),
+        floored(baseSpread.getOrElse(r.name, 0.0), baseReps.getOrElse(r.name, 0.0))))
+    })
+    val bad = ratios.filter { case (_, ratio, spread) =>
+      ratio.isNaN || ratio > math.max(1.25, 1.0 + spread) }
+    def obj(xs: Seq[(String, Double, Double)]): String =
+      xs.map { case (name, ratio, _) => "\"" + name + "\":" + jnum(ratio) }.mkString("{", ",", "}")
+    s"""{"metric":"bench_parity","baseline":"$basePath","n_violations":${bad.size},"violations":${obj(bad)},"ratios":${obj(ratios)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // reps >= 5 (round-10 verdict): three identical-source rounds measured
     // the sandbox noise floor at ±20-40% on totals and up to 6x on single
     // queries under reps=2 min-of-reps. The first rep absorbs first-touch
@@ -183,9 +213,7 @@ object Bench {
     // the bench times OPERATOR faces: a face's bench twin where it has one
     // (Face.bench), its correctness plan otherwise
     val selected = Faces.select(only)
-    val spark = Sessions.local(cpus)
-    val sc = spark.sparkContext
-    val counters = MetricsProbe.install(sc)
+    val spark = Sessions.local()
     // one warm-up action so JVM/codegen startup isn't billed to the first query
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     // SPARK_GRAFT_BENCH_NO_CLEAR=1 runs the suite WITHOUT the per-rep
@@ -196,41 +224,15 @@ object Bench {
     // this mode should now track the hygienic numbers; it exists to PROVE
     // that, not as a reporting mode.
     val noClear = sys.env.get("SPARK_GRAFT_BENCH_NO_CLEAR").contains("1")
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.isEmpty) 0.0
-      else if (s.length % 2 == 1) s(s.length / 2)
-      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-    }
-    // ------------------------------------------------------ ambient probe
-    // r12 directive 3: every gate adjudication last round leaned on
-    // after-the-fact triage against local reruns. Record, per rep, the
-    // process-CPU time alongside the wall time, and sample /proc/loadavg
-    // before each query: an ambient burst starves the JVM of CPU, so the
-    // same work shows wall >> cpu (cpu_frac = cpuΔ/wallΔ drops vs the
-    // query's baseline value) while a REAL plan regression keeps cpu_frac
-    // and grows both. r15 directive 1/6 extends the per-rep window with the
-    // MECHANISM counters (MetricsProbe): GC-pause fraction, old-gen
-    // occupancy, and task/shuffle/spill/input deltas, so a violation names
-    // its cause in-artifact instead of reading as bare cpu amplification.
+    // each rep records process-CPU time beside wall time: cpu_frac =
+    // cpu/wall. An ambient burst starves the JVM, so the same work shows
+    // wall >> cpu (cpu_frac collapses vs the face's frozen reference), while
+    // a real plan regression keeps cpu_frac and grows both.
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def load1(): Double =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => osBean.getSystemLoadAverage }
-    case class Rep(wall: Double, cpuFrac: Double, gcFrac: Double,
-                   tasks: Double, shuffleMb: Double, spillMb: Double,
-                   oldGenMb: Double, failed: Boolean)
-    case class R(name: String, med: Double, cold: Double, spread: Double,
-                 nreps: Int, cpuFrac: Double, load1: Double, gcFrac: Double,
-                 tasks: Double, shuffleMb: Double, spillMb: Double,
-                 oldGenMb: Double, nFailed: Int)
-    val load1Start = load1()
+    final case class Rep(wall: Double, cpuFrac: Double, failed: Boolean)
     val results = selected.sortBy(_.name).map { face =>
       val name = face.name
-      val qLoad1 = load1()
       def rep(): Rep = {
         // isolate reps AND queries: operators persist internals (signatures,
         // edge lists, IVF cells) that nothing unpersists once the query's
@@ -246,19 +248,12 @@ object Bench {
           // inflation vs running the same query in isolation)
           System.gc()
         }
-        // drain the async listener bus so the task-counter window is exact
-        org.apache.spark.graft.ListenerBusDrain.drain(sc)
-        val s0 = counters.snap()
-        val gc0 = MetricsProbe.gcMillis()
         val c0 = osBean.getProcessCpuTime
         val t0 = System.nanoTime()
         // noop sink forces full materialization of every output column
-        // (count() would let Catalyst prune the projections being measured)
-        // A failed rep is RECORDED AS FAILED (r16): its wall is the time to
-        // the abort, not the query's cost — before this flag, an sf10
-        // overflow abort sat in 329567f:BENCH_SF10_r16.json looking like a fast
-        // valid reading. Failures surface in the artifact's queries_failed
-        // map and override the row's mechanism verdict.
+        // (count() would let Catalyst prune the projections being measured).
+        // A failed rep is recorded as failed: its wall is the time to the
+        // abort, not the query's cost.
         val ok =
           try { face.benchRun(spark, sfDir).write.mode("overwrite").format("noop").save(); true } catch {
             case e: Throwable =>
@@ -266,13 +261,7 @@ object Bench {
           }
         val wall = (System.nanoTime() - t0) / 1e9
         val cpu = (osBean.getProcessCpuTime - c0) / 1e9
-        val gcSec = (MetricsProbe.gcMillis() - gc0) / 1e3
-        org.apache.spark.graft.ListenerBusDrain.drain(sc)
-        val d = counters.snap() - s0
-        Rep(wall, if (wall > 0) cpu / wall else 0.0,
-          if (wall > 0) gcSec / wall else 0.0, d.tasks.toDouble,
-          d.shuffleBytes / 1e6, d.spilledBytes / 1e6,
-          MetricsProbe.oldGenUsedMb(), failed = !ok)
+        Rep(wall, if (wall > 0) cpu / wall else 0.0, failed = !ok)
       }
       // adaptive reps (round-11 directive 8): sub-300 ms queries stop after
       // 1 cold + 2 warm reps — they gate against max(med, 0.1 s) anyway, so
@@ -284,240 +273,63 @@ object Bench {
         if (reps <= 3 || median(first.tail.map(_.wall)) < 0.3) first
         else first ++ (3 until reps).map(_ => rep())
       val warm = if (times.length > 1) times.tail else times
-      // a failed rep's wall is time-to-abort, not query cost (ADVICE r16):
       // warm stats use only the successful reps; a row whose warm reps ALL
-      // failed gets a NaN median — emitted as JSON null and excluded from
-      // totals, noise floors and the gate — with queries_failed as the flag
+      // failed stays out of totals, noise floors and the gate, with
+      // queries_failed as the flag
       val warmOk = warm.filterNot(_.failed)
       val med = if (warmOk.nonEmpty) median(warmOk.map(_.wall)) else Double.NaN
-      // relative warm spread — the query's own noise-floor estimate from its
-      // repeated identical runs ((max-min)/median over successful warm reps)
       val spread =
         if (warmOk.nonEmpty && med > 0)
           (warmOk.map(_.wall).max - warmOk.map(_.wall).min) / med
         else 0.0
-      R(name, med, times.head.wall, spread, times.length,
-        median(warmOk.map(_.cpuFrac)), qLoad1, median(warmOk.map(_.gcFrac)),
-        median(warmOk.map(_.tasks)), median(warmOk.map(_.shuffleMb)),
-        median(warmOk.map(_.spillMb)), times.map(_.oldGenMb).max,
-        times.count(_.failed))
+      Row(name, med, times.head.wall, spread, times.length,
+        median(warmOk.map(_.cpuFrac)), times.count(_.failed))
     }
-    val load1End = load1()
-    def r4(x: Double): Double = math.rint(x * 1e4) / 1e4
-    def r2(x: Double): Double = math.rint(x * 1e2) / 1e2
-    // 4-decimal (0.1 ms) values everywhere: full double precision is pure
-    // noise at this clock's resolution, and it TRIPLED the artifact line
-    // (17 digits × 3 maps × 131 queries ≈ 20 KB) past whatever the driver's
-    // capture parses — the r09 artifact (9-digit values, ~8 KB) parsed, r10/
-    // r11 (17-digit) did not.
-    // all-reps-failed rows carry a NaN median: emit JSON null there, and
-    // keep such rows out of every aggregate a trend consumer ingests
-    def jnum(x: Double): String = if (x.isNaN) "null" else r4(x).toString
-    def jmap(f: R => Double) =
+    def jmap(f: Row => Double) =
       results.map { r => "\"" + r.name + "\":" + jnum(f(r)) }.mkString("{", ",", "}")
-    def jmap2(f: R => Double) =
+    def jmap2(f: Row => Double) =
       results.map { r => "\"" + r.name + "\":" + r2(f(r)) }.mkString("{", ",", "}")
-    def jmapInt(f: R => Double) =
-      results.map { r => "\"" + r.name + "\":" + f(r).round }.mkString("{", ",", "}")
     val valid = results.filter(r => !r.med.isNaN)
+    // headline: the sum of per-query warm MEDIANS
     val total = r4(valid.map(_.med).sum)
     val coldTotal = r4(results.map(_.cold).sum)
     // suite-level noise floor: median over queries of the per-query relative
     // warm spread — the resolution below which a per-query delta is noise
     val noiseFloor = r4(median(valid.map(_.spread)))
-    // per-section totals + noise floors (r12 directive 8): the streaming
-    // drives and the batch plans are different cost populations
-    def sectionJson(rs: Seq[R]): String = {
+    val verdict = gate(results, sfTagOf(sfDir))
+    // a section's noise floor is the one its faces are gated with
+    def sectionJson(rs: Seq[Row], noiseFloorRel: Double): String = {
       val ok = rs.filter(r => !r.med.isNaN)
-      s"""{"n":${rs.size},"total_warm_median":${r4(ok.map(_.med).sum)},"cold_total":${r4(rs.map(_.cold).sum)},"noise_floor_rel":${r4(median(ok.map(_.spread)))}}"""
+      s"""{"n":${rs.size},"total_warm_median":${r4(ok.map(_.med).sum)},"cold_total":${r4(rs.map(_.cold).sum)},"noise_floor_rel":$noiseFloorRel}"""
     }
     val (strRs, coreRs) = results.partition(r => streamingNames(r.name))
     val sections =
-      s""""sections":{"core":${sectionJson(coreRs)},"streaming":${sectionJson(strRs)}}"""
-    // ------------------------------------------- in-run frozen-ref gate
-    // (r13 directive 1): the artifact of record adjudicates its own
-    // readings — per-section gate vs the embedded BenchRefs table, and
-    // every violating row carries {warm, ref, ratio, cpu_frac, load1,
-    // load_suspect} plus the r15 mechanism counters {gc_frac, tasks,
-    // spill_mb, mechanism} into the stdout lines, so a burst reading is
-    // machine-triageable inside BENCH_rN.json itself, with no appeal to
-    // local reruns.
-    val nfRunCore = r4(median(coreRs.filter(r => !r.med.isNaN).map(_.spread)))
-    val nfRunStr = r4(median(strRs.filter(r => !r.med.isNaN).map(_.spread)))
-    // cross-scale guard (ADVICE r14): the frozen refs are sf0.1 medians. A
-    // run at another SF still reports its ratios — the scaling signal — but
-    // its excursions are expected physics, not regressions, so n_violations
-    // is nulled and the count moves to n_excursions under cross_scale:true.
-    // r16 directive 4 refinement: an SF with its OWN frozen table
-    // (BenchRefs.sfRefs — sf1 today) gates the covered faces for real
-    // (n_violations over that subset) and annotates only the uncovered
-    // faces as sf0.1-relative excursions.
-    val sfNorm = sfDir.replaceAll("/+$", "")
-    val sfTag = Seq("sf0.001", "sf0.01", "sf0.1", "sf10", "sf1")
-      .find(sfNorm.endsWith).getOrElse("unknown")
-    val refScale = sfTag == "sf0.1"
-    val ownRefs: Map[String, (Double, Double)] =
-      if (refScale) BenchRefs.refs
-      else BenchRefs.sfRefs.getOrElse(sfTag, Map.empty)
-    // repro machine-check (r15 directive 5): BASELINE.md's adjudication rule
-    // — a violation is REAL only if it is not load-suspect AND reproduces in
-    // a second same-code artifact — gains its in-artifact prong: point
-    // SPARK_GRAFT_BENCH_PRIOR at a prior run's JSON and every violation
-    // carries {prior_warm, prior_ratio}; a prior ratio inside the gate says
-    // "did not reproduce" without any hand comparison. When the env var is
-    // unset, the committed run-of-record snapshot BENCH_PRIOR.json (repo
-    // root, refreshed each round) is used if present — so DRIVER runs,
-    // which control their own environment, still carry the repro prong.
-    val priorMed: Map[String, Double] = {
-      // the committed BENCH_PRIOR.json snapshot is an sf0.1 run — its
-      // medians are meaningless repro priors for a cross-scale run, so the
-      // implicit fallback is sf0.1-only (an explicit env path is honored
-      // at any SF: the caller knows what it is comparing against)
-      val path = sys.env.get("SPARK_GRAFT_BENCH_PRIOR")
-        .orElse(Option(java.nio.file.Paths.get("BENCH_PRIOR.json"))
-          .filter(_ => refScale)
-          .filter(java.nio.file.Files.isReadable(_)).map(_.toString))
-      path.map { p =>
-        try parseNumMap(new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(p)), "UTF-8"), "queries")
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] prior artifact $p unreadable: ${e.getMessage}")
-            Map.empty[String, Double]
-        }
-      }.getOrElse(Map.empty)
-    }
-    case class G(r: R, ref: Double, refCpu: Double, ratio: Double, gate: Double,
-                 ownRef: Boolean) {
-      private val mech = BenchRefs.mechRefs.getOrElse(r.name, (0.0, 0.0, 0.0))
-      private val priorRatio: Option[Double] =
-        priorMed.get(r.name).map(p => ratioFor(p, ref))
-      def loadSuspect: Boolean = loadSuspectFor(r.cpuFrac, refCpu, r.load1)
-      def mechanism: String =
-        adjudicate(
-          gateMechanism(r.nFailed, r.cpuFrac, refCpu, r.load1,
-            r.gcFrac, mech._2, r.tasks, mech._1, r.spillMb, mech._3,
-            refScale, ownRef),
-          ratio, gate, priorRatio)
-      def refTasks: Double = mech._1
-      // which frozen table this row's ref came from — only interesting on
-      // a cross-scale run where gated (own-SF) and excursion (sf0.1) rows
-      // can share one list
-      private def refSfJson: String =
-        if (refScale) ""
-        else ",\"ref_sf\":\"" + (if (ownRef) sfTag else "sf0.1") + "\""
-      /** Full violation entry (file artifact + summary line). */
-      def json: String =
-        "\"" + r.name + "\":{\"warm\":" + r4(r.med) + ",\"ref\":" + ref +
-          ",\"ratio\":" + r2(ratio) + ",\"gate\":" + r2(gate) +
-          ",\"cpu_frac\":" + r2(r.cpuFrac) + ",\"ref_cpu_frac\":" + refCpu +
-          ",\"load1\":" + r2(r.load1) + ",\"load_suspect\":" + loadSuspect +
-          ",\"gc_frac\":" + r2(r.gcFrac) + ",\"tasks\":" + r.tasks.round +
-          ",\"ref_tasks\":" + mech._1.round + ",\"spill_mb\":" + r2(r.spillMb) +
-          ",\"shuffle_mb\":" + r2(r.shuffleMb) + ",\"oldgen_mb\":" + r2(r.oldGenMb) +
-          ",\"mechanism\":\"" + mechanism + "\"" + refSfJson + reproJson + "}"
-      /** Compact violation entry (final truncation-proof gate line). */
-      def jsonCompact: String =
-        "\"" + r.name + "\":{\"warm\":" + r4(r.med) + ",\"ref\":" + ref +
-          ",\"ratio\":" + r2(ratio) + ",\"cpu_frac\":" + r2(r.cpuFrac) +
-          ",\"load1\":" + r2(r.load1) + ",\"gc_frac\":" + r2(r.gcFrac) +
-          ",\"tasks\":" + r.tasks.round + ",\"ref_tasks\":" + mech._1.round +
-          ",\"spill_mb\":" + r2(r.spillMb) +
-          ",\"mech\":\"" + mechanism + "\"" + refSfJson + reproJson + "}"
-      private def reproJson: String =
-        priorMed.get(r.name).map(p =>
-          ",\"repro\":{\"prior_warm\":" + r4(p) +
-            ",\"prior_ratio\":" + r2(ratioFor(p, ref)) + "}").getOrElse("")
-      def isAmbientRepro: Boolean = mechanism == "ambient-repro"
-    }
-    val gated = valid.flatMap { r =>
-      def mk(ref: Double, refCpu: Double, own: Boolean) =
-        G(r, ref, refCpu, ratioFor(r.med, ref),
-          gateFor(r.name, nfRunCore, nfRunStr), own)
-      ownRefs.get(r.name).map { case (ref, refCpu) => mk(ref, refCpu, own = true) }
-        .orElse(
-          if (refScale) None
-          else BenchRefs.refs.get(r.name).map { case (ref, refCpu) =>
-            mk(ref, refCpu, own = false)
-          })
-    }
-    // worst-first so a capped list keeps the rows that matter; on a
-    // cross-scale run the own-SF-gated trips are REAL violations, the
-    // sf0.1-relative trips are annotate-only excursions (expected physics)
-    val trips = gated.filter(g => g.ratio > g.gate).sortBy(-_.ratio)
-    val violations = if (refScale) trips else trips.filter(_.ownRef)
-    val excursions = if (refScale) Seq.empty else trips.filterNot(_.ownRef)
-    // real (own-SF) violations and annotate-only excursions are SEPARATE
-    // JSON objects with per-category truncation counts (ADVICE r16): a
-    // consumer counting "violations" entries against n_violations must
-    // never be off by the excursion rows sharing the list
-    def gateJson(cap: Int, compact: Boolean): String = {
-      def block(label: String, xs: Seq[G]): String = {
-        val body = xs.take(cap).map(g => if (compact) g.jsonCompact else g.json)
-          .mkString("{", ",", "}")
-        val truncated =
-          if (xs.size > cap) s""","truncated_$label":${xs.size - cap}""" else ""
-        s""""$label":$body$truncated"""
-      }
-      val refSfLabel = if (refScale || ownRefs.isEmpty) "sf0.1" else sfTag
-      val nviol =
-        if (refScale)
-          s""""n_violations":${violations.size},"n_ambient_repro":${violations.count(_.isAmbientRepro)}"""
-        else if (ownRefs.nonEmpty)
-          s""""cross_scale":true,"n_own_refs":${gated.count(_.ownRef)},"n_violations":${violations.size},"n_excursions":${excursions.size}"""
-        else s""""cross_scale":true,"n_violations":null,"n_excursions":${excursions.size}"""
-      val blocks = block("violations", violations) +
-        (if (refScale) "" else "," + block("excursions", excursions))
-      s""""gate":{"ref_sf":"$refSfLabel","n_refs":${gated.size},"nf_run":{"core":$nfRunCore,"streaming":$nfRunStr},$nviol,$blocks}"""
-    }
-    // headline metric named for its semantics (sum of per-query warm
-    // MEDIANS) so trend consumers can't silently mix it with the
-    // schema_version<=2 "total_warm_min"; a filtered run is marked in the
-    // artifact so a partial total can never be mistaken for the suite total
+      s""""sections":{"core":${sectionJson(coreRs, verdict.nfRunCore)},"streaming":${sectionJson(strRs, verdict.nfRunStreaming)}}"""
+    // a filtered run is marked in the artifact so a partial total can never
+    // be mistaken for the suite total
     val onlyField =
       (if (noClear) "\"no_clear\":true," else "") +
         (if (only.isEmpty) ""
          else only.toSeq.sorted.map("\"" + _ + "\"").mkString("\"only\":[", ",", "],"))
-    // failed-rep ledger (r16): present in EVERY artifact shape whenever any
-    // rep aborted — a row whose reps failed must never read as a valid
-    // timing (it also reads mechanism:"failed" if it trips the gate)
+    // failed-rep ledger: present in both shapes whenever any rep aborted
     val failedField = {
       val f = results.filter(_.nFailed > 0)
       if (f.isEmpty) ""
       else f.map(r => "\"" + r.name + "\":" + r.nFailed)
         .mkString("\"queries_failed\":{", ",", "},")
     }
-    // run-level quality verdict (r16 directive 5): the r16 driver run was
-    // ambient-loaded end-to-end and only per-row probe reading showed it —
-    // now a dirty run names itself in one field present in every shape.
-    // VALID rows only (ADVICE r17): an all-reps-failed row carries
-    // median(empty)=0.0 probe values, so feeding it here read as cpuFrac=0
-    // "collapse" — one expected-failure face in a 10-face cross-scale run
-    // added 0.10 to cpu_collapse_frac, the BASELINE.md discriminator
-    // (calibrated 0.007–0.034). Failed rows already sit outside the gate,
-    // totals and noise floors; the quality verdict now matches.
-    val (suspectFrac, collapseFrac, maxLoad1) = runQuality(valid.map { r =>
-      val refCpu = ownRefs.get(r.name).orElse(BenchRefs.refs.get(r.name))
-        .map(_._2).getOrElse(0.0)
-      (r.cpuFrac, refCpu, r.load1)
+    // run-level quality over VALID rows only: an all-reps-failed row has no
+    // cpu_frac, and reading it as 0 would count as a collapse
+    val collapseFrac = cpuCollapseFrac(valid.map { r =>
+      (r.cpuFrac, verdict.ownRefs.get(r.name).orElse(BenchRefs.refs.get(r.name))
+        .map(_._2).getOrElse(0.0))
     })
     val probeFields =
-      s""""load1_start":${r2(load1Start)},"load1_end":${r2(load1End)},"cpu_frac_med":${r2(median(valid.map(_.cpuFrac)))},"quality":{"load_suspect_frac":${r4(suspectFrac)},"cpu_collapse_frac":${r4(collapseFrac)},"max_load1":${r2(maxLoad1)},"run_class":"${runClass(collapseFrac)}"}"""
-    // Three artifact shapes (round-11 directive 3 + r15 directive 2, the
-    // fourth attempt at a non-null driver-side parse):
-    //   - the FILE artifact keeps everything: med + cold + spread + probe
-    //     maps, the r15 mechanism maps (gc_frac / tasks / shuffle / spill /
-    //     oldgen — directive 6), and the UNCAPPED gate block;
-    //   - the PRIMARY STDOUT line carries the headline fields, the per-query
-    //     warm-median map, the cpu_frac and gc_frac probe maps (2 decimals)
-    //     and the sections — the size class the r09 capture parsed;
-    //   - the mid summary keeps totals + slowest maps + a 10-capped gate;
-    //   - the FINAL stdout line is the minimal bench_gate verdict (4-capped
-    //     violations, compact entries, < ~1.5 KB even in a burst run): r14's
-    //     tail window clipped mid-violations-block, so the verdict now sits
-    //     entirely inside any plausible tail capture.
-    val full = s"""{"metric":"total_warm_median","value":$total,"unit":"sec","schema_version":6,$onlyField$failedField"queries":${jmap(_.med)},"queries_cold":${jmap(_.cold)},"queries_spread":${jmap(_.spread)},"queries_reps":${results.map(r => "\"" + r.name + "\":" + r.nreps).mkString("{", ",", "}")},"queries_cpu_frac":${jmap2(_.cpuFrac)},"queries_load1":${jmap2(_.load1)},"queries_gc_frac":${jmap2(_.gcFrac)},"queries_tasks":${jmapInt(_.tasks)},"queries_shuffle_mb":${jmap2(_.shuffleMb)},"queries_spill_mb":${jmap2(_.spillMb)},"queries_oldgen_mb":${jmapInt(_.oldGenMb)},$sections,${gateJson(Int.MaxValue, compact = false)},"cold_total":$coldTotal,"noise_floor_rel":$noiseFloor,$probeFields,"reps":$reps,"adaptive_reps":${reps > 3},"sf":"$sfDir"}"""
-    val json = s"""{"metric":"total_warm_median","value":$total,"unit":"sec","schema_version":6,$onlyField$failedField"queries":${jmap(_.med)},"queries_cpu_frac":${jmap2(_.cpuFrac)},"queries_gc_frac":${jmap2(_.gcFrac)},$sections,${gateJson(10, compact = false)},"cold_total":$coldTotal,"noise_floor_rel":$noiseFloor,$probeFields,"reps":$reps,"adaptive_reps":${reps > 3},"sf":"$sfDir"}"""
+      s""""cpu_frac_med":${r2(median(valid.map(_.cpuFrac)))},"quality":{"cpu_collapse_frac":${r4(collapseFrac)},"run_class":"${runClass(collapseFrac)}"}"""
+    // the file artifact keeps every per-query map and the uncapped gate
+    // lists; the one stdout line is the bench_gate verdict, capped at 4
+    // entries per list so it stays short enough for a tail-window capture
+    val full = s"""{"metric":"total_warm_median","value":$total,"unit":"sec","schema_version":6,$onlyField$failedField"queries":${jmap(_.med)},"queries_cold":${jmap(_.cold)},"queries_spread":${jmap(_.spread)},"queries_reps":${results.map(r => "\"" + r.name + "\":" + r.nreps).mkString("{", ",", "}")},"queries_cpu_frac":${jmap2(_.cpuFrac)},$sections,${verdict.json(Int.MaxValue)},"cold_total":$coldTotal,"noise_floor_rel":$noiseFloor,$probeFields,"reps":$reps,"adaptive_reps":${reps > 3},"sf":"$sfDir"}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_latest.json")
     try {
       val p = java.nio.file.Paths.get(outPath)
@@ -527,85 +339,23 @@ object Bench {
     } catch {
       case e: Throwable => System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
-    // SPARK_GRAFT_BENCH_COMPARE=<baseline bench json>: per-query parity
-    // contract (round-10 directive 6) — after a hygienic run wrote its
-    // artifact, a no-clear run compared against it must show per-query
-    // inflation within max(1.25, 1 + the query's own measured warm
-    // spread). Violations print as one machine-readable line; the run
-    // itself still reports normally.
+    // per-query parity against an earlier run: a no-clear run compared with
+    // a hygienic run's artifact must stay inside the parity bound
     sys.env.get("SPARK_GRAFT_BENCH_COMPARE").foreach { basePath =>
       try {
         val text = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(basePath)), "UTF-8")
-        val baseMed = parseNumMap(text, "queries")
-        val baseSpread = parseNumMap(text, "queries_spread")
-        val baseReps = parseNumMap(text, "queries_reps")
-        val baseCpuFrac = parseNumMap(text, "queries_cpu_frac")
-        // a slim (stdout-captured) baseline has no spread/reps maps; its
-        // noise is then UNKNOWN, so the 0.40 adaptive floor must apply on
-        // the baseline side too (ADVICE r12) — silently defaulting spread
-        // to 0.0 with nreps=MaxValue removed the baseline-noise cushion
-        if (baseSpread.isEmpty || baseReps.isEmpty)
+        if (parseNumMap(text, "queries_spread").isEmpty || parseNumMap(text, "queries_reps").isEmpty)
           System.err.println(s"[bench] WARNING: compare baseline $basePath lacks " +
             "queries_spread/queries_reps (slim artifact?) — applying the 0.40 " +
             "noise floor on the baseline side")
-        // 2-sample spreads (adaptive early-stop) systematically
-        // underestimate true warm noise — floor them at 0.40 on BOTH sides
-        def floored(spread: Double, nreps: Double): Double =
-          if (nreps <= 3) math.max(spread, 0.40) else spread
-        val ratios = results.flatMap(r => baseMed.get(r.name).map { b =>
-          // pair the ratio with the NOISIER of the two windows it spans
-          // (the frozen-gate rule): the run's own spread AND the baseline's
-          // recorded spread both bound what a real regression must exceed
-          (r, if (b > 0) r.med / b else 1.0,
-            math.max(floored(r.spread, r.nreps.toDouble),
-              floored(baseSpread.getOrElse(r.name, 0.0),
-                baseReps.getOrElse(r.name, 0.0))))
-        })
-        val bad = ratios.filter { case (_, ratio, spread) =>
-          ratio > math.max(1.25, 1.0 + spread) }
-        // load-suspect auto-annotation (r12 directive 3): a violation whose
-        // cpu_frac collapsed vs the baseline's recorded value (wall >> cpu:
-        // the JVM was starved, not busy on a worse plan), or whose query
-        // started under visible machine load, is flagged so the gate report
-        // separates ambient bursts from real regressions machine-readably
-        def loadSuspect(r: R): Boolean =
-          loadSuspectFor(r.cpuFrac, baseCpuFrac.getOrElse(r.name, 0.0), r.load1)
-        val rj = ratios.map { case (r, ratio, _) => "\"" + r.name + "\":" + r4(ratio) }
-          .mkString("{", ",", "}")
-        val bj = bad.map { case (r, ratio, _) => "\"" + r.name + "\":" + r4(ratio) }
-          .mkString("{", ",", "}")
-        val sj = bad.map { case (r, _, _) => "\"" + r.name + "\":" + loadSuspect(r) }
-          .mkString("{", ",", "}")
-        println(s"""{"metric":"bench_parity","baseline":"$basePath","n_violations":${bad.size},"violations":$bj,"violations_load_suspect":$sj,"ratios":$rj}""")
+        println(parityJson(results, basePath, text))
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] parity compare vs $basePath failed: ${e.getMessage}")
       }
     }
-    val slowRs = valid.sortBy(-_.med).take(25)
-    val slowest = slowRs
-      .map(r => "\"" + r.name + "\":" + r4(r.med)).mkString("{", ",", "}")
-    // per-query probe pairs [cpu_frac, load1, gc_frac] for the 25 slowest
-    // rows — with the gate block this puts every reading that MATTERS, plus
-    // its ambient evidence, inside the stdout capture
-    val slowProbe = slowRs
-      .map(r => "\"" + r.name + "\":[" + r2(r.cpuFrac) + "," + r2(r.load1) +
-        "," + r2(r.gcFrac) + "]")
-      .mkString("{", ",", "}")
-    val summary = s"""{"metric":"total_warm_median_summary","value":$total,"unit":"sec","schema_version":6,$onlyField$failedField"n_queries":${results.size},$sections,${gateJson(10, compact = false)},"cold_total":$coldTotal,"noise_floor_rel":$noiseFloor,$probeFields,"reps":$reps,"sf":"$sfDir","slowest_warm":$slowest,"slowest_probe":$slowProbe}"""
-    // FINAL line = the gate verdict (r15 directive 2): survives a pure
-    // tail-window capture. Carries the headline total too so a naive
-    // last-line parser still reads a seconds value. r18 verdict item 1: the
-    // driver's PERF comparison parses ONLY this final line, and two rounds
-    // ran with empty per_query because the map lived in the earlier, longer
-    // stdout lines — the per-query warm-median map now rides here too
-    // (4-decimal values keep the line in the ~7 KB class the r09 capture
-    // demonstrably parsed; the verbose probe maps stay on the earlier lines).
-    val gateLine = s"""{"metric":"bench_gate","value":$total,"unit":"sec","schema_version":6,$onlyField$failedField"n_queries":${results.size},"queries":${jmap(_.med)},${gateJson(4, compact = true)},"noise_floor_rel":$noiseFloor,$probeFields,"sf":"$sfDir"}"""
-    println(json)
-    println(summary)
-    println(gateLine)
+    println(s"""{"metric":"bench_gate","value":$total,"unit":"sec","schema_version":6,$onlyField$failedField"n_queries":${results.size},"queries":${jmap(_.med)},${verdict.json(4)},"noise_floor_rel":$noiseFloor,$probeFields,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

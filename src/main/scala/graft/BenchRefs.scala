@@ -1,14 +1,12 @@
 package graft
 
-/** Frozen per-query regression references, embedded so the bench ARTIFACT
-  * adjudicates itself (round-13 directive 1: every prior round's gate
-  * violations had to be triaged against local reruns because the driver
-  * artifact carried no per-query probe data past stdout truncation).
+/** Frozen per-query regression references, embedded so every bench
+  * artifact carries its own gate verdict.
   *
   * Source of values: BASELINE.md's round-12 frozen gate table plus the
   * r12/r13/r14 addendum references (each the median of probe-clean runs);
   * `refCpuFrac` is the query's process-CPU fraction in the corresponding
-  * clean run of record — the load-suspect discriminator: an ambient burst
+  * clean run of record — the cpu-collapse discriminator: an ambient burst
   * starves the JVM (wall >> cpu, cpu_frac collapses vs this reference)
   * while a REAL plan regression keeps cpu_frac and grows both.
   *
@@ -132,168 +130,6 @@ object BenchRefs {
       "qd53_leakage_safe_split" -> ((10.22, 19.0)),
       "qd55_heavy_hitters" -> ((0.77, 14.6)),
       "qd57_heavy_hitters_by_lang" -> ((0.78, 15.1))))
-
-  /** query -> (reference warm-rep task count, reference gc_frac, reference
-    * spill MB) — the r15 mechanism-probe baselines, frozen from the
-    * round-15 clean local run of record (BASELINE.md round-15 note). Task
-    * counts at a fixed SF and shuffle-partition count are near-deterministic
-    * (AQE coalescing wobbles a few percent), so a violating row whose task
-    * count reads >=1.5x this reference is a lineage recompute or plan flip,
-    * not noise; gc_frac here is the healthy STW fraction so a GC storm is
-    * judged relative to the query's own clean profile. An absent entry
-    * degrades the mechanism verdict gracefully (those tests skip). */
-  val mechRefs: Map[String, (Double, Double, Double)] = Map(
-    "q01_groupby_agg" -> ((7.0, 0.05, 0.0)),
-    "q02_filter_project" -> ((9.0, 0.03, 0.0)),
-    "q03_join_inner" -> ((13.0, 0.02, 0.0)),
-    "q04_join_left" -> ((7.0, 0.04, 0.0)),
-    "q05_join_semi" -> ((6.0, 0.04, 0.0)),
-    "q06_join_anti" -> ((6.0, 0.03, 0.0)),
-    "q07_join_cross" -> ((6.0, 0.02, 0.0)),
-    "q08_sort_limit" -> ((2.0, 0.05, 0.0)),
-    "q09_distinct" -> ((7.0, 0.08, 0.0)),
-    "q10_window_over" -> ((9.0, 0.04, 0.0)),
-    "q11_case_cast_math" -> ((4.0, 0.11, 0.0)),
-    "q12_str_funcs" -> ((4.0, 0.02, 0.0)),
-    "q13_dt_funcs" -> ((4.0, 0.03, 0.0)),
-    "q14_split_explode" -> ((5.0, 0.02, 0.0)),
-    "q15_concat_diagonal" -> ((7.0, 0.03, 0.0)),
-    "q16_unpivot" -> ((4.0, 0.05, 0.0)),
-    "q17_pivot" -> ((14.0, 0.03, 0.0)),
-    "q18_fill_null" -> ((7.0, 0.0, 0.0)),
-    "q19_quantile" -> ((7.0, 0.0, 0.0)),
-    "q20_shift_diff" -> ((8.0, 0.03, 0.0)),
-    "q21_asof_backward" -> ((6.0, 0.02, 0.0)),
-    "q22_asof_tolerance" -> ((6.0, 0.03, 0.0)),
-    "q23_asof_forward" -> ((6.0, 0.03, 0.0)),
-    "q24_asof_nearest" -> ((6.0, 0.02, 0.0)),
-    "q25_group_by_dynamic" -> ((5.0, 0.02, 0.0)),
-    "q26_rolling_rows" -> ((13.0, 0.03, 0.0)),
-    "q27_rolling_time" -> ((7.0, 0.04, 0.0)),
-    "q28_fill_directional" -> ((8.0, 0.02, 0.0)),
-    "q29_udf_map" -> ((4.0, 0.04, 0.0)),
-    "q30_str_extra" -> ((4.0, 0.03, 0.0)),
-    "q31_dt_extra" -> ((4.0, 0.03, 0.0)),
-    "q32_list_ops" -> ((4.0, 0.05, 0.0)),
-    "q33_struct_ops" -> ((4.0, 0.05, 0.0)),
-    "q34_concat_horizontal" -> ((10.0, 0.02, 0.0)),
-    "q35_gbd_boundaries" -> ((5.0, 0.03, 0.0)),
-    "q36_sample" -> ((4.0, 0.02, 0.0)),
-    "q37_quantile_modes" -> ((7.0, 0.03, 0.0)),
-    "q38_selectors" -> ((4.0, 0.05, 0.0)),
-    "q39_describe_stats" -> ((3.0, 0.01, 0.0)),
-    "q40_try_cast" -> ((4.0, 0.02, 0.0)),
-    "q41_asof_unkeyed" -> ((109.0, 0.03, 0.0)),
-    "q42_fill_global" -> ((103.0, 0.03, 0.0)),
-    "q43_calendar_month" -> ((5.0, 0.02, 0.0)),
-    "q44_calendar_offset" -> ((7.0, 0.02, 0.0)),
-    "q45_rolling_global_rows" -> ((171.0, 0.03, 0.0)),
-    "q46_rolling_global_time" -> ((275.0, 0.06, 0.0)),
-    "q47_jdbc_roundtrip" -> ((20.0, 0.0, 0.0)),
-    "q48_pipeline_asof_pivot" -> ((9.0, 0.01, 0.0)),
-    "q49_pipeline_dedup_keeplist" -> ((116.0, 0.02, 0.0)),
-    "q50_categorical" -> ((9.0, 0.02, 0.0)),
-    "q51_pipeline_data_prep" -> ((6.0, 0.02, 0.0)),
-    "q52_pipeline_corpus_build" -> ((9.0, 0.02, 0.0)),
-    "q53_pipeline_clean_pack" -> ((16.0, 0.02, 0.0)),
-    "q54_pipeline_crawl" -> ((38.0, 0.04, 0.0)),
-    "q55_strftime_iso" -> ((5.0, 0.04, 0.0)),
-    "q56_csv_roundtrip" -> ((11.0, 0.02, 0.0)),
-    "q57_ipc_roundtrip" -> ((13.0, 0.0, 0.0)),
-    "q58_ndjson_roundtrip" -> ((6.0, 0.0, 0.0)),
-    "q59_sql_context" -> ((7.0, 0.03, 0.0)),
-    "q60_series_ops" -> ((4.0, 0.08, 0.0)),
-    "q61_stream_window" -> ((68.0, 0.02, 0.0)),
-    "q62_json_multiline" -> ((8.0, 0.07, 0.0)),
-    "q63_arrow_handoff" -> ((69.0, 0.04, 0.0)),
-    "q64_anonymous_scan" -> ((7.0, 0.06, 0.0)),
-    "q65_async_read" -> ((5.0, 0.09, 0.0)),
-    "q66_from_records" -> ((67.0, 0.05, 0.0)),
-    "q67_export_batches" -> ((13.0, 0.08, 0.0)),
-    "q68_drop_rename_nulls" -> ((12.0, 0.02, 0.0)),
-    "q69_list_sort" -> ((4.0, 0.0, 0.0)),
-    "q70_bucketed_join" -> ((13.0, 0.09, 0.0)),
-    "q71_orc_roundtrip" -> ((5.0, 0.08, 0.0)),
-    "q72_sessionize" -> ((5.0, 0.03, 0.0)),
-    "q73_sessionize_stream" -> ((73.0, 0.01, 0.0)),
-    "q74_stream_dedup" -> ((71.0, 0.02, 0.0)),
-    "q75_asof_stream" -> ((75.0, 0.02, 0.0)),
-    "q76_asof_stream_fwd" -> ((75.0, 0.02, 0.0)),
-    "q77_interval_join_stream" -> ((74.0, 0.02, 0.0)),
-    "q77s_interval_join_sized" -> ((14.0, 0.01, 0.0)),
-    "q78_interval_join_outer" -> ((76.0, 0.01, 0.0)),
-    "q79_interval_join_full" -> ((76.0, 0.01, 0.0)),
-    "q80_zorder_curve" -> ((5.0, 0.0, 0.0)),
-    "q81_layout_stats" -> ((47.0, 0.01, 0.0)),
-    "q82_interval_join_right" -> ((76.0, 0.02, 0.0)),
-    "q83_interval_join_full_sink" -> ((16.0, 0.02, 0.0)),
-    "qd01_dedup_exact" -> ((5.0, 0.11, 0.0)),
-    "qd02_fingerprint" -> ((6.0, 0.06, 0.0)),
-    "qd03_ngram_jaccard" -> ((8.0, 0.02, 0.0)),
-    "qd04_minhash_pairs" -> ((5.0, 0.03, 0.0)),
-    "qd05_simhash_pairs" -> ((4.0, 0.02, 0.0)),
-    "qd06_langid" -> ((4.0, 0.0, 0.0)),
-    "qd07_token_stats" -> ((4.0, 0.03, 0.0)),
-    "qd08_quality" -> ((4.0, 0.02, 0.0)),
-    "qd09_embedding_dedup" -> ((5.0, 0.02, 0.0)),
-    "qd10_dedup_components" -> ((113.0, 0.02, 0.0)),
-    "qd11_repetition" -> ((4.0, 0.02, 0.0)),
-    "qd12_url_dedup" -> ((5.0, 0.03, 0.0)),
-    "qd13_pii_redact" -> ((4.0, 0.01, 0.0)),
-    "qd14_vocab" -> ((5.0, 0.04, 0.0)),
-    "qd15_token_budget" -> ((5.0, 0.04, 0.0)),
-    "qd16_jaccard_prefix" -> ((18.0, 0.02, 0.0)),
-    "qd17_hash_split" -> ((4.0, 0.05, 0.0)),
-    "qd18_decontaminate" -> ((8.0, 0.02, 0.0)),
-    "qd19_chunk" -> ((4.0, 0.05, 0.0)),
-    "qd20_pack" -> ((5.0, 0.03, 0.0)),
-    "qd21_decontaminate_neardup" -> ((9.0, 0.03, 0.0)),
-    "qd22_mixture" -> ((7.0, 0.03, 0.0)),
-    "qd23_pack_global" -> ((104.0, 0.05, 0.0)),
-    "qd24_shuffle" -> ((103.0, 0.05, 0.0)),
-    "qd25_rarity" -> ((7.0, 0.02, 0.0)),
-    "qd26_shuffle_pack" -> ((103.0, 0.04, 0.0)),
-    "qd27_upsample" -> ((4.0, 0.11, 0.0)),
-    "qd28_span_dedup" -> ((8.0, 0.02, 0.0)),
-    "qd29_semantic_dedup" -> ((18.0, 0.03, 0.0)),
-    "qd30_compress_ratio" -> ((4.0, 0.0, 0.0)),
-    "qd31_line_dedup" -> ((8.0, 0.03, 0.0)),
-    "qd32_bpe_tokenize" -> ((6.0, 0.02, 0.0)),
-    "qd33_salted_pairs" -> ((6.0, 0.02, 0.0)),
-    "qd34_decontaminate_bloom" -> ((11.0, 0.04, 0.0)),
-    "qd35_snapshot_dedup" -> ((11.0, 0.06, 0.0)),
-    "qd36_dsir_weights" -> ((20.0, 0.08, 0.0)),
-    "qd37_dsir_select" -> ((18.0, 0.06, 0.0)),
-    "qd38_clean_text" -> ((4.0, 0.05, 0.0)),
-    "qd39_perplexity" -> ((13.0, 0.03, 0.0)),
-    "qd40_c4_filter" -> ((66.0, 0.08, 0.0)),
-    "qd41_pipeline_quality_select" -> ((500.0, 0.03, 0.0)),
-    "qd41h_pipeline_quality_select_hashed" -> ((55.0, 0.04, 0.0)),
-    "qd42_temperature_mixture" -> ((9.0, 0.02, 0.0)),
-    "qd43_html_extract" -> ((4.0, 0.11, 0.0)),
-    "qd44_gopher_quality" -> ((66.0, 0.12, 0.0)),
-    "qd45_sentence_dedup" -> ((8.0, 0.11, 0.0)),
-    "qd46_dup_paragraphs" -> ((66.0, 0.15, 0.0)),
-    "qd47_pack_spans" -> ((104.0, 0.04, 0.0)),
-    "qd48_blocklist" -> ((4.0, 0.14, 0.0)),
-    "qd49_bpe_encode_fixed" -> ((4.0, 0.05, 0.0)),
-    "qd50_bm25" -> ((6.0, 0.04, 0.0)),
-    "qd51_approx_distinct" -> ((5.0, 0.03, 0.0)),
-    "qd52_dup_ngrams" -> ((4.0, 0.03, 0.0)),
-    "qd53_leakage_safe_split" -> ((114.0, 0.02, 0.0)),
-    "qd54_stratified_sample" -> ((6.0, 0.0, 0.0)),
-    "qd55_heavy_hitters" -> ((3.0, 0.0, 0.0)),
-    "qd56_weighted_sample" -> ((6.0, 0.0, 0.0)),
-    "qd57_heavy_hitters_by_lang" -> ((3.0, 0.0, 0.0)),
-    "qm01_media_meta" -> ((4.0, 0.19, 0.0)),
-    "qm02_decode_features" -> ((66.0, 0.05, 0.0)),
-    "qm03_frame_sample" -> ((4.0, 0.05, 0.0)),
-    "qm04_video_meta" -> ((4.0, 0.0, 0.0)),
-    "qs01_cosine_topk" -> ((6.0, 0.06, 0.0)),
-    "qs02_ann_lsh" -> ((10.0, 0.03, 0.0)),
-    "qs03_ann_ivf" -> ((77.0, 0.06, 0.0)),
-    "qs04_ann_pq" -> ((9.0, 0.04, 0.0))
-  )
 
   /** query -> (frozen warm-median seconds, reference cpu_frac).
     *

@@ -7,7 +7,11 @@ import org.apache.spark.sql.graft.InternalBridge
 /** Shared SparkSession construction for the driver entry points (Verify,
   * Bench) and tests — one place for the configs every run needs. */
 object Sessions {
-  def local(cpus: String): SparkSession = {
+  /** A `local[cpus]` session with as many shuffle partitions as cores. The
+    * driver entry points take the default: `SPARK_GRAFT_CPUS` when set, else
+    * every core the JVM sees. */
+  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+              Runtime.getRuntime.availableProcessors.toString)): SparkSession = {
     // the engine's session defaults (InternalBridge.engineDefaults) unless a
     // spark.* system property already names them
     val conf = new SparkConf()

@@ -14,8 +14,7 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     val only = args.drop(2).toSet
     Faces.select(only) // an unknown name fails here, before the session starts
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.local(cpus)
+    val spark = Sessions.local()
     dump(spark, Faces.all, sfDir, outDir, only)
     spark.stop()
   }

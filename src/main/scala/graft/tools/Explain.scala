@@ -17,7 +17,7 @@ object Explain {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val face = graft.faces.Faces(name)
-    val spark = graft.Sessions.local("8")
+    val spark = graft.Sessions.local()
     val df = face.benchRun(spark, sfDir)
     val (rows, timings) = graft.api.Profile.profile(df)
     println(s"=== $name final plan (${rows.length} rows) ===")

@@ -46,7 +46,7 @@ object ProfileIntervalSink {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 2
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Sessions.local()
     spark.read.parquet(s"$sfDir/lineitem.parquet").count() // warm-up
 
     val (dirL, dirR) = StreamFaces.intervalJoinInputs(spark, sfDir, sentinels = true)

@@ -34,7 +34,7 @@ object ScaleUp {
     val src = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Sessions.local()
     def t(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
 
     def shift(c: String, i: Int) = (col(c) + lit(i * Stride)).as(c)

@@ -66,15 +66,6 @@ class BenchRefsSpec extends SparkSpec {
     assert(streaming == declared,
       s"streaming-face set drifted: only-in-suite=${streaming.diff(declared).toSeq.sorted} " +
         s"only-declared=${declared.diff(streaming).toSeq.sorted}")
-    // mechanism baselines (r15): every entry must name a live ref row, with
-    // sane non-negative values
-    val orphanMech = BenchRefs.mechRefs.keySet.diff(BenchRefs.refs.keySet)
-    assert(orphanMech.isEmpty,
-      s"mechRefs naming no frozen ref: ${orphanMech.toSeq.sorted.mkString(", ")}")
-    BenchRefs.mechRefs.foreach { case (name, (tasks, gc, spill)) =>
-      assert(tasks >= 0 && gc >= 0 && spill >= 0,
-        s"$name: negative mechanism baseline ($tasks, $gc, $spill)")
-    }
   }
 
   test("per-scale refs (r16): every sfRefs row names a live bench face, sane values") {
@@ -132,101 +123,19 @@ class BenchRefsSpec extends SparkSpec {
     // sub-100ms floor: a 90 ms ref gates as if it were 100 ms
     assert(math.abs(Bench.ratioFor(0.3, 0.09) - 3.0) < 1e-9)
     assert(math.abs(Bench.ratioFor(0.3, 0.15) - 2.0) < 1e-9)
-    // triage: cpu collapse below 0.6x of the clean reference, or load1 > 4
-    assert(Bench.loadSuspectFor(cpuFrac = 4.0, refCpuFrac = 8.0, load1 = 1.0))
-    assert(!Bench.loadSuspectFor(cpuFrac = 5.0, refCpuFrac = 8.0, load1 = 1.0))
-    assert(Bench.loadSuspectFor(cpuFrac = 8.0, refCpuFrac = 8.0, load1 = 4.5))
-    assert(!Bench.loadSuspectFor(cpuFrac = 8.0, refCpuFrac = 0.0, load1 = 2.0))
-  }
-
-  test("mechanism verdict: ordered causes, graceful degradation on missing refs") {
-    def m(cpuFrac: Double = 8.0, refCpuFrac: Double = 8.0, load1: Double = 1.0,
-          gcFrac: Double = 0.02, refGcFrac: Double = 0.02,
-          tasks: Double = 100, refTasks: Double = 100,
-          spillMb: Double = 0.0, refSpillMb: Double = 0.0): String =
-      Bench.mechanismFor(cpuFrac, refCpuFrac, load1, gcFrac, refGcFrac,
-        tasks, refTasks, spillMb, refSpillMb)
-    // starvation wins over everything (theft explains downstream inflation)
-    assert(m(cpuFrac = 2.0, gcFrac = 0.9) == "ambient-starvation")
-    assert(m(load1 = 17.0, tasks = 500) == "ambient-starvation")
-    // the driver-qd41 signature: elevated cpu at quiet load — named by the
-    // first counter that claims it
-    assert(m(cpuFrac = 9.0, refCpuFrac = 5.1, gcFrac = 0.62) == "gc-storm")
-    assert(m(cpuFrac = 9.0, refCpuFrac = 5.1, tasks = 400, refTasks = 100) == "recompute")
-    assert(m(cpuFrac = 9.0, refCpuFrac = 5.1, spillMb = 900.0) == "spill")
-    assert(m(cpuFrac = 9.0, refCpuFrac = 5.1) == "cpu-amplified")
-    // gc-storm needs BOTH a real fraction and 3x the query's own clean
-    // profile (a query that always spends 30% in GC isn't a storm)
-    assert(m(gcFrac = 0.30, refGcFrac = 0.28) == "unknown")
-    assert(m(gcFrac = 0.30, refGcFrac = 0.0) == "gc-storm")
-    // missing refs degrade: refTasks 0 skips the recompute test
-    assert(m(tasks = 900, refTasks = 0) == "unknown")
-    // spill has the 64 MB absolute floor so trivial spills don't name it
-    assert(m(spillMb = 10.0) == "unknown")
-    // flat everything = unknown (wall grew, nothing claims it)
-    assert(m() == "unknown")
-  }
-
-  test("mechanism verdict: cross-scale branch suppresses the sf0.1 work-shape tests") {
-    def m(cpuFrac: Double = 8.0, refCpuFrac: Double = 8.0, load1: Double = 1.0,
-          gcFrac: Double = 0.02, refGcFrac: Double = 0.02,
-          tasks: Double = 100, refTasks: Double = 100,
-          spillMb: Double = 0.0): String =
-      Bench.mechanismFor(cpuFrac, refCpuFrac, load1, gcFrac, refGcFrac,
-        tasks, refTasks, spillMb, 0.0, crossScale = true)
-    // the r15 sf10 mislabel: 100x data grew tasks past 1.5x the sf0.1 ref
-    // — expected partition growth, NOT a lost-persist recompute
-    assert(m(tasks = 426, refTasks = 54) == "cross-scale")
-    // ditto spill and cpu amplification: more data legitimately spills and
-    // burns more CPU than the sf0.1 plan's counters describe
-    assert(m(spillMb = 418.0) == "cross-scale")
-    assert(m(cpuFrac = 21.7, refCpuFrac = 1.46) == "cross-scale")
-    // starvation and GC storm stay first: ambient theft and heap pressure
-    // are environment signatures, valid at any SF
-    assert(m(cpuFrac = 2.0, tasks = 426, refTasks = 54) == "ambient-starvation")
-    assert(m(load1 = 17.0) == "ambient-starvation")
-    assert(m(gcFrac = 0.62) == "gc-storm")
-  }
-
-  test("gate mechanism label: own-SF violations are never pre-dismissed as cross-scale") {
-    def g(nFailed: Int = 0, refScale: Boolean = false, ownRef: Boolean = false,
-          cpuFrac: Double = 8.0, load1: Double = 1.0, gcFrac: Double = 0.02,
-          tasks: Double = 400, refTasks: Double = 100): String =
-      Bench.gateMechanism(nFailed, cpuFrac, 8.0, load1, gcFrac, 0.02,
-        tasks, refTasks, 0.0, 0.0, refScale, ownRef)
-    // failed reps override everything, at any scale
-    assert(g(nFailed = 1) == "failed")
-    assert(g(nFailed = 1, refScale = true) == "failed")
-    // a cross-scale EXCURSION row (sf0.1 ref at another SF) reads cross-scale
-    assert(g() == "cross-scale")
-    // ADVICE r16: the SAME residue on a row gated against its OWN same-SF
-    // frozen ref is a REAL violation with no mechanism baselines to consult —
-    // "own-sf-untriaged", never "expected physics at a different SF"
-    assert(g(ownRef = true) == "own-sf-untriaged")
-    // environment signatures stay first and keep their names on ownRef rows
-    assert(g(ownRef = true, cpuFrac = 2.0) == "ambient-starvation")
-    assert(g(ownRef = true, load1 = 17.0) == "ambient-starvation")
-    assert(g(ownRef = true, gcFrac = 0.62) == "gc-storm")
-    // on the run-of-record scale the full sf0.1 triage applies unchanged
-    assert(g(refScale = true, ownRef = true) == "recompute")
   }
 
   test("run quality (r16 directive 5): suspect/cpu-collapse fractions + max load1") {
-    // rows: (cpuFrac, refCpuFrac-or-0, load1)
-    assert(Bench.runQuality(Seq.empty) == ((0.0, 0.0, 0.0)))
-    // clean run: nothing suspect
-    assert(Bench.runQuality(Seq((8.0, 8.0, 1.0), (2.0, 2.0, 2.0))) == ((0.0, 0.0, 2.0)))
-    // one cpu-collapsed row + one load-burst row out of four: both count as
-    // load-suspect, but only the COLLAPSE counts toward the discriminator
-    // (self-load keeps load1 above 4 on even the quietest full-suite runs)
-    val (frac, collapse, maxL) = Bench.runQuality(Seq(
-      (4.0, 8.0, 1.0),   // cpu collapsed vs ref -> suspect + collapse
-      (8.0, 8.0, 30.5),  // visible machine load -> suspect only
-      (8.0, 0.0, 2.0),   // no ref, quiet -> clean (cpu test skipped)
-      (8.0, 8.0, 1.0)))  // clean
-    assert(math.abs(frac - 0.5) < 1e-9)
+    // rows: (cpuFrac, refCpuFrac-or-0)
+    assert(Bench.cpuCollapseFrac(Seq.empty) == 0.0)
+    assert(Bench.cpuCollapseFrac(Seq((8.0, 8.0), (2.0, 2.0))) == 0.0)
+    // only a cpu_frac below 0.6x of a known reference counts
+    val collapse = Bench.cpuCollapseFrac(Seq(
+      (4.0, 8.0),   // cpu collapsed vs ref
+      (5.0, 8.0),   // above 0.6x of the ref
+      (0.5, 0.0),   // no ref: never counts
+      (8.0, 8.0)))
     assert(math.abs(collapse - 0.25) < 1e-9)
-    assert(maxL == 30.5)
   }
 
   test("run class (r17 verdict item 7): quiet/dirty from the collapse discriminator") {
@@ -239,43 +148,120 @@ class BenchRefsSpec extends SparkSpec {
     assert(Bench.runClass(0.14) == "dirty")
   }
 
-  test("repro-prior adjudication (r18 verdict item 7): ambient-repro labeling") {
-    // a violation whose unchanged-tree prior ratio >= 0.8x its own ratio
-    // self-classifies ambient — the slowness reproduces without the diff
-    assert(Bench.adjudicate("unknown", 2.6, 1.5, Some(2.3)) == "ambient-repro")
-    assert(Bench.adjudicate("ambient-starvation", 2.6, 1.5, Some(2.2)) == "ambient-repro")
-    assert(Bench.adjudicate("cpu-amplified", 2.0, 1.5, Some(1.8)) == "ambient-repro")
-    // a prior comfortably inside the gate does NOT adjudicate: the slowness
-    // is new to this tree
-    assert(Bench.adjudicate("unknown", 2.6, 1.5, Some(1.3)) == "unknown")
-    // no prior, no adjudication
-    assert(Bench.adjudicate("unknown", 2.6, 1.5, None) == "unknown")
-    // counter-backed mechanisms and failed reps keep their names — a
-    // standing spill/recompute pathology is pre-existing, not ambient
-    assert(Bench.adjudicate("spill", 2.6, 1.5, Some(2.6)) == "spill")
-    assert(Bench.adjudicate("recompute", 2.6, 1.5, Some(2.6)) == "recompute")
-    assert(Bench.adjudicate("gc-storm", 2.6, 1.5, Some(2.6)) == "gc-storm")
-    assert(Bench.adjudicate("failed", 2.6, 1.5, Some(2.6)) == "failed")
-  }
-
-  test("repro-prior adjudication (ADVICE r19): a prior just under the gate never relabels") {
-    // prior 1.45x >= 0.8 × 1.8x, but it PASSED the 1.5x gate: the slowness
-    // did not reproduce at the unchanged tree, so the violation keeps its
-    // own mechanism
-    assert(Bench.adjudicate("unknown", 1.8, 1.5, Some(1.45)) == "unknown")
-    assert(Bench.adjudicate("cpu-amplified", 1.8, 1.5, Some(1.5)) == "cpu-amplified")
-    // just over the gate it does reproduce
-    assert(Bench.adjudicate("unknown", 1.8, 1.5, Some(1.51)) == "ambient-repro")
-  }
-
   test("parseNumMap: extracts a named flat map, tolerates absent keys") {
-    val text = """{"queries":{"a":1.5,"b":0.25},"queries_cpu_frac":{"a":2.0}}"""
+    val text = """{"queries":{"a":1.5,"b":0.25,"c":null},"queries_cpu_frac":{"a":2.0}}"""
     assert(Bench.parseNumMap(text, "queries") == Map("a" -> 1.5, "b" -> 0.25))
     assert(Bench.parseNumMap(text, "queries_cpu_frac") == Map("a" -> 2.0))
     assert(Bench.parseNumMap(text, "nope").isEmpty)
-    // repro-prong arithmetic (r15 directive 5): prior_ratio uses the same
-    // floored ratio rule as the gate
-    val prior = Bench.parseNumMap(text, "queries")("a")
-    assert(math.abs(Bench.ratioFor(prior, 0.75) - 2.0) < 1e-9)
+  }
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+  private def row(name: String, med: Double, spread: Double = 0.0, nreps: Int = 5) =
+    Bench.Row(name, med, cold = med, spread, nreps, cpuFrac = 1.0,
+      nFailed = if (med.isNaN) nreps else 0)
+  private def names(xs: Seq[Bench.Gated]): Seq[String] = xs.map(_.row.name)
+
+  test("gate verdict at sf0.1: trips worst-first, failed rows excluded, 0.1 s floor, capped lists") {
+    val refs = (Seq("a", "b", "c", "d", "e", "f", "failed").map(_ -> ((1.0, 2.0))) ++
+      Seq("tiny1", "tiny2").map(_ -> ((0.05, 1.0)))).toMap
+    val rows = Seq(
+      row("a", 3.0), row("b", 5.0), row("c", 2.0),  // c: inside the 2 x 1.17 gate
+      row("d", 4.0), row("e", 3.5), row("f", 2.5),
+      row("tiny1", 0.32),                            // 0.32 / max(0.05, 0.1): trips
+      row("tiny2", 0.2),                             // 0.2 / 0.1: inside, though 4x its ref
+      row("failed", Double.NaN),                     // every warm rep failed
+      row("unreferenced", 10.0))
+    val v = Bench.gate(rows, "sf0.1", refs, Map.empty)
+    assert(v.nfRunCore == 0.0 && v.gated.forall(_.gate == 2.0 * 1.17))
+    assert(names(v.gated) == Seq("a", "b", "c", "d", "e", "f", "tiny1", "tiny2"))
+    assert(names(v.violations) == Seq("b", "d", "e", "tiny1", "a", "f"))
+    assert(math.abs(v.violations(3).ratio - 3.2) < 1e-9)
+    assert(v.excursions.isEmpty)
+    val capped = json.readTree("{" + v.json(4) + "}").get("gate")
+    assert(capped.get("ref_sf").asText == "sf0.1")
+    assert(capped.get("n_refs").asInt == 8)
+    assert(capped.get("n_violations").asInt == 6)
+    assert(capped.get("violations").size == 4)
+    assert(capped.get("truncated_violations").asInt == 2)
+    assert(!capped.has("excursions") && !capped.has("cross_scale"))
+    val top = capped.get("violations").get("b")
+    assert(top.get("warm").asDouble == 5.0 && top.get("ref").asDouble == 1.0)
+    assert(top.get("ratio").asDouble == 5.0 && top.get("gate").asDouble == 2.34)
+    assert(top.get("cpu_frac").asDouble == 1.0 && top.get("ref_cpu_frac").asDouble == 2.0)
+    assert(top.size == 6)
+    val full = json.readTree("{" + v.json(Int.MaxValue) + "}").get("gate")
+    assert(full.get("violations").size == 6 && !full.has("truncated_violations"))
+  }
+
+  test("gate verdict across scales: own-SF refs gate, sf0.1 refs only annotate") {
+    val refs = Seq("a", "b", "c", "g").map(_ -> ((1.0, 2.0))).toMap
+    val sfRefs = Map("sf1" -> Map("a" -> ((2.0, 4.0)), "g" -> ((2.0, 4.0))))
+    val rows = Seq(row("a", 6.0), row("b", 4.0), row("c", 2.0), row("g", 2.0))
+    val own = Bench.gate(rows, Bench.sfTagOf("/tmp/graft_sf1/"), refs, sfRefs)
+    assert(names(own.violations) == Seq("a"))   // 3x its own sf1 ref
+    assert(names(own.excursions) == Seq("b"))   // 4x the sf0.1 ref
+    val g = json.readTree("{" + own.json(4) + "}").get("gate")
+    assert(g.get("ref_sf").asText == "sf1" && g.get("cross_scale").asBoolean)
+    assert(g.get("n_refs").asInt == 4 && g.get("n_own_refs").asInt == 2)
+    assert(g.get("n_violations").asInt == 1 && g.get("n_excursions").asInt == 1)
+    assert(g.get("violations").get("a").get("ref_sf").asText == "sf1")
+    assert(g.get("excursions").get("b").get("ref_sf").asText == "sf0.1")
+    // a scale with no frozen table: every trip is an excursion and the
+    // violation count is unknown, not zero
+    val none = Bench.gate(rows, Bench.sfTagOf("data/sf0.01"), refs, sfRefs)
+    assert(none.violations.isEmpty)
+    assert(names(none.excursions) == Seq("a", "b"))
+    val n = json.readTree("{" + none.json(1) + "}").get("gate")
+    assert(n.get("n_violations").isNull && n.get("n_excursions").asInt == 2)
+    assert(n.get("truncated_excursions").asInt == 1)
+    assert(n.get("ref_sf").asText == "sf0.1" && n.get("violations").size == 0)
+  }
+
+  test("parity compare: an all-failed face reads null and violates") {
+    val base = """{"queries":{"a":1.0,"b":1.0,"c":0.5},"queries_spread":{"a":0.1,"b":0.1,"c":0.1},"queries_reps":{"a":5,"b":5,"c":5}}"""
+    val rows = Seq(row("a", 1.2, 0.1), row("b", 2.0, 0.1), row("c", Double.NaN),
+      row("d", 9.0))  // not in the baseline: not compared
+    val p = json.readTree(Bench.parityJson(rows, "base.json", base))
+    assert(p.get("metric").asText == "bench_parity")
+    assert(p.get("n_violations").asInt == 2)
+    assert(p.get("violations").get("b").asDouble == 2.0)
+    assert(p.get("violations").get("c").isNull)
+    assert(p.get("ratios").size == 3 && p.get("ratios").get("a").asDouble == 1.2)
+    // a 3-rep reading's spread is floored at 0.40 on either side
+    val few = json.readTree(Bench.parityJson(Seq(row("b", 1.35, 0.0, nreps = 3)), "b", base))
+    assert(few.get("n_violations").asInt == 0)
+  }
+
+  test("refreeze_refs.py patches one quiet row and refuses a dirty artifact") {
+    import scala.sys.process._
+    val script = new java.io.File("tools/refreeze_refs.py").getAbsolutePath
+    val dir = java.nio.file.Files.createTempDirectory("refreeze")
+    val refs = dir.resolve("src/main/scala/graft/BenchRefs.scala")
+    java.nio.file.Files.createDirectories(refs.getParent)
+    java.nio.file.Files.copy(java.nio.file.Paths.get("src/main/scala/graft/BenchRefs.scala"), refs)
+    val before = java.nio.file.Files.readAllBytes(refs)
+    def run(runClass: String, args: String*): Int = {
+      val art = dir.resolve(s"$runClass.json")
+      java.nio.file.Files.write(art, (s"""{"queries":{"q01_groupby_agg":0.9876,"qd55_heavy_hitters":0.5},""" +
+        s""""queries_cpu_frac":{"q01_groupby_agg":1.42,"qd55_heavy_hitters":3.0},""" +
+        s""""quality":{"cpu_collapse_frac":0.0,"run_class":"$runClass"}}""").getBytes("UTF-8"))
+      Process(Seq("python3", script, art.toString) ++ args, dir.toFile)
+        .!(ProcessLogger(_ => ()))
+    }
+    assert(run("dirty", "q01_groupby_agg") != 0)
+    assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(refs), before))
+    assert(run("quiet", "q01_groupby_agg") == 0)
+    val src = new String(before, "UTF-8")
+    val rowOf = "\"q01_groupby_agg\" -> \\(\\([^)]*\\)\\)".r
+    assert(rowOf.findAllIn(src).size == 1)
+    val patched = rowOf.replaceFirstIn(src, "\"q01_groupby_agg\" -> ((0.988, 1.42))")
+    assert(new String(java.nio.file.Files.readAllBytes(refs), "UTF-8") == patched)
+    // --sf patches only that scale's table, and never reaches past it
+    assert(run("quiet", "qd55_heavy_hitters", "--sf", "sf10") == 0)
+    val sf10 = new String(java.nio.file.Files.readAllBytes(refs), "UTF-8")
+    assert(sf10 == patched.replace("\"qd55_heavy_hitters\" -> ((0.77, 14.6))",
+      "\"qd55_heavy_hitters\" -> ((0.50, 3.0))"))
+    assert(run("quiet", "q01_groupby_agg", "--sf", "sf10") != 0)
+    new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
   }
 }

@@ -7,7 +7,7 @@
 #   tag    artifact suffix, e.g. r17 -> BENCH_LOCAL_r17.json etc.
 #   steps  any of: verify bench noclear sf1 sf10 ijsink   (default: verify bench)
 #
-# Env knobs passed through: SPARK_GRAFT_CPUS (default 32),
+# Env knobs passed through: SPARK_GRAFT_CPUS (default: nproc),
 # SPARK_GRAFT_REPS (bench default 5; cross-scale runs force 3),
 # SPARK_GRAFT_BENCH_ONLY (overrides the per-step face lists below).
 set -euo pipefail
@@ -16,7 +16,7 @@ cd "$(dirname "$0")/.."
 TAG="${1:?usage: tools/evidence.sh <tag> [steps...]}"
 shift
 STEPS="${*:-verify bench}"
-CPUS="${SPARK_GRAFT_CPUS:-32}"
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 
 # Gated cross-scale face sets = the keys of BenchRefs.sfRefs for that SF
 # (kept in lockstep by hand; BenchRefsSpec pins the tables themselves).

@@ -4,8 +4,7 @@
 Usage: tools/refreeze_refs.py <artifact.json> <face>[,<face>...] [--sf sf1|sf10]
 
 Patches, IN PLACE, the named faces' rows in src/main/scala/graft/BenchRefs.scala:
-  - default: the sf0.1 `refs` table (warm median, cpu_frac) AND the
-    `mechRefs` table (tasks, gc_frac, spill_mb);
+  - default: the sf0.1 `refs` table (warm median, cpu_frac);
   - with --sf: only the named sfRefs sub-table's (median, cpu_frac) rows.
 
 Refuses artifacts whose quality block reads run_class "dirty" (or, for
@@ -30,9 +29,6 @@ def main():
     art = json.load(open(artifact_path))
     q = art["queries"]
     cpu = art.get("queries_cpu_frac", {})
-    tasks = art.get("queries_tasks", {})
-    gc = art.get("queries_gc_frac", {})
-    spill = art.get("queries_spill_mb", {})
     quality = art.get("quality", {})
     rc = quality.get("run_class") or (
         "dirty" if quality.get("cpu_collapse_frac", 0.0) > 0.08 else "quiet")
@@ -55,39 +51,24 @@ def main():
         region = region[:m.start()] + f'"{face}" -> (({new_tuple}))' + region[m.end():]
         return text[:start] + region + text[end:]
 
-    def table_span(marker):
-        s = src.index(marker)
-        return s
-
+    refs_marker = "val refs: Map[String, (Double, Double)]"
     if sf:
         s = src.index(f'"{sf}" -> Map(')
-        # end of this sub-table: the next sub-table header or the mechRefs val
+        # end of this sub-table: the next sub-table header or the refs val
         candidates = [i for i in (src.find('" -> Map(', s + 10),
-                                  src.find("val mechRefs", s)) if i != -1]
+                                  src.find(refs_marker, s)) if i != -1]
         e = min(candidates) if candidates else len(src)
         for f in faces:
             src2 = src
             src = patch_tuple(src, f, f"{q[f]:.2f}, {cpu.get(f, 0.0)}", s, e)
             e += len(src) - len(src2)
     else:
-        rs = src.index("val refs: Map[String, (Double, Double)]")
         for f in faces:
-            src2 = src
-            src = patch_tuple(src, f, f"{q[f]:.3f}, {cpu.get(f, 0.0)}", rs, len(src))
-            rs = src.index("val refs: Map[String, (Double, Double)]")
-        ms = src.index("val mechRefs")
-        me = src.index("val refs: Map[String, (Double, Double)]")
-        for f in faces:
-            if f in tasks:
-                src2 = src
-                src = patch_tuple(
-                    src, f,
-                    f"{tasks[f]:.1f}, {gc.get(f, 0.0)}, {spill.get(f, 0.0)}",
-                    ms, me)
-                me += len(src) - len(src2)
+            src = patch_tuple(src, f, f"{q[f]:.3f}, {cpu.get(f, 0.0)}",
+                              src.index(refs_marker), len(src))
     open(path, "w").write(src)
     print(f"[refreeze] patched {len(faces)} rows "
-          f"({'sfRefs ' + sf if sf else 'refs + mechRefs'}) from {artifact_path} "
+          f"({'sfRefs ' + sf if sf else 'refs'}) from {artifact_path} "
           f"(run_class={rc})")
 
 if __name__ == "__main__":
