@@ -51,7 +51,10 @@ import org.apache.spark.sql.types.DataType
   * streaming checkpoint file manager) unless the user set them. The cache
   * size takes effect only when these extensions are installed at the JVM's
   * first session, before any query has compiled: the cache is built once,
-  * at the first compile.
+  * at the first compile. And it drops the per-key provenance of the
+  * context's Hadoop configuration (`InternalBridge.dropKeyProvenance`):
+  * values are unchanged, but `getPropertySources` returns null, so each of
+  * Spark's serializations of that configuration carries no per-key GZIP.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -42,6 +42,7 @@ object Sessions {
       .config("spark.sql.ui.retainedExecutions", "50")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    InternalBridge.dropKeyProvenance(spark.sparkContext.hadoopConfiguration)
     spark
   }
 }

@@ -1,7 +1,9 @@
 package graft.streaming
 
+import java.io.BufferedOutputStream
+import java.nio.file.Files
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, LocalFileSystem, Path, PathFilter, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, LocalFileSystem, Path, PathFilter, RawLocalFileSystem}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 
 /** Spark's streaming checkpoint files (offset and commit logs, the file
@@ -18,8 +20,14 @@ import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileMan
   * floor"). A local path here gets Spark's `FileSystemBasedCheckpointFileManager`
   * instead, which renames through `java.io.File`. It makes the same
   * check-then-rename that `FileContext`'s `LocalFs` makes, so a local
-  * checkpoint is exactly as atomic as before. Every other file system keeps
-  * Spark's default, the atomic-rename `FileContextBasedCheckpointFileManager`.
+  * checkpoint is exactly as atomic as before. Its temp files and directories
+  * are made through `java.nio.file`: Hadoop's `LocalFileSystem` would write
+  * a `.crc` beside each temp file and fork a `chmod` for the file, its
+  * `.crc` and each directory, because no native Hadoop library is loaded.
+  * A file without a `.crc` reads back unchecked; one an older manager wrote
+  * with a `.crc` is still verified against it. Every other file system
+  * keeps Spark's default, the atomic-rename
+  * `FileContextBasedCheckpointFileManager`.
   */
 class ForkFreeCheckpointFileManager(path: Path, hadoopConf: Configuration)
     extends CheckpointFileManager {
@@ -47,7 +55,8 @@ class ForkFreeCheckpointFileManager(path: Path, hadoopConf: Configuration)
 
 object ForkFreeCheckpointFileManager {
 
-  /** Spark's FileSystem-based manager, overwriting the way `LocalFs` does:
+  /** Spark's FileSystem-based manager, with temp files and directories
+    * made through `java.nio.file`, overwriting the way `LocalFs` does:
     * delete the target, then rename. Its own overwrite is a plain
     * `FileSystem.rename`, and the local file system Spark registers with
     * Hive support (`ProxyLocalFileSystem`) refuses to rename onto an
@@ -55,6 +64,26 @@ object ForkFreeCheckpointFileManager {
     * the older copy and leave its temp file behind. */
   private class LocalFiles(path: Path, hadoopConf: Configuration)
       extends FileSystemBasedCheckpointFileManager(path, hadoopConf) {
+    private def local(p: Path): java.nio.file.Path = (fs match {
+      case l: LocalFileSystem => l.pathToFile(p)
+      case r: RawLocalFileSystem => r.pathToFile(p)
+    }).toPath
+
+    override def mkdirs(p: Path): Unit = Files.createDirectories(local(p))
+
+    override def createCheckpointDirectory(): Path = {
+      val root = fs.makeQualified(path)
+      mkdirs(root)
+      root
+    }
+
+    /** Overwrites, and makes missing parents, as `FileSystem.create` does. */
+    override def createTempFile(p: Path): FSDataOutputStream = {
+      val f = local(p)
+      Files.createDirectories(f.getParent)
+      new FSDataOutputStream(new BufferedOutputStream(Files.newOutputStream(f)), null)
+    }
+
     override def renameTempFile(src: Path, dst: Path, overwriteIfPossible: Boolean): Unit = {
       if (overwriteIfPossible) fs.delete(dst, false)
       super.renameTempFile(src, dst, overwriteIfPossible)

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
@@ -65,8 +66,46 @@ object InternalBridge {
     engineDefaults.foreach { case (k, v) => conf.setIfMissing(k, v) }
 
   /** [[setEngineDefaults]] on the active context's own conf
-    * (`private[spark]`). Called while a session is being built, before its
+    * (`private[spark]`), and [[dropKeyProvenance]] on its Hadoop
+    * configuration. Called while a session is being built, before its
     * `SQLConf` copies the context's conf. */
   def setEngineDefaults(): Unit =
-    SparkContext.getActive.foreach(sc => setEngineDefaults(sc.conf))
+    SparkContext.getActive.foreach { sc =>
+      setEngineDefaults(sc.conf)
+      dropKeyProvenance(sc.hadoopConfiguration)
+    }
+
+  /** Stop `conf` recording where each key came from. Hadoop keeps, per
+    * key, the resources that set it (`Configuration.updatingResource`, what
+    * `getPropertySources` returns), and `Configuration.write` GZIP-compresses
+    * that list for every key, one `Deflater` per key. Spark serializes a
+    * copy of the context's configuration (`SessionState.newHadoopConf`)
+    * whenever it builds a streaming join, a Parquet scan or a file write,
+    * several times per micro-batch (SCALE_CONTRACTS.md, "Streaming:
+    * per-micro-batch floor"). With a map that records nothing in that
+    * field, a write carries keys and values only.
+    *
+    * Values are untouched. A `reloadConfiguration()` loads into the same
+    * map, so it stays untracked; a child `new Configuration(conf)` starts
+    * from an empty copy and records its own `set`s. `getPropertySources`
+    * on `conf` returns null. Idempotent; a Hadoop without the field is left
+    * as it is. */
+  def dropKeyProvenance(conf: Configuration): Unit =
+    ProvenanceField.foreach { f =>
+      conf.synchronized { if (f.get(conf) ne NoProvenance) f.set(conf, NoProvenance) }
+    }
+
+  private lazy val ProvenanceField: Option[java.lang.reflect.Field] =
+    try {
+      val f = classOf[Configuration].getDeclaredField("updatingResource")
+      f.setAccessible(true)
+      Some(f)
+    } catch { case _: NoSuchFieldException => None }
+
+  /** An always-empty map that ignores `put`: shared, since it holds nothing. */
+  private object NoProvenance extends java.util.AbstractMap[String, Array[String]] {
+    override def put(key: String, sources: Array[String]): Array[String] = null
+    override def entrySet(): java.util.Set[java.util.Map.Entry[String, Array[String]]] =
+      java.util.Collections.emptySet()
+  }
 }
