@@ -442,7 +442,7 @@ object frame {
           }
         }
       }
-    InternalBridge.fromInternalRdd(a, zipped, schema)
+    InternalBridge.fromInternalRdd(a.sparkSession, zipped, schema)
   }
 
   /** Stable global row index without collapsing to one partition:

@@ -95,7 +95,7 @@ object Bpe {
     * stops when no pair occurs at least twice. [[learnMergesNaive]] keeps
     * the direct transcription and BpeSpec asserts byte-identical output.
     */
-  private def learnMerges(wordFreq: Map[String, Long], numMerges: Int): Seq[(String, String)] = {
+  private[graft] def learnMerges(wordFreq: Map[String, Long], numMerges: Int): Seq[(String, String)] = {
     type Pair = (String, String)
     val entries = wordFreq.toArray
     val syms = entries.map { case (w, _) => symbols(w) }
@@ -185,10 +185,6 @@ object Bpe {
     }
     merges.toSeq
   }
-
-  /** Expose merge learning for equivalence tests. */
-  private[graft] def learnMergesIncremental(wordFreq: Map[String, Long], numMerges: Int): Seq[(String, String)] =
-    learnMerges(wordFreq, numMerges)
 
   /** Replace every adjacent (a, b) with a+b, left to right. */
   def mergeOnce(syms: Vector[String], pair: (String, String)): Vector[String] = {

@@ -3,18 +3,13 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Hash-sketch primitives for near-duplicate detection: MinHash signatures,
-  * LSH band hashing, 64-bit SimHash — all composed from `xxhash64` and
-  * higher-order array functions, so they run inside whole-stage codegen with
-  * no UDFs and shuffle nothing until the band/bucket join.
+/** Hash-sketch column helpers for near-duplicate detection: LSH band
+  * hashing of MinHash signatures, the Jaccard estimate, and SimHash Hamming
+  * distance and blocking — composed from `xxhash64` and higher-order array
+  * functions, with no UDFs. The signatures themselves are the native
+  * kernels `graft.plans.MinHashSignatureExpr` and `SimHash64Expr`.
   */
 object HashFunctions {
-
-  /** MinHash signature: for seed s in 1..numHashes, min over shingles of
-    * xxhash64(shingle, s). Returns Array[Long] of length numHashes. */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    transform(sequence(lit(1), lit(numHashes)),
-      seed => array_min(transform(shingles, s => xxhash64(s, seed))))
 
   /** LSH band hashes: split the signature into `bands` bands of
     * `rows = len/bands` and hash each band (band index mixed in). Returns
@@ -32,21 +27,6 @@ object HashFunctions {
   def minhashJaccardEstimate(sigA: Column, sigB: Column): Column =
     aggregate(zip_with(sigA, sigB, (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, v) => acc + v).cast("double") / size(sigA)
-
-  private val BitMasks: Array[Long] = Array.tabulate(64)(i => 1L << i)
-
-  /** 64-bit SimHash over a token array: per-bit vote of each token's
-    * xxhash64; bit set iff the vote is positive. */
-  def simhash64(toks: Column): Column = {
-    val masks = typedlit(BitMasks)
-    val votes = aggregate(toks, typedlit(Array.fill(64)(0L)),
-      (acc, t) => {
-        val h = xxhash64(t)
-        zip_with(acc, masks, (a, m) => a + when(h.bitwiseAND(m) =!= 0, 1L).otherwise(-1L))
-      })
-    aggregate(zip_with(votes, masks, (v, m) => when(v > 0, m).otherwise(0L)),
-      lit(0L), (acc, b) => acc.bitwiseOR(b))
-  }
 
   /** Hamming distance between two 64-bit hashes. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

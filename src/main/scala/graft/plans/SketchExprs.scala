@@ -12,11 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native sketch expressions for the dedup pipeline.
   *
-  * The higher-order-function formulations in `graft.functions.HashFunctions`
-  * document the semantics, but nested `transform`/`aggregate` lambdas run on
-  * Catalyst's interpreted path with per-element dispatch — measured ~75 ms
-  * per document for a 128-hash MinHash at 46 shingles (bench qd04: 755 s at
-  * sf0.1). These expressions do the same math in one tight JVM loop per row:
+  * A higher-order-function formulation (nested `transform`/`aggregate`
+  * lambdas over `xxhash64`) runs on Catalyst's interpreted path with
+  * per-element dispatch — measured ~75 ms per document for a 128-hash
+  * MinHash at 46 shingles (bench qd04: 755 s at sf0.1). These expressions
+  * do the math in one tight JVM loop per row:
   * hash each shingle once (XXH64 over the UTF-8 bytes), then derive the k
   * signature positions with multiply-add universal mixing — ~1000× less
   * expression-tree overhead. Eval-only (`CodegenFallback`): the per-row cost
@@ -73,8 +73,9 @@ case class MinHashSignatureExpr(child: Expression, numHashes: Int)
     copy(child = newChild)
 }
 
-/** 64-bit SimHash over a token array — same semantics as
-  * `HashFunctions.simhash64` (per-token XXH64 bit votes), one loop per row. */
+/** 64-bit SimHash over a token array: each token's XXH64 (seed 42, the
+  * seed of Spark's `xxhash64`) votes +1/-1 per bit; an output bit is set
+  * iff its vote is positive. One loop per row. */
 case class SimHash64Expr(child: Expression) extends UnaryExpression with CodegenFallback {
 
   override def dataType: DataType = LongType

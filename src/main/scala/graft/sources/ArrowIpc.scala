@@ -1,17 +1,13 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets.UTF_8
-
-import scala.jdk.CollectionConverters._
+import java.nio.channels.Channels
 
 import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector._
-import org.apache.arrow.vector.complex.ListVector
-import org.apache.arrow.vector.ipc.{ArrowFileReader, ArrowFileWriter, ArrowStreamReader, ArrowStreamWriter}
-import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit => ATimeUnit}
-import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ASchema}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.arrow.vector.ipc.{ArrowFileReader, ArrowStreamReader}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.{ArrowCodec, InternalBridge}
 
 /** Arrow IPC (Feather v2) read + write — closes the reference's IPC surface
   * (native_shim/src/io.rs:159-179 read/scan, io.rs:308-319 write; round-trip
@@ -28,12 +24,13 @@ import org.apache.spark.sql.types._
   *    batches, then fans out one task per (file, batch-range) — parallelism
   *    is batch-granular, each task seeks straight to its blocks.
   *
-  * Supported types (both directions): byte/short/int/long, float/double,
-  * string, boolean, binary, date, timestamp (µs, UTC ⇄ Arrow tz-micro),
-  * timestamp_ntz, decimal, and arrays of int/long/float/double (covers the
-  * embeddings tables). Catalyst pushdown does not reach inside IPC files
-  * (format has no predicate pages); for pushdown-heavy pipelines Parquet
-  * remains the recommended interchange (SURVEY §8 note).
+  * Types map through Spark's own Arrow codec (`ArrowCodec`: `ArrowUtils`,
+  * `ArrowWriter`, `ArrowColumnVector`) on `InternalRow`s, so every type
+  * Spark's Arrow paths carry round-trips, arrays included; `timestamp` is
+  * written as Arrow `Timestamp(MICROSECOND, UTC)` and `timestamp_ntz` as a
+  * zone-less `Timestamp(MICROSECOND)`. Catalyst pushdown does not reach
+  * inside IPC files (format has no predicate pages); for pushdown-heavy
+  * pipelines Parquet remains the recommended interchange (SURVEY §8 note).
   */
 object ArrowIpc {
 
@@ -70,147 +67,27 @@ object ArrowIpc {
     override def close(): Unit = { open = false; in.close() }
   }
 
-  private def openChannel(path: String): java.nio.channels.SeekableByteChannel = {
+  /** Runs `body` on an Arrow file reader over `path`, closed after. */
+  private def withFileReader[A](path: String)(body: ArrowFileReader => A): A = {
     val (fs, p) = fsFor(path)
-    new HadoopSeekableChannel(fs.open(p), fs.getFileStatus(p).getLen)
-  }
-
-  // ---- schema mapping ------------------------------------------------------
-
-  private[sources] def toArrowField(f: StructField): Field = {
-    def prim(t: ArrowType): Field =
-      new Field(f.name, new FieldType(f.nullable, t, null), null)
-    f.dataType match {
-      case ByteType    => prim(new ArrowType.Int(8, true))
-      case ShortType   => prim(new ArrowType.Int(16, true))
-      case IntegerType => prim(new ArrowType.Int(32, true))
-      case LongType    => prim(new ArrowType.Int(64, true))
-      case FloatType   => prim(new ArrowType.FloatingPoint(FloatingPointPrecision.SINGLE))
-      case DoubleType  => prim(new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE))
-      case StringType  => prim(ArrowType.Utf8.INSTANCE)
-      case BooleanType => prim(ArrowType.Bool.INSTANCE)
-      case BinaryType  => prim(ArrowType.Binary.INSTANCE)
-      case DateType    => prim(new ArrowType.Date(DateUnit.DAY))
-      case TimestampType    => prim(new ArrowType.Timestamp(ATimeUnit.MICROSECOND, "UTC"))
-      case TimestampNTZType => prim(new ArrowType.Timestamp(ATimeUnit.MICROSECOND, null))
-      case d: DecimalType   => prim(new ArrowType.Decimal(d.precision, d.scale, 128))
-      case ArrayType(et, containsNull) =>
-        val child = toArrowField(StructField("element", et, containsNull))
-        new Field(f.name, new FieldType(f.nullable, ArrowType.List.INSTANCE, null),
-          java.util.List.of(child))
-      case other => throw new IllegalArgumentException(s"ArrowIpc: unsupported type $other")
-    }
-  }
-
-  private[sources] def toSparkType(f: Field): DataType = f.getType match {
-    case i: ArrowType.Int if i.getBitWidth == 8  => ByteType
-    case i: ArrowType.Int if i.getBitWidth == 16 => ShortType
-    case i: ArrowType.Int if i.getBitWidth == 32 => IntegerType
-    case i: ArrowType.Int if i.getBitWidth == 64 => LongType
-    case fp: ArrowType.FloatingPoint if fp.getPrecision == FloatingPointPrecision.SINGLE => FloatType
-    case fp: ArrowType.FloatingPoint if fp.getPrecision == FloatingPointPrecision.DOUBLE => DoubleType
-    case _: ArrowType.Utf8   => StringType
-    case _: ArrowType.Bool   => BooleanType
-    case _: ArrowType.Binary => BinaryType
-    case _: ArrowType.Date   => DateType
-    case t: ArrowType.Timestamp if t.getTimezone != null => TimestampType
-    case _: ArrowType.Timestamp => TimestampNTZType
-    case d: ArrowType.Decimal => DecimalType(d.getPrecision, d.getScale)
-    case _: ArrowType.List =>
-      val child = f.getChildren.get(0)
-      ArrayType(toSparkType(child), child.isNullable)
-    case other => throw new IllegalArgumentException(s"ArrowIpc: unsupported Arrow type $other")
-  }
-
-  private def toSparkSchema(s: ASchema): StructType =
-    StructType(s.getFields.asScala.map(f => StructField(f.getName, toSparkType(f), f.isNullable)).toSeq)
-
-  // ---- write ---------------------------------------------------------------
-
-  private def usOf(ts: java.sql.Timestamp): Long = {
-    val inst = ts.toInstant
-    inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-  }
-
-  private def setValue(vec: FieldVector, i: Int, value: Any): Unit = (vec, value) match {
-    case (x: TinyIntVector, v)  => x.setSafe(i, v.asInstanceOf[Byte])
-    case (x: SmallIntVector, v) => x.setSafe(i, v.asInstanceOf[Short])
-    case (x: IntVector, v)      => x.setSafe(i, v.asInstanceOf[Int])
-    case (x: BigIntVector, v)   => x.setSafe(i, v.asInstanceOf[Long])
-    case (x: Float4Vector, v)   => x.setSafe(i, v.asInstanceOf[Float])
-    case (x: Float8Vector, v)   => x.setSafe(i, v.asInstanceOf[Double])
-    case (x: VarCharVector, v)  => x.setSafe(i, v.toString.getBytes(UTF_8))
-    case (x: BitVector, v)      => x.setSafe(i, if (v.asInstanceOf[Boolean]) 1 else 0)
-    case (x: VarBinaryVector, v) => x.setSafe(i, v.asInstanceOf[Array[Byte]])
-    case (x: DateDayVector, v)  => x.setSafe(i, v.asInstanceOf[java.sql.Date].toLocalDate.toEpochDay.toInt)
-    case (x: TimeStampMicroTZVector, v) => x.setSafe(i, usOf(v.asInstanceOf[java.sql.Timestamp]))
-    case (x: TimeStampMicroVector, v) =>
-      val ldt = v.asInstanceOf[java.time.LocalDateTime]
-      val inst = ldt.toInstant(java.time.ZoneOffset.UTC)
-      x.setSafe(i, inst.getEpochSecond * 1000000L + inst.getNano / 1000L)
-    case (x: DecimalVector, v) => x.setSafe(i, v.asInstanceOf[java.math.BigDecimal])
-    case (x: ListVector, v) =>
-      val writer = x.getWriter
-      writer.setPosition(i)
-      writer.startList()
-      v.asInstanceOf[scala.collection.Seq[Any]].foreach {
-        case null       => writer.integer().writeNull()
-        case e: Int     => writer.integer().writeInt(e)
-        case e: Long    => writer.bigInt().writeBigInt(e)
-        case e: Float   => writer.float4().writeFloat4(e)
-        case e: Double  => writer.float8().writeFloat8(e)
-        case other => throw new IllegalArgumentException(s"ArrowIpc list element: $other")
-      }
-      writer.endList()
-    case (x, v) => throw new IllegalArgumentException(s"ArrowIpc: cannot set $v on ${x.getClass}")
+    val alloc = new RootAllocator()
+    val reader = new ArrowFileReader(new HadoopSeekableChannel(fs.open(p), fs.getFileStatus(p).getLen), alloc)
+    try body(reader) finally { reader.close(); alloc.close() }
   }
 
   /** Writes `df` as a directory of IPC files, one per partition (partition 0
     * always writes, so an empty frame still round-trips its schema). */
   def write(df: DataFrame, path: String, batchSize: Int = 4096): Unit = {
-    val schema = df.schema // StructType serializes; Arrow Field does not —
-    fsFor(path) match { case (fs, p) => fs.mkdirs(p) } // build Arrow schema in the task
-    val n = df.rdd.mapPartitionsWithIndex { (idx, rows) =>
-      if (rows.isEmpty && idx != 0) Iterator.single(0L)
-      else {
-        val arrowFields = schema.fields.map(toArrowField).toList
-        val allocator = new RootAllocator()
-        val root = VectorSchemaRoot.create(new ASchema(arrowFields.asJava), allocator)
-        val (fs, _) = fsFor(path)
-        val out = fs.create(new org.apache.hadoop.fs.Path(f"$path/part-$idx%05d.arrow"), true)
-        val writer = new ArrowFileWriter(root, null, java.nio.channels.Channels.newChannel(out))
-        writer.start()
-        var written = 0L
-        try {
-          val vecs = root.getFieldVectors.asScala.toArray
-          val groups = rows.grouped(batchSize)
-          var wroteAny = false
-          // empty partition 0 still writes one 0-row batch → schema survives
-          while (groups.hasNext || !wroteAny) {
-            val batch = if (groups.hasNext) groups.next() else Seq.empty[Row]
-            root.allocateNew()
-            var r = 0
-            batch.foreach { row =>
-              var j = 0
-              while (j < vecs.length) {
-                // unset positions stay null via the validity buffer
-                if (!row.isNullAt(j)) setValue(vecs(j), r, row.get(j))
-                j += 1
-              }
-              r += 1
-            }
-            root.setRowCount(r)
-            writer.writeBatch()
-            written += r
-            wroteAny = true
-          }
-        } finally {
-          writer.end(); writer.close(); out.close(); root.close(); allocator.close()
-        }
-        Iterator.single(written)
+    val schema = df.schema
+    fsFor(path) match { case (fs, p) => fs.mkdirs(p) }
+    InternalBridge.toInternalRdd(df).foreachPartition { rows =>
+      val idx = TaskContext.getPartitionId()
+      if (rows.hasNext || idx == 0) {
+        val out = fsFor(f"$path/part-$idx%05d.arrow") match { case (fs, p) => fs.create(p, true) }
+        try ArrowCodec.write(schema, rows, batchSize, Channels.newChannel(out), file = true)
+        finally out.close()
       }
-    }.sum()
-    require(n >= 0) // force the job
+    }
   }
 
   // ---- in-memory export / import ------------------------------------------
@@ -225,41 +102,14 @@ object ArrowIpc {
     *
     * Like the reference call this is EAGER and driver-side by design — an
     * interchange escape hatch for bounded results, not a pipeline step
-    * (SCALE_CONTRACTS.md). Rows stream through `toLocalIterator`, so driver
-    * memory holds one partition plus one Arrow batch, not the whole frame
-    * at once (the byte buffer itself is of course result-sized). */
+    * (SCALE_CONTRACTS.md). Rows stream to the driver one partition at a
+    * time (`InternalBridge.withLocalRows`, inside one SQL execution), so
+    * driver memory holds one partition plus one Arrow batch, not the whole
+    * frame at once (the byte buffer itself is of course result-sized). */
   def toArrowStreamBytes(df: DataFrame, batchSize: Int = 4096): Array[Byte] = {
-    val schema = df.schema
-    val arrowFields = schema.fields.map(toArrowField).toList
-    val allocator = new RootAllocator()
-    val root = VectorSchemaRoot.create(new ASchema(arrowFields.asJava), allocator)
     val bos = new java.io.ByteArrayOutputStream()
-    val writer = new ArrowStreamWriter(root, null, java.nio.channels.Channels.newChannel(bos))
-    writer.start()
-    try {
-      val vecs = root.getFieldVectors.asScala.toArray
-      val groups = df.toLocalIterator().asScala.grouped(batchSize)
-      var wroteAny = false
-      // an empty frame still writes one 0-row batch → schema survives
-      while (groups.hasNext || !wroteAny) {
-        val batch = if (groups.hasNext) groups.next() else Seq.empty[Row]
-        root.allocateNew()
-        var r = 0
-        batch.foreach { row =>
-          var j = 0
-          while (j < vecs.length) {
-            if (!row.isNullAt(j)) setValue(vecs(j), r, row.get(j))
-            j += 1
-          }
-          r += 1
-        }
-        root.setRowCount(r)
-        writer.writeBatch()
-        wroteAny = true
-      }
-    } finally {
-      writer.end(); writer.close(); root.close(); allocator.close()
-    }
+    InternalBridge.withLocalRows(df, "toArrowStreamBytes")(rows =>
+      ArrowCodec.write(df.schema, rows, batchSize, Channels.newChannel(bos), file = false))
     bos.toByteArray
   }
 
@@ -267,52 +117,20 @@ object ArrowIpc {
     * Arrow runtime) back into a DataFrame — the twin of the reference's
     * Arrow-stream ingest (native_shim/src/eager.rs:824-926). Driver-side
     * like its counterpart: the input is an in-memory handoff, not a file
-    * scan (use [[read]] for distributed IPC-file reads). */
+    * scan (use [[read]] for distributed IPC-file reads), so the frame is a
+    * `LocalRelation` with its real size statistics. */
   def fromArrowStreamBytes(spark: SparkSession, bytes: Array[Byte]): DataFrame = {
     val alloc = new RootAllocator()
     val reader = new ArrowStreamReader(new java.io.ByteArrayInputStream(bytes), alloc)
     try {
       val root = reader.getVectorSchemaRoot
-      val schema = toSparkSchema(root.getSchema)
-      val rows = scala.collection.mutable.ArrayBuffer[Row]()
-      while (reader.loadNextBatch()) {
-        val vecs = root.getFieldVectors.asScala.toArray
-        val gets = vecs.map(getter)
-        (0 until root.getRowCount).foreach { i =>
-          rows += Row.fromSeq(vecs.indices.map(j => if (vecs(j).isNull(i)) null else gets(j)(i)))
-        }
-      }
-      spark.createDataFrame(rows.asJava, schema)
+      val rows = Array.newBuilder[InternalRow]
+      while (reader.loadNextBatch()) rows ++= ArrowCodec.rows(root)
+      InternalBridge.fromLocalRows(spark, rows.result().toSeq, ArrowCodec.schemaOf(root))
     } finally { reader.close(); alloc.close() }
   }
 
   // ---- read ----------------------------------------------------------------
-
-  private def getter(vec: FieldVector): Int => Any = vec match {
-    case x: TinyIntVector  => i => x.get(i)
-    case x: SmallIntVector => i => x.get(i)
-    case x: IntVector      => i => x.get(i)
-    case x: BigIntVector   => i => x.get(i)
-    case x: Float4Vector   => i => x.get(i)
-    case x: Float8Vector   => i => x.get(i)
-    case x: VarCharVector  => i => new String(x.get(i), UTF_8)
-    case x: BitVector      => i => x.get(i) == 1
-    case x: VarBinaryVector => i => x.get(i)
-    case x: DateDayVector  => i => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(x.get(i).toLong))
-    case x: TimeStampMicroTZVector => i => {
-      val us = x.get(i)
-      java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-        Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
-    }
-    case x: TimeStampMicroVector => i => {
-      val us = x.get(i)
-      java.time.LocalDateTime.ofInstant(java.time.Instant.ofEpochSecond(
-        Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L), java.time.ZoneOffset.UTC)
-    }
-    case x: DecimalVector => i => x.getObject(i)
-    case x: ListVector => i => x.getObject(i).asScala.toSeq
-    case other => throw new IllegalArgumentException(s"ArrowIpc: unsupported vector ${other.getClass}")
-  }
 
   /** Reads a directory written by [[write]] (or a single `.arrow` file).
     * One task per (file, record-batch range); only footers touch the driver. */
@@ -326,42 +144,16 @@ object ArrowIpc {
     require(files.nonEmpty, s"ArrowIpc.read: no .arrow files under $path")
 
     // footer-only pass: schema + per-file batch counts
-    val allocator = new RootAllocator()
-    val (schema, batches) = try {
-      var sparkSchema: StructType = null
-      val perFile = files.map { f =>
-        val ch = openChannel(f)
-        val reader = new ArrowFileReader(ch, allocator)
-        try {
-          if (sparkSchema == null)
-            sparkSchema = toSparkSchema(reader.getVectorSchemaRoot.getSchema)
-          f -> reader.getRecordBlocks.size()
-        } finally { reader.close(); ch.close() }
-      }
-      (sparkSchema, perFile)
-    } finally allocator.close()
-
+    val footers = files.map(f => withFileReader(f)(r =>
+      (ArrowCodec.schemaOf(r.getVectorSchemaRoot), r.getRecordBlocks.size)))
     val tasks: Seq[(String, Int)] =
-      batches.flatMap { case (p, n) => (0 until n).map(b => (p, b)) }
-    val taskRdd = spark.sparkContext.parallelize(tasks, math.max(tasks.size, 1))
-
-    val rowRdd = taskRdd.mapPartitions { it =>
-      it.flatMap { case (file, blockIdx) =>
-        val alloc = new RootAllocator()
-        val ch = openChannel(file)
-        val reader = new ArrowFileReader(ch, alloc)
-        val block = reader.getRecordBlocks.get(blockIdx)
-        reader.loadRecordBatch(block)
-        val root = reader.getVectorSchemaRoot
-        val vecs = root.getFieldVectors.asScala.toArray
-        val gets = vecs.map(getter)
-        val out = (0 until root.getRowCount).map { i =>
-          Row.fromSeq(vecs.indices.map(j => if (vecs(j).isNull(i)) null else gets(j)(i)))
-        }
-        reader.close(); ch.close(); alloc.close()
-        out
+      files.zip(footers).flatMap { case (f, (_, n)) => (0 until n).map(b => (f, b)) }
+    val rowRdd = spark.sparkContext.parallelize(tasks, math.max(tasks.size, 1)).flatMap {
+      case (file, block) => withFileReader(file) { r =>
+        r.loadRecordBatch(r.getRecordBlocks.get(block))
+        ArrowCodec.rows(r.getVectorSchemaRoot)
       }
     }
-    spark.createDataFrame(rowRdd, schema)
+    InternalBridge.fromInternalRdd(spark, rowRdd, footers.head._1)
   }
 }

@@ -3,8 +3,11 @@ package org.apache.spark.sql.graft
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{classic, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 import org.apache.spark.sql.types.StructType
 
@@ -21,9 +24,24 @@ object InternalBridge {
   def toInternalRdd(df: DataFrame): RDD[InternalRow] = df.queryExecution.toRdd
 
   /** Wrap an InternalRow RDD back into a DataFrame (LogicalRDD). */
-  def fromInternalRdd(df: DataFrame, rdd: RDD[InternalRow], schema: StructType): DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    spark.internalCreateDataFrame(rdd, schema)
+  def fromInternalRdd(spark: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
+  /** Driver-held rows as a DataFrame over a `LocalRelation` — what
+    * `createDataFrame` builds for a local list: real size statistics (so a
+    * join against it can broadcast) and the optimizer's local-relation
+    * rules. */
+  def fromLocalRows(spark: SparkSession, rows: Seq[InternalRow], schema: StructType): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** Runs `body` on the frame's rows, streamed to the driver one partition
+    * at a time (`executeToIterator`, as `toLocalIterator` does), inside a
+    * new SQL execution named `name` — so the export shows in the SQL UI and
+    * reaches `QueryExecutionListener`s like any other action. */
+  def withLocalRows[A](df: DataFrame, name: String)(body: Iterator[InternalRow] => A): A = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name))(body(qe.executedPlan.executeToIterator()))
   }
 
   /** Wrap a raw Catalyst Expression as a user-facing Column (the

@@ -136,7 +136,7 @@ class BpeSpec extends SparkSpec {
         w -> (1L + rnd.nextInt(50))
       }.toMap // map collapses duplicate words — fine, both sides see the same table
       val numMerges = rnd.nextInt(60)
-      val fast = B.learnMergesIncremental(wf, numMerges)
+      val fast = B.learnMerges(wf, numMerges)
       val slow = B.learnMergesNaive(wf, numMerges)
       assert(fast == slow, s"trial $trial (vocab $vocabSize, merges $numMerges):\n$fast\nvs\n$slow")
     }
@@ -155,7 +155,7 @@ class BpeSpec extends SparkSpec {
       w -> (1L + (200000L / (i + 1))) // Zipf-ish frequency
     }.toMap
     val t0 = System.nanoTime()
-    val merges = B.learnMergesIncremental(wf, 600)
+    val merges = B.learnMerges(wf, 600)
     val secs = (System.nanoTime() - t0) / 1e9
     assert(merges.length == 600, s"only ${merges.length} merges learned")
     assert(merges.distinct.length == merges.length, "a merged pair recurred")

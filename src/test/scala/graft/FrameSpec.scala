@@ -214,9 +214,29 @@ class FrameSpec extends SparkSpec {
       timestamp_micros(col("id") * 1000000L + 123456L).as("ts"),
       col("id").cast("decimal(12,2)").as("dec"),
       array(col("id").cast("float"), col("id").cast("float") * 2f).as("vec"),
-      encode(concat(lit("b"), col("id")), "UTF-8").as("bin"))
+      encode(concat(lit("b"), col("id")), "UTF-8").as("bin"),
+      (col("id") % 100).cast("tinyint").as("i8"),
+      timestamp_micros(col("id") * 1000000L + 654321L).cast("timestamp_ntz").as("ntz"),
+      array(concat(lit("t"), col("id")), lit(null).cast("string")).as("strs"))
       .repartition(4)
     graft.sources.ArrowIpc.write(df, dir, batchSize = 100)
+    // the file's Arrow schema, field by field: what pyarrow / DuckDB and
+    // readers of earlier files see
+    locally {
+      import org.apache.arrow.vector.types.{FloatingPointPrecision, TimeUnit}
+      import org.apache.arrow.vector.types.pojo.ArrowType
+      val alloc = new org.apache.arrow.memory.RootAllocator()
+      val ch = java.nio.file.Files.newByteChannel(java.nio.file.Path.of(s"$dir/part-00000.arrow"))
+      val rdr = new org.apache.arrow.vector.ipc.ArrowFileReader(ch, alloc)
+      val fields = try rdr.getVectorSchemaRoot.getSchema finally { rdr.close(); ch.close(); alloc.close() }
+      assert(fields.findField("ts").getType == new ArrowType.Timestamp(TimeUnit.MICROSECOND, "UTC"))
+      assert(fields.findField("ntz").getType == new ArrowType.Timestamp(TimeUnit.MICROSECOND, null))
+      assert(fields.findField("dec").getType == new ArrowType.Decimal(12, 2, 128))
+      val vec = fields.findField("vec")
+      assert(vec.getType == ArrowType.List.INSTANCE && vec.getChildren.size == 1)
+      assert(vec.getChildren.get(0).getName == "element" &&
+        vec.getChildren.get(0).getType == new ArrowType.FloatingPoint(FloatingPointPrecision.SINGLE))
+    }
     // 4 partitions x ceil(250/100) batches = 12 parallel read tasks
     val back = graft.sources.ArrowIpc.read(spark, dir)
     assert(back.schema == df.schema ||
@@ -247,7 +267,10 @@ class FrameSpec extends SparkSpec {
       timestamp_micros(col("id") * 1000000L + 123456L).as("ts"),
       col("id").cast("decimal(12,2)").as("dec"),
       array(col("id").cast("float"), col("id").cast("float") * 2f).as("vec"),
-      encode(concat(lit("b"), col("id")), "UTF-8").as("bin"))
+      encode(concat(lit("b"), col("id")), "UTF-8").as("bin"),
+      (col("id") % 100).cast("tinyint").as("i8"),
+      timestamp_micros(col("id") * 1000000L + 654321L).cast("timestamp_ntz").as("ntz"),
+      array(concat(lit("t"), col("id")), lit(null).cast("string")).as("strs"))
     val bytes = graft.sources.ArrowIpc.toArrowStreamBytes(df, batchSize = 128)
     // the handoff is a standard Arrow IPC stream: an independent arrow-java
     // reader (not our import path) must see schema + batched rows
@@ -271,6 +294,34 @@ class FrameSpec extends SparkSpec {
     val ebytes = graft.sources.ArrowIpc.toArrowStreamBytes(df.filter(lit(false)))
     val eback = graft.sources.ArrowIpc.fromArrowStreamBytes(spark, ebytes)
     assert(eback.count() == 0 && eback.schema.fieldNames.sameElements(df.schema.fieldNames))
+  }
+
+  test("IO: Arrow stream import is a sized LocalRelation; export runs as one SQL execution") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.QueryExecution
+    val df = spark.range(0, 50).select(col("id"), concat(lit("s"), col("id")).as("s"))
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = names.add(funcName)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val bytes = try {
+      val b = graft.sources.ArrowIpc.toArrowStreamBytes(df)
+      // listener callbacks arrive asynchronously on the listener bus
+      val deadline = System.nanoTime() + 10000000000L
+      while (!names.contains("toArrowStreamBytes") && System.nanoTime() < deadline) Thread.sleep(20)
+      b
+    } finally spark.listenerManager.unregister(listener)
+    assert(names.contains("toArrowStreamBytes"), s"listener saw: $names")
+    // an imported frame keeps its real size, so a join against it can
+    // broadcast (an RDD scan would report spark.sql.defaultSizeInBytes)
+    val back = graft.sources.ArrowIpc.fromArrowStreamBytes(spark, bytes)
+    assert(back.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r }.size == 1)
+    val size = back.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size > 0 && size < 1000000, s"sizeInBytes=$size")
+    assert(back.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
   }
 
   test("IO: csv skip_rows drops physical lines before the header, no global window") {

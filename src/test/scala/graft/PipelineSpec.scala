@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalBridge
 import graft.faces.Faces
-import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions => V}
+import graft.functions.{TextFunctions => T, VectorFunctions => V}
+import graft.plans.SimHash64Expr
 
 /** Dedup / similarity / text / multimodal operator tests. */
 class PipelineSpec extends SparkSpec {
@@ -49,7 +51,9 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("simhash hamming ~0 for near-dups, large for distinct") {
-    val sims = docs.select(col("doc_id"), H.simhash64(T.tokens(col("text"))).as("s"))
+    // the kernel Dedup.simhashPairs runs
+    val sims = docs.select(col("doc_id"), InternalBridge.column(
+        SimHash64Expr(InternalBridge.expression(T.tokens(col("text"))))).as("s"))
       .as[(Long, Long)].collect().toMap
     assert(java.lang.Long.bitCount(sims(0L) ^ sims(3L)) == 0)
     assert(java.lang.Long.bitCount(sims(0L) ^ sims(1L)) <= 12)
