@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.InternalBridge.{column, expression}
 import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions => V}
-import graft.plans.{CosineSimilarityExpr, SimHash64Expr, SketchExprs, SpanHashPairsExpr}
+import graft.plans.{BloomExprs, CosineSimilarityExpr, SimHash64Expr, SketchExprs, SpanHashPairsExpr}
 
 /** Deduplication operators for training-data pipelines, all shuffle-lean:
   *
@@ -80,38 +80,25 @@ object Dedup {
     * anti-join (oracle qd35), but the shuffled fraction is ≈ the true dup
     * rate + fpp instead of 1.0. */
   def newSinceSnapshot(current: DataFrame, previous: DataFrame,
-                       textCol: String, fpp: Double = 0.01,
-                       expectedDistinct: Option[Long] = None): DataFrame = {
-    // the snapshot fingerprint set is read TWICE, not three times: the Bloom
-    // build (EAGER) and the lazy rescue anti-join, which recomputes the set
-    // once inside the caller's action. At 100 TB that is the honest shape:
-    // a snapshot too big to broadcast is also too big to pin in cache across
-    // the caller's job. The Bloom's expected-item count is a cost-free
-    // optimizer size estimate (or a caller hint) instead of an exact count()
-    // pass — sizing only trades filter bits against fpp, never correctness:
-    // an undersized Bloom raises the false-positive rate and every false
-    // positive is still removed by the rescue anti-join below.
-    val prevFps = previous.select(T.fingerprint(col(textCol)).as("__fp")).distinct()
-    val expected = math.max(64L, expectedDistinct.getOrElse {
-      val stats = previous.queryExecution.optimizedPlan.stats
-      stats.rowCount.map(_.toLong).getOrElse {
-        // sizeInBytes is compressed on-disk size for file sources, so rows
-        // are UNDER-estimated; the 4x overshoot buys the fpp margin back in
-        // bits. Cap the estimate where the Bloom itself (~10 bits/item at
-        // 1%) would outgrow a sane broadcast — beyond that the caller must
-        // size it explicitly via expectedDistinct.
-        val rowBytes = math.max(1, previous.schema.defaultSize)
-        val est = (stats.sizeInBytes.min(BigInt(1L << 50)) / rowBytes + 1).toLong
-        math.min(est * 4L, 1L << 27)
-      }
+                       textCol: String, fpp: Double = 0.01): DataFrame = {
+    // the snapshot fingerprints are computed inside the caller's action, by
+    // the Bloom subquery (no distinct: a repeated insert sets no new bit)
+    // and the rescue anti-join; no eager job, no persist. Item estimate:
+    // the optimizer's row count, else its size over the row width with a 4x
+    // overshoot (file sources report COMPRESSED bytes). Sizing only trades
+    // filter bits against fpp: the rescue anti-join removes every false
+    // positive.
+    val prevFps = previous.select(T.fingerprint(col(textCol)).as("__fp"))
+    val stats = previous.queryExecution.optimizedPlan.stats
+    val items = math.max(64L, stats.rowCount.map(_.toLong).getOrElse {
+      val rowBytes = math.max(1, previous.schema.defaultSize)
+      (stats.sizeInBytes.min(BigInt(1L << 50)) / rowBytes + 1).toLong * 4L
     })
-    val bytes = graft.plans.BloomExprs.serialize(
-      prevFps.stat.bloomFilter("__fp", expected, fpp))
     val cur = current.withColumn("__fp", T.fingerprint(col(textCol)))
-    val hit = graft.plans.BloomExprs.mightContain(col("__fp"), bytes)
+    val hit = BloomExprs.mightContain(col("__fp"), prevFps, "__fp", items, fpp)
     val definitelyNew = cur.filter(!hit)
     val rescuedFalsePositives = cur.filter(hit)
-      .join(prevFps, Seq("__fp"), "left_anti")
+      .join(prevFps.distinct(), Seq("__fp"), "left_anti")
     definitelyNew.unionByName(rescuedFalsePositives).drop("__fp")
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graft.InternalBridge.{column, expression}
 import graft.functions.{TextFunctions => T}
 import graft.operators.RangeId
-import graft.plans.{AnnExprs, C4KeepLinesExpr, DsirExprs, GopherStatsExpr, SketchExprs}
+import graft.plans.{AnnExprs, BloomExprs, C4KeepLinesExpr, DsirExprs, GopherStatsExpr, SketchExprs}
 
 /** Training-corpus preparation operators: deterministic splitting/sampling,
   * benchmark decontamination, context-window chunking, and sequence packing.
@@ -319,10 +319,15 @@ object Prep {
                     minShared: Int = 1): DataFrame = {
     def hashes(c: Column) = SketchExprs.shingleHashes(T.tokens(c), shingleK)
     val benchSet = bench.select(explode(hashes(col(textCol))).as("__s")).distinct()
-    val hits = corpus
-      .select(col(idCol).as("__id"), explode(hashes(col(textCol))).as("__s"))
-      .join(broadcast(benchSet), "__s")
-      .groupBy(col("__id")).agg(count(lit(1)).as("n_shared"))
+    val shingles = corpus.select(col(idCol).as("__id"), explode(hashes(col(textCol))).as("__s"))
+    flagShared(corpus, idCol, minShared, shingles.join(broadcast(benchSet), "__s"))
+  }
+
+  /** The corpus + `n_shared` + `contaminated`, from the `(__id, __s)` rows
+    * of its shingles found in the bench set. */
+  private def flagShared(corpus: DataFrame, idCol: String, minShared: Int,
+                         shared: DataFrame): DataFrame = {
+    val hits = shared.groupBy(col("__id")).agg(count(lit(1)).as("n_shared"))
     corpus.join(hits, corpus(idCol) === hits("__id"), "left")
       .drop("__id")
       .withColumn("n_shared", coalesce(col("n_shared"), lit(0L)))
@@ -333,10 +338,11 @@ object Prep {
     * [[contamination]], different scale envelope. [[contamination]] broadcasts
     * the benchmark shingle set as an exact hash relation, which caps the
     * reference at what fits in executor memory at ~40+ bytes/key. Here the
-    * reference ships as a Bloom filter (~10 bits/key at fpp=1e-2,
-    * [[graft.plans.BloomExprs]]): the corpus-side `might_contain` prefilter is
-    * a NARROW map that drops ~every shingle at scan speed, and only the
-    * survivors — ≈ |true hits| + fpp·|corpus shingles| — reach the exact
+    * reference becomes a Bloom filter (~10 bits/key at fpp=1e-2, built by a
+    * subquery inside the caller's action, [[graft.plans.BloomExprs]]): the
+    * corpus-side `might_contain` prefilter is a NARROW map that drops
+    * ~every shingle at scan speed, and only the survivors — ≈ |true hits| +
+    * fpp·|corpus shingles| — reach the exact
     * verification join, whose strategy Spark/AQE may pick freely because its
     * input is tiny regardless of reference-set size. Bloom filters have no
     * false negatives, so the verify join makes the composite EXACT: the qd18
@@ -347,49 +353,21 @@ object Prep {
     * snapshot decontamination, cross-corpus leakage scans. */
   def contaminationBloom(corpus: DataFrame, bench: DataFrame, idCol: String,
                          textCol: String, shingleK: Int = 5,
-                         minShared: Int = 1, fpp: Double = 0.01,
-                         expectedDistinct: Option[Long] = None): DataFrame = {
+                         minShared: Int = 1, fpp: Double = 0.01): DataFrame = {
     def hashes(df: DataFrame) = SketchExprs.shingleHashes(toks(df, textCol), shingleK)
-    // bench shingles are read twice, not three times: the Bloom build
-    // (EAGER, here) and the lazy verify join, which recomputes the distinct
-    // set once inside the caller's action (it is the SMALL side by
-    // assumption) — no persist, no retained cache blocks. The Bloom's
-    // expected-item count is a cost-free optimizer size estimate (or a
-    // caller hint) instead of the exact count() pass this op ran through
-    // round 10 (the same cut newSinceSnapshot took in round 10): sizing
-    // only trades filter bits against fpp, never correctness — the exact
-    // verify join below kills every false positive.
-    val benchSet = bench.select(explode(hashes(bench)).as("__s")).distinct()
-    val expected = math.max(64L, expectedDistinct.getOrElse {
-      val stats = bench.queryExecution.optimizedPlan.stats
-      // distinct shingles ≤ total shingles ≈ tokens ≈ text bytes / 6; the
-      // 4x overshoot buys the fpp margin back in bits, capped where the
-      // Bloom would outgrow a sane broadcast (size explicitly above that).
-      // CAVEAT (ADVICE r11): for parquet-backed frames sizeInBytes is the
-      // COMPRESSED size — well-compressed text can hold more distinct
-      // shingles than bytes/6*4, silently inflating the effective fpp and
-      // pushing extra rows into the exact verify join (correctness holds;
-      // the narrow-prefilter contract degrades). Pass `expectedDistinct`
-      // at call sites where bench is large or heavily compressed; the
-      // chosen count is logged below so a degraded sizing is visible.
-      val est = (stats.sizeInBytes.min(BigInt(1L << 50)) / 6 + 1).toLong
-      val chosen = math.min(math.max(est, 64L) * 4L, 1L << 27)
-      System.err.println(s"[graft] contaminationBloom: sizing Bloom for ~$chosen " +
-        s"expected distinct shingles (optimizer estimate ${stats.sizeInBytes} bytes; " +
-        "pass expectedDistinct= to override if bench text is large or well-compressed)")
-      chosen
-    })
-    val bytes = graft.plans.BloomExprs.serialize(
-      benchSet.stat.bloomFilter("__s", expected, fpp))
-    val hits = corpus
-      .select(col(idCol).as("__id"), explode(hashes(corpus)).as("__s"))
-      .filter(graft.plans.BloomExprs.mightContain(col("__s"), bytes))
-      .join(benchSet, "__s") // exact verify: kills the fpp false positives
-      .groupBy(col("__id")).agg(count(lit(1)).as("n_shared"))
-    corpus.join(hits, corpus(idCol) === hits("__id"), "left")
-      .drop("__id")
-      .withColumn("n_shared", coalesce(col("n_shared"), lit(0L)))
-      .withColumn("contaminated", col("n_shared") >= minShared)
+    // the bench shingles are computed inside the caller's action, by the
+    // Bloom subquery (no distinct: a repeated insert sets no new bit) and
+    // the exact verify join; no eager job, no persist.
+    // Item estimate: distinct shingles <= tokens ~ text bytes / 6, with a 4x
+    // overshoot because file sources report COMPRESSED bytes. Sizing only
+    // trades filter bits against fpp: the verify join removes every false
+    // positive.
+    val benchShingles = bench.select(explode(hashes(bench)).as("__s"))
+    val bytes = bench.queryExecution.optimizedPlan.stats.sizeInBytes.min(BigInt(1L << 50))
+    val items = math.max((bytes / 6 + 1).toLong, 64L) * 4L
+    val shingles = corpus.select(col(idCol).as("__id"), explode(hashes(corpus)).as("__s"))
+      .filter(BloomExprs.mightContain(col("__s"), benchShingles, "__s", items, fpp))
+    flagShared(corpus, idCol, minShared, shingles.join(benchShingles.distinct(), "__s"))
   }
 
   /** Near-duplicate decontamination: flag corpus docs whose estimated

@@ -5,13 +5,14 @@ import org.apache.spark.util.sketch.BloomFilter
 
 import graft.plans.BloomExprs
 
-/** Bloom-filter membership ([[graft.plans.BloomMightContainExpr]]) and the
-  * two exact composites built on it: bloom-prefiltered decontamination
-  * ([[graft.prep.Prep.contaminationBloom]]) and incremental snapshot dedup
-  * ([[graft.dedup.Dedup.newSinceSnapshot]]). The load-bearing property in
-  * every test: the Bloom has NO false negatives, so each composite equals its
-  * exact (filter-free) twin row-for-row — the false-positive rate only moves
-  * work, never answers. */
+/** Bloom-filter membership ([[graft.plans.BloomExprs]], on Spark's
+  * `might_contain`) and the two exact composites built on it:
+  * bloom-prefiltered decontamination ([[graft.prep.Prep.contaminationBloom]])
+  * and incremental snapshot dedup ([[graft.dedup.Dedup.newSinceSnapshot]]),
+  * whose filters are `bloom_filter_agg` subqueries run inside the caller's
+  * action. The load-bearing property in every test: the Bloom has NO false
+  * negatives, so each composite equals its exact (filter-free) twin
+  * row-for-row — the false-positive rate only moves work, never answers. */
 class BloomSpec extends SparkSpec {
   import spark.implicits._
 
@@ -131,5 +132,55 @@ class BloomSpec extends SparkSpec {
     val tight = graft.dedup.Dedup.newSinceSnapshot(current, previous, "text", fpp = 0.001)
       .orderBy("doc_id").collect()
     assert(loose.toSeq == tight.toSeq)
+  }
+
+  test("newSinceSnapshot with an empty previous snapshot keeps every current row") {
+    val docs = corpus(seed = 31, n = 200)
+    val firstCrawl = graft.dedup.Dedup.newSinceSnapshot(docs, docs.filter(col("doc_id") < 0), "text")
+      .orderBy("doc_id").collect()
+    assert(firstCrawl.toSeq == docs.orderBy("doc_id").collect().toSeq)
+  }
+
+  test("contaminationBloom with an empty bench flags nothing") {
+    val docs = corpus(seed = 32, n = 200)
+    val got = graft.prep.Prep.contaminationBloom(docs, docs.filter(col("doc_id") < 0),
+        "doc_id", "text", shingleK = 3)
+      .select("n_shared", "contaminated").collect()
+    assert(got.length == 200)
+    assert(got.forall(r => r.getLong(0) == 0L && !r.getBoolean(1)), "empty bench flagged a doc")
+  }
+
+  test("neither op starts a Spark job before the caller's action") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val docs = corpus(seed = 33, n = 200)
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    /** Jobs started on this thread while `body` runs. A marker job follows
+      * `body`; the bus delivers events in order, so once the marker is seen
+      * every job `body` started has been counted. */
+    def jobsDuring(body: => Unit): Int = {
+      sc.setJobGroup("bloom-op-call", "jobs started inside the library call")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("bloom-op-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!started.contains("bloom-op-marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(started.contains("bloom-op-marker"), "marker job never reached the listener")
+      val n = started.toArray.count(_ == "bloom-op-call")
+      started.clear()
+      n
+    }
+    sc.addSparkListener(listener)
+    try {
+      val bench = docs.filter(col("doc_id") % 13 === 0)
+      val previous = docs.filter(col("doc_id") % 3 === 0)
+      val current = docs.filter(col("doc_id") % 3 =!= 0)
+      assert(jobsDuring(graft.prep.Prep.contaminationBloom(docs, bench, "doc_id", "text")) == 0)
+      assert(jobsDuring(graft.dedup.Dedup.newSinceSnapshot(current, previous, "text")) == 0)
+    } finally sc.removeSparkListener(listener)
   }
 }

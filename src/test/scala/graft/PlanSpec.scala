@@ -396,6 +396,38 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), s"corpus-side sort-merge join:\n${p.take(1500)}")
   }
 
+  test("bloom decontamination: Spark's might_contain under codegen, one filter subquery (qd34)") {
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.execution.{FilterExec, ReusedSubqueryExec, ScalarSubquery, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.types.BinaryType
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val df = Faces("qd34_decontaminate_bloom").run(spark, SparkSpec.Sf0001)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val text = plan.toString
+    assert(text.contains("isFinalPlan=true"), s"expected executed adaptive plan:\n$text")
+    val prefilters = aqe.collect(plan) {
+      case f: FilterExec if f.condition.exists(_.isInstanceOf[BloomFilterMightContain]) => f
+    }
+    assert(prefilters.nonEmpty, s"no might_contain prefilter in:\n$text")
+    val codegen = aqe.collect(plan) { case w: WholeStageCodegenExec => w }
+    for (f <- prefilters)
+      assert(codegen.exists(_.child.find(_ eq f).isDefined), s"prefilter outside codegen:\n$f")
+    // the filter is built once: one bloom_filter_agg subquery, every other use reuses it
+    val subqueries = aqe.collect(plan) { case p => p }
+      .flatMap(_.expressions.flatMap(_.collect { case q: ScalarSubquery => q }))
+    val (reused, built) = subqueries.partition(_.plan.isInstanceOf[ReusedSubqueryExec])
+    assert(built.size == 1 && built.head.plan.toString.contains("bloom_filter_agg"),
+      s"expected one bloom_filter_agg subquery, got ${built.size}:\n$text")
+    assert(reused.nonEmpty, s"expected the other use to be a ReusedSubquery:\n$text")
+    // no serialized filter rides in the plan
+    val binaryLiterals = aqe.collect(plan) { case p => p }.flatMap(_.expressions)
+      .flatMap(_.collect { case l @ Literal(_, BinaryType) => l })
+    assert(binaryLiterals.isEmpty, s"filter bytes in the plan: $binaryLiterals")
+    assert("[0-9a-fA-F]{64,}".r.findFirstIn(text).isEmpty, s"hex payload in the plan:\n$text")
+  }
+
   test("near-dup decontamination: both bench sides broadcast, no signature shuffle") {
     val docs = SparkEntry.t(spark, "/root/testdata/sf0.001", "documents")
     val bench = docs.filter(col("doc_id") % 97 === 0)
