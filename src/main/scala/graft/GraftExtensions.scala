@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graft.InternalBridge
 import org.apache.spark.sql.types.DataType
 
@@ -173,7 +173,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("graft_bloom_might_contain",
         "graft_bloom_might_contain(key, filter) - Bloom membership test of a BIGINT key (filter = serialized spark BloomFilter binary literal)"),
       (exprs: Seq[Expression]) =>
-        BloomFilterMightContain(exprs(1), exprs(0))))
+        plans.BloomMightContainExpr(exprs(0), plans.BloomExprs.bytes(exprs(1)))))
 
     ext.injectFunction((FunctionIdentifier("graft_c4_keep_lines"),
       info("graft_c4_keep_lines",

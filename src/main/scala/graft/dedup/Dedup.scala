@@ -81,13 +81,13 @@ object Dedup {
     * rate + fpp instead of 1.0. */
   def newSinceSnapshot(current: DataFrame, previous: DataFrame,
                        textCol: String, fpp: Double = 0.01): DataFrame = {
-    // the snapshot fingerprints are computed inside the caller's action, by
-    // the Bloom subquery (no distinct: a repeated insert sets no new bit)
-    // and the rescue anti-join; no eager job, no persist. Item estimate:
-    // the optimizer's row count, else its size over the row width with a 4x
-    // overshoot (file sources report COMPRESSED bytes). Sizing only trades
-    // filter bits against fpp: the rescue anti-join removes every false
-    // positive.
+    // the snapshot fingerprints are read twice, not three times: the Bloom
+    // build (EAGER, no distinct: a repeated insert sets no new bit) and the
+    // lazy rescue anti-join inside the caller's action; no persist. Item
+    // estimate: the optimizer's row count, else its size over the row width
+    // with a 4x overshoot (file sources report COMPRESSED bytes). Sizing only
+    // trades filter bits against fpp: the rescue anti-join removes every
+    // false positive.
     val prevFps = previous.select(T.fingerprint(col(textCol)).as("__fp"))
     val stats = previous.queryExecution.optimizedPlan.stats
     val items = math.max(64L, stats.rowCount.map(_.toLong).getOrElse {

@@ -338,11 +338,10 @@ object Prep {
     * [[contamination]], different scale envelope. [[contamination]] broadcasts
     * the benchmark shingle set as an exact hash relation, which caps the
     * reference at what fits in executor memory at ~40+ bytes/key. Here the
-    * reference becomes a Bloom filter (~10 bits/key at fpp=1e-2, built by a
-    * subquery inside the caller's action, [[graft.plans.BloomExprs]]): the
-    * corpus-side `might_contain` prefilter is a NARROW map that drops
-    * ~every shingle at scan speed, and only the survivors — ≈ |true hits| +
-    * fpp·|corpus shingles| — reach the exact
+    * reference ships as a Bloom filter (~10 bits/key at fpp=1e-2,
+    * [[graft.plans.BloomExprs]]): the corpus-side `might_contain` prefilter is
+    * a NARROW map that drops ~every shingle at scan speed, and only the
+    * survivors — ≈ |true hits| + fpp·|corpus shingles| — reach the exact
     * verification join, whose strategy Spark/AQE may pick freely because its
     * input is tiny regardless of reference-set size. Bloom filters have no
     * false negatives, so the verify join makes the composite EXACT: the qd18
@@ -355,9 +354,9 @@ object Prep {
                          textCol: String, shingleK: Int = 5,
                          minShared: Int = 1, fpp: Double = 0.01): DataFrame = {
     def hashes(df: DataFrame) = SketchExprs.shingleHashes(toks(df, textCol), shingleK)
-    // the bench shingles are computed inside the caller's action, by the
-    // Bloom subquery (no distinct: a repeated insert sets no new bit) and
-    // the exact verify join; no eager job, no persist.
+    // the bench shingles are read twice, not three times: the Bloom build
+    // (EAGER, no distinct: a repeated insert sets no new bit) and the lazy
+    // verify join inside the caller's action; no persist.
     // Item estimate: distinct shingles <= tokens ~ text bytes / 6, with a 4x
     // overshoot because file sources report COMPRESSED bytes. Sizing only
     // trades filter bits against fpp: the verify join removes every false

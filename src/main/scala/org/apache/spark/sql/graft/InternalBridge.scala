@@ -47,7 +47,7 @@ object InternalBridge {
   /** Wrap a raw Catalyst Expression as a user-facing Column (the
     * `private[sql]` classic-module converter). Every library builder of a
     * native kernel (`graft.plans`) goes through here: typed arguments —
-    * codebooks, DSIR tables, bound tables, `k` — go straight into the
+    * codebooks, Bloom bytes, bound tables, `k` — go straight into the
     * expression's constructor, and the Column resolves on any session
     * without a function-registry entry. */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =

@@ -18,8 +18,8 @@ import graft.faces.Faces
   *   - model builders (DSIR log-ratio, bigram LM, Jaccard shingle sets):
   *     NO persist — multiply-referenced subplans dedupe via ReuseExchange
   *     inside the single action instead (asserted below);
-  *   - lazy reference filters (Bloom prefilters): a scalar subquery inside
-  *     the caller's action, no eager job and no persist;
+  *   - eager model extractions (Bloom builds): one `bloom_filter_agg`
+  *     action at call time, no persist;
   *   - bounded-result pipelines (flagship top-k, ANN neighbor lists):
   *     stages persist, the result localizes eagerly, stages release before
   *     the lambda returns;
