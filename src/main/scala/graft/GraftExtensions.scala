@@ -58,6 +58,8 @@ import org.apache.spark.sql.types.DataType
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
+  import GraftExtensions.{intArg, literalArg}
+
   private def info(name: String, usage: String): ExpressionInfo =
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
 
@@ -71,7 +73,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((FunctionIdentifier("graft_minhash"),
       info("graft_minhash", "graft_minhash(shingles, k) - k-permutation MinHash signature"),
       (exprs: Seq[Expression]) =>
-        plans.MinHashSignatureExpr(exprs(0), exprs(1).eval().asInstanceOf[Int])))
+        plans.MinHashSignatureExpr(exprs(0), intArg("graft_minhash", exprs(1), "k"))))
 
     ext.injectFunction((FunctionIdentifier("graft_simhash"),
       info("graft_simhash", "graft_simhash(tokens) - 64-bit SimHash sketch"),
@@ -79,18 +81,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
     ext.injectFunction((FunctionIdentifier("graft_shingles"),
       info("graft_shingles", "graft_shingles(tokens, k, distinct) - word k-shingles, optionally deduped"),
-      (exprs: Seq[Expression]) => plans.ShinglesExpr(exprs(0),
-        exprs(1).eval().asInstanceOf[Int], exprs(2).eval().asInstanceOf[Boolean])))
+      (exprs: Seq[Expression]) => plans.ShinglesExpr(exprs(0), intArg("graft_shingles", exprs(1), "k"),
+        literalArg("graft_shingles", exprs(2), "distinct") match {
+          case b: Boolean => b
+          case other => throw new IllegalArgumentException(
+            s"graft_shingles: distinct must be a BOOLEAN literal, got $other")
+        })))
 
     ext.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
       info("graft_shingle_hashes", "graft_shingle_hashes(tokens, k) - distinct XXH64 word k-shingle hashes"),
-      (exprs: Seq[Expression]) => plans.ShingleHashesExpr(exprs(0),
-        exprs(1).eval().asInstanceOf[Int])))
+      (exprs: Seq[Expression]) =>
+        plans.ShingleHashesExpr(exprs(0), intArg("graft_shingle_hashes", exprs(1), "k"))))
 
     ext.injectFunction((FunctionIdentifier("graft_top_ngram_share"),
       info("graft_top_ngram_share", "graft_top_ngram_share(tokens, n) - count share of the most frequent word n-gram"),
-      (exprs: Seq[Expression]) => plans.TopNgramShareExpr(exprs(0),
-        exprs(1).eval().asInstanceOf[Int])))
+      (exprs: Seq[Expression]) =>
+        plans.TopNgramShareExpr(exprs(0), intArg("graft_top_ngram_share", exprs(1), "n"))))
 
     ext.injectFunction((FunctionIdentifier("graft_langid"),
       info("graft_langid", "graft_langid(text) - stopword-dictionary language id (de/en/es/fr/zh/und)"),
@@ -103,33 +109,34 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((FunctionIdentifier("graft_cast_ansi"),
       info("graft_cast_ansi", "graft_cast_ansi(x, 'ddl-type') - strict cast (raises on overflow/malformed)"),
       (exprs: Seq[Expression]) => org.apache.spark.sql.catalyst.expressions.Cast(
-        exprs(0), DataType.fromDDL(exprs(1).eval().toString), None,
+        exprs(0), DataType.fromDDL(literalArg("graft_cast_ansi", exprs(1), "type").toString), None,
         org.apache.spark.sql.catalyst.expressions.EvalMode.ANSI)))
 
     ext.injectFunction((FunctionIdentifier("graft_replace_tz"),
       info("graft_replace_tz",
         "graft_replace_tz(ts, tz, ambiguous, non_existent) - wall-time reinterpretation with DST policies"),
       (exprs: Seq[Expression]) => plans.ReplaceTimeZoneExpr(exprs(0),
-        exprs(1).eval().toString, exprs(2).eval().toString, exprs(3).eval().toString)))
+        literalArg("graft_replace_tz", exprs(1), "tz").toString,
+        literalArg("graft_replace_tz", exprs(2), "ambiguous").toString,
+        literalArg("graft_replace_tz", exprs(3), "non_existent").toString)))
 
     ext.injectFunction((FunctionIdentifier("graft_deflate_ratio"),
       info("graft_deflate_ratio", "graft_deflate_ratio(text) - deflate/raw byte-count compression ratio"),
       (exprs: Seq[Expression]) => plans.DeflateRatioExpr(exprs(0))))
 
-    // literal-argument decoding: plans.PqExprs.floats /
-    // plans.BpeExprs.mergesOf etc. decode the SQL literals
-    def intArg(e: Expression): Int = e.eval().asInstanceOf[Int]
+    // array literals are decoded by plans.PqExprs.floats /
+    // plans.BpeExprs.mergesOf etc.
     ext.injectFunction((FunctionIdentifier("graft_pq_encode"),
       info("graft_pq_encode", "graft_pq_encode(vec, codebook, m, ksub) - PQ sub-codes (argmin-L2)"),
       (exprs: Seq[Expression]) => plans.PqEncodeExpr(exprs(0), plans.PqExprs.floats(exprs(1)),
-        intArg(exprs(2)), intArg(exprs(3)))))
+        intArg("graft_pq_encode", exprs(2), "m"), intArg("graft_pq_encode", exprs(3), "ksub"))))
     ext.injectFunction((FunctionIdentifier("graft_pq_lut"),
       info("graft_pq_lut", "graft_pq_lut(vec, codebook, m, ksub) - per-query ADC lookup table"),
       (exprs: Seq[Expression]) => plans.PqLutExpr(exprs(0), plans.PqExprs.floats(exprs(1)),
-        intArg(exprs(2)), intArg(exprs(3)))))
+        intArg("graft_pq_lut", exprs(2), "m"), intArg("graft_pq_lut", exprs(3), "ksub"))))
     ext.injectFunction((FunctionIdentifier("graft_pq_adc"),
       info("graft_pq_adc", "graft_pq_adc(codes, lut, ksub) - asymmetric-distance score"),
-      (exprs: Seq[Expression]) => plans.PqAdcExpr(exprs(0), exprs(1), intArg(exprs(2)))))
+      (exprs: Seq[Expression]) => plans.PqAdcExpr(exprs(0), exprs(1), intArg("graft_pq_adc", exprs(2), "ksub"))))
 
     ext.injectFunction((FunctionIdentifier("graft_bpe_encode"),
       info("graft_bpe_encode", "graft_bpe_encode(tokens, merges) - BPE sub-tokens under a trained merge table"),
@@ -138,16 +145,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
     ext.injectFunction((FunctionIdentifier("graft_span_hash_pairs"),
       info("graft_span_hash_pairs", "graft_span_hash_pairs(tokens, k) - per-window (uh, uh2) election hashes, stride k"),
-      (exprs: Seq[Expression]) => plans.SpanHashPairsExpr(exprs(0), intArg(exprs(1)))))
+      (exprs: Seq[Expression]) => plans.SpanHashPairsExpr(exprs(0),
+        intArg("graft_span_hash_pairs", exprs(1), "k"))))
 
     ext.injectFunction((FunctionIdentifier("graft_nearest_cells"),
       info("graft_nearest_cells", "graft_nearest_cells(vec, cells, centroids, dim, p) - top-p nearest IVF cells"),
       (exprs: Seq[Expression]) => plans.NearestCellsExpr(exprs(0), plans.AnnExprs.longs(exprs(1)),
-        plans.AnnExprs.doubles(exprs(2)), intArg(exprs(3)), intArg(exprs(4)))))
+        plans.AnnExprs.doubles(exprs(2)), intArg("graft_nearest_cells", exprs(3), "dim"),
+        intArg("graft_nearest_cells", exprs(4), "p"))))
 
     ext.injectFunction((FunctionIdentifier("graft_topk"),
       info("graft_topk", "graft_topk(score, id, k) - bounded-state per-group top-k (best-first array<struct<id, score>>)"),
-      (exprs: Seq[Expression]) => plans.BoundedTopKAgg(exprs(0), exprs(1), intArg(exprs(2)))))
+      (exprs: Seq[Expression]) => plans.BoundedTopKAgg(exprs(0), exprs(1),
+        intArg("graft_topk", exprs(2), "k"))))
 
     ext.injectFunction((FunctionIdentifier("graft_topfreq"),
       info("graft_topfreq", "graft_topfreq(tokens, k) - Misra-Gries heavy hitters: k-counter mergeable summary (est desc array<struct<item, est>>)"),
@@ -179,7 +189,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("graft_c4_keep_lines",
         "graft_c4_keep_lines(text, minWords) - C4 line filter: struct<kept_text, n_kept_lines> in one pass"),
       (exprs: Seq[Expression]) =>
-        plans.C4KeepLinesExpr(exprs(0), plans.C4Exprs.intArg(exprs(1), "graft_c4_keep_lines"))))
+        plans.C4KeepLinesExpr(exprs(0), intArg("graft_c4_keep_lines", exprs(1), "minWords"))))
 
     ext.injectFunction((FunctionIdentifier("graft_gopher_stats"),
       info("graft_gopher_stats",
@@ -195,6 +205,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+
+  /** The value of SQL function `fn`'s literal argument `name`; a column or
+    * NULL argument fails with both named. */
+  private def literalArg(fn: String, e: Expression, name: String): Any = {
+    require(e.foldable, s"$fn: $name must be a literal, got ${e.sql}")
+    val v = e.eval()
+    require(v != null, s"$fn: $name must not be NULL")
+    v
+  }
+
+  private def intArg(fn: String, e: Expression, name: String): Int =
+    literalArg(fn, e, name) match {
+      case i: Int => i
+      case l: Long if l.isValidInt => l.toInt
+      case other => throw new IllegalArgumentException(s"$fn: $name must be an INT literal, got $other")
+    }
 
   /** Entries in Spark's generated-class cache (Spark's default is 100).
     * The cache is keyed on (context class loader, source), and in local

@@ -16,9 +16,11 @@ import graft.plans.{BlocklistHitsExpr, DeflateRatioExpr, DupLineStatsExpr, DupNg
   */
 object TextFunctions {
 
-  /** Whitespace tokenization (regex \s+), empty-trailing removed. */
-  def tokens(text: Column): Column =
-    filter(split(text, "\\s+"), t => t =!= lit(""))
+  /** Whitespace tokenization (regex \s+), empty-trailing removed. No
+    * lambda: Spark's `filter` is interpreted and keeps the operator out of
+    * whole-stage codegen; `split` yields no null elements, so
+    * `array_remove` drops exactly the empty strings. */
+  def tokens(text: Column): Column = array_remove(split(text, "\\s+"), "")
 
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(tokens(text))

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -33,7 +32,7 @@ import org.apache.spark.sql.types._
   */
 case class NearestCellsExpr(child: Expression, cellIds: Array[Long],
                             centroids: Array[Double], dim: Int, p: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
 
   require(dim > 0 && cellIds.length * dim == centroids.length,
     s"nearest_cells: ${cellIds.length} cells x dim $dim != ${centroids.length} centroid floats")
@@ -52,16 +51,6 @@ case class NearestCellsExpr(child: Expression, cellIds: Array[Long],
     case _ => NullType
   }
 
-  private def numAt(arr: ArrayData, i: Int): Double = elemType match {
-    case FloatType => arr.getFloat(i).toDouble
-    case DoubleType => arr.getDouble(i)
-    case IntegerType => arr.getInt(i).toDouble
-    case LongType => arr.getLong(i).toDouble
-    case ShortType => arr.getShort(i).toDouble
-    case ByteType => arr.getByte(i).toDouble
-    case other => throw new IllegalArgumentException(s"unsupported element type $other")
-  }
-
   // NULL embedding reproduces the crossJoin+window formulation it replaced:
   // cosine is null against every centroid, so the sim-desc-nulls-last,
   // cell-asc window order assigned the LOWEST p cell ids. Returning them —
@@ -69,12 +58,11 @@ case class NearestCellsExpr(child: Expression, cellIds: Array[Long],
   // keeps the parity exact and keeps null-embedding corpus rows visible in
   // the index instead of vanishing.
   override def nullable: Boolean = false
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) {
-      val m = math.min(p, cellIds.length)
-      ArrayData.toArrayData(cellIds.sorted.take(m))
-    } else nullSafeEval(v)
+  override protected def nullAware: Boolean = true
+  override def eval(input: InternalRow): Any = evalInputs(Array(child.eval(input)))
+  override def evalInputs(inputs: Array[Any]): Any = inputs(0) match {
+    case null => ArrayData.toArrayData(cellIds.sorted.take(math.min(p, cellIds.length)))
+    case v => nullSafeEval(v)
   }
 
   override def nullSafeEval(input: Any): Any = {
@@ -94,7 +82,7 @@ case class NearestCellsExpr(child: Expression, cellIds: Array[Long],
       var dot = 0.0; var na = 0.0; var nb = 0.0
       var i = 0
       while (i < n) {
-        val xv = numAt(vec, i); val yv = centroids(off + i)
+        val xv = CosineSimilarityExpr.numAt(vec, i, elemType); val yv = centroids(off + i)
         dot += xv * yv; na += xv * xv; nb += yv * yv
         i += 1
       }
@@ -304,16 +292,6 @@ case class VecSumAgg(child: Expression,
     case _ => NullType
   }
 
-  private def numAt(arr: ArrayData, i: Int): Double = elemType match {
-    case FloatType => arr.getFloat(i).toDouble
-    case DoubleType => arr.getDouble(i)
-    case IntegerType => arr.getInt(i).toDouble
-    case LongType => arr.getLong(i).toDouble
-    case ShortType => arr.getShort(i).toDouble
-    case ByteType => arr.getByte(i).toDouble
-    case other => throw new IllegalArgumentException(s"unsupported element type $other")
-  }
-
   override def createAggregationBuffer(): Array[Double] = Array.emptyDoubleArray
 
   private def grown(buf: Array[Double], n: Int): Array[Double] =
@@ -327,7 +305,7 @@ case class VecSumAgg(child: Expression,
       val out = grown(buffer, arr.numElements())
       var i = 0
       while (i < arr.numElements()) {
-        if (!arr.isNullAt(i)) out(i) += numAt(arr, i)
+        if (!arr.isNullAt(i)) out(i) += CosineSimilarityExpr.numAt(arr, i, elemType)
         i += 1
       }
       out

@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -31,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * PipelineSpec including both special code points.
   */
 case class BlocklistHitsExpr(child: Expression, phrases: Array[String])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
 
   require(phrases != null && phrases.nonEmpty,
     "graft_blocklist_hits: empty phrase list")

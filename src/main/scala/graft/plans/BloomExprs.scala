@@ -6,7 +6,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graft.InternalBridge.{column, expression}
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
@@ -23,12 +22,12 @@ import org.apache.spark.util.sketch.BloomFilter
   * constructor field, not a `Literal` child, so plan strings, the SQL UI
   * and every AQE plan update print `graft_bloom_might_contain(key)` instead
   * of the filter's hex (megabytes per plan for a corpus-scale filter).
-  * Code-generated: the generated row loop calls [[mightContainLong]] on the
-  * referenced expression, which parses the filter once per task.
+  * Code-generated through [[KernelCodegen]]; the filter is parsed once per
+  * task.
   *
   * Reference twin: Polars.NET has no Bloom surface (SURVEY §2). */
 case class BloomMightContainExpr(child: Expression, filterBytes: Array[Byte])
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCodegen {
 
   require(filterBytes != null && filterBytes.nonEmpty,
     "graft_bloom_might_contain: empty filter payload")
@@ -46,15 +45,7 @@ case class BloomMightContainExpr(child: Expression, filterBytes: Array[Byte])
   @transient private lazy val filter: BloomFilter =
     BloomFilter.readFrom(new ByteArrayInputStream(filterBytes))
 
-  /** The per-row entry point the generated code calls. */
-  def mightContainLong(key: Long): Boolean = filter.mightContainLong(key)
-
-  override def nullSafeEval(input: Any): Any = mightContainLong(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomMightContain", this, classOf[BloomMightContainExpr].getName)
-    defineCodeGen(ctx, ev, key => s"$ref.mightContainLong($key)")
-  }
+  override def nullSafeEval(input: Any): Any = filter.mightContainLong(input.asInstanceOf[Long])
 
   override def prettyName: String = "graft_bloom_might_contain"
 

@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -14,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * pinned to `Bpe.encodeWord` (spec-asserted): per word, repeatedly merge
   * the lowest-rank adjacent pair until none remains. */
 case class BpeEncodeExpr(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 

@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -31,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the ErrorLSC/Polars.NET surface (SURVEY §2 north-star ops).
   */
 case class C4KeepLinesExpr(child: Expression, minWordsPerLine: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
 
   require(minWordsPerLine >= 0,
     s"graft_c4_keep_lines: minWordsPerLine must be >= 0, got $minWordsPerLine")
@@ -109,14 +108,4 @@ case class C4KeepLinesExpr(child: Expression, minWordsPerLine: Int)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object C4Exprs {
-
-  private[graft] def intArg(e: Expression, name: String): Int = e.eval() match {
-    case i: Int => i
-    case l: Long => l.toInt
-    case other => throw new IllegalArgumentException(
-      s"$name: expected a foldable INT literal argument, got $other")
-  }
 }

@@ -4,7 +4,6 @@ import java.util.zip.Deflater
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -17,13 +16,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * `topNgramShare`). Ratios: ~0.0x for degenerate repetition, ~0.6-0.8 for
   * prose, >1 for incompressible noise (deflate overhead exceeds savings).
   *
-  * Per-row cost is the deflate loop itself, so following the house rule for
-  * sketch expressions this is eval-only ([[CodegenFallback]]); the Deflater
-  * (which owns native zlib state) is reused per thread rather than allocated
-  * per row, and compressed bytes are counted, never materialized.
+  * The Deflater (which owns native zlib state) is reused per thread rather
+  * than allocated per row, and compressed bytes are counted, never
+  * materialized.
   */
 case class DeflateRatioExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
 
   override def dataType: DataType = DoubleType
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.InternalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
 
@@ -29,7 +28,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
   * with any `pmod(xxhash64(w), B)` the model-building aggregation uses.
   */
 case class DsirScoreExpr(child: Expression, table: Array[Double])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
 
   require(table != null && table.nonEmpty, "graft_dsir_score: empty log-ratio table")
 

@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -31,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * chars.
   */
 case class GopherStatsExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
 
   import GopherStatsExpr._
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.InternalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 
 /** `graft_bucketize(v, boundaries)` → int: index of the first bucket whose
@@ -19,7 +18,7 @@ import org.apache.spark.sql.types._
   * near-uniform bounded dimension — raw bit-masking (`pmod`) drops the high
   * bits and scrambles locality for any column wider than `2^bits`. */
 case class BucketizeExpr(child: Expression, boundaries: Array[Double])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
 
   require(boundaries.nonEmpty, "graft_bucketize: boundaries must be non-empty")
   require(boundaries.zip(boundaries.tail).forall { case (a, b) => a <= b },
@@ -33,7 +32,7 @@ case class BucketizeExpr(child: Expression, boundaries: Array[Double])
       s"graft_bucketize expects a numeric value, got $other")
   }
 
-  override protected def nullSafeEval(input: Any): Any = {
+  override def nullSafeEval(input: Any): Any = {
     val v = child.dataType match {
       case DoubleType => input.asInstanceOf[Double]
       case FloatType => input.asInstanceOf[Float].toDouble

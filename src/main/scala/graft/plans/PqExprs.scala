@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.InternalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -22,11 +21,9 @@ import org.apache.spark.sql.types._
   * `[m][ksub][subDim]` flattened): it is tiny by construction (m·ksub·subDim
   * floats, e.g. 16·dim for ksub=16) and reaches every executor inside the
   * serialized plan — the same mechanism the sign-LSH plane literals use.
-  * Eval-only per the house rule for sketch kernels: the per-row cost IS the
-  * tight loop, codegen would add nothing measurable.
   */
 case class PqEncodeExpr(child: Expression, codebook: Array[Float], m: Int, ksub: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
 
   // validate BEFORE the division: m*ksub == 0 (reachable via the
   // graft_pq_* SQL functions) must fail with this message, not an
@@ -89,7 +86,7 @@ case class PqEncodeExpr(child: Expression, codebook: Array[Float], m: Int, ksub:
   * dot(query_sub(mi), centroid(mi, j)). On unit-normalized inputs the ADC
   * sum of these entries estimates cosine similarity. */
 case class PqLutExpr(child: Expression, codebook: Array[Float], m: Int, ksub: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
 
   require(m > 0 && ksub > 0, s"pq_lut: m and ksub must be positive, got m=$m ksub=$ksub")
   private val subDim = codebook.length / (m * ksub)
@@ -141,7 +138,7 @@ case class PqLutExpr(child: Expression, codebook: Array[Float], m: Int, ksub: In
 
 /** Asymmetric-distance score: m lookups + adds per corpus row. */
 case class PqAdcExpr(left: Expression, right: Expression, ksub: Int)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with KernelCodegen {
 
   override def dataType: DataType = DoubleType
 

@@ -2,8 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** Bucket id of a (possibly multi-column) order-key tuple against a SORTED
@@ -23,12 +21,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * generated code grew O(P) and fell out of whole-stage codegen's method
   * limits long before that.
   *
-  * CODEGEN (r18 verdict item 5): the expression implements `doGenCode` —
-  * child key expressions evaluate inside the surrounding WholeStageCodegen
-  * span (fused with the scan/project that feeds them) and the row pays one
-  * call into [[bucketOf]] on the referenced expression object. The previous
-  * `CodegenFallback` forced an interpreted `eval(InternalRow)` per row and
-  * kept the hot path of every global operator outside codegen.
+  * Code-generated through [[KernelCodegen]]: the key children run inside
+  * the surrounding whole-stage codegen span and each row pays one call into
+  * [[evalInputs]]. Nulls are keys, so the kernel is null-aware.
   *
   * `bounds` rows hold CATALYST-INTERNAL values (UTF8String, micros longs,
   * Decimal, ...) in children order and must be strictly increasing under
@@ -39,7 +34,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * would compute for the same directions. */
 case class RangeBucketExpr(children: Seq[Expression], asc: Seq[Boolean],
                            bounds: Array[Array[Any]])
-    extends Expression {
+    extends Expression with KernelCodegen {
 
   require(children.nonEmpty && children.length == asc.length,
     s"graft_range_bucket: ${children.length} keys vs ${asc.length} directions")
@@ -47,6 +42,7 @@ case class RangeBucketExpr(children: Seq[Expression], asc: Seq[Boolean],
     "graft_range_bucket: bound arity must match key arity")
 
   override def nullable: Boolean = false
+  override protected def nullAware: Boolean = true
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_range_bucket"
   // the bound table is data, not a child expression — fold nothing
@@ -80,7 +76,7 @@ case class RangeBucketExpr(children: Seq[Expression], asc: Seq[Boolean],
   /** Binary search shared by the interpreted and generated paths: first
     * index whose bound the key does NOT sort after == the count of bounds
     * it does sort after (bounds strictly increasing). */
-  def bucketOf(key: Array[Any]): Int = {
+  override def evalInputs(key: Array[Any]): Any = {
     var lo = 0
     var hi = bounds.length
     while (lo < hi) {
@@ -94,32 +90,7 @@ case class RangeBucketExpr(children: Seq[Expression], asc: Seq[Boolean],
     val key = new Array[Any](children.length)
     var i = 0
     while (i < key.length) { key(i) = children(i).eval(input); i += 1 }
-    bucketOf(key)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("rangeBucketExpr", this,
-      classOf[RangeBucketExpr].getName)
-    val keyArr = ctx.freshName("rbKey")
-    val childCodes = children.map(_.genCode(ctx))
-    // explicit valueOf boxing for primitive children (janino's autoboxing
-    // coverage is incomplete); reference-typed values assign directly
-    val fill = children.zip(childCodes).zipWithIndex.map { case ((ch, c), i) =>
-      val boxed =
-        if (CodeGenerator.isPrimitiveType(ch.dataType))
-          s"${CodeGenerator.boxedType(ch.dataType)}.valueOf(${c.value})"
-        else s"${c.value}"
-      s"""
-         |${c.code}
-         |$keyArr[$i] = ${c.isNull} ? null : $boxed;
-       """.stripMargin
-    }.mkString("\n")
-    ev.copy(code =
-      code"""
-        |Object[] $keyArr = new Object[${children.length}];
-        |$fill
-        |${CodeGenerator.javaType(dataType)} ${ev.value} = $ref.bucketOf($keyArr);
-       """.stripMargin, isNull = FalseLiteral)
+    evalInputs(key)
   }
 
   override protected def withNewChildrenInternal(

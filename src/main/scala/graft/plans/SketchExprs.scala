@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.InternalBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.catalyst.expressions.XXH64
@@ -19,11 +18,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * do the math in one tight JVM loop per row:
   * hash each shingle once (XXH64 over the UTF-8 bytes), then derive the k
   * signature positions with multiply-add universal mixing — ~1000× less
-  * expression-tree overhead. Eval-only (`CodegenFallback`): the per-row cost
-  * is the loop body itself, so codegen would add nothing measurable.
+  * expression-tree overhead.
   */
 case class MinHashSignatureExpr(child: Expression, numHashes: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
+  require(numHashes >= 1, s"minhash: numHashes must be >= 1, got $numHashes")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -76,7 +75,7 @@ case class MinHashSignatureExpr(child: Expression, numHashes: Int)
 /** 64-bit SimHash over a token array: each token's XXH64 (seed 42, the
   * seed of Spark's `xxhash64`) votes +1/-1 per bit; an output bit is set
   * iff its vote is positive. One loop per row. */
-case class SimHash64Expr(child: Expression) extends UnaryExpression with CodegenFallback {
+case class SimHash64Expr(child: Expression) extends UnaryExpression with KernelCodegen {
 
   override def dataType: DataType = LongType
 
@@ -125,7 +124,7 @@ case class SimHash64Expr(child: Expression) extends UnaryExpression with Codegen
   * null-intolerant expression) where the HOF yields `[""]`.
   */
 case class ShinglesExpr(child: Expression, k: Int, distinct: Boolean)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
   require(k >= 1, s"shingle size must be >= 1, got $k")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -189,7 +188,7 @@ case class ShinglesExpr(child: Expression, k: Int, distinct: Boolean)
   * entirely (no concat allocation survives the loop).
   */
 case class ShingleHashesExpr(child: Expression, k: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
   require(k >= 1, s"shingle size must be >= 1, got $k")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -250,7 +249,7 @@ case class ShingleHashesExpr(child: Expression, k: Int)
   * units stream, which share this expression.
   */
 case class SpanHashPairsExpr(child: Expression, k: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
   require(k >= 1, s"span size must be >= 1, got $k")
 
   override def dataType: DataType = ArrayType(StructType(Seq(
@@ -305,7 +304,7 @@ case class SpanHashPairsExpr(child: Expression, k: Int)
   * counts — negligible per-document.
   */
 case class TopNgramShareExpr(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
   require(n >= 1, s"ngram size must be >= 1, got $n")
 
   override def dataType: DataType = DoubleType
@@ -363,7 +362,7 @@ case class TopNgramShareExpr(child: Expression, n: Int)
   * lines, exactly the input this filter exists for. Here: one hash count
   * per line, one accumulation pass. Line-less documents → (0.0, 0.0).
   */
-case class DupLineStatsExpr(child: Expression) extends UnaryExpression with CodegenFallback {
+case class DupLineStatsExpr(child: Expression) extends UnaryExpression with KernelCodegen {
 
   override def dataType: DataType = StructType(Seq(
     StructField("dup_line_frac", DoubleType, nullable = false),
@@ -420,15 +419,14 @@ case class DupLineStatsExpr(child: Expression) extends UnaryExpression with Code
   * whole-array shingle (count 1 → fraction 0.0 — same convention as
   * [[TopNgramShareExpr]]); empty arrays → all fractions 0.0.
   *
-  * Why a multi-n profile instead of one expression per n: the expressions
-  * are CodegenFallback, so six separate calls would re-evaluate the
-  * `split`-based token child six times per row on the interpreted path;
-  * here the token array is materialized once and each n adds only its own
-  * window walk. Counting keys on the n-gram STRING (not a 64-bit hash) so
-  * the fraction can never diverge from the string-grouped SQL oracle.
+  * Why a multi-n profile instead of one expression per n: six separate
+  * calls would walk the token array six times per row; here the token
+  * array is materialized once and each n adds only its own window walk.
+  * Counting keys on the n-gram STRING (not a 64-bit hash) so the fraction
+  * can never diverge from the string-grouped SQL oracle.
   */
 case class DupNgramProfileExpr(child: Expression, minN: Int, maxN: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
   require(minN >= 1 && maxN >= minN,
     s"ngram range must satisfy 1 <= minN <= maxN, got [$minN, $maxN]")
 
@@ -509,7 +507,7 @@ case class DupNgramProfileExpr(child: Expression, minN: Int, maxN: Int)
   * on the non-null corpus but worth knowing if a caller feeds raw scrapes;
   * `coalesce(langId(c), lit("und"))` restores the HOF behavior.
   */
-case class LangIdExpr(child: Expression) extends UnaryExpression with CodegenFallback {
+case class LangIdExpr(child: Expression) extends UnaryExpression with KernelCodegen {
 
   override def dataType: DataType = StringType
 
@@ -570,11 +568,10 @@ case class LangIdExpr(child: Expression) extends UnaryExpression with CodegenFal
   * stage is exactly row-pair-heavy). Survivors return the EXACT size, so the
   * caller's jaccard value is unchanged; -1 only ever replaces pairs that are
   * provably below threshold (the epsilon relaxes r downward — bailing never
-  * fires on a borderline pass). Eval-only like the other sketch kernels: the
-  * cost is the merge loop itself. */
+  * fires on a borderline pass). */
 case class SortedLongInterSizeExpr(left: Expression, right: Expression,
                                    threshold: Double)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with CodegenFallback {
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with KernelCodegen {
 
   require(threshold > 0.0 && threshold <= 1.0,
     s"graft_sorted_inter_size: threshold must be in (0,1], got $threshold")

@@ -3,7 +3,6 @@ package graft.plans
 import java.time.{LocalDateTime, ZoneId, ZoneOffset}
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, TimestampNTZType, TimestampType}
 
 /** `replace_time_zone` with the reference's DST policies
@@ -15,8 +14,7 @@ import org.apache.spark.sql.types.{DataType, TimestampNTZType, TimestampType}
   * the zone rules' default and shifts non-existent ones — no policy hook.
   * This expression consults `ZoneRules.getValidOffsets` per value:
   * 2 offsets = ambiguous (clocks fell back), 0 = non-existent (spring-forward
-  * gap), 1 = normal. `CodegenFallback`: tz replacement is a fidelity corner,
-  * not a scan hot path — per-row cost is one zone-rules lookup either way.
+  * gap), 1 = normal.
   *
   * Input is the naive wall time: TIMESTAMP_NTZ, or TIMESTAMP whose UTC wall
   * clock carries the naive value (this project runs session TZ = UTC, so the
@@ -25,7 +23,7 @@ import org.apache.spark.sql.types.{DataType, TimestampNTZType, TimestampType}
   */
 case class ReplaceTimeZoneExpr(child: Expression, tz: String,
                                ambiguous: String, nonExistent: String)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
 
   require(Set("raise", "earliest", "latest", "null")(ambiguous),
     s"ambiguous policy must be raise|earliest|latest|null, got $ambiguous")

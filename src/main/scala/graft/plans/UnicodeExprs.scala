@@ -4,7 +4,6 @@ import java.text.Normalizer
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -14,8 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * identically: "café" composed vs decomposed is one document, not two).
   *
   * Spark exposes no normalization function, so this wraps the JDK's
-  * (Unicode-standard NFC/NFD/NFKC/NFKD) in an eval-only kernel: per-row
-  * String work IS the cost, codegen would add nothing. The fast path skips
+  * (Unicode-standard NFC/NFD/NFKC/NFKD). The fast path skips
   * allocation entirely when the input is already normalized (true for
   * ~every ASCII/web document — `Normalizer.isNormalized` is a cheap scan).
   *
@@ -24,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * and are spec-verified.
   */
 case class NormalizeUnicodeExpr(child: Expression, form: Normalizer.Form)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
 
   override def dataType: DataType = StringType
 

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
 
@@ -7,8 +8,10 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExc
   * print its final post-execution plan (AQE's final plan, with reused
   * exchanges and whole-stage-codegen spans as they ran), its per-node
   * timings, and one summary line counting shuffle, broadcast and reused
-  * exchanges and WholeStageCodegen nodes. Counts come from node classes, so
-  * a broadcast or reused exchange never counts as a shuffle.
+  * exchanges, WholeStageCodegen nodes, and the `CodegenFallback`
+  * expressions in the plan's nodes, with their class names. Counts come
+  * from node classes, so a broadcast or reused exchange never counts as a
+  * shuffle.
   *
   * Usage: sbt "runMain graft.tools.Explain <query> [sfDir]"
   */
@@ -25,10 +28,13 @@ object Explain {
     println(s"=== $name node timings ===")
     timings.show(1000, truncate = false)
     val nodes = graft.api.Profile.planNodes(df.queryExecution.executedPlan)
+    val fallback = nodes.flatMap(_.expressions)
+      .flatMap(_.collect { case f: CodegenFallback => f.getClass.getSimpleName })
     println(s"[explain] shuffle_exchanges=${nodes.count(_.isInstanceOf[ShuffleExchangeLike])} " +
       s"broadcast_exchanges=${nodes.count(_.isInstanceOf[BroadcastExchangeLike])} " +
       s"reused_exchanges=${nodes.count(_.isInstanceOf[ReusedExchangeExec])} " +
-      s"wscg=${nodes.count(_.isInstanceOf[WholeStageCodegenExec])}")
+      s"wscg=${nodes.count(_.isInstanceOf[WholeStageCodegenExec])} " +
+      s"fallback_exprs=${fallback.size}${fallback.distinct.sorted.mkString("[", ",", "]")}")
     spark.stop()
   }
 }

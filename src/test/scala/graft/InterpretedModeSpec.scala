@@ -4,12 +4,11 @@ package graft
   * queries.
   *
   * Every custom Catalyst expression in `graft.plans` evaluates through two
-  * independent paths: janino-compiled code (`doGenCode`, or the fallback
-  * wrapper Spark generates for `CodegenFallback` nodes inside whole-stage
-  * spans) and the interpreted `eval` used when codegen is disabled or
-  * bails out (wide schemas, 64KB method limits, `NO_CODEGEN` factory
-  * mode). A divergence between the two is a silent wrong-answer bug that
-  * the DuckDB oracle can't see (the driver runs one mode only) — this spec
+  * independent paths: janino-compiled code (`KernelCodegen`'s `doGenCode`)
+  * and the interpreted `eval` used when codegen is disabled or bails out
+  * (wide schemas, 64KB method limits, `NO_CODEGEN` factory mode). A
+  * divergence between the two is a silent wrong-answer bug that the
+  * DuckDB oracle can't see (the driver runs one mode only) — this spec
   * runs each selected query in a child session with
   * `spark.sql.codegen.wholeStage=false` and
   * `spark.sql.codegen.factoryMode=NO_CODEGEN` and requires the result
@@ -111,5 +110,74 @@ class InterpretedModeSpec extends SparkSpec {
   test("interpreted evaluation == codegen evaluation on 20 composite pipeline faces") {
     val bad = diverged(interpSession(), CompositeFaces)
     assert(bad.isEmpty, s"interpreted mode diverged on:\n${bad.mkString("\n")}")
+  }
+
+  /** Every scalar kernel over a small frame with a null row, an empty text,
+    * a zero vector and DST-gap/overlap wall times: the generated code's null
+    * checks, null results and (un)boxing against `eval`. The frame comes
+    * from an RDD, so no optimizer rule evaluates the kernels on a local
+    * relation. */
+  private def allKernels(s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.functions.{col, sort_array}
+    import org.apache.spark.sql.graft.InternalBridge.{column, expression}
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.plans._
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    val rows = Seq(
+      Row(1L, "the cat sat.\nthe cat sat.\nJavaScript is off.", "the dog",
+        Seq(1.0, 0.0, 2.0, 1.0), Seq(1.0, 1.0, 1.0, 1.0), 3.0, ts("2024-06-15 12:00:00")),
+      Row(2L, "cafe\u0301 and the\n\u2022 item...\n- of with that", "cat the the",
+        Seq(0.0, 0.0, 0.0, 0.0), Seq(1.0, 2.0, 3.0, 4.0), 0.5, ts("2024-03-31 02:30:00")),
+      Row(3L, "", "", Seq(2.0, 2.0, 2.0, 2.0), Seq(0.0, 0.0, 0.0, 0.0), 5.0,
+        ts("2024-10-27 02:30:00")),
+      Row(null, null, null, null, null, null, null))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("text", StringType),
+      StructField("text2", StringType), StructField("vec", ArrayType(DoubleType)),
+      StructField("vec2", ArrayType(DoubleType)), StructField("num", DoubleType),
+      StructField("ts", TimestampType)))
+    val df = s.createDataFrame(s.sparkContext.parallelize(rows, 2), schema)
+    def e(name: String) = expression(col(name))
+    val toks = expression(graft.functions.TextFunctions.tokens(col("text")))
+    val toks2 = expression(graft.functions.TextFunctions.tokens(col("text2")))
+    val codebook = Array[Float](0f, 1f, 1f, 0f, 2f, 2f, -1f, 0f)
+    val bloom = org.apache.spark.util.sketch.BloomFilter.create(64L, 0.01)
+    bloom.putLong(1L)
+    val kernels: Seq[Expression] = Seq(
+      MinHashSignatureExpr(toks, 8), MinHashSignatureExpr(ShingleHashesExpr(toks, 2), 8),
+      SimHash64Expr(toks), ShinglesExpr(toks, 2, distinct = true),
+      ShinglesExpr(toks, 2, distinct = false), SpanHashPairsExpr(toks, 2),
+      TopNgramShareExpr(toks, 2), DupLineStatsExpr(e("text")), DupNgramProfileExpr(toks, 1, 3),
+      LangIdExpr(e("text")),
+      SortedLongInterSizeExpr(expression(sort_array(column(ShingleHashesExpr(toks, 1)))),
+        expression(sort_array(column(ShingleHashesExpr(toks2, 1)))), 0.3),
+      DeflateRatioExpr(e("text")), BpeEncodeExpr(toks, Seq(("t", "h"), ("th", "e"))),
+      PqAdcExpr(PqEncodeExpr(e("vec"), codebook, 2, 2), PqLutExpr(e("vec2"), codebook, 2, 2), 2),
+      NearestCellsExpr(e("vec"), Array(3L, 1L, 2L),
+        Array(1.0, 0.0, 0.0, 0.0, 0.0, 1.0, 0.0, 0.0, 1.0, 1.0, 1.0, 1.0), 4, 2),
+      CosineSimilarityExpr(e("vec"), e("vec2")),
+      BlocklistHitsExpr(e("text"), Array("javascript", "the cat")),
+      DsirScoreExpr(toks, Array(0.5, -0.25, 1.0)),
+      NormalizeUnicodeExpr(e("text"), java.text.Normalizer.Form.NFC),
+      C4KeepLinesExpr(e("text"), 2), GopherStatsExpr(e("text")),
+      BucketizeExpr(e("num"), Array(0.0, 2.0, 4.0)),
+      ReplaceTimeZoneExpr(e("ts"), "Europe/Berlin", "latest", "null"),
+      RangeBucketExpr(Seq(e("num"), e("text2")), Seq(true, false),
+        Array(Array[Any](1.0, UTF8String.fromString("m")), Array[Any](5.0, UTF8String.fromString("b")))),
+      BloomMightContainExpr(e("id"), BloomExprs.serialize(bloom)))
+    df.select(col("id") +: kernels.zipWithIndex.map { case (k, i) => column(k).as(s"k$i") }: _*)
+  }
+
+  test("interpreted evaluation == codegen evaluation of every scalar kernel, null row included") {
+    val codegen = allKernels(spark)
+    val expect = codegen.collect()
+    val got = allKernels(interpSession()).collect()
+    assert(codegen.queryExecution.executedPlan
+      .find(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]).isDefined,
+      codegen.queryExecution.executedPlan.toString)
+    assert(multiset(expect) == multiset(got),
+      s"codegen:\n${expect.mkString("\n")}\ninterpreted:\n${got.mkString("\n")}")
   }
 }

@@ -24,6 +24,25 @@ class PlanSpec extends SparkSpec {
     qe.executedPlan.treeString
   }
 
+  /** The executed (final adaptive) plan's nodes whose expressions hold a
+    * `kernel`, each paired with whether it runs inside a whole-stage codegen
+    * stage proper: an InputAdapter ends the stage. */
+  private def kernelNodesInCodegen(df: DataFrame)(kernel: PartialFunction[Any, Unit])
+      : Seq[(SparkPlan, Boolean)] = {
+    import org.apache.spark.sql.execution.{InputAdapter, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val plan = df.queryExecution.executedPlan
+    def inStage(p: SparkPlan, f: SparkPlan): Boolean = (p eq f) || (p match {
+      case _: InputAdapter => false
+      case other => other.children.exists(inStage(_, f))
+    })
+    val codegen = aqe.collect(plan) { case w: WholeStageCodegenExec => w }
+    aqe.collect(plan) { case p => p }
+      .filter(_.expressions.exists(_.find(kernel.isDefinedAt).isDefined))
+      .map(n => n -> codegen.exists(w => inStage(w.child, n)))
+  }
+
   test("filter + projection push down to the parquet scan (q02)") {
     val df = Faces("q02_filter_project").run(spark, SparkSpec.Sf0001)
     val scanLine = df.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString("\n")
@@ -279,6 +298,22 @@ class PlanSpec extends SparkSpec {
         .head().getLong(0) == 3L)
       assert(s2.sql("SELECT graft_blocklist_hits('a Bad Word here', array('bad word', 'other')) AS n")
         .head().getInt(0) == 1)
+      // literal arguments: NULL, 0 and a column fail, naming function and argument
+      def failure(sql: String): String = {
+        val e = intercept[Exception](s2.sql(sql).collect())
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" / ")
+      }
+      for ((sql, expect) <- Seq(
+          "SELECT graft_minhash(array('a'), NULL)" -> "graft_minhash: k must not be NULL",
+          "SELECT graft_minhash(array('a'), 0)" -> "numHashes must be >= 1",
+          "SELECT graft_minhash(array('a'), n) FROM VALUES (4) AS t(n)" -> "graft_minhash: k must be a literal",
+          "SELECT graft_shingles(array('a'), 2, NULL)" -> "graft_shingles: distinct must not be NULL",
+          "SELECT graft_pq_adc(array(0), array(1.0D), NULL)" -> "graft_pq_adc: ksub must not be NULL",
+          "SELECT graft_topk(s, i, n) FROM VALUES (1.0D, 1L, 2) AS t(s, i, n)" -> "graft_topk: k must be a literal",
+          "SELECT graft_c4_keep_lines('a.', NULL)" -> "graft_c4_keep_lines: minWords must not be NULL")) {
+        val msg = failure(sql)
+        assert(msg.contains(expect), s"$sql: $msg")
+      }
     } finally {
       prev.foreach { p => SparkSession.setDefaultSession(p); SparkSession.setActiveSession(p) }
     }
@@ -398,7 +433,7 @@ class PlanSpec extends SparkSpec {
 
   test("bloom decontamination: the prefilter runs under codegen, no filter bytes in the plan (qd34)") {
     import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.execution.{FilterExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.FilterExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.types.BinaryType
     val aqe = new AdaptiveSparkPlanHelper {}
@@ -407,23 +442,30 @@ class PlanSpec extends SparkSpec {
     val plan = df.queryExecution.executedPlan
     val text = plan.toString
     assert(text.contains("isFinalPlan=true"), s"expected executed adaptive plan:\n$text")
-    val prefilters = aqe.collect(plan) {
-      case f: FilterExec if f.condition.exists(_.isInstanceOf[graft.plans.BloomMightContainExpr]) => f
-    }
+    val prefilters = kernelNodesInCodegen(df) { case _: graft.plans.BloomMightContainExpr => }
+      .filter(_._1.isInstanceOf[FilterExec])
     assert(prefilters.nonEmpty, s"no graft_bloom_might_contain prefilter in:\n$text")
-    // inside a codegen stage proper: an InputAdapter ends the stage
-    def inStage(p: SparkPlan, f: SparkPlan): Boolean = (p eq f) || (p match {
-      case _: InputAdapter => false
-      case other => other.children.exists(inStage(_, f))
-    })
-    val codegen = aqe.collect(plan) { case w: WholeStageCodegenExec => w }
-    for (f <- prefilters)
-      assert(codegen.exists(w => inStage(w.child, f)), s"prefilter outside codegen:\n$text")
+    for ((f, inCodegen) <- prefilters) assert(inCodegen, s"prefilter outside codegen:\n$text")
     // the filter rides as a constructor field: no BINARY literal, no hex
     val binaryLiterals = aqe.collect(plan) { case p => p }.flatMap(_.expressions)
       .flatMap(_.collect { case l @ Literal(_, BinaryType) => l })
     assert(binaryLiterals.isEmpty, s"filter bytes in the plan: $binaryLiterals")
     assert("[0-9a-fA-F]{64,}".r.findFirstIn(text).isEmpty, s"hex payload in the plan:\n$text")
+  }
+
+  test("gopher stats and minhash signature kernels run inside whole-stage codegen") {
+    val docs = SparkEntry.t(spark, SparkSpec.Sf0001, "documents")
+    val gopher = graft.prep.Prep.gopherQuality(docs, "text")
+    val pairs = graft.dedup.Dedup.minhashPairs(docs, "doc_id", "text")
+    for ((df, kernel) <- Seq[(DataFrame, PartialFunction[Any, Unit])](
+        gopher -> { case _: graft.plans.GopherStatsExpr => },
+        pairs -> { case _: graft.plans.MinHashSignatureExpr | _: graft.plans.ShingleHashesExpr => })) {
+      df.collect()
+      val nodes = kernelNodesInCodegen(df)(kernel)
+      val text = df.queryExecution.executedPlan.toString
+      assert(nodes.nonEmpty, s"no kernel in:\n$text")
+      for ((n, inCodegen) <- nodes) assert(inCodegen, s"${n.nodeName} outside codegen:\n$text")
+    }
   }
 
   test("near-dup decontamination: both bench sides broadcast, no signature shuffle") {
